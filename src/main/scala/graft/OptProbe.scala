@@ -361,84 +361,25 @@ object OptProbe {
           ext.KnnGraphIndex.insert(spark, s"$cpO/ix", delivery) }
       }
     }
-    if (on("walk2")) {
-      // same-JVM A/B: the r14 walk (fused flag-window, FULL state
-      // re-checkpointed per hop) copied verbatim vs the r15 delta-state
-      // walk; plus value identity on the returned (query,node,cos) rows.
-      import org.apache.spark.sql.DataFrame
-      import org.apache.spark.sql.expressions.Window
-      import ext.EmbeddingSearch.{dot, prepared}
-      def r14Walk(embs: DataFrame, graph: DataFrame, queries: DataFrame,
-          beamWidth: Int, hops: Int, entryPoints: Int): DataFrame = {
-        val e = prepared(embs).persist()
-        val q = prepared(queries).select(col("vec_id").as("query_id"),
-          col("v").as("qv"), col("nrm").as("qnrm"))
-        val edges = graph.select(col("query_id").as("src"),
-          col("neighbor_id").as("dst"))
-        val und = edges.unionByName(
-          edges.select(col("dst").as("src"), col("src").as("dst")))
-          .distinct().persist()
-        val liveNodes = und.select(col("src").as("node_id")).distinct()
-          .join(e.select(col("vec_id").as("node_id")),
-            Seq("node_id"), "left_semi")
-        val entries = liveNodes.orderBy("node_id")
-          .limit(entryPoints).select("node_id")
-        def score(cand: DataFrame): DataFrame =
-          cand.join(e.select(col("vec_id").as("node_id"), col("v"),
-              col("nrm")), "node_id")
-            .join(broadcast(q), "query_id")
-            .withColumn("cos",
-              dot(col("qv"), col("v")) / sqrt(col("qnrm") * col("nrm")))
-            .select(col("query_id"), col("node_id"), col("cos"))
-        val wBeam = Window.partitionBy("query_id")
-          .orderBy(col("expanded").asc, col("cos").desc,
-            col("node_id").asc)
-        var state = score(q.select("query_id")
-            .crossJoin(broadcast(entries)))
-          .withColumn("expanded", lit(false))
-          .localCheckpoint(true)
-        var h = 0
-        while (h < hops) {
-          val ranked = state.withColumn("rn", row_number().over(wBeam))
-          val frontier = ranked
-            .filter(!col("expanded") && col("rn") <= beamWidth)
-            .select("query_id", "node_id")
-          val fresh = frontier.join(und,
-              frontier("node_id") === und("src"))
-            .select(col("query_id"), col("dst").as("node_id")).distinct()
-            .join(state.select("query_id", "node_id"),
-              Seq("query_id", "node_id"), "left_anti")
-          state = ranked
-            .withColumn("expanded",
-              col("expanded") || (col("rn") <= beamWidth))
-            .drop("rn")
-            .unionByName(score(fresh).withColumn("expanded", lit(false)))
-            .localCheckpoint(true)
-          h += 1
-        }
-        e.unpersist()
-        und.unpersist()
-        state
-      }
+    if (on("walk")) {
+      // same-JVM A/B of graphSearchState's two paths — the broadcast
+      // kernel (10MB) and the relational loop (-1) — on an insert walk
       val seed = embs.filter(col("vec_id") % 3 =!= 0)
       val graph = ext.EmbeddingSearch.nnDescent(seed, 32, 2)
         .localCheckpoint(true)
       val delivery = embs.filter(col("vec_id") % 3 === 0)
         .localCheckpoint(true)
-      val oldS = r14Walk(seed, graph, delivery, 16, 4, 16)
-        .select("query_id", "node_id", "cos")
-      val newS = ext.EmbeddingSearch.graphSearchState(seed, graph,
-        delivery, 16, 4, 16).select("query_id", "node_id", "cos")
-      val diff = oldS.exceptAll(newS).unionByName(newS.exceptAll(oldS))
-        .count()
-      println(s"PROBE walk2_value_diff $diff (must be 0)")
-      for (rep <- 1 to 3) {
-        t(s"walk_r14_rep$rep") {
-          r14Walk(seed, graph, delivery, 16, 4, 16).count() }
-        t(s"walk_r15_rep$rep") {
-          ext.EmbeddingSearch.graphSearchState(seed, graph, delivery,
-            16, 4, 16).count() }
+      def walk(threshold: String) = {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        ext.EmbeddingSearch.graphSearchState(seed, graph, delivery, 16, 4,
+          16)
       }
+      val (kernel, relational) = (walk("10MB"), walk("-1"))
+      println("PROBE walk_value_diff " + kernel.exceptAll(relational)
+        .unionByName(relational.exceptAll(kernel)).count() + " (must be 0)")
+      for (rep <- 1 to 3; th <- Seq("10MB", "-1"))
+        t(s"walk_threshold_${th}_rep$rep") { walk(th).count() }
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
     if (on("text2")) {
       val docs = Tables.documents(spark, d)

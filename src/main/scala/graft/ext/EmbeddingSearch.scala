@@ -1,9 +1,16 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType,
+  StructField, StructType}
 
 /** Similarity search over an `Array[Float]` embedding column:
   * brute-force cosine top-k as the exact baseline, plus a random-hyperplane
@@ -298,23 +305,23 @@ object EmbeddingSearch {
     * rounds expand the `beamWidth` best not-yet-expanded candidates
     * through the symmetrized edge list, exact-scoring only the NEWLY
     * reached nodes (visited-set semantics — nothing rescored). The
-    * walk is relational end to end: the frontier is a per-query
-    * window top-beam, the expansion is one equi-join of the frontier
-    * against the edge list, and the visited set is a left-anti join —
-    * no driver-side traversal, all queries advance in one shuffle
-    * round per hop, per-round localCheckpoint keeps lineage flat (the
-    * [[nnDescentFrom]] discipline).
+    * walk itself is [[graphSearchState]]: when the vectors and the
+    * edge list fit the broadcast threshold it runs as one job of
+    * partition-local walks over a broadcast copy of the graph (the
+    * REPOSE shape: partition-local search, then a merge — here the
+    * per-query top-k window below); larger graphs take the relational
+    * per-hop loop. Both return the same rows bit for bit.
     *
     * External-lookup semantics match [[bruteForceTopKFor]]: `queries`
-    * is its own (vec_id, embedding) frame, nothing is self-excluded.
-    * Fixed `hops` (not score-convergence) keeps the plan and the
-    * result deterministic; recall rises with beamWidth/hops/entry
-    * count — the standard serving knobs. 100 TB shape: per hop the
-    * work is |queries| × beamWidth edge lookups + scorings — query-
-    * linear and corpus-INDEPENDENT given the graph (the corpus is
-    * touched only via id-keyed equi-joins for candidate vectors,
-    * which prune to the reached ids); contrast [[bruteForceTopKFor]],
-    * which streams the whole corpus per query batch.
+    * is its own (vec_id, embedding) frame with unique ids, nothing is
+    * self-excluded. The query set is collected to the driver — it is
+    * the bounded side of a serving call. Fixed `hops` (not
+    * score-convergence) keeps the result deterministic; recall rises
+    * with beamWidth/hops/entry count — the standard serving knobs.
+    * Work per hop is |queries| × beamWidth edge lookups + scorings —
+    * query-linear and corpus-INDEPENDENT given the graph; contrast
+    * [[bruteForceTopKFor]], which streams the whole corpus per query
+    * batch.
     *
     * Returns (query_id, neighbor_id, cos, rank), rank ≤ k by
     * descending cosine, ties to the smaller neighbor id.
@@ -334,23 +341,263 @@ object EmbeddingSearch {
   }
 
   /** The walk's full VISITED STATE — every (query, node) pair the beam
-    * descent scored, with raw cosines: [[graphSearch]] is its top-k,
-    * [[insertEdges]] harvests it as the delivered vectors' candidate
-    * neighborhoods (the DiskANN insertion trick: the search already
-    * visited exactly the nodes worth linking), and
-    * KnnGraphIndexSpec's scale law counts its rows — the walk's total
-    * scoring work is |state| ≤ |queries| × (entries + hops × beam ×
-    * max-degree), CORPUS-INDEPENDENT given the graph.
+    * descent scored, with raw cosines, as (query_id, node_id, cos,
+    * expanded): [[graphSearch]] is its top-k, [[insertEdges]] harvests
+    * it as the delivered vectors' candidate neighborhoods (the DiskANN
+    * insertion trick: the search already visited exactly the nodes
+    * worth linking), and KnnGraphIndexSpec's scale law counts its rows
+    * — the walk's total scoring work is |state| ≤ |queries| ×
+    * (entries + hops × beam × max-degree), CORPUS-INDEPENDENT given
+    * the graph.
+    *
+    * The semantics, which both execution paths reproduce bit for bit
+    * (EmbeddingSearchSpec pins them against a verbatim copy of the
+    * relational walk):
+    *  - a node is LIVE when it has a row in `embs`; only live nodes are
+    *    ever scored, so a deleted node lingering in other nodes' edge
+    *    lists is never reached;
+    *  - entries are the `entriesOverride` rows, else (`hubEntries`) the
+    *    `entryPoints` live nodes of highest symmetrized degree, ties to
+    *    the smaller id, else the `entryPoints` smallest live ids that
+    *    have an edge;
+    *  - each hop orders the state (expanded asc, cos desc, node_id
+    *    asc) — Spark's ordering: NaN above every number, a null cos
+    *    last — flags the first `beamWidth` unexpanded rows expanded,
+    *    and scores their symmetrized neighbors not yet in the state;
+    *  - cos = [[dot]](qv, v) / sqrt(qnrm × nrm): a null vector gives a
+    *    null cos, a zero norm Spark's division by zero (null, or the
+    *    DIVIDE_BY_ZERO error under ANSI mode).
+    *
+    * Path choice: when the vectors and the edge list fit
+    * `spark.sql.autoBroadcastJoinThreshold` — the size at which Spark
+    * broadcasts a join side, so the relational plan broadcasts both
+    * anyway — and every id column is a long ([[walkGraph]] states the
+    * rule exactly), the walk runs as [[walkKernel]], one job.
+    * Otherwise (a threshold of -1 included) the relational per-hop
+    * loop runs: joins, a window and a checkpoint per hop, the only path
+    * for graphs too large to broadcast. The query side is collected
+    * either way (it is the bounded side of a serving call) and its ids
+    * must be unique: a repeated id would mix two walks' state rows.
     */
   private[graft] def graphSearchState(embs: DataFrame, graph: DataFrame,
       queries: DataFrame, beamWidth: Int, hops: Int,
       entryPoints: Int, hubEntries: Boolean = false,
       entriesOverride: Option[DataFrame] = None): DataFrame = {
+    val qp = prepared(queries)
+    walkState(embs, graph, local(qp, qp.collect()), beamWidth, hops,
+      entryPoints, hubEntries, entriesOverride)
+  }
+
+  /** `rows` (collected from `df`) served back as a local relation:
+    * reading it again starts no Spark job.
+    */
+  private def local(df: DataFrame, rows: Array[Row]): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      df.schema)
+
+  /** [[graphSearchState]] over queries already in [[prepared]] form and
+    * held in a local relation `qp`.
+    */
+  private def walkState(embs: DataFrame, graph: DataFrame,
+      qp: DataFrame, beamWidth: Int, hops: Int, entryPoints: Int,
+      hubEntries: Boolean, entriesOverride: Option[DataFrame])
+      : DataFrame = {
+    val qRows = qp.collect()
+    val dupIds = qRows.filterNot(_.isNullAt(0)).groupBy(_.get(0))
+      .collect { case (id, rs) if rs.length > 1 => id }
+    require(dupIds.isEmpty,
+      s"graph walk: duplicate query ids (${dupIds.take(3).mkString(", ")})" +
+        " — each query id names one walk, and a repeated id would mix " +
+        "two walks' state rows; de-duplicate or re-key the queries")
+    walkGraph(embs, graph, qp, entryPoints, hubEntries, entriesOverride)
+      match {
+        case Some(g) =>
+          walkKernel(qp.sparkSession, g, qRows, beamWidth, hops)
+        case None => relationalWalk(embs, graph, qp, beamWidth, hops,
+          entryPoints, hubEntries, entriesOverride)
+      }
+  }
+
+  /** The walk's inputs in compact broadcast form. `ids` are the live
+    * node ids ascending, so a node's index orders like its id; `vecs`
+    * (null for a null embedding) and `nrms` are their [[prepared]]
+    * vectors and self-dots; `off`/`nbr` are the symmetrized adjacency
+    * as CSR over node indices, holding only live neighbors (no other
+    * node can be scored); `entries` are the elected entry indices.
+    */
+  private[ext] final case class WalkGraph(ids: Array[Long],
+      vecs: Array[Array[Double]], nrms: Array[Double], off: Array[Int],
+      nbr: Array[Int], entries: Array[Int])
+
+  /** [[graphSearchState]]'s size rule, and the [[WalkGraph]] when it
+    * holds: `spark.sql.autoBroadcastJoinThreshold` is not -1, every id
+    * column is a long, the optimizer's size estimate of `embs` fits the
+    * threshold, and the edge list, at 16 bytes a row, fits what is
+    * left. The edge list is MEASURED, not estimated — a graph is
+    * derived through joins, whose estimate is the product of their
+    * sides — by a collect capped one row past that budget, so an
+    * oversized graph stops there. Entries are elected by
+    * [[graphSearchState]]'s rules. None also when `embs` repeats a
+    * vec_id: the relational walk scores each repeated row, which one
+    * node per id cannot express.
+    */
+  private[ext] def walkGraph(embs: DataFrame, graph: DataFrame,
+      queries: DataFrame, entryPoints: Int, hubEntries: Boolean,
+      entriesOverride: Option[DataFrame]): Option[WalkGraph] = {
+    val threshold = SQLConf.get.autoBroadcastJoinThreshold
+    val embBytes = embs.queryExecution.optimizedPlan.stats.sizeInBytes
+    val idFields = Seq(embs.schema("vec_id"), queries.schema("vec_id"),
+      graph.schema("query_id"), graph.schema("neighbor_id")) ++
+      entriesOverride.map(_.schema("node_id"))
+    if (threshold < 0 || embBytes > threshold ||
+        !idFields.forall(_.dataType == LongType)) return None
+    val cap = ((threshold - embBytes) / 16 + 1).min(Int.MaxValue).toInt
+    val edgeRows = graph.select("query_id", "neighbor_id").limit(cap)
+      .collect()
+    if (edgeRows.length == cap) return None
+    val rows = prepared(embs).collect().filterNot(_.isNullAt(0))
+      .sortBy(_.getLong(0))
+    val ids = rows.map(_.getLong(0))
+    if ((1 until ids.length).exists(i => ids(i) == ids(i - 1))) return None
+    def index(id: Any): Int =
+      if (id == null) -1
+      else math.max(-1, java.util.Arrays.binarySearch(ids,
+        id.asInstanceOf[Long]))
+    // each live node's distinct symmetrized neighbors — dead and null
+    // ones included, as they count toward degree and "has an edge"
+    val adj = Array.fill(ids.length)(new java.util.HashSet[Any]())
+    edgeRows.foreach { r =>
+      val (si, di) = (index(r.get(0)), index(r.get(1)))
+      if (si >= 0) adj(si).add(r.get(1))
+      if (di >= 0) adj(di).add(r.get(0))
+    }
+    val nbrs = adj.map(_.asScala.iterator.map(index).filter(_ >= 0)
+      .toArray.sorted)
+    val entries = entriesOverride match {
+      case Some(pre) =>
+        pre.select("node_id").collect().map(r => index(r.get(0)))
+          .filter(_ >= 0)
+      case None =>
+        val withEdge = ids.indices.filter(adj(_).size > 0)
+        (if (hubEntries) withEdge.sortBy(i => (-adj(i).size, i))
+         else withEdge).take(entryPoints).toArray
+    }
+    Some(WalkGraph(ids, rows.map(vector), rows.map(r =>
+        if (r.isNullAt(2)) 0.0 else r.getDouble(2)),
+      nbrs.scanLeft(0)(_ + _.length), nbrs.flatten, entries))
+  }
+
+  /** A [[prepared]] row's vector as a plain array; null for a null
+    * embedding, and a null element as 0.0 — what [[dot]] folds it as.
+    */
+  private def vector(r: Row): Array[Double] =
+    if (r.isNullAt(1)) null
+    else r.getSeq[Any](1).iterator.map {
+      case d: Double => d
+      case _ => 0.0
+    }.toArray
+
+  /** The partition-local walk: `g` is broadcast once, the queries are
+    * split over `defaultParallelism` tasks, and each task walks its
+    * queries one by one in plain loops — the whole state is one job.
+    */
+  private def walkKernel(spark: SparkSession, g: WalkGraph,
+      qRows: Array[Row], beamWidth: Int, hops: Int): DataFrame = {
+    val ansi = SQLConf.get.ansiEnabled
+    val qs = qRows.filterNot(_.isNullAt(0)).map(r =>
+      (r.getLong(0), vector(r), if (r.isNullAt(2)) 0.0 else r.getDouble(2)))
+    val sc = spark.sparkContext
+    val bc = sc.broadcast(g)
+    val rows = sc.parallelize(qs.toSeq,
+        math.max(1, math.min(sc.defaultParallelism, qs.length)))
+      .mapPartitions(_.flatMap { case (qid, qv, qnrm) =>
+        val g = bc.value
+        walkOne(g, qv, qnrm, beamWidth, hops, ansi).iterator.map(v =>
+          Row(qid, g.ids(v.node), v.cos, v.expanded))
+      })
+    val schema = StructType(Seq(StructField("query_id", LongType),
+      StructField("node_id", LongType), StructField("cos", DoubleType),
+      StructField("expanded", BooleanType, nullable = false)))
+    try spark.createDataFrame(rows, schema).localCheckpoint(true)
+    finally bc.destroy()
+  }
+
+  /** One scored state row of a kernel walk; `cos` null where Spark's
+    * cosine is null.
+    */
+  private final class Visit(val node: Int, val cos: java.lang.Double) {
+    var expanded = false
+  }
+
+  /** Frontier order among unexpanded rows: cos desc with a null cos
+    * last, then node index (= id) asc — the relational window's order.
+    */
+  private val frontierOrder: Ordering[Visit] = (a, b) =>
+    if (a.cos == null || b.cos == null) {
+      if (a.cos != null) -1
+      else if (b.cos != null) 1
+      else Integer.compare(a.node, b.node)
+    } else {
+      val c = SQLOrderingUtil.compareDoubles(b.cos, a.cos)
+      if (c != 0) c else Integer.compare(a.node, b.node)
+    }
+
+  /** One query's walk over `g`: the state rows in visit order. */
+  private def walkOne(g: WalkGraph, qv: Array[Double], qnrm: Double,
+      beamWidth: Int, hops: Int, ansi: Boolean): Seq[Visit] = {
+    // the DotProduct fold, then Spark's Divide (null on a zero divisor,
+    // or its DIVIDE_BY_ZERO error under ANSI mode)
+    def score(i: Int): java.lang.Double = {
+      val v = g.vecs(i)
+      if (qv == null || v == null) null
+      else {
+        val n = math.min(qv.length, v.length)
+        var dot = 0.0
+        var j = 0
+        while (j < n) { dot += qv(j) * v(j); j += 1 }
+        val den = math.sqrt(qnrm * g.nrms(i))
+        if (den != 0.0) dot / den
+        else if (ansi) throw Bridge.divideByZeroError()
+        else null
+      }
+    }
+    val visited = new java.util.BitSet(g.ids.length)
+    val state = ArrayBuffer.empty[Visit]
+    def visit(i: Int): Unit = {
+      visited.set(i)
+      state += new Visit(i, score(i))
+    }
+    g.entries.foreach(visit)
+    var h = 0
+    while (h < hops) {
+      val frontier = state.filterNot(_.expanded).sorted(frontierOrder)
+        .take(beamWidth)
+      frontier.foreach(_.expanded = true)
+      for (f <- frontier) {
+        var j = g.off(f.node)
+        while (j < g.off(f.node + 1)) {
+          if (!visited.get(g.nbr(j))) visit(g.nbr(j))
+          j += 1
+        }
+      }
+      h += 1
+    }
+    state.toSeq
+  }
+
+  /** The relational walk: per hop a window election, an equi-join
+    * expansion, a left-anti visited filter and a checkpoint, all
+    * queries advancing together.
+    */
+  private def relationalWalk(embs: DataFrame, graph: DataFrame,
+      qp: DataFrame, beamWidth: Int, hops: Int, entryPoints: Int,
+      hubEntries: Boolean, entriesOverride: Option[DataFrame])
+      : DataFrame = {
     val e = prepared(embs).persist()
-    val q = prepared(queries).select(col("vec_id").as("query_id"),
-      col("v").as("qv"), col("nrm").as("qnrm"))
     val edges = graph.select(col("query_id").as("src"),
       col("neighbor_id").as("dst"))
+    val q = qp.select(col("vec_id").as("query_id"),
+      col("v").as("qv"), col("nrm").as("qnrm"))
     // symmetrize: kNN edges are directed, but a navigable walk needs
     // both directions (HNSW stores back-links for the same reason)
     val und = edges.unionByName(
@@ -411,13 +658,12 @@ object EmbeddingSearch {
     //
     // A DELTA-STATE variant (scored rows checkpointed once per hop,
     // flags in a slim elected-frontier relation, election ranking only
-    // the unexpanded subset) was built and MEASURED in round 15
-    // (OptProbe walk2, same-JVM A/B, value-identical): 3.0–3.3 s r14
-    // shape vs 4.1 s delta shape on the 667-query insert walk — the
-    // per-hop unexpanded anti-join plus the extra eager job cost more
-    // than the full-state rewrite they avoid (the state is
-    // query-bounded by the serving contract, never corpus-sized, so
-    // the rewrite is small at every scale). Kept the r14 shape.
+    // the unexpanded subset) measured ~30% slower on the 667-query
+    // insert walk: its per-hop anti-join plus an extra eager job cost
+    // more than the full-state rewrite they avoid, because the state is
+    // query-bounded, never corpus-sized. Each step here is its own
+    // Spark job, which is why graphs that fit a broadcast skip this
+    // loop for [[walkKernel]].
     val wBeam = Window.partitionBy("query_id")
       .orderBy(col("expanded").asc, col("cos").desc, col("node_id").asc)
     // visited state: every scored node, with its expansion flag
@@ -517,24 +763,27 @@ object EmbeddingSearch {
   private[graft] def insertEdges(oldEmbs: DataFrame, oldGraph: DataFrame,
       newEmbs: DataFrame, k: Int, beamWidth: Int, hops: Int,
       entryPoints: Int, maxDelivery: Int = 4096): (DataFrame, DataFrame) = {
-    val walked = graphSearchState(oldEmbs, oldGraph, newEmbs, beamWidth,
-        hops, entryPoints)
-      .select(col("query_id"), col("node_id").as("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
-    val d = prepared(newEmbs).localCheckpoint(true)
     // ENFORCE the delta-sized contract instead of assuming it: the exact
     // intra-delivery pairing below is |delivery|² scorings BY DESIGN, so
-    // an oversized delivery must fail loudly here, not silently go
-    // quadratic (the checkedDim/widthGuard discipline applied to the
-    // insertion path). The checkpoint above already materialized the
-    // delivery, so the count is a metadata read, not an extra job.
-    val dn = d.count()
-    require(dn <= maxDelivery,
-      s"insertEdges: delivery of $dn vectors exceeds maxDelivery=" +
-        s"$maxDelivery — intra-delivery pairing is |delivery|² by " +
+    // an oversized delivery must fail loudly here, before the walk, not
+    // silently go quadratic (the checkedDim/widthGuard discipline
+    // applied to the insertion path). One row past the cap proves the
+    // overflow, so the collect is bounded; its rows are the walk's
+    // query side and the pairing's input, read locally with no job.
+    val dp = prepared(newEmbs)
+    val dRows = dp.limit((maxDelivery + 1L).min(Int.MaxValue).toInt)
+      .collect()
+    require(dRows.length <= maxDelivery,
+      s"insertEdges: delivery exceeds maxDelivery=$maxDelivery vectors" +
+        " — intra-delivery pairing is |delivery|² by " +
         "design (deliveries are delta-sized by contract); build from " +
         "scratch (nnDescent) for bulk loads, or raise maxDelivery " +
         "deliberately")
+    val d = local(dp, dRows)
+    val walked = walkState(oldEmbs, oldGraph, d, beamWidth, hops,
+        entryPoints, hubEntries = false, entriesOverride = None)
+      .select(col("query_id"), col("node_id").as("neighbor_id"),
+        round(col("cos"), 6).as("cos"))
     val intra = d.as("a").join(d.as("b"),
         col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("query_id"),

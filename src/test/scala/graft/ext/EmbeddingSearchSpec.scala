@@ -334,12 +334,103 @@ class EmbeddingSearchSpec extends SparkSpec {
     def rows(df: DataFrame): Set[(Long, Long, Double)] =
       df.select("query_id", "node_id", "cos")
         .as[(Long, Long, Double)].collect().toSet
-    for (hops <- Seq(0, 1, 3)) {
-      assert(
-        rows(EmbeddingSearch.graphSearchState(churny, graph, queries,
-          beamWidth = 3, hops = hops, entryPoints = 2)) ===
-        rows(refWalk(churny, graph, queries, 3, hops, 2)),
-        s"hops=$hops")
+    // every state row with cos as raw bits (null stays None), as a
+    // multiset: the bit-for-bit contract both walk paths keep
+    def exact(df: DataFrame): Seq[(Long, Long, Option[Long], Boolean)] =
+      df.select("query_id", "node_id", "cos", "expanded").collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          Option.when(!r.isNullAt(2))(
+            java.lang.Double.doubleToRawLongBits(r.getDouble(2))),
+          r.getBoolean(3))).toSeq.sorted
+    def withConf[A](key: String, value: String)(body: => A): A = {
+      val saved = spark.conf.getOption(key)
+      spark.conf.set(key, value)
+      try body
+      finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    def relational[A](body: => A): A =
+      withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
+    def ansiOff[A](body: => A): A =
+      withConf("spark.sql.ansi.enabled", "false")(body)
+    // the same graph over a maintained corpus: nodes 3 and 7 deleted
+    // (their edges dangle), entry node 0 a zero vector, node 2 a null
+    // embedding; queries 0 and 2 carry the zero and the null vector
+    val maintained = churny.filter(!col("vec_id").isin(3L, 7L))
+      .select(col("vec_id"),
+        when(col("vec_id") === 0, array_repeat(lit(0f), 8))
+          .when(col("vec_id") === 2, lit(null).cast("array<float>"))
+          .otherwise(col("embedding")).as("embedding"))
+    val mQueries = maintained.filter(col("vec_id") % 5 === 0 ||
+      col("vec_id") === 2)
+    def dividesByZero(walk: => DataFrame): Unit = {
+      val err = intercept[Exception](walk.count())
+      assert(Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).exists(t =>
+          String.valueOf(t.getMessage).contains("DIVIDE_BY_ZERO")), err)
+    }
+    def kernelRuns: Boolean = EmbeddingSearch.walkGraph(churny, graph,
+      queries, 2, hubEntries = false, None).isDefined
+    def bothPaths(body: => Unit): Unit = {
+      assert(kernelRuns)
+      body
+      relational {
+        assert(!kernelRuns)
+        body
+      }
+    }
+    bothPaths {
+      for (hops <- Seq(0, 1, 3)) {
+        assert(
+          rows(EmbeddingSearch.graphSearchState(churny, graph, queries,
+            beamWidth = 3, hops = hops, entryPoints = 2)) ===
+          rows(refWalk(churny, graph, queries, 3, hops, 2)),
+          s"hops=$hops")
+        assert(
+          exact(EmbeddingSearch.graphSearchState(churny, graph, queries,
+            beamWidth = 3, hops = hops, entryPoints = 2)) ===
+          exact(refWalk(churny, graph, queries, 3, hops, 2)),
+          s"hops=$hops")
+        ansiOff {
+          assert(
+            exact(EmbeddingSearch.graphSearchState(maintained, graph,
+              mQueries, beamWidth = 3, hops = hops, entryPoints = 2)) ===
+            exact(refWalk(maintained, graph, mQueries, 3, hops, 2)),
+            s"maintained hops=$hops")
+        }
+      }
+      // under ANSI mode the zero-norm entry fails both walks alike
+      dividesByZero(EmbeddingSearch.graphSearchState(maintained, graph,
+        mQueries, beamWidth = 3, hops = 1, entryPoints = 2))
+      dividesByZero(refWalk(maintained, graph, mQueries, 3, 1, 2))
+    }
+    // entry modes refWalk lacks: the kernel against the relational walk
+    // (an override entry may repeat, or name a deleted node)
+    val pre = Seq(9L, 3L, 9L, 14L).toDF("node_id")
+    for ((embs, qs) <- Seq((churny, queries), (maintained, mQueries));
+        hops <- Seq(0, 1, 3)) {
+      def walk(hub: Boolean, entries: Option[DataFrame]) =
+        ansiOff(exact(EmbeddingSearch.graphSearchState(embs, graph, qs,
+          beamWidth = 3, hops = hops, entryPoints = 2, hubEntries = hub,
+          entriesOverride = entries)))
+      assert(walk(hub = true, None) === relational(walk(hub = true, None)),
+        s"hub hops=$hops")
+      assert(walk(hub = false, Some(pre)) ===
+        relational(walk(hub = false, Some(pre))), s"override hops=$hops")
+    }
+  }
+
+  test("a graph walk rejects duplicate query ids on both paths") {
+    val graph = EmbeddingSearch.knnGraph(embs, k = 2)
+    val twice = embs.filter(col("vec_id") < 2)
+      .unionByName(embs.filter(col("vec_id") === 1))
+    for (threshold <- Seq("10MB", "-1")) {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      try {
+        val err = intercept[IllegalArgumentException] {
+          EmbeddingSearch.graphSearch(embs, graph, twice, k = 2)
+        }
+        assert(err.getMessage.contains("duplicate query ids (1)"))
+      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 
