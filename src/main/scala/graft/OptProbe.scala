@@ -100,267 +100,6 @@ object OptProbe {
           ext.KnnGraphIndex.insert(spark, s"$cp/ix", delivery) }
       }
     }
-    if (on("ab")) {
-      // same-JVM A/B: the pre-r14 spellings (copied verbatim) vs the
-      // current engine, alternated so host drift cannot fake a win.
-      import org.apache.spark.sql.{DataFrame, Column}
-      import org.apache.spark.sql.expressions.Window
-      import ext.EmbeddingSearch.{dot, prepared}
-      def oldWalk(embs: DataFrame, graph: DataFrame, queries: DataFrame,
-          beamWidth: Int, hops: Int, entryPoints: Int): DataFrame = {
-        val e = prepared(embs).persist()
-        val q = prepared(queries).select(col("vec_id").as("query_id"),
-          col("v").as("qv"), col("nrm").as("qnrm"))
-        val edges = graph.select(col("query_id").as("src"),
-          col("neighbor_id").as("dst"))
-        val und = edges.unionByName(
-          edges.select(col("dst").as("src"), col("src").as("dst")))
-          .distinct().persist()
-        val liveNodes = und.select(col("src").as("node_id")).distinct()
-          .join(e.select(col("vec_id").as("node_id")),
-            Seq("node_id"), "left_semi")
-        val entries = liveNodes.orderBy("node_id")
-          .limit(entryPoints).select("node_id")
-        def score(cand: DataFrame): DataFrame =
-          cand.join(e.select(col("vec_id").as("node_id"), col("v"),
-              col("nrm")), "node_id")
-            .join(broadcast(q), "query_id")
-            .withColumn("cos",
-              dot(col("qv"), col("v")) / sqrt(col("qnrm") * col("nrm")))
-            .select(col("query_id"), col("node_id"), col("cos"))
-        val wBeam = Window.partitionBy("query_id")
-          .orderBy(col("cos").desc, col("node_id").asc)
-        var state = score(q.select("query_id")
-            .crossJoin(broadcast(entries)))
-          .withColumn("expanded", lit(false))
-          .localCheckpoint(true)
-        var h = 0
-        while (h < hops) {
-          val frontier = state.filter(!col("expanded"))
-            .withColumn("rn", row_number().over(wBeam))
-            .filter(col("rn") <= beamWidth)
-            .select("query_id", "node_id")
-          val fresh = frontier.join(und,
-              frontier("node_id") === und("src"))
-            .select(col("query_id"), col("dst").as("node_id")).distinct()
-            .join(state.select("query_id", "node_id"),
-              Seq("query_id", "node_id"), "left_anti")
-          state = state
-            .join(frontier.withColumn("f", lit(true)),
-              Seq("query_id", "node_id"), "left")
-            .withColumn("expanded",
-              col("expanded") || coalesce(col("f"), lit(false)))
-            .drop("f")
-            .unionByName(score(fresh).withColumn("expanded", lit(false)))
-            .localCheckpoint(true)
-          h += 1
-        }
-        e.unpersist(); und.unpersist()
-        state
-      }
-      def oldChanged(stored: DataFrame, oldEdges: DataFrame): DataFrame = {
-        val keyCols = Seq("vec_id", "neighbor_id", "rank")
-        stored.select(keyCols.map(col): _*)
-          .join(oldEdges.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .unionByName(oldEdges.select(keyCols.map(col): _*)
-            .join(stored.select(keyCols.map(col): _*), keyCols, "left_anti"))
-          .select("vec_id").distinct()
-      }
-      val seed = embs.filter(col("vec_id") % 3 =!= 0)
-      val graph = ext.EmbeddingSearch.nnDescent(seed, 32, 2)
-        .localCheckpoint(true)
-      val delivery = embs.filter(col("vec_id") % 3 === 0)
-        .localCheckpoint(true)
-      // perturbed copy: half the nodes' edges re-ranked differently so
-      // the diff has real work in both directions
-      val graphV = graph.withColumnRenamed("query_id", "vec_id")
-        .localCheckpoint(true)
-      val stored2 = graphV.withColumn("rank",
-          when(col("vec_id") % 2 === 0, col("rank"))
-            .otherwise((col("rank") % 8) + 1))
-        .localCheckpoint(true)
-      for (rep <- 1 to 3) {
-        t(s"walk_old_rep$rep") {
-          oldWalk(seed, graph, delivery, 16, 4, 16).count() }
-        t(s"walk_new_rep$rep") {
-          ext.EmbeddingSearch.graphSearchState(seed, graph, delivery,
-            16, 4, 16).count() }
-        t(s"changed_old_rep$rep") { oldChanged(stored2, graphV).count() }
-        t(s"changed_new_rep$rep") {
-          // same visibility trick: call through insert's path is not
-          // isolated — compare via the private method's public twin by
-          // reflection-free spelling (copied new code)
-          val keyCols = Seq("vec_id", "neighbor_id", "rank")
-          stored2.select(keyCols.map(col): _*)
-            .unionByName(graphV.select(keyCols.map(col): _*))
-            .groupBy(keyCols.map(col): _*)
-            .agg(count(lit(1)).as("__sides"))
-            .filter(col("__sides") === 1)
-            .select("vec_id").distinct().count() }
-      }
-    }
-    if (on("descent2")) {
-      // same-JVM A/B: the r14 descent round (score EVERY expanded
-      // candidate, rank the full set) copied verbatim vs the r15
-      // fresh-only rounds (seen-pair pruning + carried prev scores),
-      // alternated so host drift cannot fake a win; plus a value
-      // identity check (the r15 loop must reproduce the r14 rows
-      // bit-for-bit).
-      import org.apache.spark.sql.DataFrame
-      import org.apache.spark.sql.expressions.Window
-      import ext.EmbeddingSearch.{dot, prepared}
-      def oldDescent(embs: DataFrame, k: Int, iters: Int): DataFrame = {
-        val e = prepared(embs).persist()
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cos").desc, col("neighbor_id").asc)
-        def scoreAndRank(cand: DataFrame): DataFrame =
-          cand
-            .join(e.select(col("vec_id").as("neighbor_id"), col("v"),
-              col("nrm")), "neighbor_id")
-            .join(e.select(col("vec_id").as("query_id"),
-              col("v").as("qv"), col("nrm").as("qnrm")), "query_id")
-            .withColumn("cos",
-              dot(col("qv"), col("v")) / sqrt(col("qnrm") * col("nrm")))
-            .withColumn("rank", row_number().over(w))
-            .filter(col("rank") <= k)
-            .select(col("query_id"), col("neighbor_id"),
-              round(col("cos"), 6).as("cos"), col("rank"))
-        val ids = ext.DataOps.globalRanks(
-            e.select(col("vec_id").as("id"), col("vec_id").as("score")))
-          .select(col("id").as("vec_id"), col("rank").as("rk"),
-            col("__n"))
-        val ring = ids
-          .withColumn("j", explode(sequence(lit(1), lit(k))))
-          .withColumn("nrk", (col("rk") - 1 + col("j")) % col("__n") + 1)
-          .join(ids.select(col("rk").as("nrk"),
-            col("vec_id").as("neighbor_id")), "nrk")
-          .filter(col("vec_id") =!= col("neighbor_id"))
-          .select(col("vec_id").as("query_id"), col("neighbor_id"))
-        var graph = scoreAndRank(ring).localCheckpoint(true)
-        var i = 0
-        while (i < iters) {
-          val edges = graph.select(col("query_id").as("src"),
-            col("neighbor_id").as("dst"))
-          val undirected = edges.unionByName(
-            edges.select(col("dst").as("src"), col("src").as("dst")))
-          val expanded = undirected.as("l")
-            .join(undirected.as("r"), col("l.dst") === col("r.src"))
-            .select(col("l.src").as("query_id"),
-              col("r.dst").as("neighbor_id"))
-            .filter(col("query_id") =!= col("neighbor_id"))
-            .unionByName(edges.select(col("src").as("query_id"),
-              col("dst").as("neighbor_id")))
-            .distinct()
-          graph = scoreAndRank(expanded).localCheckpoint(true)
-          i += 1
-        }
-        e.unpersist()
-        graph
-      }
-      val oldG = oldDescent(embs, 32, 5)
-      val newG = ext.EmbeddingSearch.nnDescent(embs, 32, 5)
-      val diff = oldG.exceptAll(newG).unionByName(newG.exceptAll(oldG))
-        .count()
-      println(s"PROBE descent2_value_diff $diff (must be 0)")
-      for (rep <- 1 to 3) {
-        t(s"descent_old_rep$rep") { oldDescent(embs, 32, 5).count() }
-        t(s"descent_new_rep$rep") {
-          ext.EmbeddingSearch.nnDescent(embs, 32, 5).count() }
-      }
-      t("descent_old_warm1") {
-        oldDescent(embs, 32, 1).count() }
-      t("descent_new_warm1") {
-        ext.EmbeddingSearch.nnDescent(embs, 32, 1).count() }
-    }
-    if (on("insertfix")) {
-      // hypothesis probe: KnnGraphIndex.insert's code is unchanged in
-      // r15, but q_graph_insert's min-of-3 window moved — does a seed
-      // index built FROM the r15 descent (identical values) insert
-      // slower than one built from the r14 descent (different physical
-      // row layout)? Alternated same-JVM reps on private copies.
-      import org.apache.spark.sql.DataFrame
-      import org.apache.spark.sql.expressions.Window
-      import ext.EmbeddingSearch.{dot, prepared}
-      def oldDescent(embs: DataFrame, k: Int, iters: Int): DataFrame = {
-        val e = prepared(embs).persist()
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cos").desc, col("neighbor_id").asc)
-        def scoreAndRank(cand: DataFrame): DataFrame =
-          cand
-            .join(e.select(col("vec_id").as("neighbor_id"), col("v"),
-              col("nrm")), "neighbor_id")
-            .join(e.select(col("vec_id").as("query_id"),
-              col("v").as("qv"), col("nrm").as("qnrm")), "query_id")
-            .withColumn("cos",
-              dot(col("qv"), col("v")) / sqrt(col("qnrm") * col("nrm")))
-            .withColumn("rank", row_number().over(w))
-            .filter(col("rank") <= k)
-            .select(col("query_id"), col("neighbor_id"),
-              round(col("cos"), 6).as("cos"), col("rank"))
-        val ids = ext.DataOps.globalRanks(
-            e.select(col("vec_id").as("id"), col("vec_id").as("score")))
-          .select(col("id").as("vec_id"), col("rank").as("rk"),
-            col("__n"))
-        val ring = ids
-          .withColumn("j", explode(sequence(lit(1), lit(k))))
-          .withColumn("nrk", (col("rk") - 1 + col("j")) % col("__n") + 1)
-          .join(ids.select(col("rk").as("nrk"),
-            col("vec_id").as("neighbor_id")), "nrk")
-          .filter(col("vec_id") =!= col("neighbor_id"))
-          .select(col("vec_id").as("query_id"), col("neighbor_id"))
-        var graph = scoreAndRank(ring).localCheckpoint(true)
-        var i = 0
-        while (i < iters) {
-          val edges = graph.select(col("query_id").as("src"),
-            col("neighbor_id").as("dst"))
-          val undirected = edges.unionByName(
-            edges.select(col("dst").as("src"), col("src").as("dst")))
-          val expanded = undirected.as("l")
-            .join(undirected.as("r"), col("l.dst") === col("r.src"))
-            .select(col("l.src").as("query_id"),
-              col("r.dst").as("neighbor_id"))
-            .filter(col("query_id") =!= col("neighbor_id"))
-            .unionByName(edges.select(col("src").as("query_id"),
-              col("dst").as("neighbor_id")))
-            .distinct()
-          graph = scoreAndRank(expanded).localCheckpoint(true)
-          i += 1
-        }
-        e.unpersist()
-        graph
-      }
-      val seedCorpus = embs.filter(col("vec_id") % 3 =!= 0)
-      val delivery = embs.filter(col("vec_id") % 3 === 0)
-      val pathNew = Gate.tmpDir("probe_if_new_") + "/ix"
-      val pathOld = Gate.tmpDir("probe_if_old_") + "/ix"
-      val gNew = ext.EmbeddingSearch.nnDescent(seedCorpus, 32, 5)
-      val gOld = oldDescent(seedCorpus, 32, 5)
-      println(s"PROBE if_parts_new ${gNew.rdd.getNumPartitions}")
-      println(s"PROBE if_parts_old ${gOld.rdd.getNumPartitions}")
-      t("if_build_seed_new") {
-        ext.KnnGraphIndex.buildFrom(seedCorpus, gNew, pathNew, 32) }
-      t("if_build_seed_old") {
-        ext.KnnGraphIndex.buildFrom(seedCorpus, gOld, pathOld, 32) }
-      def lay(p: String): String = {
-        val d = new java.io.File(s"$p")
-        d.listFiles().filter(_.isDirectory).map { seg =>
-          seg.listFiles().filter(_.isDirectory).map { rel =>
-            val fs = rel.listFiles().filter(_.getName.endsWith(".parquet"))
-            s"${rel.getName}:${fs.length}f/${fs.map(_.length).sum}B"
-          }.sorted.mkString(" ")
-        }.mkString(" | ")
-      }
-      println(s"PROBE if_layout_new ${lay(pathNew)}")
-      println(s"PROBE if_layout_old ${lay(pathOld)}")
-      for (rep <- 1 to 3) {
-        val cpN = Gate.copyDir(pathNew.stripSuffix("/ix"), "probe_ifn_")
-        t(s"if_insert_newseed_rep$rep") {
-          ext.KnnGraphIndex.insert(spark, s"$cpN/ix", delivery) }
-        val cpO = Gate.copyDir(pathOld.stripSuffix("/ix"), "probe_ifo_")
-        t(s"if_insert_oldseed_rep$rep") {
-          ext.KnnGraphIndex.insert(spark, s"$cpO/ix", delivery) }
-      }
-    }
     if (on("walk")) {
       // same-JVM A/B of graphSearchState's two paths — the broadcast
       // kernel (10MB) and the relational loop (-1) — on an insert walk

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *
   * The family contract everyone else has: `save`/`saveAppend` with
   * FROZEN geometry (the stored `dim` — deliveries are width-asserted
-  * against it, [[EmbeddingSearch.checkedDim]]), `deleteVecs` as scoped
+  * against it, [[EmbeddingSearch.checkedDim]]), `delete` as scoped
   * tombstones, `compact` as the physical apply, `loadAt` time travel,
   * and registration as a [[Takedown]]/[[Ingest]] surface (kind
   * `binary`). Training-free: the "model" is one integer, so unlike
@@ -32,7 +32,11 @@ import org.apache.spark.sql.functions._
   * replays codes, Hamming candidates, and the exact re-rank as values —
   * the q_sq_persist posture, not a recall floor.
   */
-object BinaryIndex {
+object BinaryIndex extends VectorFamily {
+
+  val kind = "binary"
+  val live = ("codes", "vec_id")
+  protected val sidecars = Seq("meta")
 
   /** `dim`: the frozen embedding width. `codes`: (vec_id, code:
     * array<long>). `vecs`: the prepared corpus (vec_id, v, nrm) the
@@ -88,16 +92,8 @@ object BinaryIndex {
   def save(model: Model, path: String, retainVersions: Int = 2): Unit = {
     val spark = model.codes.sparkSession
     import spark.implicits._
-    IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      IndexStore.writeAll(
-        () => Seq(model.dim).toDF("dim").coalesce(1)
-          .write.parquet(s"$path/$seg/meta"),
-        () => model.codes.write.parquet(s"$path/$seg/codes"))
-      IndexStore.publishReplace(spark, path, seg, Seq("meta", "codes"),
-        retainVersions)
-      ()
-    }
+    commitReplace(spark, path, model.codes, Seq(Seq(model.dim).toDF("dim")),
+      retainVersions, "replace")
   }
 
   def buildAndSave(embs: DataFrame, path: String): Model = {
@@ -129,82 +125,27 @@ object BinaryIndex {
     }
   }
 
-  /** Retract vectors: scoped-tombstone append, layout untouched — the
-    * shared vector-family delete ([[SqIndex.deleteVecs]]'s contract:
-    * idempotent, readd-able, applied physically by [[compact]]).
-    */
-  def deleteVecs(spark: SparkSession, path: String, ids: DataFrame,
-      idCol: Column): Unit =
-    IndexStore.tombstoneIds(spark, path, ids, idCol, "codes")
-
-  /** Tombstones apply physically; per-delivery code files collapse. */
-  def compact(spark: SparkSession, path: String,
-      retainVersions: Int = 2): Unit =
-    IndexStore.withLock(spark, path) {
-      val snap = IndexStore.snapshot(spark, path)
-      val seg = IndexStore.newSegmentName()
-      IndexStore.writeAll(
-        () => IndexStore.liveRows(snap, "codes")
-          .write.parquet(s"$path/$seg/codes"),
-        () => snap.read("meta").get.coalesce(1)
-          .write.parquet(s"$path/$seg/meta"))
-      IndexStore.publishReplace(spark, path, seg, Seq("meta", "codes"),
-        retainVersions)
-      ()
-    }
-
-  def maybeCompact(spark: SparkSession, path: String,
-      maxSegments: Int): Boolean = {
-    val due = IndexStore.segmentCount(spark, path) > maxSegments
-    if (due) compact(spark, path)
-    due
-  }
-
-  /** FAMILY HEALTH as a (metric, value) relation ([[IvfIndex.stats]]'s
-    * mold). The sign-bit codec is training-free, so there is no age
-    * gauge — layout debt and live coverage are the whole story:
-    * `live_codes` (corpus coverage), `dim` (frozen geometry),
-    * `segments`/`tombstone_segments`, `version`. Code-relation- and
-    * metadata-bounded.
-    */
-  def stats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val snap = IndexStore.snapshot(spark, path)
-    val dim = IndexStore.cachedMeta(snap) {
+  private def dimOf(snap: IndexStore.Snapshot): Int =
+    IndexStore.cachedMeta(snap) {
       snap.read("meta").getOrElse(
         sys.error(s"no meta relation under ${snap.root}"))
         .head().getAs[Int]("dim")
     }
+
+  /** [[stats]] gauges. The sign-bit codec is training-free, so there is
+    * no age gauge — layout debt and live coverage are the whole story:
+    * `live_codes` (corpus coverage), `dim` (frozen geometry).
+    * Code-relation- and metadata-bounded.
+    */
+  protected def gauges(snap: IndexStore.Snapshot): Seq[(String, Long)] =
     Seq(
-      "dim" -> dim.toLong,
-      "live_codes" -> IndexStore.liveRows(snap, "codes").count(),
-      "segments" ->
-        snap.lines.map(_.split("/").head).distinct.size.toLong,
-      "tombstone_segments" -> snap.segments("tombstones").size.toLong,
-      "version" -> snap.version,
-    ).toDF("metric", "value")
-  }
+      "dim" -> dimOf(snap).toLong,
+      "live_codes" -> IndexStore.liveRows(snap, "codes").count())
 
-  def load(spark: SparkSession, path: String, embs: DataFrame): Model =
-    loadSnapshot(IndexStore.snapshot(spark, path), embs)
-
-  /** [[load]] against a pinned manifest version (time travel within
-    * the GC retention window — the family `loadAt` contract).
-    */
-  def loadAt(spark: SparkSession, path: String, version: Long,
+  protected def loadSnapshot(snap: IndexStore.Snapshot,
       embs: DataFrame): Model =
-    loadSnapshot(IndexStore.snapshotAt(spark, path, version), embs)
-
-  private def loadSnapshot(snap: IndexStore.Snapshot,
-      embs: DataFrame): Model = {
-    val dim = IndexStore.cachedMeta(snap) {
-      snap.read("meta").getOrElse(
-        sys.error(s"no meta relation under ${snap.root}"))
-        .head().getAs[Int]("dim")
-    }
-    Model(dim, IndexStore.liveRows(snap, "codes"),
+    Model(dimOf(snap), IndexStore.liveRows(snap, "codes"),
       EmbeddingSearch.prepared(embs))
-  }
 
   /** Top-k per query over queries drawn from the corpus (self
     * excluded — [[EmbeddingSearch.binaryTopK]]'s semantics): stage 1
@@ -232,41 +173,21 @@ object BinaryIndex {
           col("nrm").as("qnrm")),
       k, candidates, excludeSelf = false)
 
-  /** PRECEDENCE-AWARE FEDERATED ANN across saved binary indexes — the
-    * vector twin of [[TextSearch.searchFederated]], same semantics:
-    * `roots` ordered highest-precedence first, each paired with the
-    * corpus frame its exact re-rank reads; every root answers from its
-    * OWN codes over-fetching k×overFetch, a hit from root i is
-    * disqualified iff any higher root has the id LIVE (the
-    * authoritative — possibly amended — version lives there), and a
-    * retracted overlay id cedes back. Unlike BM25 federation the final
-    * fuse is CALIBRATED: stage 2 re-ranked every candidate by exact
-    * cosine, so cross-root scores are directly comparable. The
-    * precedence probe tests only result ids against higher roots' live
-    * codes (Bloom-pruned segments) — bounded, never a corpus read.
+  /** PRECEDENCE-AWARE FEDERATED ANN across saved binary indexes
+    * ([[IndexFamily.federate]]'s semantics — the vector twin of
+    * [[TextSearch.searchFederated]]): `roots` ordered highest-precedence
+    * first, each paired with the corpus frame its exact re-rank reads,
+    * each over-fetching k×overFetch from its OWN codes. Unlike BM25
+    * federation the final fuse is CALIBRATED: stage 2 re-ranked every
+    * candidate by exact cosine.
     */
   def searchFederatedVectors(spark: SparkSession,
       roots: Seq[(String, DataFrame)], queries: DataFrame, k: Int,
-      candidates: Int = 200, overFetch: Int = 4): DataFrame = {
-    require(roots.nonEmpty, "searchFederatedVectors needs ≥ 1 root")
-    val perRoot = roots.zipWithIndex.map { case ((path, embs), i) =>
-      val hits = searchVectors(load(spark, path, embs), queries,
+      candidates: Int = 200, overFetch: Int = 4): DataFrame =
+    federateVectors(spark, roots.map(_._1), k) { i =>
+      searchVectors(load(spark, roots(i)._1, roots(i)._2), queries,
         k * overFetch, candidates)
-      (0 until i).foldLeft(hits) { (acc, j) =>
-        val snapJ = IndexStore.snapshot(spark, roots(j)._1)
-        val liveJ = IndexStore.liveRowsAmong(snapJ, "codes", "vec_id",
-            acc.select(col("neighbor_id").as("vec_id")))
-          .select(col("vec_id").as("neighbor_id")).distinct()
-        acc.join(liveJ, Seq("neighbor_id"), "left_anti")
-      }
     }
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    perRoot.reduce(_ unionByName _)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
-  }
 
   private def searchImpl(model: Model, q0: DataFrame, k: Int,
       candidates: Int, excludeSelf: Boolean): DataFrame = {

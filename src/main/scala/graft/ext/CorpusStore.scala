@@ -44,7 +44,11 @@ import org.apache.spark.sql.functions._
   * Delta/Iceberg file-statistics discipline on this store's own
   * manifest.
   */
-object CorpusStore {
+object CorpusStore extends IndexFamily {
+
+  val kind = "store"
+  val live = ("rows", "id")
+  val needs: Option[String] = None
 
   /** `rows` with the store key normalized to a column named `id`
     * (replacing any existing `id` column — the key IS the id).
@@ -350,13 +354,11 @@ object CorpusStore {
     Some((from, to))
   }
 
-  /** Retract rows by id (idempotent, live-presence-judged, scoped
-    * tombstone append — the shared takedown delete contract). No
-    * corpus bytes are rewritten; the retract path is metadata-bounded.
-    */
-  def deleteRows(spark: SparkSession, root: String, ids: DataFrame,
-      idCol: Column): Unit =
-    IndexStore.tombstoneIds(spark, root, ids, idCol, "rows", key = "id")
+  /** The store of record takes the delivery verbatim. */
+  private[ext] def admit(spark: SparkSession, root: String,
+      fresh: DataFrame): Unit = {
+    append(spark, root, fresh, col("id")); ()
+  }
 
   /** Apply tombstones physically and re-cluster every delivery into
     * one segment, RANGE-SORTED on id across `clusterPartitions`
@@ -382,33 +384,13 @@ object CorpusStore {
       } finally { live.unpersist(); () }
     }
 
-  /** [[compact]] only when segment debt crossed `maxSegments` — the
-    * maintenance-loop policy every index family shares (amortizes the
-    * rewrite across many deliveries). Returns whether it compacted.
-    */
-  def maybeCompact(spark: SparkSession, root: String,
-      maxSegments: Int): Boolean = {
-    val due = IndexStore.segmentCount(spark, root) > maxSegments
-    if (due) compact(spark, root)
-    due
-  }
+  def compact(spark: SparkSession, root: String, retainVersions: Int): Unit =
+    compact(spark, root, retainVersions, clusterPartitions = 8)
 
-  /** STORE HEALTH as a (metric, value) relation ([[IvfIndex.stats]]'s
-    * mold for the store of record): `live_rows` (what the corpus
-    * currently serves), `segments`/`tombstone_segments` (compaction
-    * and un-applied-takedown debt), `version`. Rows-relation- and
-    * metadata-bounded — the row payloads are pruned to the id column.
+  /** [[stats]] gauge: `live_rows`, what the corpus currently serves
+    * (the row payloads are pruned to the id column).
     */
-  def stats(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    val snap = IndexStore.snapshot(spark, root)
-    Seq(
-      "live_rows" ->
-        IndexStore.liveRows(snap, "rows", key = "id").select("id").count(),
-      "segments" ->
-        snap.lines.map(_.split("/").head).distinct.size.toLong,
-      "tombstone_segments" -> snap.segments("tombstones").size.toLong,
-      "version" -> snap.version,
-    ).toDF("metric", "value")
-  }
+  protected def gauges(snap: IndexStore.Snapshot): Seq[(String, Long)] =
+    Seq("live_rows" ->
+      IndexStore.liveRows(snap, "rows", key = "id").select("id").count())
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *   tombstones (id)                    — deleted docs awaiting [[compact]]
   *
   * Storage runs on [[IndexStore]]'s segment+manifest layout: every
-  * mutation ([[build]], [[append]], [[ingestBatch]], [[deleteDocs]],
+  * mutation ([[build]], [[append]], [[ingestBatch]], [[delete]],
   * [[compact]]) writes an immutable `seg-*` directory under the writer
   * lock and atomically publishes a manifest version; a dedup racing a
   * compaction pins one version and sees exactly the old or the new
@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * maintenance without rewriting history; a shingle that drifts past
   * `maxDF` as the corpus grows is correctly re-classified as a stop
   * shingle on the NEXT batch, exactly as a full recompute would, and
-  * [[deleteDocs]] retracts a document's df contributions with NEGATIVE
+  * [[delete]] retracts a document's df contributions with NEGATIVE
   * partials the same sum nets out.
   *
   * [[dedupBatch]] finds every near-dup pair involving a new-batch doc
@@ -40,7 +40,11 @@ import org.apache.spark.sql.functions._
   * for the same pairs — same df suppression, same exact-Jaccard — which
   * is what the q_dedup_incremental gate pins against the oracle.
   */
-object DedupIndex {
+object DedupIndex extends IndexFamily {
+
+  val kind = "dedup"
+  val live = ("sizes", "id")
+  val needs = Some("text")
 
   final case class Meta(n: Int, bands: Int, rowsPerBand: Int)
 
@@ -114,6 +118,10 @@ object DedupIndex {
       ()
     } finally shP.unpersist()
   }
+
+  private[ext] def admit(spark: SparkSession, path: String,
+      fresh: DataFrame): Unit =
+    append(spark, path, fresh, col("id"), col("text"))
 
   def readMeta(spark: SparkSession, path: String): Meta =
     metaOf(IndexStore.snapshot(spark, path))
@@ -288,7 +296,7 @@ object DedupIndex {
     * against the oracle. [[compact]] applies tombstones physically. Ids
     * already tombstoned or absent are ignored (no double-subtract).
     */
-  def deleteDocs(spark: SparkSession, path: String, ids: DataFrame,
+  override def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: Column): Unit = IndexStore.withLock(spark, path) {
     val snap = IndexStore.snapshot(spark, path)
     val requested = ids.select(idCol.as("id")).distinct()
@@ -312,7 +320,7 @@ object DedupIndex {
         (snap.segments("shingles") ++ snap.segments("sizes") ++
           snap.segments("buckets")).distinct)
       IndexStore.publishAppend(spark, path, seg,
-        Seq("df", "tombstones", "tombstone_scope"))
+        Seq("df", "tombstones", "tombstone_scope"), op = "delete")
       ()
     } finally dead.unpersist()
   }
@@ -331,41 +339,6 @@ object DedupIndex {
     * retention window. Run it on the cadence appends warrant (the same
     * small-files economics as [[graft.billing.BillingStore.compactRaw]]).
     */
-  /** Size-tiered compaction policy (same knob as
-    * [[TextSearch.maybeCompact]]): compact only when the manifest
-    * references more than `maxSegments` segments, so a streaming ingest
-    * amortizes compaction over deliveries. Returns whether one ran.
-    */
-  def maybeCompact(spark: SparkSession, path: String,
-      maxSegments: Int): Boolean = {
-    val due = IndexStore.segmentCount(spark, path) > maxSegments
-    if (due) compact(spark, path)
-    due
-  }
-
-  /** FAMILY HEALTH as a (metric, value) relation ([[IvfIndex.stats]]'s
-    * mold for the near-dup index): `live_docs` (indexed documents the
-    * bands currently admit against), `df_partial_segments` — segments
-    * carrying shingle-df partials, i.e. how many per-delivery partial
-    * sets every batch probe re-sums for its maxDF pruning until
-    * [[compact]] folds them (the BM25 lexicon gauge) —
-    * `segments`/`tombstone_segments`, `version`. Sizes/df-relation-
-    * and metadata-bounded; the shingle relation is never scanned.
-    */
-  def stats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val snap = IndexStore.snapshot(spark, path)
-    Seq(
-      "df_partial_segments" -> snap.segments("df").size.toLong,
-      "live_docs" ->
-        IndexStore.liveRows(snap, "sizes", key = "id").count(),
-      "segments" ->
-        snap.lines.map(_.split("/").head).distinct.size.toLong,
-      "tombstone_segments" -> snap.segments("tombstones").size.toLong,
-      "version" -> snap.version,
-    ).toDF("metric", "value")
-  }
-
   def compact(spark: SparkSession, path: String,
       retainVersions: Int = 2): Unit =
     IndexStore.withLock(spark, path) {
@@ -387,9 +360,23 @@ object DedupIndex {
         () => live("buckets").repartition(col("id"))
           .write.parquet(s"$path/$seg/buckets"))
       IndexStore.publishReplace(spark, path, seg,
-        Seq("meta", "shingles", "sizes", "df", "buckets"), retainVersions)
+        Seq("meta", "shingles", "sizes", "df", "buckets"), retainVersions,
+        op = "compact")
       ()
     }
+
+  /** [[stats]] gauges for the near-dup index: `live_docs` (indexed
+    * documents the bands currently admit against),
+    * `df_partial_segments` — segments carrying shingle-df partials,
+    * i.e. how many per-delivery partial sets every batch probe re-sums
+    * for its maxDF pruning until [[compact]] folds them (the BM25
+    * lexicon gauge). Sizes/df-relation- and metadata-bounded; the
+    * shingle relation is never scanned.
+    */
+  protected def gauges(snap: IndexStore.Snapshot): Seq[(String, Long)] =
+    Seq(
+      "df_partial_segments" -> snap.segments("df").size.toLong,
+      "live_docs" -> IndexStore.liveRows(snap, "sizes", key = "id").count())
 
   /** Candidate pairs touching an affected doc, straight from the SAVED
     * buckets: the affected ids ride a broadcast into a (band, bucket)-

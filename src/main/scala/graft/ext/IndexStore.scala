@@ -79,6 +79,14 @@ object IndexStore {
     def segments(relation: String): Seq[String] =
       lines.filter(_.endsWith(s"/$relation")).map(_.split("/").head).distinct
 
+    /** Every distinct segment this manifest references. */
+    def allSegments: Seq[String] = lines.map(_.split("/").head).distinct
+
+    /** The number of per-relation unions a reader pays — the
+      * compaction-debt gauge.
+      */
+    def segmentCount: Int = allSegments.size
+
     /** [[read]] restricted to an explicit segment subset — the
       * building block of scope-aware tombstone masking.
       *
@@ -273,7 +281,7 @@ object IndexStore {
       s"cloneAt destination $dstRoot is already an index root")
     val sfs = fsOf(spark, srcRoot)
     val conf = spark.sessionState.newHadoopConf()
-    snap.lines.map(_.split("/").head).distinct.foreach { seg =>
+    snap.allSegments.foreach { seg =>
       val ok = org.apache.hadoop.fs.FileUtil.copy(
         sfs, new Path(srcRoot, seg), dfs, new Path(dstRoot, seg),
         false, true, conf)
@@ -287,11 +295,9 @@ object IndexStore {
     }
   }
 
-  /** Distinct segments the CURRENT manifest references — the number of
-    * per-relation unions a reader pays, i.e. the compaction-debt gauge.
-    */
+  /** [[Snapshot.segmentCount]] of the CURRENT manifest. */
   def segmentCount(spark: SparkSession, root: String): Int =
-    snapshot(spark, root).lines.map(_.split("/").head).distinct.size
+    snapshot(spark, root).segmentCount
 
   /** Run `body` holding the index root's writer mutex — every mutator
     * (build/append/delete/compact) goes through here.
@@ -417,10 +423,10 @@ object IndexStore {
   def opAt(spark: SparkSession, root: String, version: Long): String =
     manifest.opAt(fsOf(spark, root), root, version)
 
-  /** Shared tombstone-append for the vector-index family (IVF/PQ/SQ/
-    * IVF-PQ) and [[LiteralIndex]]: the requested ids that have LIVE
-    * rows in `relation` append as one tombstone segment, SCOPED to the
-    * data segments present at delete time ([[writeScope]]). Readers
+  /** The shared tombstone-append ([[IndexFamily.delete]]): the requested
+    * ids that have LIVE rows in `relation` append as one tombstone
+    * segment, SCOPED to the data segments present at delete time
+    * ([[writeScope]]). Readers
     * anti-join via [[liveRows]]; compaction applies them physically.
     * Judging presence against live rows (not raw rows) makes deletes
     * idempotent (a fully-masked id is a no-op) while still letting a

@@ -43,12 +43,13 @@ import org.apache.spark.sql.functions._
   * the delivery broadcast — the same cost class as the family delete
   * paths, which judge presence against live rows the same way.
   *
-  * Delivery schema: a required `id` column, plus `text` (consumed by
-  * the store and the document indexes) and/or `emb` (an
-  * `array<float/double>` consumed by the store and the vector
-  * indexes). [[admit]] refuses — BEFORE the intent lands — a delivery
-  * missing a column some registered surface needs, so an intent can
-  * never wedge on a schema it cannot satisfy. The store of record
+  * Delivery schema: a required `id` column, plus each registered
+  * family's [[IndexFamily.needs]] column — across [[IndexFamily.all]],
+  * `text` (the document indexes) and/or `emb` (an
+  * `array<float/double>`, the vector indexes). [[admit]] refuses —
+  * BEFORE the intent lands — a delivery missing a column some
+  * registered surface needs, so an intent can never wedge on a schema
+  * it cannot satisfy. The store of record
   * receives the delivery verbatim; delivery schemas may EVOLVE by
   * addition (the store unions segments by name, null-filling columns
   * older deliveries lack — [[CorpusStore]]'s schema contract).
@@ -66,16 +67,8 @@ object Ingest {
     * (derived order is convention, not correctness — every apply is
     * independently idempotent).
     */
-  private def applyOrder(ss: Seq[Surface]): Seq[Surface] = {
-    val prio = Map("store" -> 0).withDefaultValue(1)
-    ss.sortBy(s => (prio(s.kind), s.kind, s.path))
-  }
-
-  private def needsText(kind: String): Boolean =
-    Set("bm25", "dedup", "literal").contains(kind)
-
-  private def needsEmb(kind: String): Boolean =
-    Set("ivf", "pq", "sq", "ivfpq", "graph", "binary").contains(kind)
+  private def applyOrder(ss: Seq[Surface]): Seq[Surface] =
+    ss.sortBy(s => (s.family != CorpusStore, s.kind, s.path))
 
   /** Admit `delivery` to every registered surface. The intent commits
     * durably BEFORE any surface is touched, so a crash at any point
@@ -88,13 +81,9 @@ object Ingest {
       idCol: Column): String = {
     val ss = surfaces(spark, root)
     require(ss.nonEmpty, s"no surfaces registered under $root")
-    val cols = delivery.columns.toSet
-    ss.foreach { s =>
-      require(!needsText(s.kind) || cols.contains("text"),
-        s"surface ${s.kind}@${s.path} needs a 'text' column the delivery lacks")
-      require(!needsEmb(s.kind) || cols.contains("emb"),
-        s"surface ${s.kind}@${s.path} needs an 'emb' column the delivery lacks")
-    }
+    ss.foreach(s => s.family.needs.foreach(c =>
+      require(delivery.columns.contains(c),
+        s"surface ${s.kind}@${s.path} needs a '$c' column the delivery lacks")))
     val did = "d-" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(16)
     val fs = fsOf(spark, root)
@@ -121,16 +110,7 @@ object Ingest {
   private def liveIds(spark: SparkSession, s: Surface,
       candidates: DataFrame): DataFrame = {
     val snap = IndexStore.snapshot(spark, s.path)
-    val (rel, k) = s.kind match {
-      case "store"               => ("rows", "id")
-      case "bm25"                => ("postings", "id")
-      case "dedup"               => ("sizes", "id")
-      case "literal"             => ("grams", "id")
-      case "ivf"                 => ("cells", "vec_id")
-      case "pq" | "sq" | "ivfpq" | "binary" => ("codes", "vec_id")
-      case "graph"               => ("vectors", "vec_id")
-      case other => sys.error(s"unknown surface kind '$other'")
-    }
+    val (rel, k) = s.family.live
     IndexStore.liveRowsAmong(snap, rel, k,
         candidates.select(col("id").as(k)))
       .select(col(k).as("id")).distinct()
@@ -155,7 +135,7 @@ object Ingest {
     // apply is live-presence-idempotent, and the first failure
     // rethrows after the batch settles, so completed surfaces keep
     // their markers.
-    val (stores, derived) = ss.take(upTo).partition(_.kind == "store")
+    val (stores, derived) = ss.take(upTo).partition(_.family == CorpusStore)
     def applyOne(s: Surface): Unit = {
       val mark = new Path(deliveriesDir(root), s"$did/done-${surfaceId(s)}")
       if (!fs.exists(mark)) {
@@ -171,56 +151,17 @@ object Ingest {
 
   private def applySurface(spark: SparkSession, s: Surface,
       rows: DataFrame): Unit = {
+    // a surface registered AFTER an intent lacking its column landed
+    // fails loudly here (admit() refuses such a delivery up front)
+    s.family.needs.foreach(c => require(rows.columns.contains(c),
+      s"surface ${s.kind}@${s.path} needs a '$c' column the logged " +
+        "delivery lacks"))
     // ids already live on THIS surface are skipped: dups ⊆ delivery, so
     // broadcasting the probe and the resulting exclusion set is safe
     val dups = liveIds(spark, s, rows.select("id"))
       .join(broadcast(rows.select("id")), Seq("id"), "left_semi")
-    val fresh = rows.join(broadcast(dups), Seq("id"), "left_anti")
-    // a vec surface registered AFTER a text-only intent landed fails
-    // loudly here (admit() refuses such a delivery up front)
-    def vecs: DataFrame = {
-      require(rows.columns.contains("emb"),
-        s"surface ${s.kind}@${s.path} needs an 'emb' column the " +
-          s"logged delivery lacks")
-      // a mixed delivery legitimately carries text-only rows (the store
-      // keeps them; embeddings may arrive later) — but a null embedding
-      // must never reach a vector index, where prepared() would flow
-      // null v/nrm into every cosine
-      fresh.filter(col("emb").isNotNull)
-        .select(col("id").as("vec_id"), col("emb").as("embedding"))
-    }
-    s.kind match {
-      case "store" =>
-        CorpusStore.append(spark, s.path, fresh, col("id")); ()
-      case "bm25" =>
-        TextSearch.appendDocs(spark, s.path, fresh, col("id"), col("text"))
-      case "dedup" =>
-        DedupIndex.append(spark, s.path, fresh, col("id"), col("text"))
-      case "literal" =>
-        LiteralIndex.appendDocs(spark, s.path, fresh, col("id"), col("text"))
-      // vector loads bind the model's corpus frame to the delivery —
-      // saveAppend only reads the frozen quantizer (centroids /
-      // codebooks / clip range), which comes from the snapshot
-      case "ivf" =>
-        IvfIndex.saveAppend(IvfIndex.load(spark, s.path, vecs), vecs, s.path)
-      case "pq" =>
-        PqIndex.saveAppend(PqIndex.load(spark, s.path, vecs), vecs, s.path)
-      case "sq" =>
-        SqIndex.saveAppend(SqIndex.load(spark, s.path, vecs), vecs, s.path)
-      case "ivfpq" =>
-        IvfPqIndex.saveAppend(
-          IvfPqIndex.load(spark, s.path, vecs), vecs, s.path)
-      case "binary" =>
-        BinaryIndex.saveAppend(
-          BinaryIndex.load(spark, s.path, vecs), vecs, s.path)
-      // insert-by-search: the delivery beam-searches the live graph for
-      // its neighborhood — delta-bounded compute, never a corpus-wide
-      // descent (insert is itself live-presence idempotent, so the
-      // fresh-rows pre-filter above is belt and braces here)
-      case "graph" =>
-        KnnGraphIndex.insert(spark, s.path, vecs); ()
-      case other => sys.error(s"unknown surface kind '$other'")
-    }
+    s.family.admit(spark, s.path,
+      rows.join(broadcast(dups), Seq("id"), "left_anti"))
   }
 
   /** Delivery ids whose `_done` marker has not landed — what a crash

@@ -17,7 +17,11 @@ import org.apache.spark.sql.functions._
   * hyperplane-LSH variant in [[EmbeddingSearch]] (IVF adapts to the data
   * distribution; LSH is oblivious and build-free).
   */
-object IvfIndex {
+object IvfIndex extends VectorFamily {
+
+  val kind = "ivf"
+  val live = ("cells", "vec_id")
+  protected val sidecars = Seq("centroids")
 
   final case class Model(centroids: DataFrame, assigned: DataFrame)
 
@@ -56,34 +60,20 @@ object IvfIndex {
     *
     * Storage runs on [[IndexStore]]'s segment+manifest layout, like the
     * BM25 and dedup indexes: every mutation ([[save]], [[saveAppend]],
-    * [[deleteVecs]], [[compact]]) writes an immutable `seg-*` directory
+    * [[delete]], [[compact]]) writes an immutable `seg-*` directory
     * under the writer lock and atomically publishes a manifest version,
     * so a search racing a compaction pins exactly the old or the new
     * index, and [[loadAt]] time-travels within the GC retention window.
     */
-  def save(model: Model, path: String, retainVersions: Int = 2): Unit = {
-    val spark = model.centroids.sparkSession
-    IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      writeSegment(model.centroids, model.assigned, path, seg)
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("centroids", "cells"), retainVersions)
-      ()
-    }
-  }
+  def save(model: Model, path: String, retainVersions: Int = 2): Unit =
+    commitReplace(model.centroids.sparkSession, path, model.assigned,
+      Seq(model.centroids), retainVersions, "replace")
 
-  private def writeSegment(centroids: DataFrame, assigned: DataFrame,
-      path: String, seg: String): Unit =
-    // independent relation writes, overlapped (IndexStore.writeAll)
-    IndexStore.writeAll(
-      () => centroids.coalesce(1).write.parquet(s"$path/$seg/centroids"),
-      () => writeCells(assigned, path, seg))
-
-  private def writeCells(assigned: DataFrame, path: String,
-      seg: String): Unit =
+  /** The (vec_id, cell) assignment, PARTITIONED BY cell. */
+  override protected def writeLive(assigned: DataFrame, dir: String): Unit =
     assigned.select("vec_id", "cell")
       .repartition(col("cell"))
-      .write.partitionBy("cell").parquet(s"$path/$seg/cells")
+      .write.partitionBy("cell").parquet(dir)
 
   /** Assign new vectors to their nearest EXISTING centroid — the frozen
     * quantizer's prediction spelled as a map-side argmin over the
@@ -200,11 +190,8 @@ object IvfIndex {
       val model = load(spark, path, embs)
       val reb = rebalance(model, maxCellSize, sampleCap, maxIter, seed,
         maxCellsPerPass)
-      val seg = IndexStore.newSegmentName()
-      writeSegment(reb.centroids, reb.assigned, path, seg)
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("centroids", "cells"), retainVersions)
-      ()
+      commitReplace(spark, path, reb.assigned, Seq(reb.centroids),
+        retainVersions, "replace")
     }
 
   /** The biggest LIVE cell of a saved index — the per-probe-latency
@@ -212,9 +199,15 @@ object IvfIndex {
     * (vec_id, cell) assignment relation: index-relation-bounded (two
     * small columns), never a corpus read.
     */
-  def maxLiveCell(spark: SparkSession, path: String): Long = {
-    val snap = IndexStore.snapshot(spark, path)
-    val row = IndexStore.liveRows(snap, "cells")
+  def maxLiveCell(spark: SparkSession, path: String): Long =
+    biggestCell(IndexStore.snapshot(spark, path), "cells")
+
+  /** The biggest live cell of a cell-partitioned `relation` — shared
+    * with [[IvfPqIndex.maxLiveCell]].
+    */
+  private[ext] def biggestCell(snap: IndexStore.Snapshot,
+      relation: String): Long = {
+    val row = IndexStore.liveRows(snap, relation)
       .groupBy("cell").agg(count(lit(1)).as("n"))
       .agg(max("n")).head()
     if (row.isNullAt(0)) 0L else row.getLong(0)
@@ -242,122 +235,48 @@ object IvfIndex {
       due
     }
 
-  /** FAMILY HEALTH as a (metric, value) relation — the
-    * [[KnnGraphIndex.stats]] mold for the IVF family, the numbers
-    * that decide [[maybeRebalance]]/[[maybeCompact]]: manifest
-    * `version`; `cells` (live cells), `cell_min`/`cell_max` (the live
-    * occupancy envelope over non-empty cells — `cell_max` is the
-    * per-probe latency bound, and a wide min/max spread is the skew
-    * gauge); `live_rows` (live assignment rows = the index's corpus
-    * coverage); `segments`/`tombstone_segments` (compaction debt).
+  /** [[stats]] gauges — the numbers that decide [[maybeRebalance]]:
+    * `cells` (live cells), `cell_min`/`cell_max` (the live occupancy
+    * envelope over non-empty cells — `cell_max` is the per-probe
+    * latency bound, and a wide min/max spread is the skew gauge);
+    * `live_rows` (live assignment rows = the index's corpus coverage).
     * Cost is one aggregate over the two-column assignment relation —
     * index-relation-bounded, never a corpus read. q_index_stats
     * value-checks every number.
     */
-  def stats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val snap = IndexStore.snapshot(spark, path)
-    val occ = IndexStore.liveRows(snap, "cells")
+  protected def gauges(snap: IndexStore.Snapshot): Seq[(String, Long)] =
+    occupancy(snap, "cells", "live_rows")
+
+  /** The live cell-occupancy envelope of a cell-partitioned `relation`
+    * plus its live row count (named `rows`) — shared with
+    * [[IvfPqIndex]]'s gauges.
+    */
+  private[ext] def occupancy(snap: IndexStore.Snapshot, relation: String,
+      rows: String): Seq[(String, Long)] = {
+    val occ = IndexStore.liveRows(snap, relation)
       .groupBy("cell").agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("cells"), min("n").as("lo"),
         max("n").as("hi"), sum("n").as("rows"))
       .head()
     def longAt(i: Int): Long = if (occ.isNullAt(i)) 0L else occ.getLong(i)
-    Seq(
-      "cell_max" -> longAt(2),
-      "cell_min" -> longAt(1),
-      "cells" -> longAt(0),
-      "live_rows" -> longAt(3),
-      "segments" ->
-        snap.lines.map(_.split("/").head).distinct.size.toLong,
-      "tombstone_segments" -> snap.segments("tombstones").size.toLong,
-      "version" -> snap.version,
-    ).toDF("metric", "value")
+    Seq("cell_max" -> longAt(2), "cell_min" -> longAt(1),
+      "cells" -> longAt(0), rows -> longAt(3))
   }
 
-  /** Incrementally assign `newEmbs` with the frozen quantizer and append
-    * their cells to a saved index — only the delta is scanned/written
-    * (one appended segment; an empty delivery publishes nothing, so an
-    * idle micro-batch can drive this safely).
+  /** Assign `newEmbs` with the frozen quantizer and append their cells
+    * (an idle micro-batch can drive this safely).
     */
-  def saveAppend(model: Model, newEmbs: DataFrame, path: String): Unit = {
-    val spark = model.centroids.sparkSession
-    val assigned = assignNew(model, newEmbs)
-    if (!assigned.isEmpty) IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      writeCells(assigned, path, seg)
-      IndexStore.publishAppend(spark, path, seg, Seq("cells"))
-      ()
-    }
-  }
+  def saveAppend(model: Model, newEmbs: DataFrame, path: String): Unit =
+    appendLive(model.centroids.sparkSession, path, assignNew(model, newEmbs))
 
-  /** Retract vectors from a saved index without touching its layout:
-    * the requested ids (already-tombstoned and index-absent ids are
-    * dropped — deletes can never double-apply) are appended as a
-    * tombstone segment. [[load]]/[[loadAt]] anti-join the tombstones,
-    * so searches answer EXACTLY as an index built over the surviving
-    * corpus; [[compact]] later removes the rows physically. The id
-    * filtering reads only the (vec_id) column of the assignment —
-    * takedown batches are small → broadcast.
-    */
-  def deleteVecs(spark: SparkSession, path: String, ids: DataFrame,
-      idCol: Column): Unit =
-    IndexStore.tombstoneIds(spark, path, ids, idCol, "cells")
+  override private[ext] def maintainQuality(spark: SparkSession,
+      path: String, maxGraphDebt: Int, maxCell: Long,
+      embs: => Option[DataFrame]): Boolean =
+    maxCell > 0L && embs.exists(maybeRebalance(spark, path, _, maxCell))
 
-  /** Compact a saved index: tombstones apply physically, every
-    * delivery's small cell files collapse into one clustered set per
-    * cell, and the result publishes as a manifest pointer swap (a
-    * reader racing this pins the old or the new index, never a mix).
-    * Pure layout rewrite — answers unchanged by construction.
-    */
-  def compact(spark: SparkSession, path: String,
-      retainVersions: Int = 2): Unit =
-    IndexStore.withLock(spark, path) {
-      val snap = IndexStore.snapshot(spark, path)
-      val live = IndexStore.liveRows(snap, "cells")
-      val seg = IndexStore.newSegmentName()
-      writeSegment(snap.read("centroids").get, live, path, seg)
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("centroids", "cells"), retainVersions)
-      ()
-    }
-
-  /** Size-tiered compaction policy ([[TextSearch.maybeCompact]]'s
-    * contract): [[compact]] only when the manifest references more than
-    * `maxSegments` segments — the knob a streaming ingest/takedown loop
-    * calls after every delivery so compaction amortizes instead of
-    * firing per micro-batch (or never). Returns whether one ran.
-    */
-  def maybeCompact(spark: SparkSession, path: String,
-      maxSegments: Int): Boolean = {
-    val due = IndexStore.segmentCount(spark, path) > maxSegments
-    if (due) compact(spark, path)
-    due
-  }
-
-  /** Load a saved index; `embs` (the corpus plus appended rows)
-    * re-attaches vectors via an inner join on vec_id. Tombstoned
-    * vectors are excluded — both as candidates and as query rows.
-    */
-  def load(spark: SparkSession, path: String, embs: DataFrame): Model =
-    loadSnapshot(IndexStore.snapshot(spark, path), embs)
-
-  /** [[load]] against a PINNED manifest version — time travel within
-    * the GC retention window: searches answer exactly as of that
-    * commit, regardless of appends/deletes landed since (the ANN side
-    * of the lineage contract [[TextSearch.searchSavedAt]] makes for
-    * sparse retrieval). `embs` must still cover the pinned version's
-    * vec_ids — the corpus table is the vector source of truth.
-    */
-  def loadAt(spark: SparkSession, path: String, version: Long,
+  protected def loadSnapshot(snap: IndexStore.Snapshot,
       embs: DataFrame): Model =
-    loadSnapshot(IndexStore.snapshotAt(spark, path, version), embs)
-
-  private def loadSnapshot(snap: IndexStore.Snapshot,
-      embs: DataFrame): Model =
-    Model(snap.read("centroids").get,
-      EmbeddingSearch.prepared(embs)
-        .join(IndexStore.liveRows(snap, "cells"), "vec_id"))
+    Model(snap.read("centroids").get, liveCorpus(snap, embs))
 
   /** INCREMENTAL embedding near-dup: dedup a DELTA of vectors against
     * an IVF-indexed corpus without an all-pairs join — the
@@ -442,46 +361,23 @@ object IvfIndex {
         col("v").as("qv"), col("nrm").as("qnrm")),
       k, nProbe, excludeSelf = false)
 
-  /** PRECEDENCE-AWARE FEDERATED ANN across saved IVF indexes — the
-    * trained-family twin of
-    * [[BinaryIndex.searchFederatedVectors]], same semantics: `roots`
-    * ordered highest-precedence first, each paired with the corpus
-    * frame its cell assignment re-attaches; every root answers from
-    * its OWN index over-fetching k×overFetch, a hit from root i is
-    * disqualified iff any higher root has the id LIVE (the
-    * authoritative — possibly amended — version lives there), and a
-    * retracted overlay id cedes back. Scores are exact cosines, so
-    * the cross-root fuse is calibrated. Each root keeps its own
-    * quantizer — federation never requires co-trained centroids —
-    * and with EXHAUSTIVE probes each root's answer is exactly brute
-    * force over its live corpus (the [[searchWhere]] value-check
-    * trick), which is how the gate hash-checks the whole federation.
-    * The precedence probe tests only result ids against higher
-    * roots' live cells (Bloom-pruned segments) — bounded, never a
-    * corpus read.
+  /** PRECEDENCE-AWARE FEDERATED ANN across saved IVF indexes
+    * ([[IndexFamily.federate]]'s semantics): `roots` ordered
+    * highest-precedence first, each paired with the corpus frame its
+    * cell assignment re-attaches, each over-fetching k×overFetch from
+    * its OWN index. Each root keeps its own quantizer — federation
+    * never requires co-trained centroids — and with EXHAUSTIVE probes
+    * each root's answer is exactly brute force over its live corpus
+    * (the [[searchWhere]] value-check trick), which is how the gate
+    * hash-checks the whole federation.
     */
   def searchFederatedVectors(spark: SparkSession,
       roots: Seq[(String, DataFrame)], queries: DataFrame, k: Int,
-      nProbe: Int, overFetch: Int = 4): DataFrame = {
-    require(roots.nonEmpty, "searchFederatedVectors needs ≥ 1 root")
-    val perRoot = roots.zipWithIndex.map { case ((path, embs), i) =>
-      val hits = searchVectors(load(spark, path, embs), queries,
+      nProbe: Int, overFetch: Int = 4): DataFrame =
+    federateVectors(spark, roots.map(_._1), k) { i =>
+      searchVectors(load(spark, roots(i)._1, roots(i)._2), queries,
         k * overFetch, nProbe)
-      (0 until i).foldLeft(hits) { (acc, j) =>
-        val snapJ = IndexStore.snapshot(spark, roots(j)._1)
-        val liveJ = IndexStore.liveRowsAmong(snapJ, "cells", "vec_id",
-            acc.select(col("neighbor_id").as("vec_id")))
-          .select(col("vec_id").as("neighbor_id")).distinct()
-        acc.join(liveJ, Seq("neighbor_id"), "left_anti")
-      }
     }
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    perRoot.reduce(_ unionByName _)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
-  }
 
   private def searchImpl(model: Model, q: DataFrame, k: Int, nProbe: Int,
       excludeSelf: Boolean): DataFrame = {

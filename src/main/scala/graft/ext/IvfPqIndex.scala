@@ -32,7 +32,12 @@ import org.apache.spark.sql.functions._
   * query, so squared-L2 ADC ranking orders candidates exactly as the
   * cosine ground truth does (same discipline as [[PqIndex.unit]]).
   */
-object IvfPqIndex {
+object IvfPqIndex extends VectorFamily {
+
+  val kind = "ivfpq"
+  val live = ("codes", "vec_id")
+  protected val sidecars = Seq("centroids", "codebooks")
+  override protected def trained = true
 
   /** `centroids`: (cell, cv) — coarse centers in unit space, k rows.
     * `codebooks(j)`: k residual centroids for subspace j (shared across
@@ -140,93 +145,20 @@ object IvfPqIndex {
     */
   def save(model: Model, path: String, retainVersions: Int = 2): Unit = {
     val spark = model.encoded.sparkSession
-    IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      writeQuantizers(model, path, seg)
-      writeCodes(model.encoded, path, seg)
-      // tagged "train": freshly-trained quantizers — what [[stats]]'s
-      // codebook_age counts from (the [[PqIndex.save]] discipline)
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("centroids", "codebooks", "codes"), retainVersions,
-        op = "train")
-      ()
-    }
+    // tagged "train": freshly-trained quantizers — what [[stats]]'s
+    // codebook_age counts from (the [[PqIndex.save]] discipline)
+    commitReplace(spark, path, model.encoded, Seq(model.centroids,
+      PqIndex.codebookRows(spark, model.codebooks)), retainVersions, "train")
   }
 
-  private def writeQuantizers(model: Model, path: String,
-      seg: String): Unit = {
-    val spark = model.encoded.sparkSession
-    import spark.implicits._
-    val cb = for {
-      (book, j) <- model.codebooks.zipWithIndex
-      (cent, c) <- book.zipWithIndex
-    } yield (j, c, cent)
-    IndexStore.writeAll(
-      () => model.centroids.coalesce(1)
-        .write.parquet(s"$path/$seg/centroids"),
-      () => cb.toDF("subspace", "code_id", "centroid")
-        .coalesce(1).write.parquet(s"$path/$seg/codebooks"))
-  }
-
-  private def writeCodes(encoded: DataFrame, path: String,
-      seg: String): Unit =
+  /** The (vec_id, cell, code) rows, PARTITIONED BY cell. */
+  override protected def writeLive(encoded: DataFrame, dir: String): Unit =
     encoded.select("vec_id", "cell", "code")
       .repartition(col("cell"))
-      .write.partitionBy("cell").parquet(s"$path/$seg/codes")
+      .write.partitionBy("cell").parquet(dir)
 
-  /** Incrementally encode `newEmbs` (frozen quantizers) and append their
-    * codes to a saved index — only the delta is scanned and written (one
-    * appended segment; an empty delivery publishes nothing).
-    */
-  def saveAppend(model: Model, newEmbs: DataFrame, path: String): Unit = {
-    val spark = model.encoded.sparkSession
-    val delta = encode(model, newEmbs)
-    if (!delta.isEmpty) IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      writeCodes(delta, path, seg)
-      IndexStore.publishAppend(spark, path, seg, Seq("codes"))
-      ()
-    }
-  }
-
-  /** Retract vectors: tombstone segment appended, layout untouched —
-    * same contract as [[IvfIndex.deleteVecs]] ([[load]] masks,
-    * [[compact]] applies physically, deletes never double-apply).
-    */
-  def deleteVecs(spark: SparkSession, path: String, ids: DataFrame,
-      idCol: Column): Unit =
-    IndexStore.tombstoneIds(spark, path, ids, idCol, "codes")
-
-  /** Compact: tombstones apply physically and every delivery's small
-    * cell files collapse into one clustered set per cell; publishes as
-    * a manifest pointer swap. Pure layout rewrite.
-    */
-  def compact(spark: SparkSession, path: String,
-      retainVersions: Int = 2): Unit =
-    IndexStore.withLock(spark, path) {
-      val snap = IndexStore.snapshot(spark, path)
-      val seg = IndexStore.newSegmentName()
-      IndexStore.writeAll(
-        () => IndexStore.liveRows(snap, "codes")
-          .repartition(col("cell"))
-          .write.partitionBy("cell").parquet(s"$path/$seg/codes"),
-        () => snap.read("centroids").get.coalesce(1)
-          .write.parquet(s"$path/$seg/centroids"),
-        () => snap.read("codebooks").get.coalesce(1)
-          .write.parquet(s"$path/$seg/codebooks"))
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("centroids", "codebooks", "codes"), retainVersions,
-        op = "compact")
-      ()
-    }
-
-  /** Size-tiered compaction ([[IvfIndex.maybeCompact]]'s contract). */
-  def maybeCompact(spark: SparkSession, path: String,
-      maxSegments: Int): Boolean = {
-    val due = IndexStore.segmentCount(spark, path) > maxSegments
-    if (due) compact(spark, path)
-    due
-  }
+  def saveAppend(model: Model, newEmbs: DataFrame, path: String): Unit =
+    appendLive(model.encoded.sparkSession, path, encode(model, newEmbs))
 
   /** QUANTIZER REFRESH for the composite index ([[PqIndex.retrain]]'s
     * contract): BOTH quantizers — the coarse cells and the residual
@@ -250,26 +182,16 @@ object IvfPqIndex {
       sampleFraction: Double = 0.25, maxIter: Int = 10,
       maxSample: Int = 100000, retainVersions: Int = 2): Unit =
     IndexStore.withLock(spark, path) {
-      val snap = IndexStore.snapshot(spark, path)
-      val live = embs
-        .join(IndexStore.liveRows(snap, "codes").select("vec_id"),
-          "vec_id")
-        .select("vec_id", "embedding")
-      save(build(live, kCells, m, k, seed, sampleFraction, maxIter,
-        maxSample), path, retainVersions)
+      save(build(liveEmbeddings(spark, path, embs), kCells, m, k, seed,
+        sampleFraction, maxIter, maxSample), path, retainVersions)
     }
 
   /** The biggest LIVE cell ([[IvfIndex.maxLiveCell]]'s gauge for the
     * composite layout — what decides when [[retrain]] is due on a
     * skewing corpus).
     */
-  def maxLiveCell(spark: SparkSession, path: String): Long = {
-    val snap = IndexStore.snapshot(spark, path)
-    val row = IndexStore.liveRows(snap, "codes")
-      .groupBy("cell").agg(count(lit(1)).as("n"))
-      .agg(max("n")).head()
-    if (row.isNullAt(0)) 0L else row.getLong(0)
-  }
+  def maxLiveCell(spark: SparkSession, path: String): Long =
+    IvfIndex.biggestCell(IndexStore.snapshot(spark, path), "codes")
 
   /** Fire [[retrain]] once the biggest live cell crosses
     * `maxCellSize` — the trained-family debt policy for the composite
@@ -296,67 +218,31 @@ object IvfPqIndex {
       due
     }
 
-  /** FAMILY HEALTH as a (metric, value) relation — [[IvfIndex.stats]]'s
-    * cell-occupancy envelope PLUS [[PqIndex.stats]]'s codebook age, the
-    * two gauges the composite index drifts on: `cell_max` decides
-    * [[maybeRetrain]], `codebook_age` counts versions since the last
-    * "train"-tagged commit (pre-op-tag retained histories read against
-    * the oldest retained version — a documented lower bound).
-    * Code-relation-bounded — never a corpus read.
+  /** [[stats]] gauges — [[IvfIndex]]'s cell-occupancy envelope PLUS
+    * [[PqIndex]]'s codebook age, the two gauges the composite index
+    * drifts on: `cell_max` decides [[maybeRetrain]], `codebook_age` is
+    * the [[trainAge]]; `live_codes`, `subspaces`. Code-relation-bounded
+    * — never a corpus read.
     */
-  def stats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val snap = IndexStore.snapshot(spark, path)
-    val occ = IndexStore.liveRows(snap, "codes")
-      .groupBy("cell").agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("cells"), min("n").as("lo"),
-        max("n").as("hi"), sum("n").as("rows"))
-      .head()
-    def longAt(i: Int): Long = if (occ.isNullAt(i)) 0L else occ.getLong(i)
-    val vs = IndexStore.versions(spark, path)
-    val lastTrain = vs.filter(v =>
-      IndexStore.opAt(spark, path, v) == "train")
-      .sorted.lastOption.getOrElse(vs.min)
-    val m = snap.read("codebooks").get
-      .agg(countDistinct("subspace")).head().getLong(0)
-    Seq(
-      "cell_max" -> longAt(2),
-      "cell_min" -> longAt(1),
-      "cells" -> longAt(0),
-      "codebook_age" -> (snap.version - lastTrain),
-      "live_codes" -> longAt(3),
-      "segments" ->
-        snap.lines.map(_.split("/").head).distinct.size.toLong,
-      "subspaces" -> m,
-      "tombstone_segments" -> snap.segments("tombstones").size.toLong,
-      "version" -> snap.version,
-    ).toDF("metric", "value")
-  }
+  protected def gauges(snap: IndexStore.Snapshot): Seq[(String, Long)] =
+    IvfIndex.occupancy(snap, "codes", "live_codes") ++ Seq(
+      "codebook_age" -> trainAge(snap),
+      "subspaces" -> snap.read("codebooks").get
+        .agg(countDistinct("subspace")).head().getLong(0))
 
-  /** Load a saved index; `embs` re-attaches vectors via vec_id.
-    * Tombstoned vectors are excluded.
+  /** ivfpq's residual coupling makes the full quantizer refresh its
+    * rebalance.
     */
-  def load(spark: SparkSession, path: String, embs: DataFrame): Model =
-    loadSnapshot(IndexStore.snapshot(spark, path), embs)
+  override private[ext] def maintainQuality(spark: SparkSession,
+      path: String, maxGraphDebt: Int, maxCell: Long,
+      embs: => Option[DataFrame]): Boolean =
+    maxCell > 0L && embs.exists(maybeRetrain(spark, path, _, maxCell))
 
-  /** [[load]] against a pinned manifest version (time travel within the
-    * GC retention window — [[IvfIndex.loadAt]]'s contract).
-    */
-  def loadAt(spark: SparkSession, path: String, version: Long,
-      embs: DataFrame): Model =
-    loadSnapshot(IndexStore.snapshotAt(spark, path, version), embs)
-
-  private def loadSnapshot(snap: IndexStore.Snapshot,
+  protected def loadSnapshot(snap: IndexStore.Snapshot,
       embs: DataFrame): Model = {
-    val rows = snap.read("codebooks").get.collect()
-    val codebooks = rows.groupBy(_.getAs[Int]("subspace")).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_.getAs[Int]("code_id"))
-        .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toSeq).toSeq)
-    require(codebooks.nonEmpty, s"no codebooks at ${snap.root}")
-    val dsub = codebooks.head.head.length
-    Model(snap.read("centroids").get, codebooks.length, dsub, codebooks,
-      EmbeddingSearch.prepared(embs)
-        .join(IndexStore.liveRows(snap, "codes"), "vec_id"))
+    val codebooks = PqIndex.readCodebooks(snap)
+    Model(snap.read("centroids").get, codebooks.length,
+      codebooks.head.head.length, codebooks, liveCorpus(snap, embs))
   }
 
   /** Top-k per query (queries ⊂ corpus, self excluded). */

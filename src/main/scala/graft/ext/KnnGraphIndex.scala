@@ -62,7 +62,20 @@ import org.apache.spark.sql.functions._
   * candidate with no live vector scores nothing — at a bounded recall
   * cost, the standard graph-index posture).
   */
-object KnnGraphIndex {
+object KnnGraphIndex extends IndexFamily {
+
+  val kind = "graph"
+  val live = ("vectors", "vec_id")
+  val needs = Some("emb")
+
+  /** Insert-by-search: the delivery beam-searches the live graph for
+    * its neighborhood — delta-bounded compute, never a corpus-wide
+    * descent.
+    */
+  private[ext] def admit(spark: SparkSession, path: String,
+      fresh: DataFrame): Unit = {
+    insert(spark, path, IndexFamily.vectors(fresh)); ()
+  }
 
   private def asGraph(edges: DataFrame): DataFrame =
     edges.select(col("vec_id").as("query_id"), col("neighbor_id"),
@@ -553,7 +566,7 @@ object KnnGraphIndex {
     * join, and those nodes' stored degrees overstate until compaction
     * recomputes (entry-election staleness only).
     */
-  def deleteVecs(spark: SparkSession, path: String, ids: DataFrame,
+  override def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: Column): Unit = IndexStore.withLock(spark, path) {
     val snap = IndexStore.snapshot(spark, path)
     val requested = ids.select(idCol.as("vec_id")).distinct()
@@ -574,6 +587,10 @@ object KnnGraphIndex {
     }
   }
 
+  /** [[delete]] under the name the perfbench workload calls. */
+  def deleteVecs(spark: SparkSession, path: String, ids: DataFrame,
+      idCol: Column): Unit = delete(spark, path, ids, idCol)
+
   /** Apply tombstones physically and scrub dangling references: live
     * vectors and live edges rewrite into one segment, edges keep only
     * rows whose NEIGHBOR is still a live vector (the dead references
@@ -584,7 +601,7 @@ object KnnGraphIndex {
     * pass, never a re-train (the family contract).
     */
   def compact(spark: SparkSession, path: String,
-      retainVersions: Int = 2): Long =
+      retainVersions: Int = 2): Unit =
     IndexStore.withLock(spark, path) {
       val snap = IndexStore.snapshot(spark, path)
       val (_, hubCount) = readMeta(snap)
@@ -618,16 +635,8 @@ object KnnGraphIndex {
         // the layout-only contract), so it carries forward and keeps
         // counting toward [[maybeRewire]]
         clearDebt(spark, path, keepTombstones = true)
-        v
       } finally { vecs.unpersist(); () }
     }
-
-  def maybeCompact(spark: SparkSession, path: String,
-      maxSegments: Int): Boolean = {
-    val due = IndexStore.segmentCount(spark, path) > maxSegments
-    if (due) compact(spark, path)
-    due
-  }
 
   // ---- maintenance debt: the trigger [[maybeRewire]] fires on ----
 
@@ -644,7 +653,7 @@ object KnnGraphIndex {
     * delays a rewire, never corrupts data). [[IndexStore.cloneAt]]
     * copies segments only, so a clone starts debt-free by design.
     */
-  def debt(spark: SparkSession, root: String): (Long, Long) = {
+  override def debt(spark: SparkSession, root: String): (Long, Long) = {
     val fs = new Path(root).getFileSystem(
       spark.sessionState.newHadoopConf())
     if (!fs.exists(debtFile(root))) (0L, 0L)
@@ -699,6 +708,11 @@ object KnnGraphIndex {
     * rewire fired; after a fire the hub set ≡ a full election over
     * the live degrees (KnnGraphIndexSpec pins the law).
     */
+  override private[ext] def maintainQuality(spark: SparkSession,
+      path: String, maxGraphDebt: Int, maxCell: Long,
+      embs: => Option[DataFrame]): Boolean =
+    maybeRewire(spark, path, maxGraphDebt)
+
   def maybeRewire(spark: SparkSession, path: String, maxDebt: Int = 8,
       iters: Int = 1): Boolean =
     // gauge read and fire share one writer-lock scope (reentrant into
@@ -713,11 +727,11 @@ object KnnGraphIndex {
       due
     }
 
-  /** INDEX HEALTH as a relation — the numbers that DECIDE maintenance
-    * (when [[maybeRewire]]/[[maybeCompact]] should fire) and that an
-    * operator dashboards at 100 TB, today recomputable only by ad-hoc
-    * queries against the raw relations. One (metric, value) row each
-    * for: manifest `version`; `live_nodes` / `live_edges` (the served
+  /** INDEX HEALTH [[stats]] gauges — the numbers that DECIDE
+    * maintenance (when [[maybeRewire]]/[[maybeCompact]] should fire)
+    * and that an operator dashboards at 100 TB, today recomputable only
+    * by ad-hoc queries against the raw relations. One row each for:
+    * `live_nodes` / `live_edges` (the served
     * graph's size); `dangling_edges` (live edge rows whose neighbor's
     * vector is tombstoned — deletes leave them for [[compact]], and
     * each one is a wasted walk candidate); `deg_min`/`deg_max`/
@@ -726,16 +740,16 @@ object KnnGraphIndex {
     * [[rewire]] would restore; overstatement vs the live edges is the
     * documented delete staleness); `hub_count` and `hub_election_age`
     * (versions since the last election — bounded insert elections age
-    * the entry set); `segments`/`tombstone_segments` (compaction
-    * debt); `debt_deliveries`/`debt_tombstones` ([[debt]]'s counters).
+    * the entry set); `debt_deliveries`/`debt_tombstones` ([[debt]]'s
+    * counters).
     * Cost is index-relation-bounded (edge + degree + hub scans, one
     * anti-join) — never a corpus read; q_graph_stats value-checks
     * every number against an oracle recomputing them from the raw
     * relations.
     */
-  def stats(spark: SparkSession, path: String): DataFrame = {
+  protected def gauges(snap: IndexStore.Snapshot): Seq[(String, Long)] = {
+    val spark = snap.spark
     import spark.implicits._
-    val snap = IndexStore.snapshot(spark, path)
     val vecs = liveVectors(snap).select("vec_id").persist()
     val edges = liveEdges(snap).persist()
     try {
@@ -768,9 +782,7 @@ object KnnGraphIndex {
         if (row.isNullAt(3 + j)) 0L else row.getLong(3 + j)
       val hubCount = row.getLong(6)
       val hubGen = if (row.isNullAt(7)) snap.version else row.getLong(7)
-      val segs = snap.lines.map(_.split("/").head).distinct.size.toLong
-      val tombSegs = snap.segments("tombstones").size.toLong
-      val (dDebt, tDebt) = debt(spark, path)
+      val (dDebt, tDebt) = debt(spark, snap.root)
       Seq(
         "dangling_edges" -> dangling,
         "debt_deliveries" -> dDebt,
@@ -781,11 +793,7 @@ object KnnGraphIndex {
         "hub_count" -> hubCount,
         "hub_election_age" -> (snap.version - hubGen),
         "live_edges" -> liveEdgeCnt,
-        "live_nodes" -> liveNodes,
-        "segments" -> segs,
-        "tombstone_segments" -> tombSegs,
-        "version" -> snap.version,
-      ).toDF("metric", "value")
+        "live_nodes" -> liveNodes)
     } finally { vecs.unpersist(); edges.unpersist(); () }
   }
 
@@ -870,42 +878,20 @@ object KnnGraphIndex {
     searchSnap(IndexStore.snapshotAt(spark, path, version), queries, k,
       beamWidth, hops, entryPoints, hubEntries, where, overFetch)
 
-  /** PRECEDENCE-AWARE FEDERATED graph search across saved indexes —
-    * the serving twin of [[BinaryIndex.searchFederatedVectors]] for
-    * the graph family (a corrections overlay over a production graph
-    * index finally has a search path, not just a read path): `roots`
-    * ordered highest-precedence first; every root's walk over-fetches
-    * k×overFetch from its OWN live graph, a hit from root i is
-    * disqualified iff any higher root has the id LIVE (the
-    * authoritative — possibly amended — version lives there), and a
-    * retracted overlay id cedes back. The fuse is CALIBRATED: every
-    * root scores raw cosines against its own vectors, so the fused
-    * re-rank (rounded cos desc, id asc) is meaningful. The precedence
-    * probe tests only result ids against higher roots' live vectors
-    * (Bloom-pruned segment reads) — bounded, never a corpus read.
+  /** PRECEDENCE-AWARE FEDERATED graph search across saved indexes
+    * ([[IndexFamily.federate]]'s semantics — a corrections overlay over
+    * a production graph index has a search path, not just a read path):
+    * `roots` ordered highest-precedence first, every root's walk
+    * over-fetching k×overFetch from its OWN live graph. The fuse is
+    * CALIBRATED: every root scores raw cosines against its own vectors.
     */
   def searchFederatedVectors(spark: SparkSession, roots: Seq[String],
       queries: DataFrame, k: Int, beamWidth: Int = 16, hops: Int = 4,
-      entryPoints: Int = 16, overFetch: Int = 4): DataFrame = {
-    require(roots.nonEmpty, "searchFederatedVectors needs ≥ 1 root")
-    val perRoot = roots.zipWithIndex.map { case (path, i) =>
-      val hits = search(spark, path, queries, k * overFetch, beamWidth,
-        hops, entryPoints)
-      (0 until i).foldLeft(hits) { (acc, j) =>
-        val snapJ = IndexStore.snapshot(spark, roots(j))
-        val liveJ = IndexStore.liveRowsAmong(snapJ, "vectors", "vec_id",
-            acc.select(col("neighbor_id").as("vec_id")))
-          .select(col("vec_id").as("neighbor_id")).distinct()
-        acc.join(liveJ, Seq("neighbor_id"), "left_anti")
-      }
+      entryPoints: Int = 16, overFetch: Int = 4): DataFrame =
+    federateVectors(spark, roots, k) { i =>
+      search(spark, roots(i), queries, k * overFetch, beamWidth, hops,
+        entryPoints)
     }
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    perRoot.reduce(_ unionByName _)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
-  }
 
   private def searchSnap(snap: IndexStore.Snapshot, queries: DataFrame,
       k: Int, beamWidth: Int, hops: Int, entryPoints: Int,

@@ -13,12 +13,16 @@ import org.apache.spark.sql.functions._
   *
   * Storage is [[IndexStore]]'s segment+manifest layout (atomic publish,
   * pinned readers, GC), with the ANN family's shared tombstone
-  * machinery: [[deleteDocs]] masks retracted documents immediately,
+  * machinery: [[delete]] masks retracted documents immediately,
   * [[compact]] applies them physically, and the corpus table stays the
   * single source of text truth — like the vector indexes, the index
   * stores only its derived grams and re-attaches text at verify time.
   */
-object LiteralIndex {
+object LiteralIndex extends IndexFamily {
+
+  val kind = "literal"
+  val live = ("grams", "id")
+  val needs = Some("text")
 
   /** Raw-text char n-grams — shared with [[TextSearch.literalSearch]]
     * via the same spelling: no tokenization, no casefolding (literal
@@ -120,12 +124,9 @@ object LiteralIndex {
       } finally g.unpersist()
     }
 
-  /** Retract documents (idempotent tombstone append — the shared
-    * vector-index delete contract, keyed on `id`).
-    */
-  def deleteDocs(spark: SparkSession, path: String, ids: DataFrame,
-      idCol: Column): Unit =
-    IndexStore.tombstoneIds(spark, path, ids, idCol, "grams", key = "id")
+  private[ext] def admit(spark: SparkSession, path: String,
+      fresh: DataFrame): Unit =
+    appendDocs(spark, path, fresh, col("id"), col("text"))
 
   /** Apply tombstones physically and re-cluster every delivery's files
     * into one set per bucket (manifest pointer swap). The lexicon is
@@ -145,32 +146,22 @@ object LiteralIndex {
         () => writeMeta(spark, path, seg, n, buckets))
       finally live.unpersist()
       IndexStore.publishReplace(spark, path, seg,
-        Seq("grams", "lexicon", "meta"), retainVersions)
+        Seq("grams", "lexicon", "meta"), retainVersions, op = "compact")
       ()
     }
 
-  /** Size-tiered compaction ([[IvfIndex.maybeCompact]]'s contract). */
-  def maybeCompact(spark: SparkSession, path: String,
-      maxSegments: Int): Boolean = {
-    val due = IndexStore.segmentCount(spark, path) > maxSegments
-    if (due) compact(spark, path)
-    due
-  }
-
-  /** FAMILY HEALTH as a (metric, value) relation ([[IvfIndex.stats]]'s
-    * mold for the gram index): `gram_width` (the frozen n), `n_grams`
-    * (distinct grams with summed df > 0 — the planning vocabulary) and
+  /** [[stats]] gauges for the gram index: `gram_width` (the frozen
+    * n), `n_grams` (distinct grams with summed df > 0 — the planning
+    * vocabulary) and
     * `df_max` (the heaviest gram — the worst candidate fan-out a
     * needle can touch if rare-gram pruning ever picks it), both over
     * the SUMMED lexicon partials — which, per the documented planning-
     * staleness contract, still count tombstoned docs until [[compact]];
-    * `lexicon_partial_segments` (the per-sweep re-sum debt);
-    * `segments`/`tombstone_segments`, `version`. Lexicon-relation-
-    * bounded — the token-linear grams relation is never scanned.
+    * `lexicon_partial_segments` (the per-sweep re-sum debt).
+    * Lexicon-relation-bounded — the token-linear grams relation is
+    * never scanned.
     */
-  def stats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val snap = IndexStore.snapshot(spark, path)
+  protected def gauges(snap: IndexStore.Snapshot): Seq[(String, Long)] = {
     val (n, _) = metaOf(snap)
     val lex = snap.read("lexicon").get
       .groupBy("g").agg(sum("df").as("df"))
@@ -182,12 +173,7 @@ object LiteralIndex {
       "df_max" -> longAt(1),
       "gram_width" -> n.toLong,
       "lexicon_partial_segments" -> snap.segments("lexicon").size.toLong,
-      "n_grams" -> longAt(0),
-      "segments" ->
-        snap.lines.map(_.split("/").head).distinct.size.toLong,
-      "tombstone_segments" -> snap.segments("tombstones").size.toLong,
-      "version" -> snap.version,
-    ).toDF("metric", "value")
+      "n_grams" -> longAt(0))
   }
 
   /** Sweep a needle batch against the saved index: the needles' grams

@@ -21,7 +21,12 @@ import org.apache.spark.sql.functions._
   * Complements [[IvfIndex]] (which prunes WHICH rows are scored; PQ
   * shrinks WHAT a score costs — production systems compose them).
   */
-object PqIndex {
+object PqIndex extends VectorFamily {
+
+  val kind = "pq"
+  val live = ("codes", "vec_id")
+  protected val sidecars = Seq("codebooks")
+  override protected def trained = true
 
   /** `codebooks(j)`: k centroids for subspace j, each of length dsub.
     * `encoded`: (vec_id, v, nrm, code: array<int>) with 1-based code ids
@@ -118,31 +123,34 @@ object PqIndex {
     */
   def save(model: Model, path: String, retainVersions: Int = 2): Unit = {
     val spark = model.encoded.sparkSession
-    IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      IndexStore.writeAll(
-        () => writeCodebooks(model, path, seg),
-        () => model.encoded.select("vec_id", "code")
-          .write.parquet(s"$path/$seg/codes"))
-      // tagged "train": this commit carries freshly-trained codebooks,
-      // which is what [[stats]]'s codebook_age counts from (compaction
-      // rewrites the relation but not the codebooks' content)
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("codebooks", "codes"), retainVersions, op = "train")
-      ()
-    }
+    // tagged "train": this commit carries freshly-trained codebooks,
+    // which is what [[stats]]'s codebook_age counts from (compaction
+    // rewrites the relation but not the codebooks' content)
+    commitReplace(spark, path, model.encoded.select("vec_id", "code"),
+      Seq(codebookRows(spark, model.codebooks)), retainVersions, "train")
   }
 
-  private def writeCodebooks(model: Model, path: String,
-      seg: String): Unit = {
-    val spark = model.encoded.sparkSession
+  /** Codebooks as (subspace, code_id, centroid) rows — the persisted
+    * `codebooks` relation, shared with [[IvfPqIndex]].
+    */
+  private[ext] def codebookRows(spark: SparkSession,
+      codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
     import spark.implicits._
-    val cb = for {
-      (book, j) <- model.codebooks.zipWithIndex
+    (for {
+      (book, j) <- codebooks.zipWithIndex
       (cent, c) <- book.zipWithIndex
-    } yield (j, c, cent)
-    cb.toDF("subspace", "code_id", "centroid")
-      .coalesce(1).write.parquet(s"$path/$seg/codebooks")
+    } yield (j, c, cent)).toDF("subspace", "code_id", "centroid")
+  }
+
+  /** [[codebookRows]] read back from a snapshot. */
+  private[ext] def readCodebooks(
+      snap: IndexStore.Snapshot): Seq[Seq[Seq[Double]]] = {
+    val rows = snap.read("codebooks").get.collect()
+    val codebooks = rows.groupBy(_.getAs[Int]("subspace")).toSeq.sortBy(_._1)
+      .map(_._2.sortBy(_.getAs[Int]("code_id"))
+        .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toSeq).toSeq)
+    require(codebooks.nonEmpty, s"no codebooks at ${snap.root}")
+    codebooks
   }
 
   /** Incrementally encode `newEmbs` with the model's frozen codebooks and
@@ -150,50 +158,9 @@ object PqIndex {
     * only the delta is scanned and written (one appended segment; an
     * empty delivery publishes nothing).
     */
-  def saveAppend(model: Model, newEmbs: DataFrame, path: String): Unit = {
-    val spark = model.encoded.sparkSession
-    val delta = encode(model, newEmbs).select("vec_id", "code")
-    if (!delta.isEmpty) IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      delta.write.parquet(s"$path/$seg/codes")
-      IndexStore.publishAppend(spark, path, seg, Seq("codes"))
-      ()
-    }
-  }
-
-  /** Retract vectors: tombstone segment appended, layout untouched —
-    * same contract as [[IvfIndex.deleteVecs]] ([[load]] masks,
-    * [[compact]] applies physically, deletes never double-apply).
-    */
-  def deleteVecs(spark: SparkSession, path: String, ids: DataFrame,
-      idCol: Column): Unit =
-    IndexStore.tombstoneIds(spark, path, ids, idCol, "codes")
-
-  /** Compact: tombstones apply physically and per-delivery code files
-    * collapse into one set; publishes as a manifest pointer swap.
-    */
-  def compact(spark: SparkSession, path: String,
-      retainVersions: Int = 2): Unit =
-    IndexStore.withLock(spark, path) {
-      val snap = IndexStore.snapshot(spark, path)
-      val seg = IndexStore.newSegmentName()
-      IndexStore.writeAll(
-        () => IndexStore.liveRows(snap, "codes")
-          .write.parquet(s"$path/$seg/codes"),
-        () => snap.read("codebooks").get.coalesce(1)
-          .write.parquet(s"$path/$seg/codebooks"))
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("codebooks", "codes"), retainVersions, op = "compact")
-      ()
-    }
-
-  /** Size-tiered compaction ([[IvfIndex.maybeCompact]]'s contract). */
-  def maybeCompact(spark: SparkSession, path: String,
-      maxSegments: Int): Boolean = {
-    val due = IndexStore.segmentCount(spark, path) > maxSegments
-    if (due) compact(spark, path)
-    due
-  }
+  def saveAppend(model: Model, newEmbs: DataFrame, path: String): Unit =
+    appendLive(model.encoded.sparkSession, path,
+      encode(model, newEmbs).select("vec_id", "code"))
 
   /** QUANTIZER REFRESH — the drift-migration path the frozen-codebook
     * lifecycle was missing: codebooks are trained once at [[build]]
@@ -218,76 +185,32 @@ object PqIndex {
       sampleFraction: Double = 0.25, maxIter: Int = 10,
       maxSample: Int = 100000, retainVersions: Int = 2): Unit =
     IndexStore.withLock(spark, path) {
-      val snap = IndexStore.snapshot(spark, path)
-      val live = embs
-        .join(IndexStore.liveRows(snap, "codes").select("vec_id"),
-          "vec_id")
-        .select("vec_id", "embedding")
-      save(build(live, m, k, seed, sampleFraction, maxIter, maxSample),
-        path, retainVersions)
+      save(build(liveEmbeddings(spark, path, embs), m, k, seed,
+        sampleFraction, maxIter, maxSample), path, retainVersions)
     }
 
-  /** FAMILY HEALTH as a (metric, value) relation ([[IvfIndex.stats]]'s
-    * mold for the trained-codebook family): manifest `version`;
-    * `codebook_age` — versions since the last commit tagged "train"
-    * ([[save]]/[[retrain]]), i.e. how many appends/deletes/compactions
-    * the frozen quantizer has outlived, the gauge that decides when
-    * [[retrain]] is due on a drifting corpus (for an index whose
-    * retained history predates op tags the age reads against the
-    * oldest RETAINED version — a documented lower bound);
+  /** [[stats]] gauges for the trained-codebook family:
+    * `codebook_age` ([[trainAge]] since [[save]]/[[retrain]] — the
+    * gauge that decides when [[retrain]] is due on a drifting corpus);
     * `live_codes` (corpus coverage); `subspaces` (the codebook
-    * geometry m); `segments`/`tombstone_segments` (compaction debt).
-    * Metadata- and code-relation-bounded — never a corpus read.
+    * geometry m). Metadata- and code-relation-bounded — never a corpus
+    * read.
     */
-  def stats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val snap = IndexStore.snapshot(spark, path)
-    val vs = IndexStore.versions(spark, path)
-    val lastTrain = vs.filter(v =>
-      IndexStore.opAt(spark, path, v) == "train")
-      .sorted.lastOption.getOrElse(vs.min)
-    val liveCodes = IndexStore.liveRows(snap, "codes").count()
-    val m = snap.read("codebooks").get
-      .agg(countDistinct("subspace")).head().getLong(0)
+  protected def gauges(snap: IndexStore.Snapshot): Seq[(String, Long)] =
     Seq(
-      "codebook_age" -> (snap.version - lastTrain),
-      "live_codes" -> liveCodes,
-      "segments" ->
-        snap.lines.map(_.split("/").head).distinct.size.toLong,
-      "subspaces" -> m,
-      "tombstone_segments" -> snap.segments("tombstones").size.toLong,
-      "version" -> snap.version,
-    ).toDF("metric", "value")
-  }
+      "codebook_age" -> trainAge(snap),
+      "live_codes" -> IndexStore.liveRows(snap, "codes").count(),
+      "subspaces" -> snap.read("codebooks").get
+        .agg(countDistinct("subspace")).head().getLong(0))
 
-  /** Load a saved index. `embs` is the corpus table the index was built
-    * over (plus any rows appended via [[saveAppend]]); the inner join on
-    * vec_id re-attaches vectors for the exact re-rank, so codes whose
-    * vectors were deleted from the corpus drop out harmlessly, while
-    * corpus rows that were never encoded are invisible until appended.
-    * Tombstoned vectors are excluded.
+  /** Codes whose vectors left the corpus drop out of [[load]]; corpus
+    * rows never encoded stay invisible until appended.
     */
-  def load(spark: SparkSession, path: String, embs: DataFrame): Model =
-    loadSnapshot(IndexStore.snapshot(spark, path), embs)
-
-  /** [[load]] against a pinned manifest version (time travel within the
-    * GC retention window — [[IvfIndex.loadAt]]'s contract).
-    */
-  def loadAt(spark: SparkSession, path: String, version: Long,
-      embs: DataFrame): Model =
-    loadSnapshot(IndexStore.snapshotAt(spark, path, version), embs)
-
-  private def loadSnapshot(snap: IndexStore.Snapshot,
+  protected def loadSnapshot(snap: IndexStore.Snapshot,
       embs: DataFrame): Model = {
-    val rows = snap.read("codebooks").get.collect()
-    val codebooks = rows.groupBy(_.getAs[Int]("subspace")).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_.getAs[Int]("code_id"))
-        .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toSeq).toSeq)
-    require(codebooks.nonEmpty, s"no codebooks at ${snap.root}")
-    val dsub = codebooks.head.head.length
-    Model(codebooks.length, dsub, codebooks,
-      EmbeddingSearch.prepared(embs)
-        .join(IndexStore.liveRows(snap, "codes"), "vec_id"))
+    val codebooks = readCodebooks(snap)
+    Model(codebooks.length, codebooks.head.head.length, codebooks,
+      liveCorpus(snap, embs))
   }
 
   /** The interpreted HOF spelling of the ADC lookup — reference for

@@ -35,7 +35,12 @@ import org.apache.spark.sql.functions._
   * oracle that mirrors the whole codec end to end — quantization error
   * included — rather than settling for a recall-only check.
   */
-object SqIndex {
+object SqIndex extends VectorFamily {
+
+  val kind = "sq"
+  val live = ("codes", "vec_id")
+  protected val sidecars = Seq("ranges")
+  override protected def trained = true
 
   /** `lo`/`hi`: per-dimension corpus min/max in the unit-normalized
     * space. `encoded`: (vec_id, v, nrm, code: array<int> of 0..255).
@@ -109,76 +114,21 @@ object SqIndex {
     */
   def save(model: Model, path: String, retainVersions: Int = 2): Unit = {
     val spark = model.encoded.sparkSession
-    IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      IndexStore.writeAll(
-        () => writeRanges(model, path, seg),
-        () => model.encoded.select("vec_id", "code")
-          .write.parquet(s"$path/$seg/codes"))
-      // tagged "train": this commit carries freshly-fit ranges — what
-      // [[stats]]'s codec_age counts from ([[PqIndex.save]]'s contract)
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("ranges", "codes"), retainVersions, op = "train")
-      ()
-    }
-  }
-
-  private def writeRanges(model: Model, path: String, seg: String): Unit = {
-    val spark = model.encoded.sparkSession
     import spark.implicits._
-    model.lo.zip(model.hi).zipWithIndex
-      .map { case ((l, h), i) => (i, l, h) }
-      .toDF("dim", "lo", "hi")
-      .coalesce(1).write.parquet(s"$path/$seg/ranges")
+    val ranges = model.lo.zip(model.hi).zipWithIndex
+      .map { case ((l, h), i) => (i, l, h) }.toDF("dim", "lo", "hi")
+    // tagged "train": this commit carries freshly-fit ranges — what
+    // [[stats]]'s codec_age counts from ([[PqIndex.save]]'s contract)
+    commitReplace(spark, path, model.encoded.select("vec_id", "code"),
+      Seq(ranges), retainVersions, "train")
   }
 
   /** Append-only incremental encode of new vectors into a saved index
     * (one appended segment; an empty delivery publishes nothing).
     */
-  def saveAppend(model: Model, newEmbs: DataFrame, path: String): Unit = {
-    val spark = model.encoded.sparkSession
-    val delta = encode(model.lo, model.hi, newEmbs).select("vec_id", "code")
-    if (!delta.isEmpty) IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      delta.write.parquet(s"$path/$seg/codes")
-      IndexStore.publishAppend(spark, path, seg, Seq("codes"))
-      ()
-    }
-  }
-
-  /** Retract vectors: tombstone segment appended, layout untouched —
-    * same contract as [[IvfIndex.deleteVecs]] ([[load]] masks,
-    * [[compact]] applies physically, deletes never double-apply).
-    */
-  def deleteVecs(spark: SparkSession, path: String, ids: DataFrame,
-      idCol: Column): Unit =
-    IndexStore.tombstoneIds(spark, path, ids, idCol, "codes")
-
-  /** Compact: tombstones apply physically and per-delivery code files
-    * collapse into one set; publishes as a manifest pointer swap.
-    */
-  def compact(spark: SparkSession, path: String,
-      retainVersions: Int = 2): Unit =
-    IndexStore.withLock(spark, path) {
-      val snap = IndexStore.snapshot(spark, path)
-      val seg = IndexStore.newSegmentName()
-      IndexStore.writeAll(
-        () => IndexStore.liveRows(snap, "codes")
-          .write.parquet(s"$path/$seg/codes"),
-        () => snap.read("ranges").get.coalesce(1)
-          .write.parquet(s"$path/$seg/ranges"))
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("ranges", "codes"), retainVersions, op = "compact")
-      ()
-    }
-
-  /** Size-tiered compaction ([[IvfIndex.maybeCompact]]'s contract). */
-  def maybeCompact(spark: SparkSession, path: String,
-      maxSegments: Int): Boolean = {
-    val due = IndexStore.segmentCount(spark, path) > maxSegments
-    if (due) compact(spark, path)
-    due
-  }
+  def saveAppend(model: Model, newEmbs: DataFrame, path: String): Unit =
+    appendLive(model.encoded.sparkSession, path,
+      encode(model.lo, model.hi, newEmbs).select("vec_id", "code"))
 
   /** CODEC REFRESH ([[PqIndex.retrain]]'s contract for the affine
     * codec): re-fit the per-dimension ranges over the LIVE corpus,
@@ -194,57 +144,25 @@ object SqIndex {
   def retrain(spark: SparkSession, path: String, embs: DataFrame,
       retainVersions: Int = 2): Unit =
     IndexStore.withLock(spark, path) {
-      val snap = IndexStore.snapshot(spark, path)
-      val live = embs
-        .join(IndexStore.liveRows(snap, "codes").select("vec_id"),
-          "vec_id")
-        .select("vec_id", "embedding")
-      save(build(live), path, retainVersions)
+      save(build(liveEmbeddings(spark, path, embs)), path, retainVersions)
     }
 
-  /** FAMILY HEALTH as a (metric, value) relation ([[PqIndex.stats]]'s
-    * mold): `version`; `codec_age` — versions since the last
-    * commit tagged "train" ([[save]]/[[retrain]]), the
-    * when-is-a-refresh-due gauge (pre-op-tag retained histories read
-    * against the oldest retained version — a documented lower bound);
-    * `live_codes`; `segments`/`tombstone_segments`. Metadata- and
-    * code-relation-bounded.
+  /** [[stats]] gauges ([[PqIndex]]'s mold): `codec_age` ([[trainAge]]
+    * since [[save]]/[[retrain]] — the when-is-a-refresh-due gauge);
+    * `live_codes`. Metadata- and code-relation-bounded.
     */
-  def stats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val snap = IndexStore.snapshot(spark, path)
-    val vs = IndexStore.versions(spark, path)
-    val lastTrain = vs.filter(v =>
-      IndexStore.opAt(spark, path, v) == "train")
-      .sorted.lastOption.getOrElse(vs.min)
+  protected def gauges(snap: IndexStore.Snapshot): Seq[(String, Long)] =
     Seq(
-      "codec_age" -> (snap.version - lastTrain),
-      "live_codes" -> IndexStore.liveRows(snap, "codes").count(),
-      "segments" ->
-        snap.lines.map(_.split("/").head).distinct.size.toLong,
-      "tombstone_segments" -> snap.segments("tombstones").size.toLong,
-      "version" -> snap.version,
-    ).toDF("metric", "value")
-  }
+      "codec_age" -> trainAge(snap),
+      "live_codes" -> IndexStore.liveRows(snap, "codes").count())
 
-  def load(spark: SparkSession, path: String, embs: DataFrame): Model =
-    loadSnapshot(IndexStore.snapshot(spark, path), embs)
-
-  /** [[load]] against a pinned manifest version (time travel within the
-    * GC retention window — [[IvfIndex.loadAt]]'s contract).
-    */
-  def loadAt(spark: SparkSession, path: String, version: Long,
-      embs: DataFrame): Model =
-    loadSnapshot(IndexStore.snapshotAt(spark, path, version), embs)
-
-  private def loadSnapshot(snap: IndexStore.Snapshot,
+  protected def loadSnapshot(snap: IndexStore.Snapshot,
       embs: DataFrame): Model = {
     val rows = snap.read("ranges").get.orderBy("dim").collect()
     require(rows.nonEmpty, s"no ranges at ${snap.root}")
     val lo = rows.map(_.getAs[Double]("lo")).toSeq
     val hi = rows.map(_.getAs[Double]("hi")).toSeq
-    Model(lo, hi, EmbeddingSearch.prepared(embs)
-      .join(IndexStore.liveRows(snap, "codes"), "vec_id"))
+    Model(lo, hi, liveCorpus(snap, embs))
   }
 
   /** Interpreted HOF spelling of the dequantize-and-dot scan — kept as

@@ -38,19 +38,18 @@ import org.apache.spark.sql.functions._
   */
 object Takedown {
 
-  /** A surface: `kind` selects the family delete, `path` the root.
-    * Supported kinds: bm25, dedup, literal (document indexes, keyed by
-    * doc id); ivf, pq, sq, ivfpq, graph, binary (vector indexes, keyed
-    * by vec id); and store (the corpus STORE OF RECORD,
-    * [[CorpusStore]]) — so one durable intent retracts the corpus row
-    * AND every derived index, the composition a GDPR flow actually
-    * needs.
+  /** A surface: `kind` selects the family ([[IndexFamily.apply]]),
+    * `path` the root. The supported kinds are [[IndexFamily.all]]'s:
+    * the document indexes, the vector indexes, and the corpus STORE OF
+    * RECORD ([[CorpusStore]]) — so one durable intent retracts the
+    * corpus row AND every derived index, the composition a GDPR flow
+    * actually needs.
     */
-  final case class Surface(kind: String, path: String)
+  final case class Surface(kind: String, path: String) {
+    def family: IndexFamily = IndexFamily(kind)
+  }
 
-  val kinds: Set[String] =
-    Set("store", "bm25", "dedup", "literal", "ivf", "pq", "sq", "ivfpq",
-      "graph", "binary")
+  val kinds: Set[String] = IndexFamily.all.map(_.kind).toSet
 
   private def fsOf(spark: SparkSession, root: String) =
     new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
@@ -68,8 +67,7 @@ object Takedown {
     * with identical bytes).
     */
   def register(spark: SparkSession, root: String, surface: Surface): Unit = {
-    require(kinds.contains(surface.kind),
-      s"unknown surface kind '${surface.kind}' (have: ${kinds.mkString(",")})")
+    IndexFamily(surface.kind) // an unknown kind fails here, by name
     val fs = fsOf(spark, root)
     fs.mkdirs(surfacesDir(root))
     val f = new Path(surfacesDir(root), s"s-${surfaceId(surface)}")
@@ -78,7 +76,12 @@ object Takedown {
     finally out.close()
   }
 
-  /** The registered surfaces, in stable (kind, path) order. */
+  /** The registered surfaces, in stable (kind, path) order. The
+    * registry is outside input (hand-edited, or written by another
+    * build), so every entry resolves its family here: an unknown kind
+    * fails by name before any caller lands an intent it could never
+    * apply.
+    */
   def surfaces(spark: SparkSession, root: String): Seq[Surface] = {
     val fs = fsOf(spark, root)
     if (!fs.exists(surfacesDir(root))) return Seq.empty
@@ -89,6 +92,7 @@ object Takedown {
         val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
         val Array(kind, path) = txt.trim.split("\n", 2)
+        IndexFamily(kind) // an unknown kind fails here, by name
         Surface(kind, path)
       }
       .sortBy(s => (s.kind, s.path))
@@ -106,6 +110,7 @@ object Takedown {
     val rid = "r-" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(16)
     val fs = fsOf(spark, root)
+    surfaces(spark, root) // an unknown registry kind fails before the intent
     // Stage the id set and RENAME it into place: the intent "lands"
     // atomically with the rename, so a crash mid-write leaves only an
     // `ids-staging` dir — which [[pending]] reads as "never landed"
@@ -146,27 +151,12 @@ object Takedown {
       .filter { case (_, mark) => !fs.exists(mark) }
     IndexStore.runAll(todo.map { case (s, mark) =>
       () => {
-        applySurface(spark, s, ids)
+        s.family.delete(spark, s.path, ids, col("id"))
         fs.create(mark, true).close()
       }
     }).foreach(_.get)
     if (upTo >= ss.size)
       fs.create(new Path(retractionsDir(root), s"$rid/_done"), true).close()
-  }
-
-  private def applySurface(spark: SparkSession, s: Surface,
-      ids: DataFrame): Unit = s.kind match {
-    case "store"   => CorpusStore.deleteRows(spark, s.path, ids, col("id"))
-    case "bm25"    => TextSearch.deleteDocs(spark, s.path, ids, col("id"))
-    case "dedup"   => DedupIndex.deleteDocs(spark, s.path, ids, col("id"))
-    case "literal" => LiteralIndex.deleteDocs(spark, s.path, ids, col("id"))
-    case "ivf"     => IvfIndex.deleteVecs(spark, s.path, ids, col("id"))
-    case "pq"      => PqIndex.deleteVecs(spark, s.path, ids, col("id"))
-    case "sq"      => SqIndex.deleteVecs(spark, s.path, ids, col("id"))
-    case "ivfpq"   => IvfPqIndex.deleteVecs(spark, s.path, ids, col("id"))
-    case "graph"   => KnnGraphIndex.deleteVecs(spark, s.path, ids, col("id"))
-    case "binary"  => BinaryIndex.deleteVecs(spark, s.path, ids, col("id"))
-    case other     => sys.error(s"unknown surface kind '$other'")
   }
 
   /** Retraction ids whose `_done` marker has not landed — what a crash
@@ -337,9 +327,8 @@ object Takedown {
     // commit pool (guide §2.6): each surface's op commits on its own
     // root under its own writer lock, so the only ordering was the
     // driver's loop — overlapping lets one surface's task tail
-    // back-fill the next's. Phase ORDER is unchanged (layout → graph
-    // quality → trained quality → GC): compact may clear part of the
-    // debt the quality passes gauge.
+    // back-fill the next's. Phase ORDER is layout → quality → GC:
+    // compact may clear part of the debt the quality passes gauge.
     val failures = scala.collection.mutable.ListBuffer[(Surface, Throwable)]()
     // runAll returns settled per-surface outcomes in order, so failure
     // collection stays on this thread — no shared mutation across the
@@ -350,54 +339,21 @@ object Takedown {
           case (s, scala.util.Failure(e)) => failures += ((s, e)); false
           case (_, scala.util.Success(fired)) => fired
         }.map(_._1)
-    val compacted = phase(ss) { s =>
-      s.kind match {
-        case "store"   => CorpusStore.maybeCompact(spark, s.path, maxSegments)
-        case "bm25"    => TextSearch.maybeCompact(spark, s.path, maxSegments)
-        case "dedup"   => DedupIndex.maybeCompact(spark, s.path, maxSegments)
-        case "literal" => LiteralIndex.maybeCompact(spark, s.path, maxSegments)
-        case "ivf"     => IvfIndex.maybeCompact(spark, s.path, maxSegments)
-        case "pq"      => PqIndex.maybeCompact(spark, s.path, maxSegments)
-        case "sq"      => SqIndex.maybeCompact(spark, s.path, maxSegments)
-        case "ivfpq"   => IvfPqIndex.maybeCompact(spark, s.path, maxSegments)
-        case "graph"   => KnnGraphIndex.maybeCompact(spark, s.path, maxSegments)
-        case "binary"  => BinaryIndex.maybeCompact(spark, s.path, maxSegments)
-        case other     => sys.error(s"unknown surface kind '$other'")
-      }
-    }
+    val compacted = phase(ss)(s =>
+      s.family.maybeCompact(spark, s.path, maxSegments))
     // quality pass AFTER the layout pass: compact may clear part of
-    // the debt (its full hub election), and rewire over a scrubbed
-    // layout re-wires exactly the sub-k survivors
-    val rewired = phase(ss.filter(_.kind == "graph")) { s =>
-      KnnGraphIndex.maybeRewire(spark, s.path, maxGraphDebt)
-    }
-    // trained-family quality pass: IVF cell rebalance past the
-    // occupancy threshold ([[IvfIndex.maybeRebalance]] — frozen-
-    // quantizer appends skew cells unboundedly, and the biggest cell
-    // is the per-probe latency). The re-clustering needs vectors; the
-    // registry's OWN store of record supplies them ([[vectorStore]] —
-    // the first registered `store` surface carrying (vec_id,
-    // embedding)), so the sweep stays self-contained. Off by default
+    // the debt (the graph's full hub election), and rewire over a
+    // scrubbed layout re-wires exactly the sub-k survivors. The cell
+    // re-clustering needs vectors; the registry's OWN store of record
+    // supplies them ([[vectorStore]] — resolved once, only when a cell
+    // family asks), so the sweep stays self-contained. Off by default
     // (maxIvfCell = 0): the threshold is an operator SLO, not a
     // universal constant. Skipped with no error when no vector store
     // is registered — a rebalance without a corpus is impossible, and
     // the health row still shows the skew ([[IvfIndex.stats]]).
-    val rebalanced =
-      if (maxIvfCell <= 0L ||
-        !ss.exists(s => s.kind == "ivf" || s.kind == "ivfpq")) Seq.empty
-      else vectorStore(spark, ss) match {
-        case None => Seq.empty
-        // ivfpq's residual coupling makes the full quantizer refresh
-        // its rebalance ([[IvfPqIndex.maybeRetrain]] — geometry
-        // re-derived from the saved quantizers)
-        case Some(embs) =>
-          phase(ss.filter(s => s.kind == "ivf" || s.kind == "ivfpq")) {
-            case s if s.kind == "ivf" =>
-              IvfIndex.maybeRebalance(spark, s.path, embs, maxIvfCell)
-            case s =>
-              IvfPqIndex.maybeRetrain(spark, s.path, embs, maxIvfCell)
-          }
-      }
+    lazy val embs = vectorStore(spark, ss)
+    val repaired = phase(ss)(s => s.family.maintainQuality(spark, s.path,
+      maxGraphDebt, maxIvfCell, embs))
     phase(ss) { s =>
       IndexStore.withLock(spark, s.path) {
         IndexStore.gc(spark, s.path, retainVersions)
@@ -412,7 +368,7 @@ object Takedown {
             s"${s.kind}@${s.path}: ${e.getMessage}"
           }.mkString("; "),
         failures.head._2)
-    (compacted ++ rewired ++ rebalanced).distinct
+    (compacted ++ repaired).distinct
   }
 
   /** The registry's vector source of truth: the first registered
@@ -422,7 +378,7 @@ object Takedown {
     */
   private def vectorStore(spark: SparkSession,
       ss: Seq[Surface]): Option[DataFrame] =
-    ss.filter(_.kind == "store").iterator.map { s =>
+    ss.filter(_.family == CorpusStore).iterator.map { s =>
       scala.util.Try(CorpusStore.read(spark, s.path)).toOption
     }.collectFirst {
       case Some(df) if df.columns.contains("vec_id") &&
@@ -433,38 +389,24 @@ object Takedown {
   /** REGISTRY-WIDE health: one row per registered surface with the
     * manifest version, segment count (the compaction-debt gauge
     * [[maintain]] fires on), tombstone-segment count (un-applied
-    * takedown debt), and — for graph surfaces — [[KnnGraphIndex
-    * .debt]]'s quality counters (what [[KnnGraphIndex.maybeRewire]]
-    * fires on) — and, for the trained codebook families (pq, sq,
-    * ivfpq), `codebook_age`: versions since the last "train"-tagged
-    * commit, the [[PqIndex.retrain]]/[[SqIndex.retrain]]/
-    * [[IvfPqIndex.retrain]] drift gauge (0 for every other kind). Metadata-bounded: manifest lines + op tags +
-    * one sidecar read per surface, never a relation scan — the
-    * dashboard an operator polls to decide when the next [[maintain]]
-    * sweep is due. Per-surface DEEP health (degree histograms and
-    * dangling edges; cell-occupancy envelopes; posting-list
-    * envelopes) is the family `stats` relations —
-    * [[KnnGraphIndex.stats]], [[IvfIndex.stats]], [[PqIndex.stats]],
-    * [[SqIndex.stats]], [[TextSearch.stats]].
+    * takedown debt), the family's quality-debt counters
+    * ([[IndexFamily.debt]] — the graph's, what
+    * [[KnnGraphIndex.maybeRewire]] fires on) and `codebook_age`
+    * ([[IndexFamily.trainAge]] — the retrain drift gauge of the trained
+    * codec families, 0 for every other kind). Metadata-bounded:
+    * manifest lines + op tags + one sidecar read per surface, never a
+    * relation scan — the dashboard an operator polls to decide when
+    * the next [[maintain]] sweep is due. Per-surface DEEP health
+    * (degree histograms and dangling edges; cell-occupancy envelopes;
+    * posting-list envelopes) is the family [[IndexFamily.stats]].
     */
   def health(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     surfaces(spark, root).map { s =>
       val snap = IndexStore.snapshot(spark, s.path)
-      val segs = snap.lines.map(_.split("/").head).distinct.size
-      val tombs = snap.segments("tombstones").size
-      val (gd, gt) =
-        if (s.kind == "graph") KnnGraphIndex.debt(spark, s.path)
-        else (0L, 0L)
-      val cbAge =
-        if (s.kind != "pq" && s.kind != "sq" && s.kind != "ivfpq") 0L
-        else {
-          val vs = IndexStore.versions(spark, s.path)
-          snap.version - vs.filter(v =>
-            IndexStore.opAt(spark, s.path, v) == "train")
-            .sorted.lastOption.getOrElse(vs.min)
-        }
-      (s.kind, s.path, snap.version, segs, tombs, gd, gt, cbAge)
+      val (gd, gt) = s.family.debt(spark, s.path)
+      (s.kind, s.path, snap.version, snap.segmentCount,
+        snap.segments("tombstones").size, gd, gt, s.family.trainAge(snap))
     }.toDF("kind", "path", "version", "segments", "tombstone_segments",
       "graph_debt_deliveries", "graph_debt_tombstones", "codebook_age")
   }

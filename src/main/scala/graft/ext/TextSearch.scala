@@ -29,14 +29,18 @@ import org.apache.spark.sql.functions._
   * phrase path.
   *
   * Persistence runs on [[IndexStore]]'s segment+manifest layout: every
-  * mutation (build, [[appendDocs]], [[deleteDocs]], [[compact]]) writes
+  * mutation (build, [[appendDocs]], [[delete]], [[compact]]) writes
   * an immutable `seg-*` directory under the writer lock and atomically
   * publishes a manifest version; readers pin one version per operation,
   * so a search racing a compaction sees exactly the old or the new
   * index — never a half-swapped directory (the rename-swap this
   * replaces had a no-index window between its two renames).
   */
-object TextSearch {
+object TextSearch extends IndexFamily {
+
+  val kind = "bm25"
+  val live = ("postings", "id")
+  val needs = Some("text")
 
   /** postings: (term, id, tf, dl, positions); lexicon: (term, df);
     * stats: one row (n_docs, dl_sum, avgdl); tombstones: deleted doc
@@ -139,7 +143,7 @@ object TextSearch {
     * (per-delivery df counts; per-delivery (n_docs, dl_sum) rows) and
     * aggregated on [[load]] — the same append-only-partials design as
     * the dedup index's df table, which is what lets [[appendDocs]]
-    * admit a delivery (and [[deleteDocs]] retract one, with NEGATIVE
+    * admit a delivery (and [[delete]] retract one, with NEGATIVE
     * partials) without rewriting history. A long-lived index
     * accumulating many deliveries re-sums more partials per load; the
     * remedy is [[compact]], on the cadence appends warrant.
@@ -194,6 +198,10 @@ object TextSearch {
     } finally tf.unpersist()
   }
 
+  private[ext] def admit(spark: SparkSession, path: String,
+      fresh: DataFrame): Unit =
+    appendDocs(spark, path, fresh, col("id"), col("text"))
+
   /** Retract documents from a saved index without reading the corpus or
     * rewriting history: one columnar scan of the postings (no text, no
     * shuffle beyond two small aggregates) computes the deleted docs'
@@ -206,7 +214,7 @@ object TextSearch {
     * Ids already tombstoned or absent from the index are ignored, so
     * the negative partials can never double-subtract.
     */
-  def deleteDocs(spark: SparkSession, path: String, ids: DataFrame,
+  override def delete(spark: SparkSession, path: String, ids: DataFrame,
       idCol: Column): Unit = IndexStore.withLock(spark, path) {
     val snap = IndexStore.snapshot(spark, path)
     val buckets = bucketsOf(snap)
@@ -239,7 +247,8 @@ object TextSearch {
       // partials pair with its unmasked postings — the sums net right)
       IndexStore.writeScope(spark, path, seg, snap.segments("postings"))
       IndexStore.publishAppend(spark, path, seg,
-        Seq("lexicon", "stats", "tombstones", "tombstone_scope"))
+        Seq("lexicon", "stats", "tombstones", "tombstone_scope"),
+        op = "delete")
       ()
     } finally dead.unpersist()
   }
@@ -273,28 +282,12 @@ object TextSearch {
         .coalesce(1).write.parquet(s"$path/$seg/stats")
       writeMeta(spark, path, seg, buckets)
       IndexStore.publishReplace(spark, path, seg,
-        Seq("postings", "lexicon", "stats", "meta"), retainVersions)
+        Seq("postings", "lexicon", "stats", "meta"), retainVersions,
+        op = "compact")
       ()
     }
 
-  /** Size-tiered compaction policy: [[compact]] only when the manifest
-    * references more than `maxSegments` segments — the knob a streaming
-    * ingest loop calls after every append so compaction cost amortizes
-    * over deliveries instead of firing per micro-batch (or never).
-    * Returns whether a compaction ran. Idempotent and safe to call
-    * concurrently with appends: the count and the compaction both run
-    * under the writer lock's commit protocol.
-    */
-  def maybeCompact(spark: SparkSession, path: String,
-      maxSegments: Int): Boolean = {
-    val due = IndexStore.segmentCount(spark, path) > maxSegments
-    if (due) compact(spark, path)
-    due
-  }
-
-  /** FAMILY HEALTH as a (metric, value) relation ([[IvfIndex.stats]]'s
-    * mold for the sparse-retrieval family): manifest `version`;
-    * `segments`/`tombstone_segments` (compaction debt);
+  /** [[stats]] gauges for the sparse-retrieval family:
     * `df_partial_segments` — segments carrying lexicon df partials,
     * i.e. how many per-delivery partial rows every [[load]] re-sums
     * before a search can score (the summable-partials design's
@@ -305,9 +298,7 @@ object TextSearch {
     * (summed corpus size). Lexicon/stats-relation-bounded — the
     * corpus-sized postings relation is never scanned.
     */
-  def stats(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val snap = IndexStore.snapshot(spark, path)
+  protected def gauges(snap: IndexStore.Snapshot): Seq[(String, Long)] = {
     val lex = snap.read("lexicon").get
       .groupBy("term").agg(sum("df").as("df"))
       .filter(col("df") > 0)
@@ -322,12 +313,7 @@ object TextSearch {
       "df_max" -> longAt(1),
       "df_partial_segments" -> snap.segments("lexicon").size.toLong,
       "n_docs" -> nDocs,
-      "n_terms" -> longAt(0),
-      "segments" ->
-        snap.lines.map(_.split("/").head).distinct.size.toLong,
-      "tombstone_segments" -> snap.segments("tombstones").size.toLong,
-      "version" -> snap.version,
-    ).toDF("metric", "value")
+      "n_terms" -> longAt(0))
   }
 
   /** Sum the lexicon/stats partials back into search-ready relations. */
@@ -792,21 +778,12 @@ object TextSearch {
       queries: DataFrame, qid: Column, qterms: Column, k: Int,
       overFetch: Int = 4, k1: Double = 1.2, b: Double = 0.75,
       maxDF: Long = Long.MaxValue): DataFrame = {
-    require(roots.nonEmpty, "searchFederated needs at least one root")
-    val perRoot = roots.zipWithIndex.map { case (r, i) =>
-      val hits = searchSaved(spark, r, queries, qid, qterms,
-        k * overFetch, k1, b, maxDF)
-      (0 until i).foldLeft(hits) { (acc, j) =>
-        val snapJ = IndexStore.snapshot(spark, roots(j))
-        val liveJ = IndexStore.liveRowsAmong(snapJ, "postings", "id",
-          acc.select("id")).select("id").distinct()
-        acc.join(liveJ, Seq("id"), "left_anti")
-      }
-    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(desc("score"), col("id"))
-    perRoot.reduce(_ unionByName _)
-      .withColumn("rn", row_number().over(w).cast("int"))
+    federate(spark, roots, "id") { i =>
+      searchSaved(spark, roots(i), queries, qid, qterms, k * overFetch, k1,
+        b, maxDF)
+    }.withColumn("rn", row_number().over(w).cast("int"))
       .filter(col("rn") <= k)
       .select(col("query_id"), col("rn"), col("id"), col("matched"),
         col("score"))

@@ -548,7 +548,7 @@ object ExtQueries {
        |WHERE jaccard >= 0.5 AND id_b >= 100000
        |ORDER BY id_a, id_b""".stripMargin
 
-  /** Index retraction ([[graft.ext.DedupIndex.deleteDocs]]): every
+  /** Index retraction ([[graft.ext.DedupIndex.delete]]): every
     * doc_id % 10 == 5 base document is tombstoned (negative df partials
     * from one shingle-table scan — no corpus re-read), the index is
     * [[graft.ext.DedupIndex.compact]]ed so the tombstones apply
@@ -565,7 +565,7 @@ object ExtQueries {
       .select((col("doc_id") + 100000).as("id"),
         concat(lower(trim(col("text"))), lit(" zq zr")).as("t"))
     val dir = graft.Gate.copyDir(sharedDedupIndex(s, d), "gate_dedup_del_")
-    graft.ext.DedupIndex.deleteDocs(s, dir,
+    graft.ext.DedupIndex.delete(s, dir,
       docs.filter(col("doc_id") % 10 === 5).select("doc_id"), col("doc_id"))
     graft.ext.DedupIndex.compact(s, dir)
     graft.ext.DedupIndex.dedupBatch(s, dir, nw, col("id"), col("t"),
@@ -2187,11 +2187,11 @@ object ExtQueries {
       docs.filter(col("doc_id") % 5 === 0)
         .withColumn("text", concat(col("text"), lit(" corrected"))),
       col("doc_id"), col("text"), overlayDir, buckets = bm25Buckets)
-    graft.ext.TextSearch.deleteDocs(s, overlayDir, // retracted fixes
+    graft.ext.TextSearch.delete(s, overlayDir, // retracted fixes
       docs.filter(col("doc_id") % 3 === 1).select("doc_id"),
       col("doc_id"))
     val prodDir = graft.Gate.copyDir(sharedBm25Index(s, d), "gate_sfed_b_")
-    graft.ext.TextSearch.deleteDocs(s, prodDir, // production takedown
+    graft.ext.TextSearch.delete(s, prodDir, // production takedown
       docs.filter(col("doc_id") % 7 === 3).select("doc_id"),
       col("doc_id"))
     graft.ext.TextSearch.searchFederated(s, Seq(overlayDir, prodDir),
@@ -2504,7 +2504,7 @@ object ExtQueries {
       dir, n = 4, buckets = 16)
     graft.ext.LiteralIndex.appendDocs(s, dir,
       docs.filter(col("doc_id") % 10 === 0), col("doc_id"), col("text"))
-    graft.ext.LiteralIndex.deleteDocs(s, dir,
+    graft.ext.LiteralIndex.delete(s, dir,
       docs.filter(col("doc_id") % 7 === 1).select("doc_id"), col("doc_id"))
     val needles = docs.filter(col("doc_id") < 3)
       .select(col("doc_id").as("nid"),
@@ -2562,7 +2562,7 @@ object ExtQueries {
       |WHERE length(n.needle) >= 4 AND contains(d.text, n.needle)
       |ORDER BY needle_id, id""".stripMargin
 
-  /** Document retraction ([[graft.ext.TextSearch.deleteDocs]]): every
+  /** Document retraction ([[graft.ext.TextSearch.delete]]): every
     * doc_id % 7 == 3 document is tombstoned (negative df/stats partials
     * computed from one postings scan — the corpus text is never
     * re-read), then the index is [[graft.ext.TextSearch.compact]]ed so
@@ -2577,7 +2577,7 @@ object ExtQueries {
     val dir = graft.Gate.copyDir(sharedBm25Index(s, d), "gate_bm25_del_")
     val doomed = Tables.documents(s, d).filter(col("doc_id") % 7 === 3)
       .select("doc_id")
-    graft.ext.TextSearch.deleteDocs(s, dir, doomed, col("doc_id"))
+    graft.ext.TextSearch.delete(s, dir, doomed, col("doc_id"))
     graft.ext.TextSearch.compact(s, dir)
     graft.ext.TextSearch.searchSaved(s, dir, bm25Queries(s, d),
         col("qid"), col("qterms"), k = 5)
@@ -2817,7 +2817,7 @@ object ExtQueries {
   /** STREAMING document retraction — the takedown / right-to-be-forgotten
     * path at 100 TB: deletion requests arrive as a stream and each
     * micro-batch lands on the SAVED index via
-    * [[graft.ext.TextSearch.deleteDocs]] (tombstones + negative
+    * [[graft.ext.TextSearch.delete]] (tombstones + negative
     * df/stats partials; the corpus text is never re-read), then one
     * [[graft.ext.TextSearch.compact]] applies them physically. Here the
     * same doomed set as q_bm25_delete arrives split across two
@@ -2843,7 +2843,7 @@ object ExtQueries {
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ext.TextSearch.deleteDocs(s, dir, batch, col("doc_id"))
+        graft.ext.TextSearch.delete(s, dir, batch, col("doc_id"))
       }
       .start()
     q.awaitTermination()
@@ -3258,7 +3258,7 @@ object ExtQueries {
     graft.ext.CorpusStore.append(s, root,
       docs.filter(col("doc_id") >= 300).select("doc_id", "text"),
       col("doc_id"))
-    graft.ext.CorpusStore.deleteRows(s, root,
+    graft.ext.CorpusStore.delete(s, root,
       docs.filter(col("doc_id").between(160, 240) &&
         col("doc_id") % 5 === 0).select("doc_id"), col("doc_id"))
     graft.ext.CorpusStore.readRange(s, root, 160L, 240L)
@@ -3294,7 +3294,7 @@ object ExtQueries {
           .when(col("doc_id") % 3 === 1, "de")
           .otherwise("fr").as("lang")),
       col("doc_id"))
-    graft.ext.CorpusStore.deleteRows(s, root,
+    graft.ext.CorpusStore.delete(s, root,
       docs.filter(col("doc_id") % 7 === 0).select("doc_id"),
       col("doc_id"))
     graft.ext.CorpusStore.read(s, root)
@@ -3331,7 +3331,7 @@ object ExtQueries {
     graft.ext.CorpusStore.append(s, root, // v2
       docs.filter(col("doc_id") >= 250).select("doc_id", "text"),
       col("doc_id"))
-    graft.ext.CorpusStore.deleteRows(s, root, // v3
+    graft.ext.CorpusStore.delete(s, root, // v3
       docs.filter(col("doc_id") % 6 === 0).select("doc_id"),
       col("doc_id"))
     graft.ext.CorpusStore.changes(s, root, 1L)
@@ -3376,7 +3376,7 @@ object ExtQueries {
     graft.ext.CorpusStore.append(s, store, // v2
       docs.filter(col("doc_id") >= 300).select("doc_id", "text"),
       col("doc_id"))
-    graft.ext.CorpusStore.deleteRows(s, store, // v3 (spans v1 AND v2 rows)
+    graft.ext.CorpusStore.delete(s, store, // v3 (spans v1 AND v2 rows)
       docs.filter(col("doc_id") % 7 === 3).select("doc_id"),
       col("doc_id"))
     val feed = graft.ext.CorpusStore.changes(s, store, 1L).persist()
@@ -3391,7 +3391,7 @@ object ExtQueries {
             col("text"))
         val del = delta.filter(col("_change") === "delete").select("id")
         if (!del.isEmpty)
-          graft.ext.TextSearch.deleteDocs(s, bm25, del, col("id"))
+          graft.ext.TextSearch.delete(s, bm25, del, col("id"))
       }
     } finally { feed.unpersist(); () }
     graft.ext.TextSearch.searchSaved(s, bm25, bm25Queries(s, d),
@@ -3782,7 +3782,7 @@ object ExtQueries {
     val dir = graft.Gate.copyDir(sharedBm25Index(s, d), "gate_bm25_readd_")
     val docs = Tables.documents(s, d)
     val doomed = docs.filter(col("doc_id") % 7 === 3)
-    graft.ext.TextSearch.deleteDocs(s, dir, doomed.select("doc_id"),
+    graft.ext.TextSearch.delete(s, dir, doomed.select("doc_id"),
       col("doc_id"))
     graft.ext.TextSearch.appendDocs(s, dir,
       doomed.select(col("doc_id"),

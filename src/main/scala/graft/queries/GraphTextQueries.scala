@@ -892,7 +892,7 @@ object GraphTextQueries {
     graft.ext.KnnGraphIndex.build(standing, dir, k = 4, iters = 2)
     graft.ext.KnnGraphIndex.insert(s, dir, delivery, beamWidth = 4, hops = 3,
       entryPoints = 4)
-    graft.ext.KnnGraphIndex.deleteVecs(s, dir,
+    graft.ext.KnnGraphIndex.delete(s, dir,
       embs.filter(col("vec_id") % 9 === 0), col("vec_id"))
     val snap = graft.ext.IndexStore.snapshot(s, dir)
     graft.ext.KnnGraphIndex.liveEdges(snap).orderBy("vec_id", "rank")
@@ -1079,7 +1079,7 @@ object GraphTextQueries {
       graft.ext.KnnGraphIndex.buildFrom(prodCorpus,
         EmbeddingSearch.nnDescent(prodCorpus, k = 8, iters = 3),
         s"$dir/prod", k = 8)
-      graft.ext.KnnGraphIndex.deleteVecs(s, s"$dir/prod",
+      graft.ext.KnnGraphIndex.delete(s, s"$dir/prod",
         embs.filter(col("vec_id") % 7 === 3).select("vec_id"),
         col("vec_id"))
       val amended = embs.filter(col("vec_id") % 5 === 0)
@@ -1088,7 +1088,7 @@ object GraphTextQueries {
       graft.ext.KnnGraphIndex.buildFrom(amended,
         EmbeddingSearch.nnDescent(amended, k = 8, iters = 3),
         s"$dir/overlay", k = 8)
-      graft.ext.KnnGraphIndex.deleteVecs(s, s"$dir/overlay",
+      graft.ext.KnnGraphIndex.delete(s, s"$dir/overlay",
         embs.filter(col("vec_id") % 3 === 1).select("vec_id"),
         col("vec_id"))
       ()
@@ -1373,7 +1373,7 @@ object GraphTextQueries {
     val exact = s.read.parquet(s"${sharedKnnGraph(s, d)}/knn")
     graft.ext.KnnGraphIndex.buildFrom(
       embs.select(col("vec_id"), col("embedding")), exact, dir, k = 3)
-    graft.ext.KnnGraphIndex.deleteVecs(s, dir,
+    graft.ext.KnnGraphIndex.delete(s, dir,
       embs.filter(col("vec_id") % 7 === 3).select("vec_id"),
       col("vec_id"))
     graft.ext.KnnGraphIndex.stats(s, dir).orderBy("metric")
@@ -1500,13 +1500,13 @@ object GraphTextQueries {
     val bDir = graft.Gate.tmpDir("gate_gfed_b_")
     graft.ext.KnnGraphIndex.buildFrom(amended,
       EmbeddingSearch.knnGraph(amended, 3), aDir, k = 3)
-    graft.ext.KnnGraphIndex.deleteVecs(s, aDir, // retracted amendments
+    graft.ext.KnnGraphIndex.delete(s, aDir, // retracted amendments
       embs.filter(col("vec_id") % 3 === 1).select("vec_id"),
       col("vec_id"))
     graft.ext.KnnGraphIndex.buildFrom(
       embs.select(col("vec_id"), col("embedding")),
       s.read.parquet(s"${sharedKnnGraph(s, d)}/knn"), bDir, k = 3)
-    graft.ext.KnnGraphIndex.deleteVecs(s, bDir, // production takedown
+    graft.ext.KnnGraphIndex.delete(s, bDir, // production takedown
       embs.filter(col("vec_id") % 7 === 3).select("vec_id"),
       col("vec_id"))
     val queries = embs.filter(col("vec_id") < 10)

@@ -30,7 +30,7 @@ object MaintainQueries {
     * embeddings) commits an append (v2) and a takedown (v3) after the
     * index was seeded from v1; the maintenance loop replays the feed
     * in commit order — inserts land via `saveAppend` (frozen
-    * quantizer, delta-only encode), deletes via `deleteVecs`
+    * quantizer, delta-only encode), deletes via `delete`
     * (tombstones) — then one compact applies them physically. The
     * oracle is brute force over the SURVIVING corpus (the q_ivf_delete
     * contract): a feed-maintained index must be indistinguishable from
@@ -50,7 +50,7 @@ object MaintainQueries {
     IvfIndex.save(seeded, idx)
     CorpusStore.append(s, store, // v2: the remaining third
       embs.filter(col("vec_id") % 3 === 0), col("vec_id"))
-    CorpusStore.deleteRows(s, store, // v3: takedown spanning v1 AND v2
+    CorpusStore.delete(s, store, // v3: takedown spanning v1 AND v2
       embs.filter(col("vec_id") % 7 === 3).select("vec_id"),
       col("vec_id"))
     val feed = CorpusStore.changes(s, store, 1L).persist()
@@ -66,7 +66,7 @@ object MaintainQueries {
         val del = delta.filter(col("_change") === "delete")
           .select(col("id").as("vec_id"))
         if (!del.isEmpty)
-          IvfIndex.deleteVecs(s, idx, del, col("vec_id"))
+          IvfIndex.delete(s, idx, del, col("vec_id"))
       }
     } finally { feed.unpersist(); () }
     IvfIndex.compact(s, idx)
@@ -118,7 +118,7 @@ object MaintainQueries {
       idx, n = 3)
     CorpusStore.append(s, store, // v2
       docs.filter(col("id") >= 300), col("id"))
-    CorpusStore.deleteRows(s, store, // v3 (spans v1 AND v2 rows)
+    CorpusStore.delete(s, store, // v3 (spans v1 AND v2 rows)
       docs.filter(col("id") % 10 === 5).select("id"), col("id"))
     val feed = CorpusStore.changes(s, store, 1L).persist()
     try {
@@ -132,7 +132,7 @@ object MaintainQueries {
           DedupIndex.append(s, idx, ins, col("id"), col("t"))
         val del = delta.filter(col("_change") === "delete").select("id")
         if (!del.isEmpty)
-          DedupIndex.deleteDocs(s, idx, del, col("id"))
+          DedupIndex.delete(s, idx, del, col("id"))
       }
     } finally { feed.unpersist(); () }
     DedupIndex.compact(s, idx)
@@ -188,7 +188,7 @@ object MaintainQueries {
     val idx = graft.Gate.copyDir(s"$seed/graph", "gate_cdcg_idx_")
     CorpusStore.append(s, store, // v2
       embs.filter(col("vec_id") % 3 === 0), col("vec_id"))
-    CorpusStore.deleteRows(s, store, // v3
+    CorpusStore.delete(s, store, // v3
       embs.filter(col("vec_id") % 7 === 3).select("vec_id"),
       col("vec_id"))
     val feed = CorpusStore.changes(s, store, 1L).persist()
@@ -202,7 +202,7 @@ object MaintainQueries {
         if (!ins.isEmpty) KnnGraphIndex.insert(s, idx, ins)
         val del = delta.filter(col("_change") === "delete")
           .select(col("id").as("vec_id"))
-        if (!del.isEmpty) KnnGraphIndex.deleteVecs(s, idx, del,
+        if (!del.isEmpty) KnnGraphIndex.delete(s, idx, del,
           col("vec_id"))
       }
     } finally { feed.unpersist(); () }
@@ -333,7 +333,7 @@ object MaintainQueries {
       val idx = s"$dir/graph"
       graft.Gate.copyInto(s"$seed/graph", idx)
       KnnGraphIndex.insert(s, idx, embs.filter(col("vec_id") % 3 === 0))
-      KnnGraphIndex.deleteVecs(s, idx,
+      KnnGraphIndex.delete(s, idx,
         embs.filter(col("vec_id") % 7 === 3).select("vec_id"),
         col("vec_id"))
       KnnGraphIndex.compact(s, idx)
@@ -387,7 +387,7 @@ object MaintainQueries {
         col("id"), store)
       graft.ext.TextSearch.buildAndSave(docs, col("doc_id"), col("text"),
         bm25, buckets = 4)
-      graft.ext.TextSearch.deleteDocs(s, bm25,
+      graft.ext.TextSearch.delete(s, bm25,
         docs.filter(col("doc_id") % 10 === 1).select("doc_id"),
         col("doc_id"))
       KnnGraphIndex.build(embs.filter(col("vec_id") < 100), gidx,
@@ -660,18 +660,18 @@ object MaintainQueries {
       val ivfModel = IvfIndex.build(base, k = 4, sampleFraction = 0.25)
       IvfIndex.save(ivfModel, s"$dir/ivf")
       IvfIndex.saveAppend(ivfModel, delta, s"$dir/ivf")
-      IvfIndex.deleteVecs(s, s"$dir/ivf", doomed, col("vec_id"))
+      IvfIndex.delete(s, s"$dir/ivf", doomed, col("vec_id"))
 
       val pqModel = graft.ext.PqIndex.build(base, m = 4, k = 16,
         sampleFraction = 1.0)
       graft.ext.PqIndex.save(pqModel, s"$dir/pq")
       graft.ext.PqIndex.saveAppend(pqModel, delta, s"$dir/pq")
-      graft.ext.PqIndex.deleteVecs(s, s"$dir/pq", doomed, col("vec_id"))
+      graft.ext.PqIndex.delete(s, s"$dir/pq", doomed, col("vec_id"))
 
       val sqModel = graft.ext.SqIndex.build(base)
       graft.ext.SqIndex.save(sqModel, s"$dir/sq")
       graft.ext.SqIndex.saveAppend(sqModel, delta, s"$dir/sq")
-      graft.ext.SqIndex.deleteVecs(s, s"$dir/sq", doomed, col("vec_id"))
+      graft.ext.SqIndex.delete(s, s"$dir/sq", doomed, col("vec_id"))
 
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), lower(trim(col("text"))).as("text"))
@@ -680,7 +680,7 @@ object MaintainQueries {
       graft.ext.TextSearch.appendDocs(s, s"$dir/bm25",
         docs.filter(col("doc_id") >= 300 && col("doc_id") < 350),
         col("doc_id"), col("text"))
-      graft.ext.TextSearch.deleteDocs(s, s"$dir/bm25",
+      graft.ext.TextSearch.delete(s, s"$dir/bm25",
         docs.filter(col("doc_id") < 350 && col("doc_id") % 10 === 1)
           .select("doc_id"), col("doc_id"))
 
@@ -688,20 +688,20 @@ object MaintainQueries {
         k = 16, sampleFraction = 0.5)
       graft.ext.IvfPqIndex.save(ipqModel, s"$dir/ivfpq")
       graft.ext.IvfPqIndex.saveAppend(ipqModel, delta, s"$dir/ivfpq")
-      graft.ext.IvfPqIndex.deleteVecs(s, s"$dir/ivfpq", doomed,
+      graft.ext.IvfPqIndex.delete(s, s"$dir/ivfpq", doomed,
         col("vec_id"))
 
       val binModel = graft.ext.BinaryIndex.build(base)
       graft.ext.BinaryIndex.save(binModel, s"$dir/binary")
       graft.ext.BinaryIndex.saveAppend(binModel, delta, s"$dir/binary")
-      graft.ext.BinaryIndex.deleteVecs(s, s"$dir/binary", doomed,
+      graft.ext.BinaryIndex.delete(s, s"$dir/binary", doomed,
         col("vec_id"))
 
       CorpusStore.build(base.select(col("vec_id").as("id"),
         col("embedding")), col("id"), s"$dir/store")
       CorpusStore.append(s, s"$dir/store",
         delta.select(col("vec_id").as("id"), col("embedding")), col("id"))
-      CorpusStore.deleteRows(s, s"$dir/store",
+      CorpusStore.delete(s, s"$dir/store",
         doomed.select(col("vec_id").as("id")), col("id"))
 
       DedupIndex.build(docs.filter(col("doc_id") < 300), col("doc_id"),
@@ -709,7 +709,7 @@ object MaintainQueries {
       DedupIndex.append(s, s"$dir/dedup",
         docs.filter(col("doc_id") >= 300 && col("doc_id") < 350),
         col("doc_id"), col("text"))
-      DedupIndex.deleteDocs(s, s"$dir/dedup",
+      DedupIndex.delete(s, s"$dir/dedup",
         docs.filter(col("doc_id") < 350 && col("doc_id") % 10 === 1)
           .select("doc_id"), col("doc_id"))
 
@@ -721,7 +721,7 @@ object MaintainQueries {
       graft.ext.LiteralIndex.appendDocs(s, s"$dir/literal",
         rawDocs.filter(col("doc_id") >= 300 && col("doc_id") < 350),
         col("doc_id"), col("text"))
-      graft.ext.LiteralIndex.deleteDocs(s, s"$dir/literal",
+      graft.ext.LiteralIndex.delete(s, s"$dir/literal",
         rawDocs.filter(col("doc_id") < 350 && col("doc_id") % 10 === 1)
           .select("doc_id"), col("doc_id"))
     }
@@ -958,9 +958,9 @@ object MaintainQueries {
         .withColumn("text", concat(col("text"), lit(" corrected"))),
       col("id"), overlay)
     CorpusStore.build(docs, col("id"), prod)
-    CorpusStore.deleteRows(s, prod, // production takedown
+    CorpusStore.delete(s, prod, // production takedown
       docs.filter(col("id") % 7 === 3).select("id"), col("id"))
-    CorpusStore.deleteRows(s, overlay, // retracted corrections
+    CorpusStore.delete(s, overlay, // retracted corrections
       docs.filter(col("id") % 3 === 1).select("id"), col("id"))
     CorpusStore.readFederated(s, Seq(overlay, prod))
       .select(col("id"), md5(col("text")).as("h"))

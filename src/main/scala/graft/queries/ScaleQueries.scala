@@ -624,7 +624,7 @@ object ScaleQueries {
       graft.ext.PqIndex.save(model, s"$dir/idx")
       graft.ext.PqIndex.saveAppend(model,
         embs.filter(col("vec_id") % 3 === 0), s"$dir/idx")
-      graft.ext.PqIndex.deleteVecs(s, s"$dir/idx",
+      graft.ext.PqIndex.delete(s, s"$dir/idx",
         embs.filter(col("vec_id") % 7 === 2).select("vec_id"),
         col("vec_id"))
       val live = embs.filter(col("vec_id") % 7 =!= 2)
@@ -677,7 +677,7 @@ object ScaleQueries {
       graft.ext.SqIndex.save(model, s"$dir/idx")
       graft.ext.SqIndex.saveAppend(model,
         embs.filter(col("vec_id") % 3 === 0), s"$dir/idx")
-      graft.ext.SqIndex.deleteVecs(s, s"$dir/idx",
+      graft.ext.SqIndex.delete(s, s"$dir/idx",
         embs.filter(col("vec_id") % 7 === 2).select("vec_id"),
         col("vec_id"))
       val live = embs.filter(col("vec_id") % 7 =!= 2)
@@ -733,7 +733,7 @@ object ScaleQueries {
       graft.ext.IvfPqIndex.save(model, s"$dir/idx")
       graft.ext.IvfPqIndex.saveAppend(model,
         embs.filter(col("vec_id") % 3 === 0), s"$dir/idx")
-      graft.ext.IvfPqIndex.deleteVecs(s, s"$dir/idx",
+      graft.ext.IvfPqIndex.delete(s, s"$dir/idx",
         embs.filter(col("vec_id") % 7 === 2).select("vec_id"),
         col("vec_id"))
     }
@@ -939,7 +939,7 @@ object ScaleQueries {
     """SELECT vec_id AS query_id, true AS recall_ok, true AS appended_ok
       |FROM embeddings WHERE vec_id < 10 ORDER BY query_id""".stripMargin
 
-  /** Vector retraction ([[graft.ext.IvfIndex.deleteVecs]]): every
+  /** Vector retraction ([[graft.ext.IvfIndex.delete]]): every
     * vec_id % 7 == 3 vector is tombstoned from a saved IVF index (one
     * appended tombstone segment — layout untouched), the index is
     * [[graft.ext.IvfIndex.compact]]ed so the tombstones apply
@@ -955,7 +955,7 @@ object ScaleQueries {
     val model = IvfIndex.build(embs, k = 16, sampleFraction = 0.25)
     val dir = graft.Gate.tmpDir("gate_ivf_del_")
     IvfIndex.save(model, dir)
-    IvfIndex.deleteVecs(s, dir,
+    IvfIndex.delete(s, dir,
       embs.filter(col("vec_id") % 7 === 3).select("vec_id"), col("vec_id"))
     IvfIndex.compact(s, dir)
     val loaded = IvfIndex.load(s, dir, embs)
@@ -999,7 +999,7 @@ object ScaleQueries {
     val dir = graft.Gate.tmpDir("gate_ivf_readd_")
     IvfIndex.save(model, dir)
     val doomed = embs.filter(col("vec_id") % 7 === 3)
-    IvfIndex.deleteVecs(s, dir, doomed.select("vec_id"), col("vec_id"))
+    IvfIndex.delete(s, dir, doomed.select("vec_id"), col("vec_id"))
     IvfIndex.saveAppend(IvfIndex.load(s, dir, embs), doomed, dir)
     IvfIndex.search(IvfIndex.load(s, dir, embs), col("vec_id") < 10,
         k = 5, nProbe = Int.MaxValue)
@@ -1026,7 +1026,7 @@ object ScaleQueries {
   /** STREAMING vector takedown — q_stream_delete's ANN twin: deletion
     * requests drain from a file stream in two micro-batches, each
     * landing on the saved IVF index via [[graft.ext.IvfIndex
-    * .deleteVecs]] (idempotent tombstone appends under the writer
+    * .delete]] (idempotent tombstone appends under the writer
     * lock), then one [[graft.ext.IvfIndex.compact]] applies them
     * physically. Same surviving-corpus oracle as q_ivf_delete —
     * takedown streams are batch-boundary-invariant for vectors too.
@@ -1051,7 +1051,7 @@ object ScaleQueries {
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          IvfIndex.deleteVecs(s, dir, batch, col("vec_id"))
+          IvfIndex.delete(s, dir, batch, col("vec_id"))
         }
         .start()
       q.awaitTermination()
@@ -1335,7 +1335,7 @@ object ScaleQueries {
     val model = graft.ext.BinaryIndex.build(base)
     graft.ext.BinaryIndex.save(model, dir)
     graft.ext.BinaryIndex.saveAppend(model, delta, dir)
-    graft.ext.BinaryIndex.deleteVecs(s, dir,
+    graft.ext.BinaryIndex.delete(s, dir,
       embs.filter(col("vec_id") % 9 === 4).select("vec_id"),
       col("vec_id"))
     graft.ext.BinaryIndex.compact(s, dir)
@@ -1400,11 +1400,11 @@ object ScaleQueries {
     val aDir = graft.Gate.tmpDir("gate_annfed_a_")
     val bDir = graft.Gate.tmpDir("gate_annfed_b_")
     graft.ext.BinaryIndex.buildAndSave(amended, aDir)
-    graft.ext.BinaryIndex.deleteVecs(s, aDir, // retracted amendments
+    graft.ext.BinaryIndex.delete(s, aDir, // retracted amendments
       embs.filter(col("vec_id") % 3 === 1).select("vec_id"),
       col("vec_id"))
     graft.ext.BinaryIndex.buildAndSave(embs, bDir)
-    graft.ext.BinaryIndex.deleteVecs(s, bDir, // production takedown
+    graft.ext.BinaryIndex.delete(s, bDir, // production takedown
       embs.filter(col("vec_id") % 7 === 3).select("vec_id"),
       col("vec_id"))
     val queries = embs.filter(col("vec_id") < 10)
@@ -1511,11 +1511,11 @@ object ScaleQueries {
       val amended = embs.filter(col("vec_id") % 5 === 0)
         .withColumn("embedding", transform(col("embedding"), x => -x))
       graft.ext.BinaryIndex.buildAndSave(amended, s"$dir/overlay")
-      graft.ext.BinaryIndex.deleteVecs(s, s"$dir/overlay",
+      graft.ext.BinaryIndex.delete(s, s"$dir/overlay",
         embs.filter(col("vec_id") % 3 === 1).select("vec_id"),
         col("vec_id"))
       graft.ext.BinaryIndex.buildAndSave(embs, s"$dir/prod")
-      graft.ext.BinaryIndex.deleteVecs(s, s"$dir/prod",
+      graft.ext.BinaryIndex.delete(s, s"$dir/prod",
         embs.filter(col("vec_id") % 7 === 3).select("vec_id"),
         col("vec_id"))
       ()
@@ -1540,11 +1540,11 @@ object ScaleQueries {
     val aDir = graft.Gate.tmpDir("gate_ivffed_a_")
     val bDir = graft.Gate.tmpDir("gate_ivffed_b_")
     IvfIndex.save(IvfIndex.build(amended, k = 8), aDir)
-    IvfIndex.deleteVecs(s, aDir, // retracted amendments
+    IvfIndex.delete(s, aDir, // retracted amendments
       embs.filter(col("vec_id") % 3 === 1).select("vec_id"),
       col("vec_id"))
     IvfIndex.save(IvfIndex.build(embs, k = 8), bDir)
-    IvfIndex.deleteVecs(s, bDir, // production takedown
+    IvfIndex.delete(s, bDir, // production takedown
       embs.filter(col("vec_id") % 7 === 3).select("vec_id"),
       col("vec_id"))
     val queries = embs.filter(col("vec_id") < 10)

@@ -42,7 +42,7 @@ class BinaryIndexSpec extends SparkSpec {
       "preserves answers") {
     val path = dir()
     BinaryIndex.buildAndSave(corpus, path)
-    BinaryIndex.deleteVecs(spark, path, Seq(5L).toDF("vec_id"),
+    BinaryIndex.delete(spark, path, Seq(5L).toDF("vec_id"),
       col("vec_id"))
     val probe = corpus.filter(col("vec_id") === 5L)
     def served() = hits(BinaryIndex.searchVectors(
@@ -51,7 +51,7 @@ class BinaryIndexSpec extends SparkSpec {
     assert(!served().contains(5L))
     // idempotent: a second delete publishes nothing
     val v = IndexStore.snapshot(spark, path).version
-    BinaryIndex.deleteVecs(spark, path, Seq(5L).toDF("vec_id"),
+    BinaryIndex.delete(spark, path, Seq(5L).toDF("vec_id"),
       col("vec_id"))
     assert(IndexStore.snapshot(spark, path).version === v)
     // readd: the scoped tombstone does not mask the new segment
@@ -86,7 +86,7 @@ class BinaryIndexSpec extends SparkSpec {
       .select("cos").as[Double].collect()
     assert(id1.nonEmpty && id1.forall(_ < 0))
     // retraction cedes: production's raw id 1 ranks itself first again
-    BinaryIndex.deleteVecs(spark, pa, Seq(1L).toDF("vec_id"),
+    BinaryIndex.delete(spark, pa, Seq(1L).toDF("vec_id"),
       col("vec_id"))
     assert(fed(1).select("neighbor_id").as[Long].head() === 1L)
   }
@@ -137,7 +137,7 @@ class BinaryIndexSpec extends SparkSpec {
     BinaryIndex.save(m, path)
     BinaryIndex.saveAppend(m, corpus.filter(col("vec_id") % 5 === 0),
       path)
-    BinaryIndex.deleteVecs(spark, path,
+    BinaryIndex.delete(spark, path,
       corpus.filter(col("vec_id") % 3 === 1).select("vec_id"),
       col("vec_id"))
     val got = BinaryIndex.stats(spark, path)

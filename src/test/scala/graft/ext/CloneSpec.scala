@@ -53,13 +53,13 @@ class CloneSpec extends SparkSpec {
     val dst = tmpDir("clone_ind_dst") + "/ix"
     IndexStore.cloneAt(spark, src, dst, v)
     // mutate the source: invisible to the clone
-    CorpusStore.deleteRows(spark, src,
+    CorpusStore.delete(spark, src,
       Seq(1L).toDF("doc_id"), col("doc_id"))
     CorpusStore.append(spark, src,
       Seq((6L, "source only")).toDF("doc_id", "text"), col("doc_id"))
     assert(liveIds(dst) === Set(1L, 2L, 3L, 4L))
     // mutate the clone: invisible to the source
-    CorpusStore.deleteRows(spark, dst,
+    CorpusStore.delete(spark, dst,
       Seq(3L).toDF("doc_id"), col("doc_id"))
     assert(liveIds(src) === Set(2L, 3L, 4L, 6L))
     assert(liveIds(dst) === Set(1L, 2L, 4L))

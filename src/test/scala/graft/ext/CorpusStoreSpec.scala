@@ -26,11 +26,11 @@ class CorpusStoreSpec extends SparkSpec {
     assert(r.toSeq == Seq("text-2"))
     CorpusStore.append(spark, root, rows(4, 5), col("doc_id"))
     assert(liveIds(root) == Set(1L, 2L, 3L, 4L, 5L))
-    CorpusStore.deleteRows(spark, root, Seq(2L, 4L).toDF("doc_id"),
+    CorpusStore.delete(spark, root, Seq(2L, 4L).toDF("doc_id"),
       col("doc_id"))
     assert(liveIds(root) == Set(1L, 3L, 5L))
     // delete is idempotent (live-presence-judged)
-    CorpusStore.deleteRows(spark, root, Seq(2L).toDF("doc_id"),
+    CorpusStore.delete(spark, root, Seq(2L).toDF("doc_id"),
       col("doc_id"))
     assert(liveIds(root) == Set(1L, 3L, 5L))
     // readd: the corrected delivery is visible immediately — the old
@@ -38,7 +38,7 @@ class CorpusStoreSpec extends SparkSpec {
     CorpusStore.append(spark, root, rows(2), col("doc_id"))
     assert(liveIds(root) == Set(1L, 2L, 3L, 5L))
     // and a readded id can be deleted AGAIN
-    CorpusStore.deleteRows(spark, root, Seq(2L).toDF("doc_id"),
+    CorpusStore.delete(spark, root, Seq(2L).toDF("doc_id"),
       col("doc_id"))
     assert(liveIds(root) == Set(1L, 3L, 5L))
   }
@@ -46,7 +46,7 @@ class CorpusStoreSpec extends SparkSpec {
   test("compact preserves the live view and drops tombstone debt") {
     val root = tmpDir("cs_compact")
     CorpusStore.build(rows(1, 2, 3, 4), col("doc_id"), root)
-    CorpusStore.deleteRows(spark, root, Seq(3L).toDF("doc_id"),
+    CorpusStore.delete(spark, root, Seq(3L).toDF("doc_id"),
       col("doc_id"))
     CorpusStore.compact(spark, root)
     assert(liveIds(root) == Set(1L, 2L, 4L))
@@ -71,7 +71,7 @@ class CorpusStoreSpec extends SparkSpec {
     CorpusStore.build(rows(0L to 9L: _*), col("doc_id"), root)
     CorpusStore.append(spark, root, rows(100L to 109L: _*), col("doc_id"))
     CorpusStore.append(spark, root, rows(200L to 209L: _*), col("doc_id"))
-    CorpusStore.deleteRows(spark, root, Seq(105L).toDF("doc_id"),
+    CorpusStore.delete(spark, root, Seq(105L).toDF("doc_id"),
       col("doc_id"))
     val got = CorpusStore.readRange(spark, root, 100L, 150L)
     assert(got.select("id").as[Long].collect().toSet ==
@@ -119,7 +119,7 @@ class CorpusStoreSpec extends SparkSpec {
     assert(out == Set((1L, "one", None), (2L, "two", None),
       (3L, "three", Some("en")), (4L, "four", Some("de"))))
     // tombstones apply across the heterogeneous segments
-    CorpusStore.deleteRows(spark, root, Seq(1L, 3L).toDF("id"), col("id"))
+    CorpusStore.delete(spark, root, Seq(1L, 3L).toDF("id"), col("id"))
     assert(CorpusStore.read(spark, root)
       .select("id").as[Long].collect().toSet == Set(2L, 4L))
     // compact materializes the merged schema physically; values and
@@ -149,7 +149,7 @@ class CorpusStoreSpec extends SparkSpec {
       col("id"), root)
     CorpusStore.append(spark, root, // v2
       Seq((4L, "four"), (5L, "five")).toDF("id", "text"), col("id"))
-    CorpusStore.deleteRows(spark, root, // v3; both ids live → effective
+    CorpusStore.delete(spark, root, // v3; both ids live → effective
       Seq(2L, 4L).toDF("id"), col("id"))
     CorpusStore.append(spark, root, // v4: readd
       Seq((2L, "two again")).toDF("id", "text"), col("id"))
@@ -160,7 +160,7 @@ class CorpusStoreSpec extends SparkSpec {
     assert(dump(3L) == Set((2L, "insert", 4L)))
     // a delete of an already-dead id is not an event (write-time
     // live-presence filter publishes nothing — no commit, no delta)
-    CorpusStore.deleteRows(spark, root, Seq(4L).toDF("id"), col("id"))
+    CorpusStore.delete(spark, root, Seq(4L).toDF("id"), col("id"))
     assert(dump(4L) == Set.empty)
     // compact rewrites everything physically, changes nothing
     CorpusStore.compact(spark, root, retainVersions = 10) // v5
@@ -201,15 +201,15 @@ class CorpusStoreSpec extends SparkSpec {
       2L -> (("two-fixed", Some("r2"))),
       3L -> (("text-3", None))))
     // a retracted overlay row cedes to production
-    CorpusStore.deleteRows(spark, a, Seq(1L).toDF("id"),
+    CorpusStore.delete(spark, a, Seq(1L).toDF("id"),
       org.apache.spark.sql.functions.col("id"))
     assert(fed(1L) === (("text-1", None)))
     // a production takedown with a live overlay row still serves
-    CorpusStore.deleteRows(spark, b, Seq(2L).toDF("id"),
+    CorpusStore.delete(spark, b, Seq(2L).toDF("id"),
       org.apache.spark.sql.functions.col("id"))
     assert(fed(2L) === (("two-fixed", Some("r2"))))
     // deleted everywhere → gone
-    CorpusStore.deleteRows(spark, a, Seq(2L).toDF("id"),
+    CorpusStore.delete(spark, a, Seq(2L).toDF("id"),
       org.apache.spark.sql.functions.col("id"))
     assert(!fed.contains(2L))
   }
@@ -238,7 +238,7 @@ class CorpusStoreSpec extends SparkSpec {
     assert(tick().contains((1L, 2L)))
     assert(seen.toSet == Set((3L, "insert", 2L)))
     assert(tick().isEmpty) // advanced: no re-delivery
-    CorpusStore.deleteRows(spark, root, Seq(1L).toDF("id"), col("id"))
+    CorpusStore.delete(spark, root, Seq(1L).toDF("id"), col("id"))
     assert(tick().contains((2L, 3L)))
     assert(seen.toSet == Set((3L, "insert", 2L), (1L, "delete", 3L)))
   }
@@ -247,7 +247,7 @@ class CorpusStoreSpec extends SparkSpec {
     val root = tmpDir("cs_stats")
     CorpusStore.build(rows(1, 2, 3), col("doc_id"), root)
     CorpusStore.append(spark, root, rows(4, 5), col("doc_id"))
-    CorpusStore.deleteRows(spark, root, Seq(2L, 4L).toDF("doc_id"),
+    CorpusStore.delete(spark, root, Seq(2L, 4L).toDF("doc_id"),
       col("doc_id"))
     val got = CorpusStore.stats(spark, root)
       .as[(String, Long)].collect().toMap

@@ -122,7 +122,7 @@ class DedupIndexSpec extends SparkSpec {
   test("deleteDocs retracts docs: batch dedup matches surviving-corpus rebuild") {
     val dir = graft.Gate.tmpDir("dedup_idx_del_")
     DedupIndex.build(base, col("id"), col("t"), dir, n = 2)
-    DedupIndex.deleteDocs(spark, dir, Seq(1L).toDF("id"), col("id"))
+    DedupIndex.delete(spark, dir, Seq(1L).toDF("id"), col("id"))
     // maxDF low enough that the deleted doc's NEGATIVE df partials
     // matter, not just its absence from candidates
     val inc = pairsOf(DedupIndex.dedupBatch(spark, dir, batch,
@@ -144,7 +144,7 @@ class DedupIndexSpec extends SparkSpec {
       col("id"), col("t"), threshold = 0.3, maxDF = 3))
     assert(after == full)
     // re-deleting is a no-op, not a double-subtract
-    DedupIndex.deleteDocs(spark, dir, Seq(1L, 999L).toDF("id"), col("id"))
+    DedupIndex.delete(spark, dir, Seq(1L, 999L).toDF("id"), col("id"))
     assert(pairsOf(DedupIndex.dedupBatch(spark, dir, batch,
       col("id"), col("t"), threshold = 0.3, maxDF = 3)) == full)
   }
@@ -191,7 +191,7 @@ class DedupIndexSpec extends SparkSpec {
       col("id"), col("t"), threshold = 0.3))
     // mutate the index: admit the batch, then delete doc 1
     DedupIndex.append(spark, dir, batch, col("id"), col("t"))
-    DedupIndex.deleteDocs(spark, dir, Seq(1L).toDF("id"), col("id"))
+    DedupIndex.delete(spark, dir, Seq(1L).toDF("id"), col("id"))
     // latest: doc 1 can no longer pair; the batch pairs with itself
     val now = pairsOf(DedupIndex.dedupBatch(spark, dir, batch,
       col("id"), col("t"), threshold = 0.3))
@@ -206,7 +206,7 @@ class DedupIndexSpec extends SparkSpec {
     val dir = graft.Gate.tmpDir("dd_stats_")
     DedupIndex.build(base, col("id"), col("t"), dir, n = 3)
     DedupIndex.append(spark, dir, batch, col("id"), col("t"))
-    DedupIndex.deleteDocs(spark, dir, Seq(2L, 12L).toDF("id"), col("id"))
+    DedupIndex.delete(spark, dir, Seq(2L, 12L).toDF("id"), col("id"))
     val got = DedupIndex.stats(spark, dir)
       .as[(String, Long)].collect().toMap
     assert(got("live_docs") === 7L) // 4 + 5 − 2

@@ -65,7 +65,7 @@ class IdBloomSpec extends SparkSpec {
 
   test("liveRowsAmong is value-identical to the unpruned semi-join") {
     val p = freshStore()
-    CorpusStore.deleteRows(spark, p, Seq(15L, 3L).toDF("id"), col("id"))
+    CorpusStore.delete(spark, p, Seq(15L, 3L).toDF("id"), col("id"))
     CorpusStore.append(spark, p, band(15, 15), col("id")) // readd 15
     val snap = IndexStore.snapshot(spark, p)
     // candidates spanning: live (7, 22), deleted (3), readded (15),
@@ -164,7 +164,7 @@ class IdBloomSpec extends SparkSpec {
     segs.filterNot(_ == segOf25).foreach { s =>
       assert(fs(p).delete(new Path(s"$p/$s/rows"), true))
     }
-    CorpusStore.deleteRows(spark, p, Seq(25L).toDF("id"), col("id"))
+    CorpusStore.delete(spark, p, Seq(25L).toDF("id"), col("id"))
     val snap1 = IndexStore.snapshot(spark, p)
     val cands = Seq(25L, 26L).toDF("id")
     val live = IndexStore.liveRowsAmong(snap1, "rows", "id", cands)

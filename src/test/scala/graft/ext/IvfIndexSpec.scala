@@ -121,7 +121,7 @@ class IvfIndexSpec extends SparkSpec {
       .select("cos").as[Double].collect()
     assert(id0.nonEmpty && id0.forall(_ < 0))
     // retraction cedes: production's raw id 0 ranks itself first again
-    IvfIndex.deleteVecs(spark, pa, Seq(0L).toDF("vec_id"), col("vec_id"))
+    IvfIndex.delete(spark, pa, Seq(0L).toDF("vec_id"), col("vec_id"))
     assert(fed(1).select("neighbor_id").as[Long].head() === 0L)
   }
 
@@ -132,7 +132,7 @@ class IvfIndexSpec extends SparkSpec {
     IvfIndex.save(model, dir)
     val v0 = graft.ext.IndexStore.snapshot(spark, dir).version
     val doomed = embs.filter(col("vec_id") % 5 === 1).select("vec_id")
-    IvfIndex.deleteVecs(spark, dir, doomed, col("vec_id"))
+    IvfIndex.delete(spark, dir, doomed, col("vec_id"))
     // tombstone-masked search == brute force over the surviving corpus
     val survivors = embs.filter(col("vec_id") % 5 =!= 1)
     def res(m: IvfIndex.Model) =
@@ -146,7 +146,7 @@ class IvfIndexSpec extends SparkSpec {
     val masked = res(IvfIndex.load(spark, dir, embs))
     assert(masked == brute)
     // double-delete is a no-op (no duplicate tombstones accumulate)
-    IvfIndex.deleteVecs(spark, dir, doomed, col("vec_id"))
+    IvfIndex.delete(spark, dir, doomed, col("vec_id"))
     assert(res(IvfIndex.load(spark, dir, embs)) == brute)
     // compact applies physically: same answers, no tombstone relation,
     // and the deleted ids are gone from the stored cells
@@ -284,7 +284,7 @@ class IvfIndexSpec extends SparkSpec {
     val model = IvfIndex.build(embs, k = 3)
     val path = graft.Gate.tmpDir("ivf_stats_")
     IvfIndex.save(model, path)
-    IvfIndex.deleteVecs(spark, path,
+    IvfIndex.delete(spark, path,
       embs.filter(col("vec_id") % 4 === 1).select("vec_id"), col("vec_id"))
     val got = IvfIndex.stats(spark, path)
       .as[(String, Long)].collect().toMap

@@ -71,7 +71,7 @@ class IvfPqIndexSpec extends SparkSpec {
     val dir = graft.Gate.tmpDir("ivfpq_del_")
     IvfPqIndex.save(model, dir)
     val v0 = IndexStore.snapshot(spark, dir).version
-    IvfPqIndex.deleteVecs(spark, dir,
+    IvfPqIndex.delete(spark, dir,
       embs.filter(col("vec_id") % 5 === 1).select("vec_id"), col("vec_id"))
     def res(m: IvfPqIndex.Model) =
       IvfPqIndex.search(m, col("vec_id") < 5, k = 3,
@@ -113,7 +113,7 @@ class IvfPqIndexSpec extends SparkSpec {
     IvfPqIndex.save(model, path)
     IvfPqIndex.saveAppend(model,
       embs.filter(col("vec_id") % 3 === 0), path)
-    IvfPqIndex.deleteVecs(spark, path,
+    IvfPqIndex.delete(spark, path,
       embs.filter(col("vec_id") % 7 === 2).select("vec_id"),
       col("vec_id"))
     def stat(name: String): Long = IvfPqIndex.stats(spark, path)

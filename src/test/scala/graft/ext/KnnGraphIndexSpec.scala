@@ -130,7 +130,7 @@ class KnnGraphIndexSpec extends SparkSpec {
     val path = dir()
     KnnGraphIndex.build(clustered, path, k = 3, iters = 3)
     // node 2 (cluster A, not an entry point) goes away
-    KnnGraphIndex.deleteVecs(spark, path, Seq(2L).toDF("vec_id"),
+    KnnGraphIndex.delete(spark, path, Seq(2L).toDF("vec_id"),
       col("vec_id"))
     val probe = clustered.filter(col("vec_id") === 2L)
     val gotIds = answers(path, probe, k = 3).map(_._3)
@@ -138,7 +138,7 @@ class KnnGraphIndexSpec extends SparkSpec {
     assert(gotIds.forall(id => id % 2 == 0)) // still lands in cluster A
     // idempotent: deleting again publishes nothing
     val v = IndexStore.snapshot(spark, path).version
-    KnnGraphIndex.deleteVecs(spark, path, Seq(2L).toDF("vec_id"),
+    KnnGraphIndex.delete(spark, path, Seq(2L).toDF("vec_id"),
       col("vec_id"))
     assert(IndexStore.snapshot(spark, path).version === v)
     // readd: the same node re-admits (scoped tombstones — live again)
@@ -151,7 +151,7 @@ class KnnGraphIndexSpec extends SparkSpec {
   test("compact preserves answers and scrubs dangling references") {
     val path = dir()
     KnnGraphIndex.build(clustered, path, k = 3, iters = 3)
-    KnnGraphIndex.deleteVecs(spark, path, Seq(2L, 4L).toDF("vec_id"),
+    KnnGraphIndex.delete(spark, path, Seq(2L, 4L).toDF("vec_id"),
       col("vec_id"))
     val queries = clustered.filter(col("vec_id") % 2 === 1)
     val before = answers(path, queries)
@@ -166,7 +166,7 @@ class KnnGraphIndexSpec extends SparkSpec {
       "re-converges to the survivors' exact graph") {
     val path = dir()
     KnnGraphIndex.build(clustered, path, k = 3, iters = 3)
-    KnnGraphIndex.deleteVecs(spark, path, Seq(2L, 4L).toDF("vec_id"),
+    KnnGraphIndex.delete(spark, path, Seq(2L, 4L).toDF("vec_id"),
       col("vec_id"))
     KnnGraphIndex.compact(spark, path) // scrubs dangling refs → degree < k
     val survivors = clustered.filter(!col("vec_id").isin(2L, 4L))
@@ -237,7 +237,7 @@ class KnnGraphIndexSpec extends SparkSpec {
           KnnGraphIndex.build(batch, path, k = 3, iters = 3)
           // the takedown lands BETWEEN batches — the next batch's
           // insert and every later serving must not resurrect node 2
-          KnnGraphIndex.deleteVecs(spark, path, Seq(2L).toDF("vec_id"),
+          KnnGraphIndex.delete(spark, path, Seq(2L).toDF("vec_id"),
             col("vec_id"))
         } else KnnGraphIndex.insert(spark, path, batch)
         delivered += 1
@@ -322,7 +322,7 @@ class KnnGraphIndexSpec extends SparkSpec {
     assert(KnnGraphIndex.debt(spark, path) === ((2L, 0L)))
     // at the threshold: does NOT fire (one below the trigger)
     assert(!KnnGraphIndex.maybeRewire(spark, path, maxDebt = 2))
-    KnnGraphIndex.deleteVecs(spark, path, Seq(2L).toDF("vec_id"),
+    KnnGraphIndex.delete(spark, path, Seq(2L).toDF("vec_id"),
       col("vec_id"))
     assert(KnnGraphIndex.debt(spark, path) === ((2L, 1L)))
     // past the threshold: fires, pays the debt in full…
@@ -366,7 +366,7 @@ class KnnGraphIndexSpec extends SparkSpec {
   test("delete then rewire leaves no phantom degree rows for dead ids") {
     val path = dir()
     KnnGraphIndex.build(clustered, path, k = 3, iters = 3)
-    KnnGraphIndex.deleteVecs(spark, path, Seq(2L, 4L).toDF("vec_id"),
+    KnnGraphIndex.delete(spark, path, Seq(2L, 4L).toDF("vec_id"),
       col("vec_id"))
     def liveDeg = KnnGraphIndex
       .liveDegrees(IndexStore.snapshot(spark, path))
@@ -482,7 +482,7 @@ class KnnGraphIndexSpec extends SparkSpec {
       .sortBy { case (id, d) => (-d, id) }.take(64).toMap
     assert(hubs0 === want)
     val victim = hubs0.keys.min
-    KnnGraphIndex.deleteVecs(spark, path,
+    KnnGraphIndex.delete(spark, path,
       Seq(victim).toDF("vec_id"), col("vec_id"))
     val hubs1 = KnnGraphIndex
       .liveHubs(IndexStore.snapshot(spark, path))
@@ -560,7 +560,7 @@ class KnnGraphIndexSpec extends SparkSpec {
     assert(got.nonEmpty && got.forall(_ % 2 == 0))
     // retract the amendment: id 0 cedes back to production and, being
     // the query's exact match there, answers at rank 1
-    KnnGraphIndex.deleteVecs(spark, overlay, Seq(0L).toDF("vec_id"),
+    KnnGraphIndex.delete(spark, overlay, Seq(0L).toDF("vec_id"),
       col("vec_id"))
     val after = KnnGraphIndex.searchFederatedVectors(spark,
         Seq(overlay, prod), query, k = 3, beamWidth = 6, hops = 4,
@@ -588,7 +588,7 @@ class KnnGraphIndexSpec extends SparkSpec {
     // damage the graph (delete half of cluster A, compact scrubs the
     // dangling references, no rewire) — recall is measured against the
     // SURVIVORS' truth and must stay a valid ratio
-    KnnGraphIndex.deleteVecs(spark, path,
+    KnnGraphIndex.delete(spark, path,
       Seq(0L, 2L, 4L).toDF("vec_id"), col("vec_id"))
     KnnGraphIndex.compact(spark, path)
     val r2 = KnnGraphIndex.recallProbe(spark, path, sampleN = 4, k = 2,

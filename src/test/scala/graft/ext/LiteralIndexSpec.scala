@@ -38,7 +38,7 @@ class LiteralIndexSpec extends SparkSpec {
     val dir = tmpDir("lit_del")
     LiteralIndex.buildAndSave(docs, col("doc_id"), col("text"), dir,
       n = 4, buckets = 8)
-    LiteralIndex.deleteDocs(spark, dir, Seq(3L, 5L).toDF("doc_id"),
+    LiteralIndex.delete(spark, dir, Seq(3L, 5L).toDF("doc_id"),
       col("doc_id"))
     val want = TextSearch.literalSearch(
       docs.filter(!col("doc_id").isin(3L, 5L)), col("doc_id"), col("text"),
@@ -57,7 +57,7 @@ class LiteralIndexSpec extends SparkSpec {
     LiteralIndex.buildAndSave(docs, col("doc_id"), col("text"), dir,
       n = 4, buckets = 8)
     val v0 = IndexStore.snapshot(spark, dir).version
-    LiteralIndex.deleteDocs(spark, dir, Seq(3L).toDF("doc_id"),
+    LiteralIndex.delete(spark, dir, Seq(3L).toDF("doc_id"),
       col("doc_id"))
     // live sweep excludes doc 3; the pinned pre-delete version keeps it
     assert(!sweep(dir).contains((10L, 3L)))
@@ -181,7 +181,7 @@ class LiteralIndexSpec extends SparkSpec {
       col("doc_id"), col("text"), dir, n = 4, buckets = 4)
     LiteralIndex.appendDocs(spark, dir,
       docs.filter(col("doc_id") >= 4), col("doc_id"), col("text"))
-    LiteralIndex.deleteDocs(spark, dir, Seq(2L).toDF("doc_id"),
+    LiteralIndex.delete(spark, dir, Seq(2L).toDF("doc_id"),
       col("doc_id"))
     val got = LiteralIndex.stats(spark, dir)
       .as[(String, Long)].collect().toMap

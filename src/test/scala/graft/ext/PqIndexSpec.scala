@@ -112,7 +112,7 @@ class PqIndexSpec extends SparkSpec {
       sampleFraction = 1.0, maxIter = 10)
     val dir = graft.Gate.tmpDir("pq_del_")
     PqIndex.save(model, dir)
-    PqIndex.deleteVecs(spark, dir,
+    PqIndex.delete(spark, dir,
       corpus.filter(col("vec_id") % 5 === 1).select("vec_id"),
       col("vec_id"))
     val loaded = PqIndex.load(spark, dir, corpus)
@@ -162,7 +162,7 @@ class PqIndexSpec extends SparkSpec {
     val v1 = IndexStore.snapshot(spark, path).version
     // drift: append new rows under the FROZEN codebooks, drop a slice
     PqIndex.saveAppend(model, embs.filter(col("vec_id") % 3 === 0), path)
-    PqIndex.deleteVecs(spark, path,
+    PqIndex.delete(spark, path,
       embs.filter(col("vec_id") % 7 === 2).select("vec_id"), col("vec_id"))
     val preV = IndexStore.snapshot(spark, path).version
     PqIndex.retrain(spark, path, embs, m = 4, k = 8,
@@ -197,7 +197,7 @@ class PqIndexSpec extends SparkSpec {
     val model = PqIndex.build(base, m = 4, k = 8, sampleFraction = 1.0)
     PqIndex.save(model, path)
     PqIndex.saveAppend(model, embs.filter(col("vec_id") % 2 === 1), path)
-    PqIndex.deleteVecs(spark, path,
+    PqIndex.delete(spark, path,
       embs.filter(col("vec_id") % 10 === 3).select("vec_id"),
       col("vec_id"))
     def stat(name: String): Long = PqIndex.stats(spark, path)

@@ -112,7 +112,7 @@ class SqIndexSpec extends SparkSpec {
     val model = SqIndex.build(base)
     SqIndex.save(model, path)
     SqIndex.saveAppend(model, embs.filter(col("vec_id") % 3 === 0), path)
-    SqIndex.deleteVecs(spark, path,
+    SqIndex.delete(spark, path,
       embs.filter(col("vec_id") % 7 === 2).select("vec_id"), col("vec_id"))
     val preV = IndexStore.snapshot(spark, path).version
     SqIndex.retrain(spark, path, embs)
@@ -144,7 +144,7 @@ class SqIndexSpec extends SparkSpec {
     val dir = graft.Gate.tmpDir("sq_del_")
     val model = SqIndex.build(corpus)
     SqIndex.save(model, dir)
-    SqIndex.deleteVecs(spark, dir,
+    SqIndex.delete(spark, dir,
       corpus.filter(col("vec_id") % 5 === 1).select("vec_id"),
       col("vec_id"))
     val loaded = SqIndex.load(spark, dir, corpus)

@@ -54,7 +54,7 @@ class TakedownSpec extends SparkSpec {
     Takedown.register(spark, root, Takedown.Surface("graph", gidx))
     KnnGraphIndex.insert(spark, gidx,
       Seq((100L, Array(10f, 0f, 0.5f))).toDF("vec_id", "embedding"))
-    TextSearch.deleteDocs(spark, bm25, Seq(1L).toDF("doc_id"),
+    TextSearch.delete(spark, bm25, Seq(1L).toDF("doc_id"),
       col("doc_id"))
     val h = Takedown.health(spark, root).collect()
       .map(r => r.getString(0) -> r).toMap

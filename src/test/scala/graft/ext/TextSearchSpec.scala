@@ -143,7 +143,7 @@ class TextSearchSpec extends SparkSpec {
       buckets = 8)
     // delete doc 1 ("the dog sat on the log"): df(sat) 2→1, df(the)
     // 2→1, n_docs 4→3, avgdl moves — scores must shift accordingly
-    TextSearch.deleteDocs(spark, dir, Seq(1L).toDF("doc_id"),
+    TextSearch.delete(spark, dir, Seq(1L).toDF("doc_id"),
       col("doc_id"))
     val masked = rows(TextSearch.searchSaved(spark, dir, queries,
       col("qid"), col("qterms"), k = 4).orderBy("rn"))
@@ -162,7 +162,7 @@ class TextSearchSpec extends SparkSpec {
     assert(rows(TextSearch.searchSaved(spark, dir, queries,
       col("qid"), col("qterms"), k = 4).orderBy("rn")) === rebuilt)
     // deleting the same id again is a no-op, not a double-subtract
-    TextSearch.deleteDocs(spark, dir, Seq(1L, 999L).toDF("doc_id"),
+    TextSearch.delete(spark, dir, Seq(1L, 999L).toDF("doc_id"),
       col("doc_id"))
     assert(rows(TextSearch.searchSaved(spark, dir, queries,
       col("qid"), col("qterms"), k = 4).orderBy("rn")) === rebuilt)
@@ -195,7 +195,7 @@ class TextSearchSpec extends SparkSpec {
         col("pid"), col("pterms"))
       .as[(Long, Long, Long)].collect().toSet
     assert(saved === expected)
-    TextSearch.deleteDocs(spark, dir, Seq(0L).toDF("doc_id"),
+    TextSearch.delete(spark, dir, Seq(0L).toDF("doc_id"),
       col("doc_id"))
     val afterDel = TextSearch.phraseSearchSaved(spark, dir, phrases,
         col("pid"), col("pterms"))
@@ -279,7 +279,7 @@ class TextSearchSpec extends SparkSpec {
     TextSearch.appendDocs(spark, dir,
       Seq((10L, "cat cat cat")).toDF("doc_id", "text"),
       col("doc_id"), col("text"))
-    TextSearch.deleteDocs(spark, dir, Seq(0L).toDF("doc_id"),
+    TextSearch.delete(spark, dir, Seq(0L).toDF("doc_id"),
       col("doc_id"))
     // latest: doc 0 gone, doc 10 present
     val latest = TextSearch.searchSaved(spark, dir, queries,
@@ -306,7 +306,7 @@ class TextSearchSpec extends SparkSpec {
     TextSearch.appendDocs(spark, dir,
       Seq((10L, "cat cat cat")).toDF("doc_id", "text"),
       col("doc_id"), col("text"))
-    TextSearch.deleteDocs(spark, dir, Seq(0L).toDF("doc_id"),
+    TextSearch.delete(spark, dir, Seq(0L).toDF("doc_id"),
       col("doc_id"))
     val got = TextSearch.stats(spark, dir)
       .as[(String, Long)].collect().toMap

@@ -29,7 +29,7 @@ class TombstoneScopeSpec extends SparkSpec {
         .as[(Long, Long)].collect().toSet
     LiteralIndex.buildAndSave(docs, col("doc_id"), col("text"), dir,
       n = 4, buckets = 8)
-    LiteralIndex.deleteDocs(spark, dir, Seq(3L).toDF("doc_id"), col("doc_id"))
+    LiteralIndex.delete(spark, dir, Seq(3L).toDF("doc_id"), col("doc_id"))
     assert(hits(docs).isEmpty)
     // corrected delivery: same id, revised text — must become visible
     val readd = Seq((3L, "india juliet kilo lima CORRECTED")).toDF("doc_id", "text")
@@ -41,7 +41,7 @@ class TombstoneScopeSpec extends SparkSpec {
     assert(hits(corpus2) == Set((10L, 3L)))
     // the re-added copy is deletable (old code no-op'd on the standing
     // tombstone and the corrected delivery was un-retractable)
-    LiteralIndex.deleteDocs(spark, dir, Seq(3L).toDF("doc_id"), col("doc_id"))
+    LiteralIndex.delete(spark, dir, Seq(3L).toDF("doc_id"), col("doc_id"))
     assert(hits(corpus2).isEmpty)
   }
 
@@ -50,7 +50,7 @@ class TombstoneScopeSpec extends SparkSpec {
     val queries = Seq((1L, Seq("juliet", "kilo"))).toDF("qid", "qterms")
     TextSearch.buildAndSave(docs, col("doc_id"), col("text"), dir,
       buckets = 8)
-    TextSearch.deleteDocs(spark, dir, Seq(3L).toDF("doc_id"), col("doc_id"))
+    TextSearch.delete(spark, dir, Seq(3L).toDF("doc_id"), col("doc_id"))
     val readd = Seq((3L, "india juliet kilo lima CORRECTED"))
       .toDF("doc_id", "text")
     TextSearch.appendDocs(spark, dir, readd, col("doc_id"), col("text"))
@@ -73,7 +73,7 @@ class TombstoneScopeSpec extends SparkSpec {
     val dir = tmpDir("scope_dedup")
     DedupIndex.build(docs, col("doc_id"), col("text"), dir,
       n = 2, bands = 8, rowsPerBand = 2)
-    DedupIndex.deleteDocs(spark, dir, Seq(1L).toDF("doc_id"), col("doc_id"))
+    DedupIndex.delete(spark, dir, Seq(1L).toDF("doc_id"), col("doc_id"))
     // near-clone of doc 1: no pairs while doc 1 is deleted
     val probe = Seq((99L, "alpha bravo charlie delta echo"))
       .toDF("doc_id", "text")
@@ -96,7 +96,7 @@ class TombstoneScopeSpec extends SparkSpec {
           (if (j == i % 4) 1.0f else 0.0f) + 0.01f * i)))
       .toDF("vec_id", "embedding")
     SqIndex.save(SqIndex.build(embs), dir)
-    SqIndex.deleteVecs(spark, dir, Seq(4L).toDF("vec_id"), col("vec_id"))
+    SqIndex.delete(spark, dir, Seq(4L).toDF("vec_id"), col("vec_id"))
     def ids(corpus: org.apache.spark.sql.DataFrame): Set[Long] = {
       val m = SqIndex.load(spark, dir, corpus)
       m.encoded.select("vec_id").as[Long].collect().toSet
@@ -106,7 +106,7 @@ class TombstoneScopeSpec extends SparkSpec {
     SqIndex.saveAppend(SqIndex.load(spark, dir, embs), readd, dir)
     assert(ids(embs).contains(4L))
     // second delete retracts the re-added copy
-    SqIndex.deleteVecs(spark, dir, Seq(4L).toDF("vec_id"), col("vec_id"))
+    SqIndex.delete(spark, dir, Seq(4L).toDF("vec_id"), col("vec_id"))
     assert(!ids(embs).contains(4L))
   }
 
