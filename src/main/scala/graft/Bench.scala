@@ -1,37 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = GraftSession.sfDir
     // arm the harness-only failure-injection switch HERE (and only here):
     // the env var is inert for library consumers — see Tables.events
     Tables.breakEventsForTest = sys.env.contains("GRAFT_BREAK_EVENTS")
-    // sweep shuffle scratch left by dead JVMs BEFORE the session claims
-    // the dir — stale blockmgr/spark-* trees from a crashed run otherwise
-    // share the tmpfs budget with this run's shuffles and page cache
-    sweepStaleLocalDirs(new java.io.File("/dev/shm/graft_local"))
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // typed aggregates (MinHash/SimHash) run via ObjectHashAggregate,
-      // whose default sort-fallback kicks in at 128 groups/partition —
-      // far below our per-doc signature groupBys
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4000000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill scratch on tmpfs when available: this host's
-      // buffered-write path throttles to ~40 MB/s (direct I/O does 330),
-      // which both slows shuffles and makes timings swing run-to-run
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_local"
-        else System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     // absorb JVM/codegen/parquet-reader init outside the timed queries
     spark.read.parquet(s"$sfDir/region.parquet").count()
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -71,17 +46,14 @@ object Bench {
     // EXCEPT that known-heavy lifecycle/composition gates run LAST:
     // their GC / page-cache / shuffle-scratch debt measurably inflated
     // unrelated light gates by ~1.3x in r04 when interleaved.
-    // SPARK_GRAFT_ONLY=substr[,substr...] narrows the run for iteration.
-    // A token that EXACTLY names a gate matches only that gate (so the
-    // isolated child for q_takedown does not also time q_takedown_store);
-    // otherwise substring semantics.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val allNames = SparkEntry.queries.keySet
-    def tokenMatches(t: String, n: String): Boolean =
-      if (allNames.contains(t)) n == t else n.contains(t)
+    // SPARK_GRAFT_ONLY=substr[,substr...] narrows the run for iteration
+    // (the Gate.select rule: the isolated child for q_takedown does not
+    // also time q_takedown_store).
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val selects = Gate.select(only)
     val isChild = sys.env.contains("SPARK_GRAFT_CHILD")
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(t => tokenMatches(t, n))) }
+      .filter { case (n, _) => selects(n) }
       // heavy gates run last, name-ordered — EXCEPT q_nn_descent, which
       // runs first among them: it prices the shared descent-graph memo
       // that q_graph_serve / q_graph_insert_tick / q_search_graph read,
@@ -98,13 +70,7 @@ object Bench {
     // without this, isolated numbers carry ~5 s of JVM/codegen warmup
     // and are incomparable to in-suite ones (the round-over-round
     // comparison this mode exists for)
-    if (isChild) selected.foreach { case (_, fn) =>
-      val staged = Gate.currentStaging()
-      try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () }
-      spark.catalog.clearCache()
-      Gate.sweepNewStaging(staged)
-      System.gc()
-    }
+    if (isChild) selected.foreach { case (_, fn) => warm(spark, fn, sfDir) }
     // Children (isolated mode) report the MIN of three timed runs: the
     // host's buffered-write throughput swings single runs 1.4–2× with no
     // code change (r9 flagged q_cdc_dup/q_minhash_dedup regressions that
@@ -112,44 +78,9 @@ object Bench {
     // floor for a warm, deterministic gate.
     val attempts = if (isChild) 3 else 1
     val results = selected.map { case (name, fn) =>
-      var best = Double.MaxValue
-      var failed = false
-      var a = 0
-      while (a < attempts && !failed) {
-        val staged = Gate.currentStaging()
-        val t0 = System.nanoTime()
-        // A failed gate must never masquerade as a fast one: record the
-        // failure explicitly instead of its time-to-throw (r5 postmortem —
-        // 58 broken gates benched as 0.06-0.14 s "wins").
-        failed = try { fn(spark, sfDir).count(); false } catch {
-          case e: Throwable =>
-            System.err.println(s"BENCH GATE FAILED: $name: ${e.getClass.getName}: ${e.getMessage}")
-            true
-        }
-        // operators persist() reusable subtrees; drop them between queries
-        // so ~75 gates don't accumulate cached partitions in one session,
-        // and collect the garbage OUTSIDE the next gate's timed window —
-        // GC debt from a heavy neighbor otherwise lands on whoever runs
-        // next. Only the heavy gates produce that debt: a full System.gc()
-        // after every light gate costs more wall clock than it protects
-        // (~0.15 s × 60 gates), so collect only after >1 s gates; after
-        // >5 s gates also give the JVM a short settle so concurrent GC /
-        // finalizer / shuffle-cleanup threads drain before the next window.
-        spark.catalog.clearCache()
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        // drop the gate's own tmpfs staging (private index copies, stream
-        // checkpoints) OUTSIDE its timed window — accumulated staging
-        // competes with page cache and shuffle scratch for the rest of
-        // the run otherwise; memoized shared builds survive
-        Gate.sweepNewStaging(staged)
-        if (elapsed > 1.0) System.gc()
-        if (elapsed > 5.0) { System.gc(); Thread.sleep(300) }
-        best = math.min(best, elapsed)
-        a += 1
-      }
-      val elapsed = if (best == Double.MaxValue) 0.0 else best
-      if (isChild) println(s"CHILD_TIMING $name $elapsed")
-      (name, elapsed, failed)
+      val best = time(spark, name, fn, sfDir, attempts)
+      if (isChild) best.foreach(t => println(s"CHILD_TIMING $name $t"))
+      (name, best.getOrElse(0.0), best.isEmpty)
     }
     // isolated section: a FRESH JVM per gate for the comparison set, so
     // round-over-round numbers stop carrying the in-suite "GC/page-cache
@@ -158,7 +89,7 @@ object Bench {
     val isolated: Seq[(String, Option[Double])] =
       if (isChild || only.nonEmpty ||
         sys.env.get("SPARK_GRAFT_ISOLATED").contains("0")) Seq.empty
-      else isolatedSet.map(n => n -> runIsolated(n, sfDir))
+      else isolatedSet.map(n => n -> isolatedTiming(n, sfDir))
     val failures = results.filter(_._3).map(_._1)
     // failed gates are excluded from the total — their elapsed is
     // time-to-throw, not work done
@@ -178,10 +109,6 @@ object Bench {
     //  2. The stdout contract line, printed LAST and kept under ~1.9 KB:
     //     full-suite total, a ~50-gate headline subset, the isolated
     //     map, and the artifact path.
-    // Explicit Locale.ROOT: the f interpolator formats via the JVM
-    // default locale, and a comma-decimal locale would emit invalid JSON.
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def entries(rs: Seq[(String, Double, Boolean)]): String = rs
       .map { case (k, v, f) => if (f) s""""$k":"err"""" else s""""$k":${num(v)}""" }
       .mkString("{", ",", "}")
@@ -239,67 +166,127 @@ object Bench {
     // variance pattern) — track it min-of-3 so that ambiguity can't recur
     "q_point_skip")
 
-  /** Run one gate in a fresh JVM (same flags and classpath as this one,
-    * via RuntimeMXBean) and return its WARM timing — the child runs the
-    * gate untimed once, then timed. None on spawn failure, non-zero
-    * exit, or timeout.
+  /** Explicit Locale.ROOT: the f interpolator formats via the JVM
+    * default locale, and a comma-decimal locale would emit invalid JSON.
     */
-  private def runIsolated(name: String, sfDir: String): Option[Double] =
-    try {
-      import scala.jdk.CollectionConverters._
-      val javaBin = new java.io.File(
-        new java.io.File(System.getProperty("java.home"), "bin"), "java")
-        .getAbsolutePath
-      val jvmArgs = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments.asScala.toSeq
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", System.getProperty("java.class.path"), "graft.Bench")
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_ONLY", name)
-      pb.environment().put("SPARK_GRAFT_CHILD", "1")
-      pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.redirectErrorStream(true)
-      val p = pb.start()
-      // drain stdout on its OWN thread: a hung child that keeps stdout
-      // open would otherwise block readLine forever and make the 600 s
-      // waitFor unreachable (the timeout would never fire)
-      @volatile var t: Option[Double] = None
-      val drainer = new Thread(() => {
-        val out = new java.io.BufferedReader(
-          new java.io.InputStreamReader(p.getInputStream))
-        try {
-          var line = out.readLine()
-          while (line != null) {
-            if (line.startsWith(s"CHILD_TIMING $name "))
-              t = scala.util.Try(line.stripPrefix(s"CHILD_TIMING $name ")
-                .trim.toDouble).toOption
-            line = out.readLine()
-          }
-        } catch { case _: java.io.IOException => () }
-      }, s"bench-drain-$name")
-      drainer.setDaemon(true)
-      drainer.start()
-      val done = p.waitFor(600, java.util.concurrent.TimeUnit.SECONDS)
-      if (!done) { p.destroyForcibly(); None }
-      else {
-        drainer.join(10000)
-        if (p.exitValue() != 0) None else t
+  private[graft] def num(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** One untimed run of `fn` over `dir`, then the between-gates cleanup:
+    * JIT, codegen, page cache and the gate's memoized fixtures warm here,
+    * outside the timed window. A failure is left to the timed run.
+    */
+  private[graft] def warm(spark: SparkSession,
+      fn: (SparkSession, String) => DataFrame, dir: String): Unit = {
+    val staged = Gate.currentStaging()
+    try { fn(spark, dir).count(); () } catch { case _: Throwable => () }
+    spark.catalog.clearCache()
+    Gate.sweepNewStaging(staged)
+    System.gc()
+  }
+
+  /** The min of `attempts` timed runs of gate `name` over `dir`, or None
+    * when a run throws.
+    */
+  private[graft] def time(spark: SparkSession, name: String,
+      fn: (SparkSession, String) => DataFrame, dir: String,
+      attempts: Int): Option[Double] = {
+    var best = Double.MaxValue
+    var failed = false
+    var a = 0
+    while (a < attempts && !failed) {
+      val staged = Gate.currentStaging()
+      val t0 = System.nanoTime()
+      // A failed gate must never masquerade as a fast one: record the
+      // failure explicitly instead of its time-to-throw (r5 postmortem —
+      // 58 broken gates benched as 0.06-0.14 s "wins").
+      failed = try { fn(spark, dir).count(); false } catch {
+        case e: Throwable =>
+          System.err.println(s"BENCH GATE FAILED: $name: ${e.getClass.getName}: ${e.getMessage}")
+          true
       }
+      // operators persist() reusable subtrees; drop them between queries
+      // so ~75 gates don't accumulate cached partitions in one session,
+      // and collect the garbage OUTSIDE the next gate's timed window —
+      // GC debt from a heavy neighbor otherwise lands on whoever runs
+      // next. Only the heavy gates produce that debt: a full System.gc()
+      // after every light gate costs more wall clock than it protects
+      // (~0.15 s × 60 gates), so collect only after >1 s gates; after
+      // >5 s gates also give the JVM a short settle so concurrent GC /
+      // finalizer / shuffle-cleanup threads drain before the next window.
+      spark.catalog.clearCache()
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      // drop the gate's own tmpfs staging (private index copies, stream
+      // checkpoints) OUTSIDE its timed window — accumulated staging
+      // competes with page cache and shuffle scratch for the rest of
+      // the run otherwise; memoized shared builds survive
+      Gate.sweepNewStaging(staged)
+      if (elapsed > 1.0) System.gc()
+      if (elapsed > 5.0) { System.gc(); Thread.sleep(300) }
+      best = math.min(best, elapsed)
+      a += 1
+    }
+    if (failed) None else Some(best)
+  }
+
+  /** Run one gate in a fresh JVM and return its WARM timing — the child
+    * runs the gate untimed once, then min-of-3 timed. None on spawn
+    * failure, non-zero exit, or timeout.
+    */
+  private def isolatedTiming(name: String, sfDir: String): Option[Double] =
+    try {
+      @volatile var t: Option[Double] = None
+      val exit = runIsolated("graft.Bench", Nil, Map(
+        "SPARK_GRAFT_ONLY" -> name, "SPARK_GRAFT_CHILD" -> "1",
+        "SPARK_GRAFT_SF_DIR" -> sfDir), 600) { line =>
+        if (line.startsWith(s"CHILD_TIMING $name "))
+          t = scala.util.Try(line.stripPrefix(s"CHILD_TIMING $name ")
+            .trim.toDouble).toOption
+      }
+      if (exit.contains(0)) t else None
     } catch { case _: Exception => None }
 
-  /** Delete `spark-*`/`blockmgr-*` scratch under the shared tmpfs local
-    * dir that no live process owns (best-effort: anything older than
-    * 30 min — Spark deletes its own dirs on clean shutdown, so survivors
-    * are crash leftovers competing for tmpfs with this run).
+  /** Run `main` with `args` in a fresh JVM — same flags and classpath as
+    * this one (via RuntimeMXBean), `env` added to this environment —
+    * handing each line of its merged stdout/stderr to `onLine`. Returns
+    * the exit code, or None when the child outran `timeoutS` and was
+    * killed.
     */
-  private def sweepStaleLocalDirs(root: java.io.File): Unit = {
-    val cutoff = System.currentTimeMillis() - 30L * 60 * 1000
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.lastModified() < cutoff)
-      .foreach(f => scala.util.Try {
-        import scala.reflect.io.Directory
-        new Directory(f).deleteRecursively()
-      })
+  private[graft] def runIsolated(main: String, args: Seq[String],
+      env: Map[String, String], timeoutS: Long)(
+      onLine: String => Unit): Option[Int] = {
+    import scala.jdk.CollectionConverters._
+    val javaBin = new java.io.File(
+      new java.io.File(System.getProperty("java.home"), "bin"), "java")
+      .getAbsolutePath
+    val jvmArgs = java.lang.management.ManagementFactory
+      .getRuntimeMXBean.getInputArguments.asScala.toSeq
+    val cmd = Seq(javaBin) ++ jvmArgs ++
+      Seq("-cp", System.getProperty("java.class.path"), main) ++ args
+    val pb = new ProcessBuilder(cmd: _*)
+    env.foreach { case (k, v) => pb.environment().put(k, v) }
+    pb.redirectErrorStream(true)
+    val p = pb.start()
+    // drain stdout on its OWN thread: a hung child that keeps stdout
+    // open would otherwise block readLine forever and make the timed
+    // waitFor unreachable (the timeout would never fire)
+    val drainer = new Thread(() => {
+      val out = new java.io.BufferedReader(
+        new java.io.InputStreamReader(p.getInputStream))
+      try {
+        var line = out.readLine()
+        while (line != null) { onLine(line); line = out.readLine() }
+      } catch { case _: java.io.IOException => () }
+    }, s"drain-$main")
+    drainer.setDaemon(true)
+    drainer.start()
+    if (!p.waitFor(timeoutS, java.util.concurrent.TimeUnit.SECONDS)) {
+      p.destroyForcibly()
+      None
+    } else {
+      drainer.join(10000)
+      Some(p.exitValue())
+    }
   }
 
   /** Gates whose r04 in-suite cost exceeded ~2.5 s (stream/lifecycle/

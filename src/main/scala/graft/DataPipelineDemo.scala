@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.{DataOps, Dedup, TextAnalysis}
 
@@ -21,19 +21,16 @@ object DataPipelineDemo {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4, "ERROR")
 
     val docs = Tables.documents(spark, sfDir)
+    // each stage's rows are checkpointed: the funnel's self-joins
+    // otherwise grow one plan that the analyzer re-deduplicates at every
+    // count, until the DSIR stage exhausts a 4 GB heap
     def stage(name: String, df: DataFrame): DataFrame = {
-      println(f"$name%-28s ${df.count()}%6d docs")
-      df
+      val cut = df.localCheckpoint()
+      println(f"$name%-28s ${cut.count()}%6d docs")
+      cut
     }
     stage("raw corpus", docs)
 

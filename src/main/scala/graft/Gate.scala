@@ -19,25 +19,33 @@ object Gate {
     * path throttles to ~40 MB/s (direct I/O does 330), and staging
     * through /tmp puts that throttle inside the timed window.
     */
-  def tmpDir(prefix: String): String = {
-    val root = new java.io.File("/dev/shm/graft_gates")
-    if (new java.io.File("/dev/shm").isDirectory) {
-      // Namespace staging under this process's pid so a concurrent
-      // invocation (or one exceeding the sweep age) can never have a
-      // still-registered dir — bucketed table paths, stream checkpoints —
-      // deleted out from under it by another process's sweep.
-      val mine = new java.io.File(root, s"pid-${ProcessHandle.current().pid()}")
-      mine.mkdirs()
-      sweepDeadPidDirs(root, mine)
+  def tmpDir(prefix: String): String = pidDir("graft_gates") match {
+    case Some(mine) =>
       java.nio.file.Files.createTempDirectory(mine.toPath, prefix).toString
-    } else java.nio.file.Files.createTempDirectory(prefix).toString
+    case None => java.nio.file.Files.createTempDirectory(prefix).toString
   }
 
-  /** Best-effort GC of staging left by finished JVMs: only `pid-N` dirs
+  /** This JVM's `pid-N` namespace under `/dev/shm/<root>` (created here,
+    * and the namespaces of finished JVMs swept), or None without tmpfs.
+    * Namespacing by pid means a concurrent invocation can never have a
+    * live dir — bucketed table paths, stream checkpoints, shuffle
+    * scratch — deleted out from under it by another process's sweep.
+    */
+  private[graft] def pidDir(root: String): Option[java.io.File] =
+    Some(new java.io.File("/dev/shm")).filter(_.isDirectory).map { shm =>
+      val r = new java.io.File(shm, root)
+      val mine = new java.io.File(r, s"pid-${ProcessHandle.current().pid()}")
+      mine.mkdirs()
+      sweepDeadPidDirs(r, mine)
+      mine
+    }
+
+  /** Best-effort GC of scratch left by finished JVMs: only `pid-N` dirs
     * whose process is gone (or hour-stale unrecognized dirs from older
     * layouts) are swept — never the live run's own namespace.
     */
-  private def sweepDeadPidDirs(root: java.io.File, mine: java.io.File): Unit = {
+  private[graft] def sweepDeadPidDirs(root: java.io.File,
+      mine: java.io.File): Unit = {
     val cutoff = System.currentTimeMillis() - 3600L * 1000
     val PidDir = "pid-(\\d+)".r
     Option(root.listFiles()).getOrElse(Array.empty)
@@ -59,16 +67,8 @@ object Gate {
   private val memo =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** This process's staging namespace (where [[tmpDir]] allocates), if
-    * it exists yet.
-    */
-  private def stagingRoot: Option[java.io.File] = {
-    val mine = new java.io.File(
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_gates"
-      else System.getProperty("java.io.tmpdir"),
-      s"pid-${ProcessHandle.current().pid()}")
-    Option(mine).filter(_.isDirectory)
-  }
+  /** This process's staging namespace (where [[tmpDir]] allocates). */
+  private def stagingRoot: Option[java.io.File] = pidDir("graft_gates")
 
   /** Snapshot of the staging dirs that exist right now — take one
     * before running a gate, pass it to [[sweepNewStaging]] after.
@@ -159,6 +159,18 @@ object Gate {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None)    => s.conf.unset(k)
     }
+  }
+
+  /** The `SPARK_GRAFT_ONLY` rule of every harness main: a comma-separated
+    * token that exactly names a gate selects only that gate (so
+    * `q_takedown` does not also select `q_takedown_store`); any other
+    * token selects every gate whose name contains it. None selects all.
+    */
+  def select(only: Option[String]): String => Boolean = {
+    val tokens = only.map(_.split(",").toSeq)
+    val names = all.map(_.name).toSet
+    name => tokens.forall(_.exists(t =>
+      if (names(t)) name == t else name.contains(t)))
   }
 
   /** Registry assembled from the per-module gate lists. */

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import graft.billing.{Aggregates, BillingStore, Insights, Ledger}
 import graft.streaming.StreamingIngest
 
@@ -23,12 +22,7 @@ object PipelineDemo {
       s"${ts.take(4)},${ts.slice(5, 7).toInt},${ts.slice(8, 10).toInt}"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4, "ERROR")
 
     val in = Files.createTempDirectory("demo_in").toString
     val storeDir = Files.createTempDirectory("demo_store").toString

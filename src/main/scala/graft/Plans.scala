@@ -1,20 +1,10 @@
 package graft
-import org.apache.spark.sql.functions._
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions","32")
-      .config("spark.sql.adaptive.enabled","true")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong","true")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val d = "/root/testdata/sf0.1"
+    val spark = GraftSession.local(GraftSession.cpus, "ERROR")
     for (q <- args) {
       println(s"########## $q")
-      SparkEntry.queries(q)(spark, d).explain("formatted")
+      SparkEntry.queries(q)(spark, GraftSession.sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -1,45 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // typed aggregates (MinHash/SimHash) run via ObjectHashAggregate,
-      // whose default sort-fallback kicks in at 128 groups/partition —
-      // far below our per-doc signature groupBys
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4000000")
-      // events.parquet carries TIMESTAMP(NANOS); read as long + convert
-      // (see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill scratch on tmpfs when available (see Bench.scala)
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_local"
-        else System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=substr[,substr...] narrows the run for iteration.
-    // A token that EXACTLY names a gate matches only that gate (so
-    // q_takedown does not also select q_takedown_store); otherwise
-    // substring semantics.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val allNames = SparkEntry.queries.keySet
-    def tokenMatches(t: String, n: String): Boolean =
-      if (allNames.contains(t)) n == t else n.contains(t)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(t => tokenMatches(t, name)))
-    }
+    // SPARK_GRAFT_ONLY=substr[,substr...] narrows the run for iteration
+    val selects = Gate.select(sys.env.get("SPARK_GRAFT_ONLY"))
+    val selected = SparkEntry.queries.filter { case (name, _) => selects(name) }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -66,6 +66,32 @@ class GateRegistrySpec extends AnyFunSuite {
     }
   }
 
+  test("SPARK_GRAFT_ONLY: an exact gate name selects only that gate, " +
+    "any other token selects by substring") {
+    val names = Gate.all.map(_.name)
+    def sel(only: String) = names.filter(Gate.select(Some(only)))
+    assert(sel("q_paragraph_dedup") == Seq("q_paragraph_dedup"))
+    assert(Set("q_paragraph_dedup", "q_paragraph_dedup_inc")
+      .subsetOf(sel("paragraph").toSet))
+    assert(sel("paragraph").forall(_.contains("paragraph")))
+    assert(sel("q_takedown,q_daily_rollup").toSet ==
+      Set("q_takedown", "q_daily_rollup"))
+    assert(names.filter(Gate.select(None)) == names)
+  }
+
+  test("every scale-probe name is a live gate, and warmBig is part of the " +
+    "data probe set") {
+    val names = Gate.all.map(_.name).toSet
+    Seq("data" -> ScaleProbe.dataProbe, "cores" -> ScaleProbe.coresProbe,
+      "warmBig" -> ScaleProbe.warmBig.toSeq).foreach { case (set, probe) =>
+      val dead = probe.filterNot(names)
+      assert(dead.isEmpty, s"$set probe entries with no gate: $dead")
+      assert(probe.distinct.size == probe.size, s"$set probe repeats a name")
+    }
+    val stray = ScaleProbe.warmBig.filterNot(ScaleProbe.dataProbe.toSet)
+    assert(stray.isEmpty, s"warmBig entries outside the data probe: $stray")
+  }
+
   test("SparkEntry exposes exactly the gate registry") {
     assert(SparkEntry.queries.keySet == Gate.all.map(_.name).toSet)
     assert(SparkEntry.oracleSql.keySet ==
