@@ -1,7 +1,8 @@
 package graft.billing
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet-backed storage for the billing data model — the Spark mapping of
   * the reference's six DuckDB tables (SURVEY §1.4, §2.1 S9-S13):
@@ -14,18 +15,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * those partitions back (the reference's UNIQUE key can only collide
   * within a day, because `timestamp` is part of the key).
   *
+  * One table core: the store's seven tables (the fact table, the ledger,
+  * the daily partials and the four rollups) are each a [[Table]], and
+  * every read and commit goes through it. A read pins the newest
+  * [[RawManifest]] version (or a given one); an empty manifest reads as
+  * an empty relation with the table's schema. A write lands as new files
+  * next to the old ones and one `op`-tagged manifest commit publishes it:
+  * an append adds exactly the files it wrote, a replace also retires the
+  * prior files of the day partitions (or the whole table) it rewrote.
+  * The `_store` version vector is one more such manifest.
+  *
   * Concurrency: every mutator serializes on the store's [[TableLock]] —
   * without it, an append racing `compactRaw`'s partition swap can have
-  * its freshly-written file lost. Readers take no lock: each mutator
-  * commit publishes a [[RawManifest]] version (atomic rename of the
-  * fact table's file list), [[raw]] pins the newest manifest instead of
-  * listing directories, and replaced files stay on disk until
-  * [[gcRaw]] finds them unreferenced by the latest `retainVersions`
-  * manifests — so a scan started just before a compaction or CDC merge
-  * still reads a consistent snapshot. Proven by
+  * its freshly-written file lost. Readers take no lock: a reader pins a
+  * manifest instead of listing directories, and replaced files stay on
+  * disk until the table's `gc` finds them unreferenced by the newest
+  * `retainVersions` manifests — so a scan started just before a
+  * compaction or CDC merge still reads a consistent snapshot. Proven by
   * BillingStoreConcurrencySpec: interleaved appends and compactions
   * lose zero rows, and a reader scanning THROUGH the interleaving only
   * ever observes consistent post-commit row counts.
+  *
+  * Retention: versions listed = versions readable. `gc` keeps the newest
+  * `retainVersions` manifests with every file they name and prunes the
+  * rest of the history, so every version [[rawVersions]] lists can be
+  * read, and an older one throws `NoSuchElementException`.
   *
   * Manifest metadata cost is O(touched-partition files + manifest
   * length) per commit — driver-side, never a data scan. A pre-manifest
@@ -38,6 +52,221 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
   val dailyPartialsPath = s"$root/daily_partials"
   def aggPath(name: String) = s"$root/${name}_aggs"
 
+  private[billing] type Day = (Int, Int, Int)
+
+  private val dayCols = Seq("year", "month", "day")
+
+  /** One manifested table under `root/key`. `schemaOf` gives its rows as
+    * written; reads put the partition columns last and make every column
+    * nullable, as Spark's parquet source does. `stats` marks the fact
+    * table, whose commits carry a [[FileStats]] sidecar and whose reads
+    * go through [[ManifestFileIndex]].
+    */
+  private[billing] final class Table(val key: String, partitioned: Boolean,
+      stats: Boolean = false)(schemaOf: SparkSession => StructType) {
+    val path = s"$root/$key"
+
+    def fs(spark: SparkSession): FileSystem =
+      new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+
+    def latest(spark: SparkSession): Option[(Long, Seq[String])] =
+      RawManifest.latest(fs(spark), path)
+
+    def versions(spark: SparkSession): Seq[Long] =
+      RawManifest.versions(fs(spark), path)
+
+    /** The files of a retained version; throws for one gc pruned. */
+    def filesAt(spark: SparkSession, version: Long): Seq[String] =
+      RawManifest.filesAt(fs(spark), path, version).getOrElse(
+        throw new java.util.NoSuchElementException(
+          s"manifest v$version of $key not retained (have: " +
+            s"${versions(spark).mkString(",")})"))
+
+    private def schema(spark: SparkSession): StructType = {
+      val (parts, data) = schemaOf(spark).fields
+        .partition(f => partitioned && dayCols.contains(f.name))
+      StructType((data ++ parts).map(_.copy(nullable = true)))
+    }
+
+    private def empty(spark: SparkSession): DataFrame =
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema(spark))
+
+    /** The table at `version`, or at its newest manifest. With no
+      * manifest at all it is read by directory listing.
+      */
+    def read(spark: SparkSession, version: Option[Long] = None): DataFrame =
+      version.map(v => v -> filesAt(spark, v)).orElse(latest(spark)) match {
+        case Some((v, files)) => scan(spark, v, files)
+        case None if exists(spark, path) =>
+          spark.read.schema(schema(spark)).parquet(path)
+        case None => empty(spark)
+      }
+
+    /** A relation over `files` of manifest `version`. */
+    def scan(spark: SparkSession, version: Long,
+        files: Seq[String]): DataFrame =
+      if (files.isEmpty) empty(spark)
+      else if (stats) manifestRead(spark, version, files)
+      else spark.read.schema(schema(spark)).option("basePath", path)
+        .parquet(files.map(f => s"$path/$f"): _*)
+
+    /** Current file set: newest manifest, else (pre-manifest table) the
+      * on-disk listing. Callers hold the writer lock.
+      */
+    def current(spark: SparkSession): Set[String] =
+      latest(spark).map(_._2.toSet).getOrElse(listRel(fs(spark), "").toSet)
+
+    /** Relative data-file paths under `sub` (or the whole table when
+      * `sub` is empty), hidden files/dirs excluded.
+      */
+    private def listRel(fs: FileSystem, sub: String): Seq[String] = {
+      val base = if (sub.isEmpty) new Path(path) else new Path(path, sub)
+      if (!fs.exists(base)) Seq.empty
+      else {
+        val rootUri = new Path(path).toUri.getPath
+        val out = scala.collection.mutable.ArrayBuffer.empty[String]
+        val it = fs.listFiles(base, true)
+        while (it.hasNext) {
+          val rel = it.next().getPath.toUri.getPath.stripPrefix(rootUri)
+            .stripPrefix("/")
+          if (!rel.split("/").exists(isHidden)) out += rel
+        }
+        out.toSeq
+      }
+    }
+
+    /** Commit `files` as the next version, tagged `op`. The fact table's
+      * stats sidecar rides along: stats of files in the previous sidecar
+      * are carried forward, and only new files are scanned (one
+      * column-pruned job). Caller holds the writer lock.
+      */
+    def publish(spark: SparkSession, files: Set[String], op: String): Unit = {
+      val fs = this.fs(spark)
+      val sidecar = Option.when(stats) {
+        val prev = FileStats.readLatest(fs, path)
+        val fresh = FileStats.compute(spark, path,
+          files.toSeq.filterNot(prev.contains))
+        FileStats.fillSizes(fs, path, files.iterator.map(f =>
+          f -> prev.get(f).orElse(fresh.get(f))
+            .getOrElse(FileStats.FileStat(None, None))).toMap)
+      }
+      val v = RawManifest.commit(fs, path, files.toSeq, op)
+      sidecar.foreach(FileStats.write(fs, path, v, _))
+    }
+
+    /** Publish `files` as the whole next version, then reclaim what no
+      * retained version references any more.
+      */
+    def replaceWith(spark: SparkSession, files: Set[String],
+        op: String): Unit = {
+      publish(spark, files, op)
+      gc(spark, retainVersions)
+      spark.catalog.refreshByPath(path)
+    }
+
+    /** Append `out`: the next version is the current one plus exactly the
+      * files this write created in the `days` partitions (none written,
+      * nothing published). Appends drop no file, so no gc.
+      */
+    def append(spark: SparkSession, days: Seq[Day], op: String)(
+        out: DataFrame): Unit = {
+      val added = write(spark, days.map(dayDir), out)._2
+      if (added.nonEmpty) publish(spark, current(spark) ++ added, op)
+    }
+
+    /** Day-scoped replace: write `out` next to the old files, then swap
+      * exactly the `days` partitions' files for the written ones in one
+      * commit — a reader mid-swap keeps its pinned snapshot.
+      */
+    def replaceDays(spark: SparkSession, days: Seq[Day], op: String)(
+        out: DataFrame): Unit = {
+      val (before, added) = write(spark, days.map(dayDir), out)
+      replaceWith(spark, current(spark) -- before ++ added, op)
+    }
+
+    /** Whole-table replace: the write's files become the entire next
+      * version (full-refresh semantics).
+      */
+    def replaceAll(spark: SparkSession, op: String)(out: DataFrame): Unit =
+      replaceWith(spark, write(spark, Seq(""), out)._2, op)
+
+    /** Append-write `out` and return the on-disk files under `dirs` from
+      * before the write and those it added. Disk, not manifest: retention
+      * keeps RETIRED files on disk, and a commit that re-listed
+      * directories wholesale would resurrect them into the manifest
+      * (doubled rows; caught by the concurrency spec).
+      */
+    private def write(spark: SparkSession, dirs: Seq[String],
+        out: DataFrame): (Set[String], Set[String]) = {
+      val fs = this.fs(spark)
+      def under = dirs.flatMap(listRel(fs, _)).toSet
+      val before = under
+      val w = out.write.mode("append")
+      (if (partitioned) w.partitionBy(dayCols: _*) else w).parquet(path)
+      (before, under -- before)
+    }
+
+    /** Physically delete data files no manifest in the newest `retain`
+      * versions references, drop emptied partition directories, and prune
+      * manifest history to exactly those versions (their stats sidecars
+      * go with them) — so every listed version stays readable. Returns
+      * the number of files reclaimed. Caller holds the writer lock.
+      */
+    def gc(spark: SparkSession, retain: Int): Long = {
+      val fs = this.fs(spark)
+      if (latest(spark).isEmpty) 0L
+      else {
+        val refs = RawManifest.referenced(fs, path, retain)
+        val doomed = listRel(fs, "").filterNot(refs)
+        doomed.foreach(f => fs.delete(new Path(s"$path/$f"), false))
+        dropEmptyPartitionDirs(fs, new Path(path))
+        RawManifest.pruneHistory(fs, path, keep = retain)
+        if (doomed.nonEmpty) spark.catalog.refreshByPath(path)
+        doomed.length.toLong
+      }
+    }
+  }
+
+  private def emptyBilling(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Schemas.billing)
+
+  private[billing] val rawTable =
+    new Table("raw_billing", partitioned = true, stats = true)(
+      _ => Schemas.billing)
+  private[billing] val ledgerTable =
+    new Table("processed_files", partitioned = false)(
+      _ => Schemas.processedFiles)
+  private[billing] val partialsTable =
+    new Table("daily_partials", partitioned = true)(
+      s => Aggregates.dailyPartial(emptyBilling(s)).schema)
+
+  /** The four rollups in rebuild order, each with its query over raw;
+    * daily_aggs is day-partitioned so refreshDailyForDays can swap single
+    * partitions (and day-window reads prune).
+    */
+  private val rollups: Seq[(Table, DataFrame => DataFrame)] =
+    Seq[(String, DataFrame => DataFrame)]("daily" -> Aggregates.daily,
+      "user" -> Aggregates.user, "service" -> Aggregates.service,
+      "region" -> Aggregates.region).map { case (n, q) =>
+      new Table(s"${n}_aggs", partitioned = n == "daily")(
+        s => q(emptyBilling(s)).schema) -> q
+    }
+
+  private[billing] def aggTable(name: String): Table =
+    rollups.map(_._1).find(_.key == s"${name}_aggs").getOrElse(
+      throw new java.util.NoSuchElementException(s"no rollup $name"))
+
+  /** Every data table, in `_store` vector order. */
+  private[billing] val tables: Seq[Table] =
+    Seq(rawTable, ledgerTable, partialsTable) ++ rollups.map(_._1)
+
+  /** The store-level version vector: one `key=version` line per table,
+    * committed and pruned by the same core as the data tables (its lines
+    * name versions, not files, so its `gc` reclaims nothing on disk).
+    */
+  private val storeVector =
+    new Table("_store", partitioned = false)(_ => StructType(Nil))
+
   private def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
@@ -49,18 +278,7 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
     * later commits land — consistent up to `retainVersions` subsequent
     * commits (then GC may reclaim its files).
     */
-  def raw(spark: SparkSession): DataFrame = {
-    val fs = rawFs(spark)
-    RawManifest.latest(fs, rawPath) match {
-      case Some((v, files)) if files.nonEmpty =>
-        manifestRead(spark, v, files)
-      case Some(_) => emptyBilling(spark)
-      case None =>
-        if (exists(spark, rawPath))
-          spark.read.schema(Schemas.billing).parquet(rawPath)
-        else emptyBilling(spark)
-    }
-  }
+  def raw(spark: SparkSession): DataFrame = rawTable.read(spark)
 
   /** Relation over one manifest snapshot through [[ManifestFileIndex]]:
     * the file list is the manifest's, and Catalyst's own pushed filters
@@ -72,10 +290,8 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
       files: Seq[String]): DataFrame = {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val fs = rawFs(spark)
-    val stats = FileStats.read(fs, rawPath, version)
-    val partSchema = org.apache.spark.sql.types.StructType(
-      Schemas.billing.fields.takeRight(3)) // year, month, day
+    val stats = FileStats.read(rawTable.fs(spark), rawPath, version)
+    val partSchema = StructType(Schemas.billing.fields.takeRight(3))
     val index = new ManifestFileIndex(spark, new Path(rawPath), files,
       stats, partSchema)
     val rel = HadoopFsRelation(index, partSchema,
@@ -85,26 +301,18 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
   }
 
   /** Retained manifest versions (oldest first) — the store's queryable
-    * history window. Bounded by GC's `retain` and history pruning.
+    * history window: every one of them is readable through [[rawAt]].
     */
-  def rawVersions(spark: SparkSession): Seq[Long] =
-    RawManifest.versions(rawFs(spark), rawPath)
+  def rawVersions(spark: SparkSession): Seq[Long] = rawTable.versions(spark)
 
   /** Time travel: the fact table AS OF a retained manifest version —
     * the same query-an-old-snapshot contract Delta/Iceberg expose,
     * bounded here by the retention depth instead of a wall-clock
-    * window. Throws for a version GC/pruning already dropped; a caller
-    * wanting deeper history raises `retainVersions`.
+    * window. Throws for a version GC already pruned; a caller wanting
+    * deeper history raises `retainVersions`.
     */
-  def rawAt(spark: SparkSession, version: Long): DataFrame = {
-    val fs = rawFs(spark)
-    val files = RawManifest.filesAt(fs, rawPath, version).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"manifest v$version not retained (have: " +
-          s"${RawManifest.versions(fs, rawPath).mkString(",")})"))
-    if (files.isEmpty) emptyBilling(spark)
-    else manifestRead(spark, version, files)
-  }
+  def rawAt(spark: SparkSession, version: Long): DataFrame =
+    rawTable.read(spark, Some(version))
 
   /** Event-time range read `[lo, hi)` with file-level data skipping:
     * the newest manifest's files are pruned by the [[FileStats]]
@@ -134,23 +342,30 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
   private[graft] def filesForRange(spark: SparkSession,
       lo: java.time.Instant, hi: java.time.Instant):
       Option[(Seq[String], Int)] = {
-    val fs = rawFs(spark)
-    RawManifest.latest(fs, rawPath).map { case (v, files) =>
-      val stats = FileStats.read(fs, rawPath, v)
-      val loU = micros(lo)
-      val hiU = micros(hi)
-      val kept = files.filter { f =>
-        stats.get(f) match {
-          case Some(st) => st.ts match {
-            case Some((mn, mx)) => mx >= loU && mn < hiU
-            case None           => false // all-null ts: range-unmatchable
-          }
-          case None => true // no stats: conservative keep
-        }
-      }
-      (kept, files.size)
-    }
+    val (loU, hiU) = (micros(lo), micros(hi))
+    filesKept(spark)(_.forall(_.ts match {
+      case Some((mn, mx)) => mx >= loU && mn < hiU
+      case None           => false // all-null ts: range-unmatchable
+    }))
   }
+
+  /** (files kept for a `user_id` probe, manifest file count) — None for
+    * a pre-manifest store. Exposed for specs/gates to pin the pruning;
+    * readers use [[rawForUser]].
+    */
+  private[graft] def filesForUser(spark: SparkSession,
+      userId: String): Option[(Seq[String], Int)] =
+    filesKept(spark)(_.forall(_.mayContain(userId)))
+
+  /** The newest snapshot's files whose stats `keep` (a file without
+    * stats gets None), with the snapshot's file count.
+    */
+  private def filesKept(spark: SparkSession)(
+      keep: Option[FileStats.FileStat] => Boolean): Option[(Seq[String], Int)] =
+    rawTable.latest(spark).map { case (v, files) =>
+      val stats = FileStats.read(rawTable.fs(spark), rawPath, v)
+      (files.filter(f => keep(stats.get(f))), files.size)
+    }
 
   /** Point-lookup read `user_id = userId` with bloom file skipping: the
     * newest manifest's files are pruned by the [[FileStats]] bloom
@@ -165,21 +380,6 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
     import org.apache.spark.sql.functions.{col, lit}
     // a plain filter: the index's bloom probe does the skipping
     raw(spark).filter(col("user_id") === lit(userId))
-  }
-
-  /** (files kept for a `user_id` probe, manifest file count) — None for
-    * a pre-manifest store. Exposed for specs/gates to pin the pruning;
-    * readers use [[rawForUser]].
-    */
-  private[graft] def filesForUser(spark: SparkSession,
-      userId: String): Option[(Seq[String], Int)] = {
-    val fs = rawFs(spark)
-    RawManifest.latest(fs, rawPath).map { case (v, files) =>
-      val stats = FileStats.read(fs, rawPath, v)
-      val kept = files.filter(f =>
-        stats.get(f).forall(_.mayContain(userId)))
-      (kept, files.size)
-    }
   }
 
   private def micros(i: java.time.Instant): Long =
@@ -201,58 +401,31 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
     * for deeper consumers, exactly as with [[rawAt]]).
     */
   def rawChanges(spark: SparkSession, sinceVersion: Long): DataFrame = {
-    val fs = rawFs(spark)
-    val (latest, files) = RawManifest.latest(fs, rawPath).getOrElse(
+    val (latest, files) = rawTable.latest(spark).getOrElse(
       throw new java.util.NoSuchElementException(
         "no manifest committed yet"))
-    val base = RawManifest.filesAt(fs, rawPath, sinceVersion).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"manifest v$sinceVersion not retained (have: " +
-          s"${RawManifest.versions(fs, rawPath).mkString(",")})"))
-    val added = files.filterNot(base.toSet)
-    if (added.isEmpty) emptyBilling(spark)
-    else manifestRead(spark, latest, added)
+    val base = rawTable.filesAt(spark, sinceVersion).toSet
+    rawTable.scan(spark, latest, files.filterNot(base))
   }
-
-  private def emptyBilling(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.billing)
 
   // ---- cross-table consistent snapshots --------------------------------
 
-  private def storeMetaRoot = s"$root/_store"
-
-  /** Store-manifest line key → table path, for every table the store
-    * serves.
-    */
-  private def tablePaths: Seq[(String, String)] = Seq(
-    "raw_billing" -> rawPath,
-    "processed_files" -> ledgerPath,
-    "daily_partials" -> dailyPartialsPath) ++
-    Seq("daily", "user", "service", "region").map(n =>
-      s"${n}_aggs" -> aggPath(n))
-
-  /** Publish the store-level version vector — one `name=version` line
+  /** Publish the store-level version vector — one `key=version` line
     * per manifested table, committed (as its own [[RawManifest]] under
-    * `_store/`) AFTER a mutator's per-table commits, under the writer
-    * lock. [[snapshot]] pins every table at one such vector, giving
-    * readers cross-TABLE consistency on top of the per-table snapshot
-    * isolation: the reference gets this for free from its single
-    * embedded DuckDB file; a multi-table parquet store has to commit
-    * it. No-op when the vector is unchanged.
+    * `_store/`, tagged with the mutator's `op`) AFTER a mutator's
+    * per-table commits, under the writer lock. [[snapshot]] pins every
+    * table at one such vector, giving readers cross-TABLE consistency on
+    * top of the per-table snapshot isolation: the reference gets this
+    * for free from its single embedded DuckDB file; a multi-table
+    * parquet store has to commit it. No-op when the vector is unchanged.
     */
-  private def commitStoreVersion(spark: SparkSession): Unit = {
-    val lines = tablePaths.flatMap { case (name, path) =>
-      RawManifest.latest(tableFs(spark, path), path)
-        .map { case (v, _) => s"$name=$v" }
-    }
-    if (lines.nonEmpty) {
-      val fs = tableFs(spark, storeMetaRoot)
-      val current = RawManifest.latest(fs, storeMetaRoot).map(_._2.toSet)
-      if (!current.contains(lines.toSet)) {
-        RawManifest.commit(fs, storeMetaRoot, lines)
-        RawManifest.pruneHistory(fs, storeMetaRoot, keep = 8)
-      }
+  private def commitStoreVersion(spark: SparkSession, op: String): Unit = {
+    val lines = tables.flatMap(t =>
+      t.latest(spark).map { case (v, _) => s"${t.key}=$v" }).toSet
+    if (lines.nonEmpty &&
+        !storeVector.latest(spark).map(_._2.toSet).contains(lines)) {
+      storeVector.publish(spark, lines, op)
+      storeVector.gc(spark, retainVersions)
     }
   }
 
@@ -264,78 +437,19 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
     * commits (raise it for long-running consumers). A pre-snapshot
     * store (no vector committed yet) falls back to live reads.
     */
-  def snapshot(spark: SparkSession): StoreSnapshot = {
-    val fs = tableFs(spark, storeMetaRoot)
-    val vec = RawManifest.latest(fs, storeMetaRoot)
-      .map(_._2).getOrElse(Seq.empty)
+  def snapshot(spark: SparkSession): StoreSnapshot =
+    StoreSnapshot(this, storeVector.latest(spark).map(_._2).getOrElse(Nil)
       .flatMap { line =>
         line.split("=") match {
           case Array(n, v) => Some(n -> v.toLong)
           case _           => None
         }
-      }.toMap
-    StoreSnapshot(this, vec)
-  }
-
-  /** Pinned read of a non-fact table at one manifest version (the fact
-    * table goes through [[rawAt]] for stats-aware reads).
-    */
-  private[billing] def readManifestedAt(spark: SparkSession,
-      table: String, version: Long): DataFrame = {
-    val fs = tableFs(spark, table)
-    val files = RawManifest.filesAt(fs, table, version).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"manifest v$version of $table not retained"))
-    if (files.isEmpty) spark.read.parquet(table).limit(0)
-    else spark.read.option("basePath", table)
-      .parquet(files.map(f => s"$table/$f"): _*)
-  }
-
-  private def rawFs(spark: SparkSession) = tableFs(spark, rawPath)
-
-  private def tableFs(spark: SparkSession, table: String) =
-    new Path(table).getFileSystem(spark.sessionState.newHadoopConf())
+      }.toMap)
 
   private def isHidden(name: String): Boolean =
     name.startsWith("_") || name.startsWith(".")
 
-  /** Relative data-file paths under `sub` (or the whole table when
-    * `sub` is empty), hidden files/dirs excluded.
-    */
-  private def listRel(fs: org.apache.hadoop.fs.FileSystem,
-      sub: String): Seq[String] = listRelIn(fs, rawPath, sub)
-
-  private def listRelIn(fs: org.apache.hadoop.fs.FileSystem,
-      table: String, sub: String): Seq[String] = {
-    val base = if (sub.isEmpty) new Path(table) else new Path(table, sub)
-    if (!fs.exists(base)) Seq.empty
-    else {
-      val rootUri = new Path(table).toUri.getPath
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(base, true)
-      while (it.hasNext) {
-        val st = it.next()
-        val rel = st.getPath.toUri.getPath.stripPrefix(rootUri)
-          .stripPrefix("/")
-        if (!rel.split("/").exists(isHidden)) out += rel
-      }
-      out.toSeq
-    }
-  }
-
-  /** Current file set: newest manifest, else (pre-manifest store) the
-    * on-disk listing. Callers hold the writer lock.
-    */
-  private def currentFiles(
-      fs: org.apache.hadoop.fs.FileSystem): Set[String] =
-    currentFilesIn(fs, rawPath)
-
-  private def currentFilesIn(fs: org.apache.hadoop.fs.FileSystem,
-      table: String): Set[String] =
-    RawManifest.latest(fs, table).map(_._2.toSet)
-      .getOrElse(listRelIn(fs, table, "").toSet)
-
-  private def dayDir(y: Int, m: Int, d: Int) = s"year=$y/month=$m/day=$d"
+  private def dayDir(day: Day) = s"year=${day._1}/month=${day._2}/day=${day._3}"
 
   private val dayDirRe = "^year=(\\d+)/month=(\\d+)/day=(\\d+)/".r
 
@@ -343,39 +457,40 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
     * the partition layout names every file's day, so partition-level
     * bookkeeping (file counts, partition lists) reads zero data.
     */
-  private def dayOf(rel: String): Option[(Int, Int, Int)] =
+  private def dayOf(rel: String): Option[Day] =
     dayDirRe.findFirstMatchIn(rel).map(m =>
       (m.group(1).toInt, m.group(2).toInt, m.group(3).toInt))
 
-  /** Physically delete data files no manifest in the newest `retain`
-    * versions references, then drop emptied partition directories and
-    * prune manifest history. Returns the number of files reclaimed.
-    * Runs automatically after every file-dropping commit; tests call it
-    * with `retain = 1` to assert immediate disk state.
+  /** `frame`'s distinct (year, month, day) tuples — bounded driver-side
+    * metadata, reused for the prune and the commit's touched-partition
+    * listing — with `table`'s stored rows of those days.
     */
-  def gcRaw(spark: SparkSession, retain: Int = retainVersions): Long =
-    gcTable(spark, rawPath, retain)
-
-  private def gcTable(spark: SparkSession, table: String,
-      retain: Int): Long = TableLock.withLock(spark, root) {
-    val fs = tableFs(spark, table)
-    if (RawManifest.latest(fs, table).isEmpty) 0L
-    else {
-      val refs = RawManifest.referenced(fs, table, retain)
-      val doomed = listRelIn(fs, table, "").filterNot(refs)
-      doomed.foreach(f => fs.delete(new Path(s"$table/$f"), false))
-      dropEmptyPartitionDirs(fs, new Path(table))
-      RawManifest.pruneHistory(fs, table, keep = math.max(retain, 8))
-      if (doomed.nonEmpty) spark.catalog.refreshByPath(table)
-      doomed.length.toLong
-    }
+  private def touched(spark: SparkSession, frame: DataFrame,
+      table: Table): (Seq[Day], DataFrame) = {
+    val days = frame.select(dayCols.map(frame.col): _*).distinct()
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq
+    (days, storedOn(spark, table, days))
   }
+
+  /** `table`'s stored rows of `dayTuples`: the table read joined with
+    * the broadcast day list, so at 100 TB a merge probes days, not the
+    * whole history. A table with no directory yet is returned unjoined:
+    * it has no rows to prune.
+    */
+  private def storedOn(spark: SparkSession, table: Table,
+      dayTuples: Seq[Day]): DataFrame =
+    if (!exists(spark, table.path)) table.read(spark)
+    else {
+      import spark.implicits._
+      val days = dayTuples.toDF(dayCols: _*)
+      table.read(spark).join(org.apache.spark.sql.functions.broadcast(days),
+        dayCols)
+    }
 
   /** Remove partition directories left with no visible content (depth-
     * first); the table root and hidden dirs (`_raw_manifest`) survive.
     */
-  private def dropEmptyPartitionDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path): Unit = {
+  private def dropEmptyPartitionDirs(fs: FileSystem, root: Path): Unit = {
     def sweep(p: Path, isRoot: Boolean): Boolean = {
       val kids = fs.listStatus(p)
       val visible = kids.filterNot(k => isHidden(k.getPath.getName))
@@ -390,21 +505,15 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
     if (fs.exists(root)) { sweep(root, isRoot = true); () }
   }
 
-  def ledger(spark: SparkSession): DataFrame = {
-    val fs = tableFs(spark, ledgerPath)
-    RawManifest.latest(fs, ledgerPath) match {
-      case Some((_, files)) if files.nonEmpty =>
-        spark.read.schema(Schemas.processedFiles)
-          .option("basePath", ledgerPath)
-          .parquet(files.map(f => s"$ledgerPath/$f"): _*)
-      case _ =>
-        if (exists(spark, ledgerPath))
-          spark.read.schema(Schemas.processedFiles).parquet(ledgerPath)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          Schemas.processedFiles)
-    }
-  }
+  /** The fact table's `gc` under the writer lock: returns the number of
+    * files reclaimed. Runs automatically after every file-dropping
+    * commit; tests call it with `retain = 1` to assert immediate disk
+    * state.
+    */
+  def gcRaw(spark: SparkSession, retain: Int = retainVersions): Long =
+    TableLock.withLock(spark, root) { rawTable.gc(spark, retain) }
+
+  def ledger(spark: SparkSession): DataFrame = ledgerTable.read(spark)
 
   /** J1 + S9: idempotent append — only rows whose natural key is absent.
     * The existing side is pruned to the staged batch's (year,month,day)
@@ -414,99 +523,17 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
   def appendDedup(spark: SparkSession, staged: DataFrame): Long =
       TableLock.withLock(spark, root) {
     val batch = Ingest.dedupWithinBatch(staged)
-    // bounded driver-side metadata: the distinct (year,month,day) tuples
-    // of ONE batch — reused for the anti-join prune and the manifest
-    // commit's touched-partition listing
-    val dayTuples = batch.select("year", "month", "day").distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq
-    val existing =
-      if (exists(spark, rawPath)) {
-        import spark.implicits._
-        val days = dayTuples.toDF("year", "month", "day")
-        raw(spark).join(
-          org.apache.spark.sql.functions.broadcast(days),
-          Seq("year", "month", "day"))
-      } else raw(spark)
-    val beforeTouched = snapshotTouched(rawFs(spark), dayTuples)
+    val (days, existing) = touched(spark, batch, rawTable)
     // Observation fuses the returned row count into the write action —
     // one pass over the anti-join instead of a count() materialization
     // followed by a second (cached) pass for the write.
     val obs = org.apache.spark.sql.Observation()
-    Ingest.newRows(batch, existing)
+    rawTable.append(spark, days, "append")(Ingest.newRows(batch, existing)
       .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-      .write.mode("append")
-      .partitionBy("year", "month", "day").parquet(rawPath)
+        org.apache.spark.sql.functions.lit(1)).as("n")))
     val n = obs.get("n").asInstanceOf[Long]
-    if (n > 0) commitAppend(spark, dayTuples, beforeTouched)
-    commitStoreVersion(spark)
+    commitStoreVersion(spark, "append")
     n
-  }
-
-  /** Pre-write snapshot of the touched partitions' on-disk files: the
-    * baseline both commit flavors diff against. Disk, not manifest —
-    * retention keeps RETIRED files on disk, and a commit that re-listed
-    * directories wholesale would resurrect them into the manifest
-    * (doubled rows; caught by the concurrency spec).
-    */
-  private def snapshotTouched(fs: org.apache.hadoop.fs.FileSystem,
-      days: Seq[(Int, Int, Int)]): Set[String] =
-    snapshotTouchedIn(fs, rawPath, days)
-
-  private def snapshotTouchedIn(fs: org.apache.hadoop.fs.FileSystem,
-      table: String, days: Seq[(Int, Int, Int)]): Set[String] =
-    days.flatMap { case (y, m, d) =>
-      listRelIn(fs, table, dayDir(y, m, d)) }.toSet
-
-  /** Publish an append commit: previous manifest (or pre-manifest disk
-    * listing) plus ONLY the files this write created. Appends never
-    * drop files, so no GC is needed.
-    */
-  private def commitAppend(spark: SparkSession, days: Seq[(Int, Int, Int)],
-      beforeTouched: Set[String]): Unit = {
-    val fs = rawFs(spark)
-    val newFiles = snapshotTouched(fs, days) -- beforeTouched
-    commitRawVersion(spark, fs, currentFiles(fs) ++ newFiles)
-  }
-
-  /** Commit a fact-table manifest version together with its per-file
-    * timestamp-stats sidecar: stats for files already in the previous
-    * sidecar are carried forward, only genuinely new files are scanned
-    * (one column-pruned job over the batch). Caller holds the writer
-    * lock.
-    */
-  private def commitRawVersion(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, files: Set[String]): Unit = {
-    val prev = FileStats.readLatest(fs, rawPath)
-    val fresh = FileStats.compute(spark, rawPath,
-      files.toSeq.filterNot(prev.contains))
-    val merged = files.iterator.map(f =>
-      f -> prev.get(f).orElse(fresh.get(f))
-        .getOrElse(FileStats.FileStat(None, None))).toMap
-    val v = RawManifest.commit(fs, rawPath, files.toSeq)
-    FileStats.write(fs, rawPath, v,
-      FileStats.fillSizes(fs, rawPath, merged))
-  }
-
-  /** Publish a replacing commit: `beforeTouched` (the touched
-    * partitions' pre-write files) leave the manifest, the write's new
-    * files enter it, and files no retained manifest references any more
-    * are reclaimed.
-    */
-  private def commitReplace(spark: SparkSession,
-      days: Seq[(Int, Int, Int)], beforeTouched: Set[String]): Unit =
-    commitReplaceIn(spark, rawPath, days, beforeTouched)
-
-  private def commitReplaceIn(spark: SparkSession, table: String,
-      days: Seq[(Int, Int, Int)], beforeTouched: Set[String]): Unit = {
-    val fs = tableFs(spark, table)
-    val afterTouched = snapshotTouchedIn(fs, table, days)
-    val next = (currentFilesIn(fs, table) -- beforeTouched) ++
-      (afterTouched -- beforeTouched)
-    if (table == rawPath) commitRawVersion(spark, fs, next)
-    else RawManifest.commit(fs, table, next.toSeq)
-    gcTable(spark, table, retainVersions)
-    spark.catalog.refreshByPath(table)
   }
 
   /** S10: full-recompute rollups with DELETE+INSERT semantics exactly
@@ -520,59 +547,22 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
   def rebuildAggregates(spark: SparkSession): Unit =
       TableLock.withLock(spark, root) {
     val r = raw(spark).cache()
-    try {
-      // daily_aggs is day-partitioned so refreshDailyForDays can later
-      // swap single partitions (and day-window reads prune)
-      replaceWholeTable(spark, aggPath("daily"), Aggregates.daily(r),
-        partitioned = true)
-      replaceWholeTable(spark, aggPath("user"), Aggregates.user(r),
-        partitioned = false)
-      replaceWholeTable(spark, aggPath("service"), Aggregates.service(r),
-        partitioned = false)
-      replaceWholeTable(spark, aggPath("region"), Aggregates.region(r),
-        partitioned = false)
-    } finally { r.unpersist(); () }
-    commitStoreVersion(spark)
-  }
-
-  /** Whole-table swap via manifest: the write's new files become the
-    * ENTIRE next manifest (full-refresh semantics), prior files are
-    * retired and reclaimed past the retention window.
-    */
-  private def replaceWholeTable(spark: SparkSession, table: String,
-      out: DataFrame, partitioned: Boolean): Unit = {
-    val fs = tableFs(spark, table)
-    val beforeDisk = listRelIn(fs, table, "").toSet
-    val w = out.write.mode("append")
-    (if (partitioned) w.partitionBy("year", "month", "day") else w)
-      .parquet(table)
-    val newFiles = listRelIn(fs, table, "").toSet -- beforeDisk
-    RawManifest.commit(fs, table, newFiles.toSeq)
-    gcTable(spark, table, retainVersions)
-    spark.catalog.refreshByPath(table)
+    try rollups.foreach { case (t, q) => t.replaceAll(spark, "rebuild")(q(r)) }
+    finally { r.unpersist(); () }
+    commitStoreVersion(spark, "rebuild")
   }
 
   /** A rollup table, pinned to its newest manifest (direct directory
     * read for pre-manifest stores). `name` ∈ daily/user/service/region.
     */
   def agg(spark: SparkSession, name: String): DataFrame =
-    readManifested(spark, aggPath(name))
-
-  private def readManifested(spark: SparkSession, table: String): DataFrame = {
-    val fs = tableFs(spark, table)
-    RawManifest.latest(fs, table) match {
-      case Some((_, files)) if files.nonEmpty =>
-        spark.read.option("basePath", table)
-          .parquet(files.map(f => s"$table/$f"): _*)
-      case _ => spark.read.parquet(table)
-    }
-  }
+    aggTable(name).read(spark)
 
   /** Incremental daily-rollup maintenance: recompute ONLY the
-    * (year,month,day) partitions the batch touched and overwrite just
-    * those output partitions (dynamic partition overwrite = per-partition
-    * MERGE). The reference rebuilds every aggregate from all history each
-    * run (`aggregates.py:31,96,163,226`) — correct, but a 100 TB
+    * (year,month,day) partitions the batch touched and swap just those
+    * output partitions (a per-partition MERGE). The reference rebuilds
+    * every aggregate from all history each run
+    * (`aggregates.py:31,96,163,226`) — correct, but a 100 TB
     * non-starter; day-keyed rollups only ever change for appended days,
     * so this reads the touched days (partition-pruned) and writes the
     * touched partitions, leaving history untouched. Exactness is
@@ -582,22 +572,10 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
     */
   def refreshDailyForDays(spark: SparkSession, touchedDays: DataFrame): Unit =
       TableLock.withLock(spark, root) {
-    val dayTuples = touchedDays.select("year", "month", "day").distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq
-    val days = {
-      import spark.implicits._
-      dayTuples.toDF("year", "month", "day")
-    }
-    val affected = raw(spark).join(
-      org.apache.spark.sql.functions.broadcast(days),
-      Seq("year", "month", "day"))
-    val table = aggPath("daily")
-    val fs = tableFs(spark, table)
-    val beforeTouched = snapshotTouchedIn(fs, table, dayTuples)
-    Aggregates.daily(affected).write.mode("append")
-      .partitionBy("year", "month", "day").parquet(table)
-    commitReplaceIn(spark, table, dayTuples, beforeTouched)
-    commitStoreVersion(spark)
+    val (days, affected) = touched(spark, touchedDays, rawTable)
+    aggTable("daily").replaceDays(spark, days, "refresh")(
+      Aggregates.daily(affected))
+    commitStoreVersion(spark, "refresh")
   }
 
   /** Dedup-append a batch AND fold its per-day [[Aggregates.dailyPartial]]
@@ -608,16 +586,7 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
   def appendIncremental(spark: SparkSession, staged: DataFrame): Long =
       TableLock.withLock(spark, root) {
     val batch = Ingest.dedupWithinBatch(staged)
-    val dayTuples = batch.select("year", "month", "day").distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq
-    val existing =
-      if (exists(spark, rawPath)) {
-        import spark.implicits._
-        val days = dayTuples.toDF("year", "month", "day")
-        raw(spark).join(
-          org.apache.spark.sql.functions.broadcast(days),
-          Seq("year", "month", "day"))
-      } else raw(spark)
+    val (days, existing) = touched(spark, batch, rawTable)
     // localCheckpoint, NOT cache: fresh's plan reads rawPath (anti-join
     // probe), and the append below invalidates path-based caches — a
     // cached fresh would lazily RECOMPUTE against its own appended
@@ -626,11 +595,9 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
     try {
       val n = fresh.count()
       if (n > 0) {
-        val beforeTouched = snapshotTouched(rawFs(spark), dayTuples)
-        fresh.write.mode("append")
-          .partitionBy("year", "month", "day").parquet(rawPath)
-        commitAppend(spark, dayTuples, beforeTouched)
-        mergeIntoDailyPartials(spark, fresh)
+        rawTable.append(spark, days, "append")(fresh)
+        foldPartials(spark, fresh)
+        commitStoreVersion(spark, "append")
       }
       n
     } finally { fresh.unpersist(); () }
@@ -649,41 +616,25 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
     */
   def mergeIntoDailyPartials(spark: SparkSession, delta: DataFrame): Unit =
       TableLock.withLock(spark, root) {
-    val deltaParts = Aggregates.dailyPartial(delta)
-    val dayTuples = deltaParts.select("year", "month", "day").distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq
-    val merged =
-      if (exists(spark, dailyPartialsPath)) {
-        import spark.implicits._
-        val days = dayTuples.toDF("year", "month", "day")
-        val stored = readPartials(spark).join(
-          org.apache.spark.sql.functions.broadcast(days),
-          Seq("year", "month", "day"))
-        Aggregates.mergeDailyPartials(stored, deltaParts)
-      } else deltaParts
-    val fs = tableFs(spark, dailyPartialsPath)
-    val beforeTouched = snapshotTouchedIn(fs, dailyPartialsPath, dayTuples)
-    merged.write.mode("append")
-      .partitionBy("year", "month", "day").parquet(dailyPartialsPath)
-    commitReplaceIn(spark, dailyPartialsPath, dayTuples, beforeTouched)
-    commitStoreVersion(spark)
+    foldPartials(spark, delta)
+    commitStoreVersion(spark, "fold")
   }
 
-  private def readPartials(spark: SparkSession): DataFrame = {
-    val fs = tableFs(spark, dailyPartialsPath)
-    RawManifest.latest(fs, dailyPartialsPath) match {
-      case Some((_, files)) if files.nonEmpty =>
-        spark.read.option("basePath", dailyPartialsPath)
-          .parquet(files.map(f => s"$dailyPartialsPath/$f"): _*)
-      case _ => spark.read.parquet(dailyPartialsPath)
-    }
+  private def foldPartials(spark: SparkSession, delta: DataFrame): Unit = {
+    val deltaParts = Aggregates.dailyPartial(delta)
+    val (days, stored) = touched(spark, deltaParts, partialsTable)
+    val merged =
+      if (exists(spark, partialsTable.path))
+        Aggregates.mergeDailyPartials(stored, deltaParts)
+      else deltaParts
+    partialsTable.replaceDays(spark, days, "fold")(merged)
   }
 
   /** The daily rollup served from the incrementally-maintained partials,
     * pinned to the newest partials manifest.
     */
   def dailyFromPartials(spark: SparkSession): DataFrame =
-    Aggregates.finalizeDaily(readPartials(spark))
+    Aggregates.finalizeDaily(partialsTable.read(spark))
 
   /** Small-file compaction for the partitioned fact store: every append
     * leaves one-file-per-task fragments in each touched (year,month,day)
@@ -691,11 +642,11 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
     * partitions into thousands of KB-sized files — the classic
     * metadata/open-cost killer for every later scan. This rewrites ONLY
     * the partitions holding more than `maxFilesPerPartition` files
-    * (discovered from the file index via `input_file_name`, no listing
-    * code), clustering each day's rows into one task → one file, and
-    * swaps them in via manifest commit — untouched history partitions
-    * are never read or rewritten. Row content is unchanged by
-    * construction (a pure rewrite); the gate hash-checks that.
+    * (counted from the manifest's paths, no data read), clustering each
+    * day's rows into one task → one file, and swaps them in via manifest
+    * commit — untouched history partitions are never read or rewritten.
+    * Row content is unchanged by construction (a pure rewrite); the gate
+    * hash-checks that.
     *
     * `filesPerDay > 1` compacts to TIME-SORTED slices instead of one
     * file per day (global range partitioning on (day, timestamp)): each
@@ -722,27 +673,18 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
       zorderUsers: Boolean = false): (Long, Long) =
       TableLock.withLock(spark, root) {
     import org.apache.spark.sql.functions.{exists => _, _}
-    if (!exists(spark, rawPath)) (0L, 0L)
-    else {
     // "should I compact, and which days?" is answered from the manifest
     // alone — the partition layout names every file's day, so the
     // decision reads ZERO data (at 100 TB a compaction check must not
-    // scan the table; this used to run an input_file_name groupBy over
-    // the whole store)
-    val perPart = currentFiles(rawFs(spark)).toSeq
+    // scan the table)
+    val perPart = rawTable.current(spark).toSeq
       .flatMap(dayOf).groupBy(identity).view.mapValues(_.size)
       .filter(_._2 > maxFilesPerPartition).toMap
     val parts = perPart.size.toLong
     val files = perPart.values.map(_.toLong).sum
     if (parts > 0) {
       val dayTuples = perPart.keys.toSeq.sorted
-      val beforeTouched = snapshotTouched(rawFs(spark), dayTuples)
-      val days = {
-        import spark.implicits._
-        dayTuples.toDF("year", "month", "day")
-      }
-      val fragmented = raw(spark).join(broadcast(days),
-        Seq("year", "month", "day"))
+      val fragmented = storedOn(spark, rawTable, dayTuples)
       // The write APPENDS new files next to the fragments (no checkpoint
       // barrier needed — nothing it reads is deleted); the manifest swap
       // then atomically retires the fragments, which stay on disk for
@@ -780,31 +722,21 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
           // straddling midnight just writes one tight file per side)
           fragmented.repartitionByRange(dayTuples.length * filesPerDay,
             col("year"), col("month"), col("day"), col("timestamp"))
-      clustered
-        .select(raw(spark).columns.map(col): _*)
-        .write.mode("append")
-        .partitionBy("year", "month", "day").parquet(rawPath)
-      commitReplace(spark, dayTuples, beforeTouched)
-      commitStoreVersion(spark)
+      rawTable.replaceDays(spark, dayTuples, "compact")(
+        clustered.select(Schemas.billing.fieldNames.map(col): _*))
+      commitStoreVersion(spark, "compact")
     }
     (parts, files)
-    }
   }
 
   /** CDC merge: apply a change batch — `op` = "upsert" (insert new or
     * replace the row with the same natural key) or "delete" (by key) —
     * to the fact store, PARTITION-GRANULAR under the writer lock: only
     * the (year,month,day) partitions the batch names are read, merged,
-    * and swapped via dynamic partition overwrite; history partitions
-    * are never touched. Completes the store lifecycle the append-only
-    * reference lacks (its DuckDB tables are INSERT-only,
-    * ingest.py:249-257): append-dedup, compact, vacuum, and now
-    * update/delete.
-    *
-    * Dynamic overwrite only rewrites partitions PRESENT in the merged
-    * output, so a day whose every row was deleted would silently keep
-    * its old files — those emptied partitions are removed explicitly
-    * (the classic dynamic-overwrite pitfall, handled here).
+    * and swapped via manifest commit; history partitions are never
+    * touched. Completes the store lifecycle the append-only reference
+    * lacks (its DuckDB tables are INSERT-only, ingest.py:249-257):
+    * append-dedup, compact, vacuum, and now update/delete.
     *
     * Returns (rows upserted, rows deleted-that-matched).
     */
@@ -820,19 +752,9 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
     val upserts = Ingest.dedupWithinBatch(ch.filter(col("op") === "upsert")
       .drop("op"), key)
     val deletes = ch.filter(col("op") === "delete").drop("op")
-    val dayTuples = ch.select("year", "month", "day").distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq
-    val days = {
-      import spark.implicits._
-      dayTuples.toDF("year", "month", "day")
-    }
-    val current =
-      if (exists(spark, rawPath))
-        raw(spark).join(broadcast(days), Seq("year", "month", "day"))
-      else raw(spark)
+    val (days, current) = touched(spark, ch, rawTable)
     val nDeleted = current.join(deletes.select(key.map(col): _*).distinct(),
       key, "left_semi").count()
-    val beforeTouched = snapshotTouched(rawFs(spark), dayTuples)
     // survivors = current minus every changed key, plus the upsert rows;
     // written as NEW files next to the old ones (a day the merge emptied
     // simply contributes none), then the manifest swap retires every
@@ -844,18 +766,16 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
     val merged = current.join(changedKeys, key, "left_anti")
       .unionByName(upserts)
     val nUpserted = upserts.count()
-    merged.write.mode("append")
-      .partitionBy("year", "month", "day").parquet(rawPath)
-    commitReplace(spark, dayTuples, beforeTouched)
-    commitStoreVersion(spark)
+    rawTable.replaceDays(spark, days, "merge")(merged)
+    commitStoreVersion(spark, "merge")
     ch.unpersist()
     (nUpserted, nDeleted)
   }
 
   /** Retention: drop fact-table day partitions STRICTLY older than
-    * (year, month, day). Partition-dir deletes under the writer lock —
-    * no data file is ever read or rewritten, and untouched days keep
-    * their files byte-identical (the same partition-granular contract as
+    * (year, month, day). A manifest commit under the writer lock — no
+    * data file is ever read or rewritten, and untouched days keep their
+    * files byte-identical (the same partition-granular contract as
     * [[compactRaw]]). Returns the number of partitions dropped. The
     * reference has no retention story at all (its DuckDB file only
     * grows); at 100 TB dropping expired partitions by directory is the
@@ -863,29 +783,24 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
     */
   def vacuumBefore(spark: SparkSession, year: Int, month: Int,
       day: Int): Long = TableLock.withLock(spark, root) {
-    if (!exists(spark, rawPath)) 0L
-    else {
-      val cutoff = (year * 100 + month) * 100 + day
-      val fs = rawFs(spark)
-      // the expired-partition list comes from manifest paths, not a
-      // table scan — forgetting history must not require reading it
-      val old = currentFiles(fs).toSeq.flatMap(dayOf).distinct
-        .filter { case (y, m, dd) => (y * 100 + m) * 100 + dd < cutoff }
-      if (old.nonEmpty) {
-        // retire the expired partitions from the manifest; their files
-        // stay on disk for pinned readers until GC's retention passes
-        val droppedDirs = old.map { case (y, m, dd) => dayDir(y, m, dd) + "/" }
-        commitRawVersion(spark, fs,
-          currentFiles(fs).filterNot(f => droppedDirs.exists(f.startsWith)))
-        gcRaw(spark)
-        spark.catalog.refreshByPath(rawPath)
-        commitStoreVersion(spark)
-      }
-      old.length.toLong
+    val cutoff = (year * 100 + month) * 100 + day
+    // the expired-partition list comes from manifest paths, not a
+    // table scan — forgetting history must not require reading it
+    val files = rawTable.current(spark)
+    val old = files.toSeq.flatMap(dayOf).distinct
+      .filter { case (y, m, dd) => (y * 100 + m) * 100 + dd < cutoff }
+    if (old.nonEmpty) {
+      // the expired partitions' files leave the manifest and stay on
+      // disk for pinned readers until GC's retention passes
+      val dropped = old.map(dayDir(_) + "/")
+      rawTable.replaceWith(spark,
+        files.filterNot(f => dropped.exists(f.startsWith)), "vacuum")
+      commitStoreVersion(spark, "vacuum")
     }
+    old.length.toLong
   }
 
-  /** T4: last-wins ledger upsert, rewritten in place (the ledger is tiny —
+  /** T4: last-wins ledger upsert, rewritten whole (the ledger is tiny —
     * one row per ingested file).
     */
   def upsertLedger(spark: SparkSession, updates: DataFrame): Unit =
@@ -894,8 +809,8 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
     // this replaced left a window where the ledger path didn't exist at
     // all, and a reader caught inside it saw an empty ledger — which in
     // T4 semantics means "re-ingest everything"
-    replaceWholeTable(spark, ledgerPath, Ledger.upsert(ledger(spark),
-      updates), partitioned = false)
-    commitStoreVersion(spark)
+    ledgerTable.replaceAll(spark, "upsert")(
+      Ledger.upsert(ledger(spark), updates))
+    commitStoreVersion(spark, "upsert")
   }
 }

@@ -19,32 +19,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class StoreSnapshot(store: BillingStore,
     versions: Map[String, Long]) {
 
+  private def pinned(spark: SparkSession,
+      table: BillingStore#Table): DataFrame =
+    table.read(spark, versions.get(table.key))
+
   /** The fact table at the pinned version (stats-aware skipping reads,
     * like every manifest read of the fact table).
     */
-  def raw(spark: SparkSession): DataFrame =
-    versions.get("raw_billing")
-      .map(store.rawAt(spark, _)).getOrElse(store.raw(spark))
+  def raw(spark: SparkSession): DataFrame = pinned(spark, store.rawTable)
 
   /** A rollup table at the pinned version; `name` ∈
     * daily/user/service/region.
     */
   def agg(spark: SparkSession, name: String): DataFrame =
-    versions.get(s"${name}_aggs")
-      .map(store.readManifestedAt(spark, store.aggPath(name), _))
-      .getOrElse(store.agg(spark, name))
+    pinned(spark, store.aggTable(name))
 
   /** The ingest ledger at the pinned version. */
   def ledger(spark: SparkSession): DataFrame =
-    versions.get("processed_files")
-      .map(store.readManifestedAt(spark, store.ledgerPath, _))
-      .getOrElse(store.ledger(spark))
-
-  /** The daily-partials table at the pinned version. */
-  def dailyPartials(spark: SparkSession): DataFrame =
-    versions.get("daily_partials")
-      .map(store.readManifestedAt(spark, store.dailyPartialsPath, _))
-      .getOrElse(store.dailyFromPartials(spark))
+    pinned(spark, store.ledgerTable)
 
   /** The daily rollup finalized from the PINNED partials — lock-step
     * consistent with [[raw]]: both tables committed in the same
@@ -52,8 +44,5 @@ final case class StoreSnapshot(store: BillingStore,
     * (modulo the HLL distinct sketch), at every snapshot.
     */
   def dailyFromPartials(spark: SparkSession): DataFrame =
-    versions.get("daily_partials")
-      .map(v => Aggregates.finalizeDaily(
-        store.readManifestedAt(spark, store.dailyPartialsPath, v)))
-      .getOrElse(store.dailyFromPartials(spark))
+    Aggregates.finalizeDaily(pinned(spark, store.partialsTable))
 }

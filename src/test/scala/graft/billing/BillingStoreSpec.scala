@@ -221,6 +221,104 @@ class BillingStoreSpec extends SparkSpec {
     }
   }
 
+  test("gc: every listed raw version is readable, a pruned one throws") {
+    val store = BillingStore(tmpDir("gc_window"))
+    (1 to 3).foreach { i =>
+      store.appendDedup(spark,
+        df(rec(f"2025-04-23 1$i:00:00", s"r$i", "u1", i.toDouble)))
+      store.compactRaw(spark)
+    }
+    val listed = store.rawVersions(spark)
+    listed.foreach(v => assert(store.rawAt(spark, v).count() > 0L))
+    assert(listed.size <= store.retainVersions, s"listed $listed")
+    assert(store.raw(spark).count() == 3L)
+    (1L until listed.head).foreach { v =>
+      intercept[java.util.NoSuchElementException](store.rawAt(spark, v))
+    }
+  }
+
+  test("an emptied store reads empty rollups, live and pinned") {
+    val store = BillingStore(tmpDir("emptied"))
+    store.appendDedup(spark, df(
+      rec("2025-04-23 10:00:00", "r1", "u1", 2.0),
+      rec("2025-04-24 10:00:00", "r2", "u2", 3.0)))
+    store.rebuildAggregates(spark)
+    assert(store.vacuumBefore(spark, 2026, 1, 1) == 2L)
+    store.rebuildAggregates(spark)
+    assert(store.raw(spark).count() == 0L)
+    val snap = store.snapshot(spark)
+    assert(snap.raw(spark).count() == 0L)
+    Seq("daily", "user", "service", "region").foreach { n =>
+      assert(store.agg(spark, n).count() == 0L, s"live $n")
+      assert(snap.agg(spark, n).count() == 0L, s"pinned $n")
+    }
+  }
+
+  test("each table reads empty with the schema it reads full") {
+    val full = BillingStore(tmpDir("schema_full"))
+    full.appendIncremental(spark, df(
+      rec("2025-04-23 10:00:00", "r1", "u1", 2.0),
+      rec("2025-04-24 10:00:00", "r2", "u2", 3.0)))
+    full.rebuildAggregates(spark)
+    full.upsertLedger(spark, spark.createDataFrame(
+      java.util.Arrays.asList(org.apache.spark.sql.Row("a.csv", "h",
+        Timestamp.valueOf("2025-04-26 00:00:00"), 2L)),
+      Schemas.processedFiles))
+    val empty = BillingStore(tmpDir("schema_empty"))
+    assert(empty.tables.map(_.key) == full.tables.map(_.key))
+    assert(full.tables.size == 7)
+    full.tables.zip(empty.tables).foreach { case (f, e) =>
+      val want = f.read(spark)
+      assert(want.count() > 0L, f.key)
+      // no manifest and no directory yet
+      assert(e.read(spark).schema == want.schema, e.key)
+      // a committed manifest that lists no file, live and pinned
+      e.publish(spark, Set.empty, "test")
+      val v = e.versions(spark).last
+      Seq(e.read(spark), e.read(spark, Some(v))).foreach { got =>
+        assert(got.schema == want.schema, e.key)
+        assert(got.count() == 0L, e.key)
+      }
+    }
+  }
+
+  test("every mutator tags its commits with its op") {
+    val store = BillingStore(tmpDir("op_tags"))
+    val fs = new org.apache.hadoop.fs.Path(store.root)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def op(table: String): String =
+      RawManifest.opAt(fs, table, RawManifest.versions(fs, table).last)
+    val b1 = df(
+      rec("2025-04-23 10:00:00", "r1", "u1", 2.0),
+      rec("2025-04-24 10:00:00", "r2", "u2", 3.0)).repartition(2)
+    store.appendDedup(spark, b1)
+    assert(op(store.rawPath) == "append")
+    store.appendIncremental(spark,
+      df(rec("2025-04-23 11:00:00", "r3", "u1", 1.0)))
+    assert(op(store.rawPath) == "append")
+    assert(op(store.dailyPartialsPath) == "fold")
+    store.mergeIntoDailyPartials(spark,
+      df(rec("2025-04-25 11:00:00", "r9", "u1", 1.0)))
+    assert(op(store.dailyPartialsPath) == "fold")
+    store.rebuildAggregates(spark)
+    Seq("daily", "user", "service", "region").foreach(n =>
+      assert(op(store.aggPath(n)) == "rebuild", n))
+    store.refreshDailyForDays(spark, b1)
+    assert(op(store.aggPath("daily")) == "refresh")
+    store.upsertLedger(spark, spark.createDataFrame(
+      java.util.Arrays.asList(org.apache.spark.sql.Row("a.csv", "h",
+        Timestamp.valueOf("2025-04-26 00:00:00"), 2L)),
+      Schemas.processedFiles))
+    assert(op(store.ledgerPath) == "upsert")
+    store.compactRaw(spark)
+    assert(op(store.rawPath) == "compact")
+    store.applyChanges(spark, df(rec("2025-04-24 10:00:00", "r2", "u2", 9.0))
+      .withColumn("op", org.apache.spark.sql.functions.lit("upsert")))
+    assert(op(store.rawPath) == "merge")
+    store.vacuumBefore(spark, 2025, 4, 24)
+    assert(op(store.rawPath) == "vacuum")
+  }
+
   test("schema drift report: added, missing, retyped columns") {
     val dir = tmpDir("drift")
     java.nio.file.Files.writeString(
