@@ -166,12 +166,18 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
 
     /** Append `out`: the next version is the current one plus exactly the
       * files this write created in the `days` partitions (none written,
-      * nothing published). Appends drop no file, so no gc.
+      * nothing published). Appends retire no file, so no data gc — but
+      * manifest history (and its stats sidecars) is still cut to the
+      * newest `retainVersions`, or an append-only table would keep every
+      * version it ever committed.
       */
     def append(spark: SparkSession, days: Seq[Day], op: String)(
         out: DataFrame): Unit = {
       val added = write(spark, days.map(dayDir), out)._2
-      if (added.nonEmpty) publish(spark, current(spark) ++ added, op)
+      if (added.nonEmpty) {
+        publish(spark, current(spark) ++ added, op)
+        RawManifest.pruneHistory(fs(spark), path, keep = retainVersions)
+      }
     }
 
     /** Day-scoped replace: write `out` next to the old files, then swap

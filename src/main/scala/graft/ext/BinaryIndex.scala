@@ -156,9 +156,7 @@ object BinaryIndex extends VectorFamily {
   def search(model: Model, queryPred: Column, k: Int,
       candidates: Int = 200): DataFrame = {
     val live = model.vecs.join(model.codes.select("vec_id"), "vec_id")
-    searchImpl(model,
-      live.filter(queryPred).select(col("vec_id").as("query_id"),
-        col("v").as("qv"), col("nrm").as("qnrm")),
+    searchImpl(model, live.filter(queryPred),
       k, candidates, excludeSelf = true)
   }
 
@@ -167,10 +165,7 @@ object BinaryIndex extends VectorFamily {
     */
   def searchVectors(model: Model, queries: DataFrame, k: Int,
       candidates: Int = 200): DataFrame =
-    searchImpl(model,
-      EmbeddingSearch.prepared(queries)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qnrm")),
+    searchImpl(model, EmbeddingSearch.prepared(queries),
       k, candidates, excludeSelf = false)
 
   /** PRECEDENCE-AWARE FEDERATED ANN across saved binary indexes
@@ -189,7 +184,7 @@ object BinaryIndex extends VectorFamily {
         k * overFetch, candidates)
     }
 
-  private def searchImpl(model: Model, q0: DataFrame, k: Int,
+  private def searchImpl(model: Model, rows: DataFrame, k: Int,
       candidates: Int, excludeSelf: Boolean): DataFrame = {
     // width enforcement rides the qcode projection (the same loud
     // check the encode path has — a narrow query would otherwise fold
@@ -197,7 +192,7 @@ object BinaryIndex extends VectorFamily {
     // so search() never pays an eager job just to validate (the
     // corpus-drawn query side of search() would otherwise execute the
     // vecs⋈codes join once for the check and again for the search)
-    val q = q0.withColumn("qcode",
+    val q = EmbeddingSearch.asQueries(rows).withColumn("qcode",
       EmbeddingSearch.binaryCode(
         EmbeddingSearch.widthGuard(col("qv"), model.dim), model.dim))
     val joinCond =
@@ -214,18 +209,10 @@ object BinaryIndex extends VectorFamily {
       .filter(col("crank") <= candidates)
       .select("query_id", "vec_id")
     // stage 2: exact re-rank of the survivors (vectors by id equi-join)
-    val wCos = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    cand
-      .join(model.vecs.select(col("vec_id"), col("v"), col("nrm")),
-        "vec_id")
-      .join(broadcast(q.select("query_id", "qv", "qnrm")), "query_id")
-      .withColumn("cos",
-        EmbeddingSearch.dot(col("qv"), col("v")) /
-          sqrt(col("qnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("cos"), 6).as("cos"), col("rank"))
+    EmbeddingSearch.rerankTopK(
+      cand.join(model.vecs.select(col("vec_id"), col("v"), col("nrm")),
+          "vec_id")
+        .join(broadcast(q.select("query_id", "qv", "qnrm")), "query_id"),
+      k)
   }
 }

@@ -54,6 +54,31 @@ object EmbeddingSearch {
       col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", dot(col("v"), col("v")))
 
+  /** [[prepared]] rows as the query side of a search:
+    * `(query_id, qv, qnrm)`.
+    */
+  private[ext] def asQueries(rows: DataFrame): DataFrame =
+    rows.select(col("vec_id").as("query_id"), col("v").as("qv"),
+      col("nrm").as("qnrm"))
+
+  /** The exact re-rank that ends the compressed-index searches
+    * ([[BinaryIndex]], [[PqIndex]], [[SqIndex]], [[IvfPqIndex]]): the
+    * cosine of each candidate row (query `qv`/`qnrm`, corpus `v`/`nrm`),
+    * and each query's top `k` by cosine (ties → smaller vec_id) as
+    * `(query_id, neighbor_id, cos rounded to 6 digits, rank)`.
+    */
+  private[ext] def rerankTopK(cand: DataFrame, k: Int): DataFrame = {
+    val wCos = Window.partitionBy("query_id")
+      .orderBy(col("cos").desc, col("vec_id").asc)
+    cand
+      .withColumn("cos",
+        dot(col("qv"), col("v")) / sqrt(col("qnrm") * col("nrm")))
+      .withColumn("rank", row_number().over(wCos))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        round(col("cos"), 6).as("cos"), col("rank"))
+  }
+
   /** Exact top-k neighbors for each query row (queries ⊂ corpus, selected
     * by `queryPred`). The query side is broadcast — the corpus streams
     * through once, so the cost is one scan regardless of corpus size;

@@ -248,9 +248,7 @@ object IvfPqIndex extends VectorFamily {
   /** Top-k per query (queries ⊂ corpus, self excluded). */
   def search(model: Model, queryPred: Column, k: Int, nProbe: Int,
       shortlist: Int = 8): DataFrame =
-    searchImpl(model,
-      model.encoded.filter(queryPred).select(col("vec_id").as("query_id"),
-        col("v").as("qv"), col("nrm").as("qnrm")),
+    searchImpl(model, model.encoded.filter(queryPred),
       k, nProbe, shortlist, excludeSelf = true)
 
   /** Top-k for EXTERNAL query vectors (lookup semantics — a query
@@ -258,9 +256,7 @@ object IvfPqIndex extends VectorFamily {
     */
   def searchVectors(model: Model, queries: DataFrame, k: Int, nProbe: Int,
       shortlist: Int = 8): DataFrame =
-    searchImpl(model,
-      EmbeddingSearch.prepared(queries).select(col("vec_id").as("query_id"),
-        col("v").as("qv"), col("nrm").as("qnrm")),
+    searchImpl(model, EmbeddingSearch.prepared(queries),
       k, nProbe, shortlist, excludeSelf = false)
 
   /** Per-(query, probed-cell) residual distance tables: the query's own
@@ -275,8 +271,9 @@ object IvfPqIndex extends VectorFamily {
         c => EmbeddingSearch.l2sq(c, slice(qres, j * dsub + 1, dsub)))
     }: _*)
 
-  private def searchImpl(model: Model, q: DataFrame, k: Int, nProbe: Int,
+  private def searchImpl(model: Model, rows: DataFrame, k: Int, nProbe: Int,
       shortlist: Int, excludeSelf: Boolean): DataFrame = {
+    val q = EmbeddingSearch.asQueries(rows)
     val qn = unit(col("qv"), col("qnrm"))
     // rank the broadcast centroid list per query, keep nProbe cells,
     // and build that (query, cell) pair's distance tables right here —
@@ -305,15 +302,6 @@ object IvfPqIndex extends VectorFamily {
       .orderBy(col("adc").asc, col("vec_id").asc)
     val cand = scored.withColumn("adc_rank", row_number().over(wAdc))
       .filter(col("adc_rank") <= k.toLong * shortlist)
-    val wCos = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    cand
-      .withColumn("cos",
-        EmbeddingSearch.dot(col("qv"), col("v")) /
-          sqrt(col("qnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("cos"), 6).as("cos"), col("rank"))
+    EmbeddingSearch.rerankTopK(cand, k)
   }
 }

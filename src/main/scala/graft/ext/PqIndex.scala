@@ -322,10 +322,7 @@ object PqIndex extends VectorFamily {
     */
   def search(model: Model, queryPred: Column, k: Int,
       shortlist: Int = 4): DataFrame =
-    searchImpl(model,
-      model.encoded.filter(queryPred)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qnrm")),
+    searchImpl(model, model.encoded.filter(queryPred),
       k, shortlist, excludeSelf = true)
 
   /** Top-k for EXTERNAL query vectors — `queries` is its own
@@ -336,15 +333,13 @@ object PqIndex extends VectorFamily {
     */
   def searchVectors(model: Model, queries: DataFrame, k: Int,
       shortlist: Int = 4): DataFrame =
-    searchImpl(model,
-      EmbeddingSearch.prepared(queries)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qnrm")),
+    searchImpl(model, EmbeddingSearch.prepared(queries),
       k, shortlist, excludeSelf = false)
 
-  private def searchImpl(model: Model, q0: DataFrame, k: Int,
+  private def searchImpl(model: Model, rows: DataFrame, k: Int,
       shortlist: Int, excludeSelf: Boolean): DataFrame = {
-    val q = q0.withColumn("qdt", distTables(col("qv"), col("qnrm"), model))
+    val q = EmbeddingSearch.asQueries(rows)
+      .withColumn("qdt", distTables(col("qv"), col("qnrm"), model))
     // codegen'd ADC lookup (PqAdc) — the corpus×queries inner loop must
     // not run as an interpreted HOF lambda; the HOF spelling lives in
     // hofAdc as the equivalence-test reference
@@ -361,15 +356,6 @@ object PqIndex extends VectorFamily {
       .orderBy(col("adc").asc, col("vec_id").asc)
     val cand = scored.withColumn("adc_rank", row_number().over(wAdc))
       .filter(col("adc_rank") <= k * shortlist)
-    val wCos = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    cand
-      .withColumn("cos",
-        EmbeddingSearch.dot(col("qv"), col("v")) /
-          sqrt(col("qnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("cos"), 6).as("cos"), col("rank"))
+    EmbeddingSearch.rerankTopK(cand, k)
   }
 }

@@ -184,10 +184,7 @@ object SqIndex extends VectorFamily {
     */
   def search(model: Model, queryPred: Column, k: Int,
       shortlist: Int = 4): DataFrame =
-    searchImpl(model,
-      model.encoded.filter(queryPred)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qnrm")),
+    searchImpl(model, model.encoded.filter(queryPred),
       k, shortlist, excludeSelf = true)
 
   /** Top-k for EXTERNAL query vectors (lookup semantics, nothing
@@ -195,15 +192,13 @@ object SqIndex extends VectorFamily {
     */
   def searchVectors(model: Model, queries: DataFrame, k: Int,
       shortlist: Int = 4): DataFrame =
-    searchImpl(model,
-      EmbeddingSearch.prepared(queries)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qnrm")),
+    searchImpl(model, EmbeddingSearch.prepared(queries),
       k, shortlist, excludeSelf = false)
 
-  private def searchImpl(model: Model, q0: DataFrame, k: Int,
+  private def searchImpl(model: Model, rows: DataFrame, k: Int,
       shortlist: Int, excludeSelf: Boolean): DataFrame = {
-    val q = q0.withColumn("qu", unit(col("qv"), col("qnrm")))
+    val q = EmbeddingSearch.asQueries(rows)
+      .withColumn("qu", unit(col("qv"), col("qnrm")))
     val joinCond =
       if (excludeSelf) col("vec_id") =!= col("query_id") else lit(true)
     // codegen'd dequantize-and-dot (SqAdc) — the (corpus × queries)
@@ -221,15 +216,6 @@ object SqIndex extends VectorFamily {
       .orderBy(col("score").desc, col("vec_id").asc)
     val cand = scored.withColumn("score_rank", row_number().over(wScore))
       .filter(col("score_rank") <= k * shortlist)
-    val wCos = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    cand
-      .withColumn("cos",
-        EmbeddingSearch.dot(col("qv"), col("v")) /
-          sqrt(col("qnrm") * col("nrm")))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("cos"), 6).as("cos"), col("rank"))
+    EmbeddingSearch.rerankTopK(cand, k)
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Gate, Tables}
+import OracleSql._
+import GateOps._
 
 /** Multi-dimensional and statistical aggregation surface: CUBE / ROLLUP
   * (grouping-set expansion), pivot, moment statistics, and exact
@@ -232,13 +234,13 @@ object AnalyticsQueries {
       .orderBy(desc("n"), col("tok"))
 
   private val explodeTokensSql =
-    """SELECT tok, count(*) AS n
-      |FROM (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+'))
-      |        AS tok
-      |      FROM documents)
-      |WHERE len(tok) >= 6
-      |GROUP BY tok HAVING count(*) >= 20
-      |ORDER BY n DESC, tok""".stripMargin
+    s"""SELECT tok, count(*) AS n
+       |FROM (SELECT unnest(${tokenize("text")})
+       |        AS tok
+       |      FROM documents)
+       |WHERE len(tok) >= 6
+       |GROUP BY tok HAVING count(*) >= 20
+       |ORDER BY n DESC, tok""".stripMargin
 
   // ---- collection aggregates ---------------------------------------------
   /** `collect_list`/`collect_set` assemble per-group arrays; both engines
@@ -560,31 +562,23 @@ object AnalyticsQueries {
       .write.mode("overwrite").parquet(s"$in/d1")
     ev.filter(col("event_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$in/d2")
-    val stream = s.readStream
-      .schema("event_id LONG, event_type STRING, user_id LONG")
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
     def versions(): Seq[Long] =
       Option(new java.io.File(store).listFiles())
         .getOrElse(Array.empty[java.io.File]).toSeq
         .map(_.getName).filter(_.startsWith("v-"))
         .map(_.stripPrefix("v-").toLong).sorted
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val skB = graft.ext.DataOps.kmvSketches(batch, col("event_type"),
-          col("user_id"), k)
-        val merged = versions().lastOption match {
-          case Some(v) => graft.ext.DataOps.kmvMerge(
-            s.read.parquet(s"$store/v-$v"), skB, k)
-          case None => skB
-        }
-        merged.coalesce(1).write.mode("overwrite")
-          .parquet(s"$store/v-$bid")
+    drain(s, "event_id LONG, event_type STRING, user_id LONG", in,
+        ckpt) { (batch, bid) =>
+      val skB = graft.ext.DataOps.kmvSketches(batch, col("event_type"),
+        col("user_id"), k)
+      val merged = versions().lastOption match {
+        case Some(v) => graft.ext.DataOps.kmvMerge(
+          s.read.parquet(s"$store/v-$v"), skB, k)
+        case None => skB
       }
-      .start()
-    q.awaitTermination()
+      merged.coalesce(1).write.mode("overwrite")
+        .parquet(s"$store/v-$bid")
+    }
     val cur = s.read.parquet(s"$store/v-${versions().last}")
     val all = graft.ext.DataOps.kmvUnion(cur, "__all__", k)
     cur.unionByName(all)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Gate, Tables}
+import OracleSql._
 import graft.ext.{CorpusStore, DataOps, Dedup, EmbeddingSearch,
   Multimodal, Takedown, TextAnalysis}
 
@@ -233,24 +234,22 @@ object DataOpsQueries {
   }
 
   private val dupClustersSql =
-    """WITH RECURSIVE
-      |corpus AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      |  UNION ALL
-      |  SELECT vec_id + 10000, embedding::DOUBLE[] FROM embeddings),
-      |p AS (
-      |  SELECT a.vec_id AS s, b.vec_id AS t
-      |  FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-      |  WHERE list_dot_product(a.v, b.v)
-      |          / sqrt(list_dot_product(a.v, a.v)
-      |                 * list_dot_product(b.v, b.v)) >= 0.45),
-      |edges AS (SELECT s, t FROM p UNION ALL SELECT t, s FROM p),
-      |reach AS (
-      |  SELECT vec_id AS id, vec_id AS r FROM corpus
-      |  UNION
-      |  SELECT e.s, reach.r FROM edges e JOIN reach ON e.t = reach.id)
-      |SELECT id AS vec_id, min(r) AS cluster, min(r) = id AS is_keeper
-      |FROM reach GROUP BY id ORDER BY id""".stripMargin
+    s"""WITH RECURSIVE
+       |corpus AS (
+       |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+       |  UNION ALL
+       |  SELECT vec_id + 10000, embedding::DOUBLE[] FROM embeddings),
+       |p AS (
+       |  SELECT a.vec_id AS s, b.vec_id AS t
+       |  FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
+       |  WHERE ${cosine("a.v", "b.v")} >= 0.45),
+       |edges AS (SELECT s, t FROM p UNION ALL SELECT t, s FROM p),
+       |reach AS (
+       |  SELECT vec_id AS id, vec_id AS r FROM corpus
+       |  UNION
+       |  SELECT e.s, reach.r FROM edges e JOIN reach ON e.t = reach.id)
+       |SELECT id AS vec_id, min(r) AS cluster, min(r) = id AS is_keeper
+       |FROM reach GROUP BY id ORDER BY id""".stripMargin
 
   /** INCREMENTAL clustering maintenance
     * ([[Dedup.incrementalComponents]]): the base half of the graph is
@@ -285,26 +284,24 @@ object DataOpsQueries {
   }
 
   private val dupClustersStarSql =
-    """WITH RECURSIVE
-      |corpus AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      |  WHERE vec_id % 2 = 0
-      |  UNION ALL
-      |  SELECT vec_id + 10000, embedding::DOUBLE[] FROM embeddings
-      |  WHERE vec_id % 2 = 0),
-      |p AS (
-      |  SELECT a.vec_id AS s, b.vec_id AS t
-      |  FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-      |  WHERE list_dot_product(a.v, b.v)
-      |          / sqrt(list_dot_product(a.v, a.v)
-      |                 * list_dot_product(b.v, b.v)) >= 0.45),
-      |edges AS (SELECT s, t FROM p UNION ALL SELECT t, s FROM p),
-      |reach AS (
-      |  SELECT vec_id AS id, vec_id AS r FROM corpus
-      |  UNION
-      |  SELECT e.s, reach.r FROM edges e JOIN reach ON e.t = reach.id)
-      |SELECT id AS vec_id, min(r) AS cluster, min(r) = id AS is_keeper
-      |FROM reach GROUP BY id ORDER BY id""".stripMargin
+    s"""WITH RECURSIVE
+       |corpus AS (
+       |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+       |  WHERE vec_id % 2 = 0
+       |  UNION ALL
+       |  SELECT vec_id + 10000, embedding::DOUBLE[] FROM embeddings
+       |  WHERE vec_id % 2 = 0),
+       |p AS (
+       |  SELECT a.vec_id AS s, b.vec_id AS t
+       |  FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
+       |  WHERE ${cosine("a.v", "b.v")} >= 0.45),
+       |edges AS (SELECT s, t FROM p UNION ALL SELECT t, s FROM p),
+       |reach AS (
+       |  SELECT vec_id AS id, vec_id AS r FROM corpus
+       |  UNION
+       |  SELECT e.s, reach.r FROM edges e JOIN reach ON e.t = reach.id)
+       |SELECT id AS vec_id, min(r) AS cluster, min(r) = id AS is_keeper
+       |FROM reach GROUP BY id ORDER BY id""".stripMargin
 
   // ---- benchmark decontamination -----------------------------------------
   /** Benchmark corpus = every 25th document; any doc sharing a 7-word
@@ -320,24 +317,24 @@ object DataOpsQueries {
   }
 
   private val decontaminateSql =
-    """WITH tok AS (
-      |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |  FROM documents),
-      |sh0 AS (
-      |  SELECT doc_id,
-      |         CASE WHEN len(toks) >= 7
-      |           THEN list_transform(range(len(toks) - 6),
-      |                  i -> array_to_string(toks[i+1:i+7], ' '))
-      |           ELSE [array_to_string(toks, ' ')] END AS shs
-      |  FROM tok),
-      |docsh AS (SELECT doc_id, unnest(list_distinct(shs)) AS sh FROM sh0),
-      |benchsh AS (SELECT DISTINCT sh FROM docsh WHERE doc_id % 25 = 0),
-      |hits AS (SELECT d.doc_id, count(*) AS n_hits
-      |         FROM docsh d JOIN benchsh USING (sh) GROUP BY 1)
-      |SELECT doc.doc_id, coalesce(h.n_hits, 0) AS n_hits,
-      |       coalesce(h.n_hits, 0) > 0 AS contaminated
-      |FROM documents doc LEFT JOIN hits h ON doc.doc_id = h.doc_id
-      |ORDER BY doc.doc_id""".stripMargin
+    s"""WITH tok AS (
+       |  SELECT doc_id, ${tokenize("text")} AS toks
+       |  FROM documents),
+       |sh0 AS (
+       |  SELECT doc_id,
+       |         CASE WHEN len(toks) >= 7
+       |           THEN list_transform(range(len(toks) - 6),
+       |                  i -> array_to_string(toks[i+1:i+7], ' '))
+       |           ELSE [array_to_string(toks, ' ')] END AS shs
+       |  FROM tok),
+       |docsh AS (SELECT doc_id, unnest(list_distinct(shs)) AS sh FROM sh0),
+       |benchsh AS (SELECT DISTINCT sh FROM docsh WHERE doc_id % 25 = 0),
+       |hits AS (SELECT d.doc_id, count(*) AS n_hits
+       |         FROM docsh d JOIN benchsh USING (sh) GROUP BY 1)
+       |SELECT doc.doc_id, coalesce(h.n_hits, 0) AS n_hits,
+       |       coalesce(h.n_hits, 0) > 0 AS contaminated
+       |FROM documents doc LEFT JOIN hits h ON doc.doc_id = h.doc_id
+       |ORDER BY doc.doc_id""".stripMargin
 
   // ---- PII scrubbing ------------------------------------------------------
   /** The raw corpus is synthetic word salad, so each row gets deterministic
@@ -446,27 +443,27 @@ object DataOpsQueries {
   }
 
   private val repetitionSql =
-    """WITH tok AS (
-      |  SELECT doc_id, text,
-      |         regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |  FROM documents),
-      |sh AS (
-      |  SELECT doc_id, text, toks,
-      |         CASE WHEN len(toks) >= 2
-      |           THEN list_transform(range(len(toks) - 1),
-      |                  i -> array_to_string(toks[i+1:i+2], ' '))
-      |           ELSE [array_to_string(toks, ' ')] END AS shs
-      |  FROM tok)
-      |SELECT doc_id,
-      |       round(1.0 - CAST(len(list_distinct(shs)) AS DOUBLE) / len(shs), 6)
-      |         AS dup2_ratio,
-      |       round(CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
-      |             / len(toks), 6) AS mean_word_len,
-      |       round(CAST(len(text)
-      |               - len(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))
-      |               AS DOUBLE)
-      |             / greatest(len(text), 1), 6) AS symbol_ratio
-      |FROM sh ORDER BY doc_id""".stripMargin
+    s"""WITH tok AS (
+       |  SELECT doc_id, text,
+       |         ${tokenize("text")} AS toks
+       |  FROM documents),
+       |sh AS (
+       |  SELECT doc_id, text, toks,
+       |         CASE WHEN len(toks) >= 2
+       |           THEN list_transform(range(len(toks) - 1),
+       |                  i -> array_to_string(toks[i+1:i+2], ' '))
+       |           ELSE [array_to_string(toks, ' ')] END AS shs
+       |  FROM tok)
+       |SELECT doc_id,
+       |       round(1.0 - CAST(len(list_distinct(shs)) AS DOUBLE) / len(shs), 6)
+       |         AS dup2_ratio,
+       |       round(CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
+       |             / len(toks), 6) AS mean_word_len,
+       |       round(CAST(len(text)
+       |               - len(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g'))
+       |               AS DOUBLE)
+       |             / greatest(len(text), 1), 6) AS symbol_ratio
+       |FROM sh ORDER BY doc_id""".stripMargin
 
   // ---- full dataset-assembly pipeline (flagship composition) -------------
   /** The whole training-data pipeline as ONE query: PII scrub → quality
@@ -531,19 +528,19 @@ object DataOpsQueries {
   }
 
   private val shardWriterSql =
-    """WITH tok AS (SELECT doc_id,
-      |    len(regexp_split_to_array(lower(trim(text)), '\s+'))::BIGINT
-      |      AS n_tok
-      |  FROM documents),
-      |o AS (SELECT doc_id, n_tok,
-      |    md5('w1:' || CAST(doc_id AS VARCHAR)) AS key FROM tok),
-      |r AS (SELECT doc_id, n_tok,
-      |    row_number() OVER (ORDER BY key, doc_id) AS ord,
-      |    sum(n_tok) OVER (ORDER BY key, doc_id
-      |      ROWS UNBOUNDED PRECEDING) AS cum
-      |  FROM o)
-      |SELECT doc_id, CAST((cum - n_tok) // 8000 AS BIGINT) AS shard, ord
-      |FROM r ORDER BY ord""".stripMargin
+    s"""WITH tok AS (SELECT doc_id,
+       |    len(${tokenize("text")})::BIGINT
+       |      AS n_tok
+       |  FROM documents),
+       |o AS (SELECT doc_id, n_tok,
+       |    md5('w1:' || CAST(doc_id AS VARCHAR)) AS key FROM tok),
+       |r AS (SELECT doc_id, n_tok,
+       |    row_number() OVER (ORDER BY key, doc_id) AS ord,
+       |    sum(n_tok) OVER (ORDER BY key, doc_id
+       |      ROWS UNBOUNDED PRECEDING) AS cum
+       |  FROM o)
+       |SELECT doc_id, CAST((cum - n_tok) // 8000 AS BIGINT) AS shard, ord
+       |FROM r ORDER BY ord""".stripMargin
 
   // ---- CROSS-MODAL dataset assembly (text ⨝ media, masks composed) ----
 
@@ -626,36 +623,36 @@ object DataOpsQueries {
   }
 
   private val assembleMultimodalSql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |               regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |             FROM documents WHERE doc_id < 60),
-      |p0 AS (SELECT id, list_append(
-      |         list_transform(range(CAST(ceil(len(toks) / 25.0) AS INT)),
-      |           i -> array_to_string(toks[i*25+1 : i*25+25], ' ')),
-      |         'subscribe to our newsletter edition ' || (id % 3)) AS paras
-      |       FROM tok),
-      |paras AS (SELECT id, r['i'] AS idx, r['p'] AS para
-      |          FROM p0, unnest(list_transform(range(len(paras)),
-      |            i -> {'i': i, 'p': paras[i+1]})) AS t(r)),
-      |marked AS (SELECT id, idx, para,
-      |             row_number() OVER (PARTITION BY para
-      |                                ORDER BY id, idx) AS rn
-      |           FROM paras),
-      |clean AS (SELECT id,
-      |            coalesce(string_agg(CASE WHEN rn = 1 THEN para END,
-      |                                chr(10) ORDER BY idx), '')
-      |              AS clean_text
-      |          FROM marked GROUP BY id),
-      |media AS (SELECT doc_id, doc_id + 500000 AS media_id
-      |          FROM documents WHERE doc_id < 60
-      |          UNION ALL
-      |          SELECT doc_id, doc_id + 700000 FROM documents
-      |          WHERE doc_id < 60 AND doc_id % 5 = 0)
-      |SELECT m.doc_id, m.media_id, md5(c.clean_text) AS caption_h
-      |FROM media m JOIN clean c ON c.id = m.doc_id
-      |WHERE m.media_id < 700000
-      |  AND m.doc_id % 13 <> 7
-      |ORDER BY doc_id, media_id""".stripMargin
+    s"""WITH tok AS (SELECT doc_id AS id,
+       |               ${tokenize("text")} AS toks
+       |             FROM documents WHERE doc_id < 60),
+       |p0 AS (SELECT id, list_append(
+       |         list_transform(range(CAST(ceil(len(toks) / 25.0) AS INT)),
+       |           i -> array_to_string(toks[i*25+1 : i*25+25], ' ')),
+       |         'subscribe to our newsletter edition ' || (id % 3)) AS paras
+       |       FROM tok),
+       |paras AS (SELECT id, r['i'] AS idx, r['p'] AS para
+       |          FROM p0, unnest(list_transform(range(len(paras)),
+       |            i -> {'i': i, 'p': paras[i+1]})) AS t(r)),
+       |marked AS (SELECT id, idx, para,
+       |             row_number() OVER (PARTITION BY para
+       |                                ORDER BY id, idx) AS rn
+       |           FROM paras),
+       |clean AS (SELECT id,
+       |            coalesce(string_agg(CASE WHEN rn = 1 THEN para END,
+       |                                chr(10) ORDER BY idx), '')
+       |              AS clean_text
+       |          FROM marked GROUP BY id),
+       |media AS (SELECT doc_id, doc_id + 500000 AS media_id
+       |          FROM documents WHERE doc_id < 60
+       |          UNION ALL
+       |          SELECT doc_id, doc_id + 700000 FROM documents
+       |          WHERE doc_id < 60 AND doc_id % 5 = 0)
+       |SELECT m.doc_id, m.media_id, md5(c.clean_text) AS caption_h
+       |FROM media m JOIN clean c ON c.id = m.doc_id
+       |WHERE m.media_id < 700000
+       |  AND m.doc_id % 13 <> 7
+       |ORDER BY doc_id, media_id""".stripMargin
 
   private val assembleDatasetSql = {
     def q(re: String) = re.replace("'", "''")
@@ -669,7 +666,7 @@ object DataOpsQueries {
        |           '${q(TextAnalysis.phoneRe)}', '<PHONE>', 'g') AS ctext
        |  FROM documents),
        |tok AS (
-       |  SELECT *, regexp_split_to_array(lower(trim(ctext)), '\\s+') AS toks
+       |  SELECT *, ${tokenize("ctext")} AS toks
        |  FROM clean),
        |quality AS (
        |  SELECT *, len(toks) AS n_tok FROM tok
@@ -745,30 +742,28 @@ object DataOpsQueries {
   }
 
   private val tokenBudgetBySql =
-    """WITH t AS (SELECT source, doc_id, n_chars,
-      |             CAST(len(regexp_split_to_array(lower(trim(text)),
-      |                      '\s+')) AS BIGINT) AS n_tokens
-      |           FROM documents),
-      |c AS (SELECT source, doc_id, n_chars, n_tokens,
-      |        CAST(sum(n_tokens) OVER (PARTITION BY source
-      |             ORDER BY n_chars DESC, doc_id
-      |             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-      |      FROM t)
-      |SELECT source, doc_id, n_chars, n_tokens, cum_tokens
-      |FROM c WHERE cum_tokens <= 3000 + 500 * length(source)
-      |ORDER BY source, doc_id""".stripMargin
+    s"""WITH t AS (SELECT source, doc_id, n_chars,
+       |             CAST(len(${tokenize("text")}) AS BIGINT) AS n_tokens
+       |           FROM documents),
+       |c AS (SELECT source, doc_id, n_chars, n_tokens,
+       |        CAST(sum(n_tokens) OVER (PARTITION BY source
+       |             ORDER BY n_chars DESC, doc_id
+       |             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
+       |      FROM t)
+       |SELECT source, doc_id, n_chars, n_tokens, cum_tokens
+       |FROM c WHERE cum_tokens <= 3000 + 500 * length(source)
+       |ORDER BY source, doc_id""".stripMargin
 
   private val tokenBudgetSql =
-    """WITH t AS (SELECT doc_id, n_chars,
-      |                  CAST(len(regexp_split_to_array(lower(trim(text)),
-      |                           '\s+')) AS BIGINT) AS n_tokens
-      |           FROM documents),
-      |c AS (SELECT doc_id, n_chars, n_tokens,
-      |             CAST(sum(n_tokens) OVER (ORDER BY n_chars DESC, doc_id
-      |                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-      |      FROM t)
-      |SELECT doc_id, n_chars, n_tokens, cum_tokens
-      |FROM c WHERE cum_tokens <= 20000 ORDER BY doc_id""".stripMargin
+    s"""WITH t AS (SELECT doc_id, n_chars,
+       |                  CAST(len(${tokenize("text")}) AS BIGINT) AS n_tokens
+       |           FROM documents),
+       |c AS (SELECT doc_id, n_chars, n_tokens,
+       |             CAST(sum(n_tokens) OVER (ORDER BY n_chars DESC, doc_id
+       |                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
+       |      FROM t)
+       |SELECT doc_id, n_chars, n_tokens, cum_tokens
+       |FROM c WHERE cum_tokens <= 20000 ORDER BY doc_id""".stripMargin
 
   // ---- column profiling ----------------------------------------------------
   /** [[DataOps.profile]] over three heterogeneous lineitem columns
@@ -820,20 +815,19 @@ object DataOpsQueries {
       .orderBy("query_id", "rn")
 
   private val negativeSampleSql =
-    """WITH pool AS (
-      |  SELECT doc_id AS id FROM documents
-      |  ORDER BY md5('pool:' || CAST(doc_id AS VARCHAR)), id LIMIT 64),
-      |q AS (SELECT doc_id AS query_id FROM documents WHERE doc_id < 8),
-      |cand AS (SELECT query_id, id,
-      |           md5(CAST(query_id AS VARCHAR) || ':'
-      |               || CAST(id AS VARCHAR)) AS pk
-      |         FROM q CROSS JOIN pool WHERE query_id <> id),
-      |r AS (SELECT query_id, id,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY pk, id) AS INTEGER) AS rn
-      |      FROM cand)
-      |SELECT query_id, rn, id FROM r WHERE rn <= 5
-      |ORDER BY query_id, rn""".stripMargin
+    s"""WITH pool AS (
+       |  SELECT doc_id AS id FROM documents
+       |  ORDER BY md5('pool:' || CAST(doc_id AS VARCHAR)), id LIMIT 64),
+       |q AS (SELECT doc_id AS query_id FROM documents WHERE doc_id < 8),
+       |cand AS (SELECT query_id, id,
+       |           md5(CAST(query_id AS VARCHAR) || ':'
+       |               || CAST(id AS VARCHAR)) AS pk
+       |         FROM q CROSS JOIN pool WHERE query_id <> id),
+       |r AS (SELECT query_id, id,
+       |        CAST(${rankBy("pk, id")} AS INTEGER) AS rn
+       |      FROM cand)
+       |SELECT query_id, rn, id FROM r WHERE rn <= 5
+       |ORDER BY query_id, rn""".stripMargin
 
   // ---- DSIR importance-resampled selection --------------------------------
   /** [[DataOps.importanceWeights]] + [[DataOps.gumbelTopK]]: hashed
@@ -860,41 +854,41 @@ object DataOpsQueries {
   }
 
   private val dsirSelectSql =
-    """WITH tok AS (SELECT doc_id AS id, source,
-      |               regexp_split_to_array(lower(trim(text)), '\s+') AS tk
-      |             FROM documents),
-      |uni AS (SELECT id, source, unnest(tk) AS g FROM tok),
-      |bi AS (SELECT id, source, tk[i] || ' ' || tk[i + 1] AS g
-      |       FROM (SELECT id, source, tk,
-      |               unnest(range(1, len(tk))) AS i
-      |             FROM tok)),
-      |f AS (SELECT id, source,
-      |        ('0x' || substr(md5(g), 1, 12))::BIGINT % 512 AS b
-      |      FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)),
-      |fc AS (SELECT id, b, count(*) AS cnt FROM f GROUP BY 1, 2),
-      |rawt AS (SELECT b, count(*) AS rcnt FROM f GROUP BY 1),
-      |tgtt AS (SELECT b, count(*) AS tcnt FROM f
-      |         WHERE source IN ('src0', 'src1', 'src2', 'src3')
-      |         GROUP BY 1),
-      |rt AS (SELECT CAST(sum(rcnt) AS DOUBLE) AS rtot FROM rawt),
-      |tt AS (SELECT CAST(sum(tcnt) AS DOUBLE) AS ttot FROM tgtt),
-      |lr AS (SELECT rawt.b,
-      |         ln((coalesce(tcnt, 0) + 0.5) / (ttot + 0.5 * 512))
-      |         - ln((rcnt + 0.5) / (rtot + 0.5 * 512)) AS lr
-      |       FROM rawt LEFT JOIN tgtt ON rawt.b = tgtt.b, rt, tt),
-      |w AS (SELECT id, CAST(sum(cnt) AS BIGINT) AS n_feat,
-      |        round(sum(cnt * lr), 6) AS log_w
-      |      FROM fc JOIN lr USING (b) GROUP BY 1),
-      |g AS (SELECT id, n_feat, log_w,
-      |        round(log_w - ln(-ln(
-      |          ('0x' || substr(md5('dsir:' || CAST(id AS VARCHAR)),
-      |             1, 12))::BIGINT / 281474976710656.0)), 6) AS key
-      |      FROM w),
-      |r AS (SELECT *, CAST(row_number() OVER (ORDER BY key DESC, id)
-      |        AS INTEGER) AS rn
-      |      FROM g)
-      |SELECT rn, id AS doc_id, n_feat, log_w, key
-      |FROM r WHERE rn <= 100 ORDER BY rn""".stripMargin
+    s"""WITH tok AS (SELECT doc_id AS id, source,
+       |               ${tokenize("text")} AS tk
+       |             FROM documents),
+       |uni AS (SELECT id, source, unnest(tk) AS g FROM tok),
+       |bi AS (SELECT id, source, tk[i] || ' ' || tk[i + 1] AS g
+       |       FROM (SELECT id, source, tk,
+       |               unnest(range(1, len(tk))) AS i
+       |             FROM tok)),
+       |f AS (SELECT id, source,
+       |        ('0x' || substr(md5(g), 1, 12))::BIGINT % 512 AS b
+       |      FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)),
+       |fc AS (SELECT id, b, count(*) AS cnt FROM f GROUP BY 1, 2),
+       |rawt AS (SELECT b, count(*) AS rcnt FROM f GROUP BY 1),
+       |tgtt AS (SELECT b, count(*) AS tcnt FROM f
+       |         WHERE source IN ('src0', 'src1', 'src2', 'src3')
+       |         GROUP BY 1),
+       |rt AS (SELECT CAST(sum(rcnt) AS DOUBLE) AS rtot FROM rawt),
+       |tt AS (SELECT CAST(sum(tcnt) AS DOUBLE) AS ttot FROM tgtt),
+       |lr AS (SELECT rawt.b,
+       |         ln((coalesce(tcnt, 0) + 0.5) / (ttot + 0.5 * 512))
+       |         - ln((rcnt + 0.5) / (rtot + 0.5 * 512)) AS lr
+       |       FROM rawt LEFT JOIN tgtt ON rawt.b = tgtt.b, rt, tt),
+       |w AS (SELECT id, CAST(sum(cnt) AS BIGINT) AS n_feat,
+       |        round(sum(cnt * lr), 6) AS log_w
+       |      FROM fc JOIN lr USING (b) GROUP BY 1),
+       |g AS (SELECT id, n_feat, log_w,
+       |        round(log_w - ln(-ln(
+       |          ('0x' || substr(md5('dsir:' || CAST(id AS VARCHAR)),
+       |             1, 12))::BIGINT / 281474976710656.0)), 6) AS key
+       |      FROM w),
+       |r AS (SELECT *, CAST(row_number() OVER (ORDER BY key DESC, id)
+       |        AS INTEGER) AS rn
+       |      FROM g)
+       |SELECT rn, id AS doc_id, n_feat, log_w, key
+       |FROM r WHERE rn <= 100 ORDER BY rn""".stripMargin
 
   // ---- CCNet-style perplexity bucketing -----------------------------------
   /** [[DataOps.quantileBuckets]] over [[TextAnalysis.unigramLogProbs]]:
@@ -921,31 +915,31 @@ object DataOpsQueries {
   }
 
   private val pplBucketsSql =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |         unnest(regexp_split_to_array(lower(trim(text)), '\s+'))
-      |           AS term
-      |  FROM documents),
-      |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-      |tc AS (SELECT term, CAST(sum(tf) AS BIGINT) AS cnt FROM tf GROUP BY 1),
-      |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM tc),
-      |lp AS (SELECT doc_id,
-      |         round(sum(tf * ln(CAST(cnt AS DOUBLE) / total)) / sum(tf), 6)
-      |           AS lp
-      |       FROM tf JOIN tc USING (term), tot GROUP BY doc_id),
-      |s AS (SELECT d.source, lp.doc_id, lp.lp
-      |      FROM lp JOIN documents d USING (doc_id)),
-      |r AS (SELECT source, doc_id, lp,
-      |        row_number() OVER (PARTITION BY source
-      |                           ORDER BY lp DESC, doc_id) AS rk,
-      |        count(*) OVER (PARTITION BY source) AS n
-      |      FROM s),
-      |b AS (SELECT source,
-      |        CAST(floor((rk - 1) * 3.0 / n) AS INTEGER) AS bucket, lp
-      |      FROM r)
-      |SELECT source, bucket, count(*) AS n_docs,
-      |       min(lp) AS lp_min, max(lp) AS lp_max
-      |FROM b GROUP BY 1, 2 ORDER BY source, bucket""".stripMargin
+    s"""WITH toks AS (
+       |  SELECT doc_id,
+       |         unnest(${tokenize("text")})
+       |           AS term
+       |  FROM documents),
+       |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+       |tc AS (SELECT term, CAST(sum(tf) AS BIGINT) AS cnt FROM tf GROUP BY 1),
+       |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM tc),
+       |lp AS (SELECT doc_id,
+       |         round(sum(tf * ln(CAST(cnt AS DOUBLE) / total)) / sum(tf), 6)
+       |           AS lp
+       |       FROM tf JOIN tc USING (term), tot GROUP BY doc_id),
+       |s AS (SELECT d.source, lp.doc_id, lp.lp
+       |      FROM lp JOIN documents d USING (doc_id)),
+       |r AS (SELECT source, doc_id, lp,
+       |        row_number() OVER (PARTITION BY source
+       |                           ORDER BY lp DESC, doc_id) AS rk,
+       |        count(*) OVER (PARTITION BY source) AS n
+       |      FROM s),
+       |b AS (SELECT source,
+       |        CAST(floor((rk - 1) * 3.0 / n) AS INTEGER) AS bucket, lp
+       |      FROM r)
+       |SELECT source, bucket, count(*) AS n_docs,
+       |       min(lp) AS lp_min, max(lp) AS lp_max
+       |FROM b GROUP BY 1, 2 ORDER BY source, bucket""".stripMargin
 
   // ---- stratified eval-set sampling ---------------------------------------
   /** [[DataOps.stratifiedSample]]: 5 deterministic hash-draws per source
@@ -1032,26 +1026,20 @@ object DataOpsQueries {
   }
 
   private val hardNegativesSql =
-    """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      |           FROM embeddings WHERE vec_id < 8),
-      |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
-      |p AS (SELECT query_id, vec_id,
-      |             list_dot_product(qv, ev)
-      |               / sqrt(list_dot_product(qv, qv)
-      |                      * list_dot_product(ev, ev)) AS cos
-      |      FROM q, e),
-      |r AS (SELECT query_id, vec_id, cos,
-      |             row_number() OVER (PARTITION BY query_id
-      |                                ORDER BY cos DESC, vec_id) AS rank
-      |      FROM p),
-      |c AS (SELECT * FROM r WHERE rank <= 12),
-      |f AS (SELECT query_id, vec_id, cos,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY rank) AS INTEGER) AS rn
-      |      FROM c
-      |      WHERE vec_id <> query_id AND vec_id <> query_id + 1)
-      |SELECT query_id, rn, vec_id AS neighbor_id, round(cos, 6) AS cos
-      |FROM f WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
+    s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+       |           FROM embeddings WHERE vec_id < 8),
+       |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
+       |p AS (SELECT query_id, vec_id,
+       |             ${cosine("qv", "ev")} AS cos
+       |      FROM q, e),
+       |$cosRanked,
+       |c AS (SELECT * FROM r WHERE rank <= 12),
+       |f AS (SELECT query_id, vec_id, cos,
+       |        CAST(${rankBy("rank")} AS INTEGER) AS rn
+       |      FROM c
+       |      WHERE vec_id <> query_id AND vec_id <> query_id + 1)
+       |SELECT query_id, rn, vec_id AS neighbor_id, round(cos, 6) AS cos
+       |FROM f WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
 
   /** Heavy hitters ([[graft.ext.DataOps.heavyHitters]]): every token
     * occurring in ≥ 0.5% of the corpus token stream, with EXACT counts

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Gate, Tables}
+import OracleSql._
+import GateOps._
 import graft.ext.{Audio, Dedup, EmbeddingSearch, Multimodal, SemDedup, TextAnalysis}
 
 /** Gates for the training-data-pipeline extension surface (SURVEY §2.10):
@@ -35,11 +37,11 @@ object ExtQueries {
       .orderBy("source")
 
   private val tokenStatsSql =
-    """SELECT source, count(*) AS n_docs,
-      |       CAST(sum(len(regexp_split_to_array(lower(trim(text)), '\s+'))) AS BIGINT)
-      |         AS total_tokens,
-      |       avg(n_chars) AS avg_chars
-      |FROM documents GROUP BY source ORDER BY source""".stripMargin
+    s"""SELECT source, count(*) AS n_docs,
+       |       CAST(sum(len(${tokenize("text")})) AS BIGINT)
+       |         AS total_tokens,
+       |       avg(n_chars) AS avg_chars
+       |FROM documents GROUP BY source ORDER BY source""".stripMargin
 
   // ---- normalization fingerprint ----------------------------------------
   private def fingerprint(s: SparkSession, d: String): DataFrame =
@@ -69,7 +71,7 @@ object ExtQueries {
 
   private val qualityScoreSql =
     s"""WITH t AS (SELECT doc_id,
-       |             regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+       |             ${tokenize("text")} AS toks
        |           FROM documents)
        |SELECT doc_id,
        |       CAST(len(toks) AS INTEGER) AS n_tokens,
@@ -135,7 +137,7 @@ object ExtQueries {
 
   private val domainFilterSql =
     s"""WITH t AS (SELECT doc_id, source,
-       |             regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+       |             ${tokenize("text")} AS toks
        |           FROM documents),
        |q AS (SELECT doc_id, source,
        |        CAST(len(list_filter(toks, x -> x IN ($enList))) AS DOUBLE)
@@ -177,7 +179,7 @@ object ExtQueries {
       s"WHEN $conds THEN '$l'"
     }.mkString("\n         ")
     s"""WITH t AS (SELECT doc_id, lang,
-       |             regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+       |             ${tokenize("text")} AS toks
        |           FROM documents),
        |s AS (SELECT doc_id, lang,
        |            $scoreCols
@@ -641,22 +643,14 @@ object ExtQueries {
       .write.mode("overwrite").parquet(s"$in/d1")
     nw.filter(col("id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$in/d2")
-    val stream = s.readStream.schema("id LONG, t STRING")
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // fused dedup+admit: one batch encode feeds both the pair search
-        // and the appended derivatives (scoring completes eagerly before
-        // the append, so batch-boundary semantics are unchanged)
-        val pairs = graft.ext.DedupIndex.ingestBatch(s, idx, batch,
-          col("id"), col("t"), threshold = 0.5)
-        pairs.write.mode("append").parquet(out)
-      }
-      .start()
-    q.awaitTermination()
+    drain(s, "id LONG, t STRING", in, ckpt) { (batch, _) =>
+      // fused dedup+admit: one batch encode feeds both the pair search
+      // and the appended derivatives (scoring completes eagerly before
+      // the append, so batch-boundary semantics are unchanged)
+      val pairs = graft.ext.DedupIndex.ingestBatch(s, idx, batch,
+        col("id"), col("t"), threshold = 0.5)
+      pairs.write.mode("append").parquet(out)
+    }
     s.read.schema("id_a LONG, id_b LONG, jaccard DOUBLE").parquet(out)
       .orderBy("id_a", "id_b")
   }
@@ -675,43 +669,40 @@ object ExtQueries {
       .orderBy("id")
 
   private val repeatedSpansSql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |               regexp_split_to_array(lower(trim(text)), '\s+')
-      |                 AS toks
-      |             FROM documents),
-      |tk AS (SELECT id, toks, len(toks) AS n_tokens FROM tok),
-      |g0 AS (SELECT id, unnest(list_transform(range(n_tokens - 4),
-      |         i -> struct_pack(pos := i,
-      |                h := CAST(('0x' || substr(md5(
-      |                       array_to_string(toks[i+1:i+5], ' ')), 1, 12))
-      |                     AS BIGINT)))) AS u
-      |       FROM tk WHERE n_tokens >= 5),
-      |g AS (SELECT id, u.pos AS pos, u.h AS h FROM g0),
-      |hot AS (SELECT h FROM g GROUP BY h HAVING count(*) >= 2),
-      |hits AS (SELECT g.id, g.pos FROM g JOIN hot USING (h)),
-      |ordered AS (SELECT id, pos,
-      |              max(pos + 5) OVER (PARTITION BY id ORDER BY pos
-      |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-      |                AS pme
-      |            FROM hits),
-      |isl AS (SELECT id, pos,
-      |          sum(CASE WHEN pme IS NULL OR pos > pme THEN 1 ELSE 0 END)
-      |            OVER (PARTITION BY id ORDER BY pos
-      |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |            AS island
-      |        FROM ordered),
-      |spans AS (SELECT id, island, min(pos) AS s, max(pos) + 5 AS e
-      |          FROM isl GROUP BY 1, 2),
-      |cov AS (SELECT id, count(*) AS n_spans,
-      |          CAST(sum(e - s) AS BIGINT) AS covered
-      |        FROM spans GROUP BY id)
-      |SELECT tk.id, tk.n_tokens,
-      |       CAST(coalesce(cov.n_spans, 0) AS BIGINT) AS n_spans,
-      |       CAST(coalesce(cov.covered, 0) AS BIGINT) AS covered_tokens,
-      |       round(CAST(coalesce(cov.covered, 0) AS DOUBLE) / tk.n_tokens,
-      |             4) AS coverage
-      |FROM tk LEFT JOIN cov USING (id)
-      |ORDER BY id""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |tk AS (SELECT id, toks, len(toks) AS n_tokens FROM tok),
+       |g0 AS (SELECT id, unnest(list_transform(range(n_tokens - 4),
+       |         i -> struct_pack(pos := i,
+       |                h := CAST(('0x' || substr(md5(
+       |                       array_to_string(toks[i+1:i+5], ' ')), 1, 12))
+       |                     AS BIGINT)))) AS u
+       |       FROM tk WHERE n_tokens >= 5),
+       |g AS (SELECT id, u.pos AS pos, u.h AS h FROM g0),
+       |hot AS (SELECT h FROM g GROUP BY h HAVING count(*) >= 2),
+       |hits AS (SELECT g.id, g.pos FROM g JOIN hot USING (h)),
+       |ordered AS (SELECT id, pos,
+       |              max(pos + 5) OVER (PARTITION BY id ORDER BY pos
+       |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+       |                AS pme
+       |            FROM hits),
+       |isl AS (SELECT id, pos,
+       |          sum(CASE WHEN pme IS NULL OR pos > pme THEN 1 ELSE 0 END)
+       |            OVER (PARTITION BY id ORDER BY pos
+       |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+       |            AS island
+       |        FROM ordered),
+       |spans AS (SELECT id, island, min(pos) AS s, max(pos) + 5 AS e
+       |          FROM isl GROUP BY 1, 2),
+       |cov AS (SELECT id, count(*) AS n_spans,
+       |          CAST(sum(e - s) AS BIGINT) AS covered
+       |        FROM spans GROUP BY id)
+       |SELECT tk.id, tk.n_tokens,
+       |       CAST(coalesce(cov.n_spans, 0) AS BIGINT) AS n_spans,
+       |       CAST(coalesce(cov.covered, 0) AS BIGINT) AS covered_tokens,
+       |       round(CAST(coalesce(cov.covered, 0) AS DOUBLE) / tk.n_tokens,
+       |             4) AS coverage
+       |FROM tk LEFT JOIN cov USING (id)
+       |ORDER BY id""".stripMargin
 
   /** Repeated-span REMOVAL ([[graft.ext.TextAnalysis.scrubRepeatedSpans]]):
     * the transform the coverage report motivates — tokens inside any
@@ -727,45 +718,42 @@ object ExtQueries {
       .orderBy("id")
 
   private val scrubSpansSql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |               regexp_split_to_array(lower(trim(text)), '\s+')
-      |                 AS toks
-      |             FROM documents),
-      |tk AS (SELECT id, toks, len(toks) AS n_tokens FROM tok),
-      |g0 AS (SELECT id, unnest(list_transform(range(n_tokens - 4),
-      |         i -> struct_pack(pos := i,
-      |                h := CAST(('0x' || substr(md5(
-      |                       array_to_string(toks[i+1:i+5], ' ')), 1, 12))
-      |                     AS BIGINT)))) AS u
-      |       FROM tk WHERE n_tokens >= 5),
-      |g AS (SELECT id, u.pos AS pos, u.h AS h FROM g0),
-      |hot AS (SELECT h FROM g GROUP BY h HAVING count(*) >= 2),
-      |hits AS (SELECT g.id, g.pos FROM g JOIN hot USING (h)),
-      |ordered AS (SELECT id, pos,
-      |              max(pos + 5) OVER (PARTITION BY id ORDER BY pos
-      |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-      |                AS pme
-      |            FROM hits),
-      |isl AS (SELECT id, pos,
-      |          sum(CASE WHEN pme IS NULL OR pos > pme THEN 1 ELSE 0 END)
-      |            OVER (PARTITION BY id ORDER BY pos
-      |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |            AS island
-      |        FROM ordered),
-      |spans AS (SELECT id, island, min(pos) AS s, max(pos) + 5 AS e
-      |          FROM isl GROUP BY 1, 2),
-      |sarr AS (SELECT id, array_agg(struct_pack(s := s, e := e)) AS sps
-      |         FROM spans GROUP BY id),
-      |kept AS (SELECT tk.id, tk.n_tokens,
-      |           list_filter(list_transform(range(len(toks)),
-      |             i -> CASE WHEN sps IS NOT NULL AND len(list_filter(sps,
-      |                    sp -> sp.s <= i AND i < sp.e)) > 0
-      |                  THEN NULL ELSE toks[i+1] END),
-      |             x -> x IS NOT NULL) AS kt
-      |         FROM tk LEFT JOIN sarr ON sarr.id = tk.id)
-      |SELECT id, n_tokens, CAST(len(kt) AS BIGINT) AS kept_tokens,
-      |       md5(coalesce(array_to_string(kt, ' '), '')) AS clean_md5
-      |FROM kept ORDER BY id""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |tk AS (SELECT id, toks, len(toks) AS n_tokens FROM tok),
+       |g0 AS (SELECT id, unnest(list_transform(range(n_tokens - 4),
+       |         i -> struct_pack(pos := i,
+       |                h := CAST(('0x' || substr(md5(
+       |                       array_to_string(toks[i+1:i+5], ' ')), 1, 12))
+       |                     AS BIGINT)))) AS u
+       |       FROM tk WHERE n_tokens >= 5),
+       |g AS (SELECT id, u.pos AS pos, u.h AS h FROM g0),
+       |hot AS (SELECT h FROM g GROUP BY h HAVING count(*) >= 2),
+       |hits AS (SELECT g.id, g.pos FROM g JOIN hot USING (h)),
+       |ordered AS (SELECT id, pos,
+       |              max(pos + 5) OVER (PARTITION BY id ORDER BY pos
+       |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+       |                AS pme
+       |            FROM hits),
+       |isl AS (SELECT id, pos,
+       |          sum(CASE WHEN pme IS NULL OR pos > pme THEN 1 ELSE 0 END)
+       |            OVER (PARTITION BY id ORDER BY pos
+       |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+       |            AS island
+       |        FROM ordered),
+       |spans AS (SELECT id, island, min(pos) AS s, max(pos) + 5 AS e
+       |          FROM isl GROUP BY 1, 2),
+       |sarr AS (SELECT id, array_agg(struct_pack(s := s, e := e)) AS sps
+       |         FROM spans GROUP BY id),
+       |kept AS (SELECT tk.id, tk.n_tokens,
+       |           list_filter(list_transform(range(len(toks)),
+       |             i -> CASE WHEN sps IS NOT NULL AND len(list_filter(sps,
+       |                    sp -> sp.s <= i AND i < sp.e)) > 0
+       |                  THEN NULL ELSE toks[i+1] END),
+       |             x -> x IS NOT NULL) AS kt
+       |         FROM tk LEFT JOIN sarr ON sarr.id = tk.id)
+       |SELECT id, n_tokens, CAST(len(kt) AS BIGINT) AS kept_tokens,
+       |       md5(coalesce(array_to_string(kt, ' '), '')) AS clean_md5
+       |FROM kept ORDER BY id""".stripMargin
 
   /** df-drift re-verification ([[graft.ext.DedupIndex.reverifyDrift]]):
     * re-delivering every 7th document pushes its shingles' document
@@ -882,30 +870,21 @@ object ExtQueries {
     docs.select(col("doc_id").as("id"), col("doc_id").as("cluster"))
       .write.mode("overwrite").parquet(s"$lab/v0")
     val last = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stream = s.readStream.schema("id LONG, t STRING")
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // label versions key on the CHECKPOINTED batchId, not a driver
-        // counter: a replayed batch b re-reads v(b) and overwrites
-        // v(b+1) — the fold is retry-idempotent, as a production
-        // maintenance loop must be
-        val pairs = graft.ext.DedupIndex.ingestBatch(s, idx, batch,
-          col("id"), col("t"), threshold = 0.5)
-        Dedup.incrementalComponents(
-            s.read.parquet(s"$lab/v$batchId"),
-            batch.select(col("id")),
-            pairs.select("id_a", "id_b"),
-            parallelism = Some(8))
-          .write.mode("overwrite").parquet(s"$lab/v${batchId + 1}")
-        last.set(batchId + 1)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(s, "id LONG, t STRING", in, ckpt) { (batch, batchId) =>
+      // label versions key on the CHECKPOINTED batchId, not a driver
+      // counter: a replayed batch b re-reads v(b) and overwrites
+      // v(b+1) — the fold is retry-idempotent, as a production
+      // maintenance loop must be
+      val pairs = graft.ext.DedupIndex.ingestBatch(s, idx, batch,
+        col("id"), col("t"), threshold = 0.5)
+      Dedup.incrementalComponents(
+          s.read.parquet(s"$lab/v$batchId"),
+          batch.select(col("id")),
+          pairs.select("id_a", "id_b"),
+          parallelism = Some(8))
+        .write.mode("overwrite").parquet(s"$lab/v${batchId + 1}")
+      last.set(batchId + 1)
+    }
     s.read.parquet(s"$lab/v${last.get()}").orderBy("id")
   }
 
@@ -1024,38 +1003,25 @@ object ExtQueries {
   }
 
   private val embedQueryExtSql =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
-      |q AS (SELECT -vec_id - 1 AS query_id, list_reverse(ev) AS qv
-      |      FROM e WHERE vec_id < 5),
-      |p AS (SELECT query_id, vec_id,
-      |             list_dot_product(qv, ev)
-      |               / sqrt(list_dot_product(qv, qv)
-      |                      * list_dot_product(ev, ev)) AS cos
-      |      FROM q, e),
-      |r AS (SELECT query_id, vec_id, cos,
-      |             row_number() OVER (PARTITION BY query_id
-      |                                ORDER BY cos DESC, vec_id) AS rank
-      |      FROM p)
-      |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank
-      |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
+       |q AS (SELECT -vec_id - 1 AS query_id, list_reverse(ev) AS qv
+       |      FROM e WHERE vec_id < 5),
+       |p AS (SELECT query_id, vec_id,
+       |             ${cosine("qv", "ev")} AS cos
+       |      FROM q, e),
+       |$cosRanked
+       |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
+       |       CAST(rank AS INTEGER) AS rank
+       |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
 
   private val embedTopKSql =
-    """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      |           FROM embeddings WHERE vec_id < 10),
-      |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
-      |p AS (SELECT query_id, vec_id,
-      |             list_dot_product(qv, ev)
-      |               / sqrt(list_dot_product(qv, qv)
-      |                      * list_dot_product(ev, ev)) AS cos
-      |      FROM q, e WHERE vec_id <> query_id),
-      |r AS (SELECT query_id, vec_id, cos,
-      |             row_number() OVER (PARTITION BY query_id
-      |                                ORDER BY cos DESC, vec_id) AS rank
-      |      FROM p)
-      |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank
-      |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+    s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+       |           FROM embeddings WHERE vec_id < 10),
+       |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
+       |p AS (SELECT query_id, vec_id,
+       |             ${cosine("qv", "ev")} AS cos
+       |      FROM q, e WHERE vec_id <> query_id),
+       |$cosTop5""".stripMargin
 
   /** The LSH pipeline is fully deterministic — seeded hyperplanes, exact
     * sign tests, sequential-fold dot products — so instead of a recall
@@ -1081,17 +1047,9 @@ object ExtQueries {
        |q AS (SELECT vec_id AS query_id, v AS qv, bucket
        |      FROM b WHERE vec_id < 10),
        |p AS (SELECT query_id, b.vec_id,
-       |             list_dot_product(qv, b.v)
-       |               / sqrt(list_dot_product(qv, qv)
-       |                      * list_dot_product(b.v, b.v)) AS cos
+       |             ${cosine("qv", "b.v")} AS cos
        |      FROM q JOIN b USING (bucket) WHERE b.vec_id <> q.query_id),
-       |r AS (SELECT query_id, vec_id, cos,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY cos DESC, vec_id) AS rank
-       |      FROM p)
-       |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
-       |       CAST(rank AS INTEGER) AS rank
-       |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+       |$cosTop5""".stripMargin
   }
 
   /** JL random-projection search ([[EmbeddingSearch.projectedTopK]]):
@@ -1117,17 +1075,9 @@ object ExtQueries {
        |q AS (SELECT vec_id AS query_id, pv AS qv FROM pr
        |      WHERE vec_id < 10),
        |p AS (SELECT query_id, pr.vec_id,
-       |        list_dot_product(qv, pr.pv)
-       |          / sqrt(list_dot_product(qv, qv)
-       |                 * list_dot_product(pr.pv, pr.pv)) AS cos
+       |        ${cosine("qv", "pr.pv")} AS cos
        |      FROM q, pr WHERE pr.vec_id <> q.query_id),
-       |r AS (SELECT query_id, vec_id, cos,
-       |        row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cos DESC, vec_id) AS rank
-       |      FROM p)
-       |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
-       |       CAST(rank AS INTEGER) AS rank
-       |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+       |$cosTop5""".stripMargin
   }
 
   /** Multi-probe LSH ([[EmbeddingSearch.lshTopKMultiProbe]], Lv et al.
@@ -1159,17 +1109,9 @@ object ExtQueries {
        |             unnest($probes) AS bucket
        |      FROM b WHERE vec_id < 10),
        |p AS (SELECT query_id, b.vec_id,
-       |             list_dot_product(qv, b.v)
-       |               / sqrt(list_dot_product(qv, qv)
-       |                      * list_dot_product(b.v, b.v)) AS cos
+       |             ${cosine("qv", "b.v")} AS cos
        |      FROM q JOIN b USING (bucket) WHERE b.vec_id <> q.query_id),
-       |r AS (SELECT query_id, vec_id, cos,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY cos DESC, vec_id) AS rank
-       |      FROM p)
-       |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
-       |       CAST(rank AS INTEGER) AS rank
-       |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+       |$cosTop5""".stripMargin
   }
 
   /** (query_id, recall_ok) for an ANN result vs brute-force top-k — used
@@ -1204,16 +1146,12 @@ object ExtQueries {
   }
 
   private val embedDupPairsSql =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-      |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-      |       round(list_dot_product(a.v, b.v)
-      |         / sqrt(list_dot_product(a.v, a.v)
-      |                * list_dot_product(b.v, b.v)), 6) AS cos
-      |FROM e a JOIN e b ON a.vec_id < b.vec_id
-      |WHERE list_dot_product(a.v, b.v)
-      |        / sqrt(list_dot_product(a.v, a.v)
-      |               * list_dot_product(b.v, b.v)) >= 0.45
-      |ORDER BY id_a, id_b""".stripMargin
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
+       |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+       |       round(${cosine("a.v", "b.v")}, 6) AS cos
+       |FROM e a JOIN e b ON a.vec_id < b.vec_id
+       |WHERE ${cosine("a.v", "b.v")} >= 0.45
+       |ORDER BY id_a, id_b""".stripMargin
 
   /** SemDeDup semantic-dedup gate ([[graft.ext.SemDedup]], Abbas et al.
     * 2023): coarse-cluster on max-cosine against 8 deterministic seed
@@ -1228,30 +1166,26 @@ object ExtQueries {
       .orderBy("vec_id")
 
   private val semDedupSql =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |s AS (SELECT vec_id AS sid, v AS sv FROM e WHERE vec_id < 8),
-      |cx AS (SELECT e.vec_id, s.sid,
-      |        list_dot_product(e.v, s.sv)
-      |          / sqrt(list_dot_product(e.v, e.v)
-      |                 * list_dot_product(s.sv, s.sv)) AS c
-      |       FROM e, s),
-      |asg AS (SELECT vec_id, sid AS cluster FROM (
-      |          SELECT vec_id, sid,
-      |                 row_number() OVER (PARTITION BY vec_id
-      |                                    ORDER BY c DESC, sid) AS rn
-      |          FROM cx) WHERE rn = 1),
-      |d AS (SELECT DISTINCT b2.vec_id AS dup_id
-      |      FROM asg a2
-      |      JOIN asg b2 ON a2.cluster = b2.cluster
-      |                 AND a2.vec_id < b2.vec_id
-      |      JOIN e ea ON ea.vec_id = a2.vec_id
-      |      JOIN e eb ON eb.vec_id = b2.vec_id
-      |      WHERE list_dot_product(ea.v, eb.v)
-      |              / sqrt(list_dot_product(ea.v, ea.v)
-      |                     * list_dot_product(eb.v, eb.v)) >= 0.4)
-      |SELECT g.vec_id, g.cluster, (d.dup_id IS NOT NULL) AS is_dup
-      |FROM asg g LEFT JOIN d ON d.dup_id = g.vec_id
-      |ORDER BY g.vec_id""".stripMargin
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |s AS (SELECT vec_id AS sid, v AS sv FROM e WHERE vec_id < 8),
+       |cx AS (SELECT e.vec_id, s.sid,
+       |        ${cosine("e.v", "s.sv")} AS c
+       |       FROM e, s),
+       |asg AS (SELECT vec_id, sid AS cluster FROM (
+       |          SELECT vec_id, sid,
+       |                 row_number() OVER (PARTITION BY vec_id
+       |                                    ORDER BY c DESC, sid) AS rn
+       |          FROM cx) WHERE rn = 1),
+       |d AS (SELECT DISTINCT b2.vec_id AS dup_id
+       |      FROM asg a2
+       |      JOIN asg b2 ON a2.cluster = b2.cluster
+       |                 AND a2.vec_id < b2.vec_id
+       |      JOIN e ea ON ea.vec_id = a2.vec_id
+       |      JOIN e eb ON eb.vec_id = b2.vec_id
+       |      WHERE ${cosine("ea.v", "eb.v")} >= 0.4)
+       |SELECT g.vec_id, g.cluster, (d.dup_id IS NOT NULL) AS is_dup
+       |FROM asg g LEFT JOIN d ON d.dup_id = g.vec_id
+       |ORDER BY g.vec_id""".stripMargin
 
   // ---- vector centroid aggregate -----------------------------------------
   /** Per-group embedding centroids via `ml.stat.Summarizer` — a true
@@ -1532,7 +1466,7 @@ object ExtQueries {
          |  FROM $prev)""".stripMargin
     }
     s"""WITH words AS (SELECT unnest(
-       |    regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
+       |    ${tokenize("text")}) AS w
        |  FROM documents),
        |wc AS MATERIALIZED (SELECT w, count(*) AS cnt FROM words
        |  WHERE w <> '' GROUP BY w),
@@ -1637,58 +1571,58 @@ object ExtQueries {
   }
 
   private val bpeLargeSql =
-    """WITH RECURSIVE
-      |tok AS (SELECT regexp_split_to_array(lower(trim(text)), '\s+')
-      |          AS toks
-      |        FROM documents),
-      |wb AS (SELECT unnest(list_transform(range(len(toks)-1),
-      |         i -> toks[CAST(i+1 AS INT)] || toks[CAST(i+2 AS INT)]))
-      |         AS w
-      |       FROM tok),
-      |wc AS MATERIALIZED (
-      |  SELECT w, count(*) AS cnt FROM wb
-      |  WHERE w <> '' AND regexp_matches(w, '^[a-z]+$')
-      |    AND NOT regexp_matches(w,
-      |      'aaaa|bbbb|cccc|dddd|eeee|ffff|gggg|hhhh|iiii|jjjj|kkkk|llll|mmmm|nnnn|oooo|pppp|qqqq|rrrr|ssss|tttt|uuuu|vvvv|wwww|xxxx|yyyy|zzzz')
-      |  GROUP BY w),
-      |topw AS MATERIALIZED (
-      |  SELECT w, row_number() OVER (ORDER BY cnt DESC, w) AS wo
-      |  FROM wc WHERE length(w) >= 2
-      |  ORDER BY cnt DESC, w LIMIT 400),
-      |chain AS (
-      |  SELECT wo, CAST(t.i AS INT) AS i,
-      |         substr(w, 1, CAST(t.i AS INT)) AS l,
-      |         substr(w, CAST(t.i AS INT) + 1, 1) AS r
-      |  FROM topw, unnest(range(1, length(w))) AS t(i)),
-      |dd AS (
-      |  SELECT l, r, wo, i,
-      |         row_number() OVER (PARTITION BY l, r ORDER BY wo, i) AS occ
-      |  FROM chain),
-      |merges AS MATERIALIZED (
-      |  SELECT l, r, row_number() OVER (ORDER BY wo, i) AS rank
-      |  FROM dd WHERE occ = 1
-      |  QUALIFY rank <= 1000),
-      |top200 AS MATERIALIZED (
-      |  SELECT w, cnt FROM wc ORDER BY cnt DESC, w LIMIT 200),
-      |seg AS (
-      |  SELECT w,
-      |    ' ' || array_to_string(list_transform(range(length(w)),
-      |      i -> substr(w, CAST(i+1 AS INT), 1)), ' ') || ' ' AS state,
-      |    0 AS r
-      |  FROM top200
-      |  UNION ALL
-      |  SELECT s.w,
-      |    replace(replace(replace(s.state,
-      |      ' ' || m.l || ' ' || m.r || ' ', ' ' || m.l || m.r || ' '),
-      |      ' ' || m.l || ' ' || m.r || ' ', ' ' || m.l || m.r || ' '),
-      |      ' ' || m.l || ' ' || m.r || ' ', ' ' || m.l || m.r || ' ')
-      |      AS state,
-      |    s.r + 1
-      |  FROM seg s JOIN merges m ON m.rank = s.r + 1)
-      |SELECT t.w, t.cnt, trim(s.state) AS pieces_str
-      |FROM seg s JOIN top200 t USING (w)
-      |WHERE s.r = (SELECT max(rank) FROM merges)
-      |ORDER BY w""".stripMargin
+    s"""WITH RECURSIVE
+       |tok AS (SELECT ${tokenize("text")}
+       |          AS toks
+       |        FROM documents),
+       |wb AS (SELECT unnest(list_transform(range(len(toks)-1),
+       |         i -> toks[CAST(i+1 AS INT)] || toks[CAST(i+2 AS INT)]))
+       |         AS w
+       |       FROM tok),
+       |wc AS MATERIALIZED (
+       |  SELECT w, count(*) AS cnt FROM wb
+       |  WHERE w <> '' AND regexp_matches(w, '^[a-z]+$$')
+       |    AND NOT regexp_matches(w,
+       |      'aaaa|bbbb|cccc|dddd|eeee|ffff|gggg|hhhh|iiii|jjjj|kkkk|llll|mmmm|nnnn|oooo|pppp|qqqq|rrrr|ssss|tttt|uuuu|vvvv|wwww|xxxx|yyyy|zzzz')
+       |  GROUP BY w),
+       |topw AS MATERIALIZED (
+       |  SELECT w, row_number() OVER (ORDER BY cnt DESC, w) AS wo
+       |  FROM wc WHERE length(w) >= 2
+       |  ORDER BY cnt DESC, w LIMIT 400),
+       |chain AS (
+       |  SELECT wo, CAST(t.i AS INT) AS i,
+       |         substr(w, 1, CAST(t.i AS INT)) AS l,
+       |         substr(w, CAST(t.i AS INT) + 1, 1) AS r
+       |  FROM topw, unnest(range(1, length(w))) AS t(i)),
+       |dd AS (
+       |  SELECT l, r, wo, i,
+       |         row_number() OVER (PARTITION BY l, r ORDER BY wo, i) AS occ
+       |  FROM chain),
+       |merges AS MATERIALIZED (
+       |  SELECT l, r, row_number() OVER (ORDER BY wo, i) AS rank
+       |  FROM dd WHERE occ = 1
+       |  QUALIFY rank <= 1000),
+       |top200 AS MATERIALIZED (
+       |  SELECT w, cnt FROM wc ORDER BY cnt DESC, w LIMIT 200),
+       |seg AS (
+       |  SELECT w,
+       |    ' ' || array_to_string(list_transform(range(length(w)),
+       |      i -> substr(w, CAST(i+1 AS INT), 1)), ' ') || ' ' AS state,
+       |    0 AS r
+       |  FROM top200
+       |  UNION ALL
+       |  SELECT s.w,
+       |    replace(replace(replace(s.state,
+       |      ' ' || m.l || ' ' || m.r || ' ', ' ' || m.l || m.r || ' '),
+       |      ' ' || m.l || ' ' || m.r || ' ', ' ' || m.l || m.r || ' '),
+       |      ' ' || m.l || ' ' || m.r || ' ', ' ' || m.l || m.r || ' ')
+       |      AS state,
+       |    s.r + 1
+       |  FROM seg s JOIN merges m ON m.rank = s.r + 1)
+       |SELECT t.w, t.cnt, trim(s.state) AS pieces_str
+       |FROM seg s JOIN top200 t USING (w)
+       |WHERE s.r = (SELECT max(rank) FROM merges)
+       |ORDER BY w""".stripMargin
 
   /** Multinomial Naive Bayes language classifier ([[graft.ext.Classify]]):
     * train with add-one smoothing on the ⅔ split (doc_id % 3 ≠ 0,
@@ -1947,19 +1881,11 @@ object ExtQueries {
       .write.mode("overwrite").parquet(s"$in/d1")
     test.filter(col("doc_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$in/d2")
-    val stream = s.readStream.schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ext.Classify.nbPredict(model, batch, col("doc_id"),
-            col("text"))
-          .write.mode("append").parquet(out)
-      }
-      .start()
-    q.awaitTermination()
+    drain(s, "doc_id LONG, text STRING", in, ckpt) { (batch, _) =>
+      graft.ext.Classify.nbPredict(model, batch, col("doc_id"),
+          col("text"))
+        .write.mode("append").parquet(out)
+    }
     s.read.parquet(out)
       .withColumnRenamed("id", "doc_id")
       .orderBy("doc_id")
@@ -2091,24 +2017,24 @@ object ExtQueries {
   }
 
   private val tfidfTopSql =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |         unnest(regexp_split_to_array(lower(trim(text)), '\s+'))
-      |           AS term
-      |  FROM documents),
-      |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-      |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |n AS (SELECT count(*) AS n_docs FROM documents),
-      |sc AS (SELECT doc_id, term, tf, df,
-      |              round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) AS score
-      |       FROM tf JOIN df USING (term), n
-      |       WHERE doc_id < 20),
-      |r AS (SELECT *, CAST(row_number() OVER
-      |        (PARTITION BY doc_id ORDER BY score DESC, term) AS INTEGER)
-      |        AS rn
-      |      FROM sc)
-      |SELECT doc_id, rn, term, tf, df, score
-      |FROM r WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin
+    s"""WITH toks AS (
+       |  SELECT doc_id,
+       |         unnest(${tokenize("text")})
+       |           AS term
+       |  FROM documents),
+       |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+       |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+       |n AS (SELECT count(*) AS n_docs FROM documents),
+       |sc AS (SELECT doc_id, term, tf, df,
+       |              round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) AS score
+       |       FROM tf JOIN df USING (term), n
+       |       WHERE doc_id < 20),
+       |r AS (SELECT *, CAST(row_number() OVER
+       |        (PARTITION BY doc_id ORDER BY score DESC, term) AS INTEGER)
+       |        AS rn
+       |      FROM sc)
+       |SELECT doc_id, rn, term, tf, df, score
+       |FROM r WHERE rn <= 3 ORDER BY doc_id, rn""".stripMargin
 
   // ---- BM25 full-text retrieval -------------------------------------------
   /** Shared query batch for the BM25 gates: the first 8 distinct tokens
@@ -2201,9 +2127,7 @@ object ExtQueries {
 
   private val searchFederateSql = {
     def bmBlock(src: String, corpus: String): String =
-      s"""tok_$src AS (SELECT doc_id AS id,
-         |    regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-         |  FROM $corpus),
+      s"""${docTokens(s"tok_$src", s"$corpus")},
          |tf_$src AS (SELECT id, term, count(*) AS tf
          |  FROM (SELECT id, unnest(toks) AS term FROM tok_$src)
          |  GROUP BY 1, 2),
@@ -2213,9 +2137,7 @@ object ExtQueries {
          |st_$src AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl
          |  FROM dl_$src),
          |sc_$src AS (SELECT q.query_id, tf.id,
-         |    sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-         |        * tf.tf * 2.2
-         |        / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw,
+         |    sum($bm25Weight) AS score_raw,
          |    count(*) AS matched
          |  FROM q JOIN tf_$src tf USING (term)
          |  JOIN lex_$src lex USING (term)
@@ -2223,13 +2145,10 @@ object ExtQueries {
          |  GROUP BY 1, 2),
          |h_$src AS (SELECT query_id, id, matched,
          |    round(score_raw, 6) AS score
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-         |          ORDER BY round(score_raw, 6) DESC, id) AS rn
+         |  FROM (SELECT *, ${rankBy("round(score_raw, 6) DESC, id")} AS rn
          |        FROM sc_$src)
          |  WHERE rn <= 20)""".stripMargin
-    s"""WITH qtok AS (SELECT doc_id AS id,
-       |    regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-       |  FROM documents),
+    s"""WITH ${docTokens("qtok", "documents")},
        |q AS (SELECT id AS query_id,
        |        unnest(list_distinct(toks[1:8])) AS term
        |      FROM qtok WHERE id < 8),
@@ -2243,8 +2162,7 @@ object ExtQueries {
        |        SELECT * FROM h_b
        |        WHERE NOT (id % 5 = 0 AND id % 3 <> 1)),
        |fin AS (SELECT query_id,
-       |          CAST(row_number() OVER (PARTITION BY query_id
-       |            ORDER BY score DESC, id) AS INTEGER) AS rn,
+       |          CAST(${rankBy("score DESC, id")} AS INTEGER) AS rn,
        |          id, matched, score
        |        FROM fed)
        |SELECT query_id, rn, id, matched, score
@@ -2259,34 +2177,19 @@ object ExtQueries {
   }
 
   private val bm25CappedSql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |               regexp_split_to_array(lower(trim(text)), '\s+')
-      |                 AS toks
-      |             FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q AS (SELECT id AS query_id,
-      |        unnest(list_distinct(toks[1:8])) AS term
-      |      FROM tok WHERE id < 8),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw,
-      |         count(*) AS matched
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       WHERE lex.df <= CAST(floor(st.n_docs * 78 / 100.0) AS BIGINT)
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id, matched, round(score_raw, 6) AS score,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc)
-      |SELECT query_id, rn, id, matched, score
-      |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |$bm25Stats,
+       |q AS (SELECT id AS query_id,
+       |        unnest(list_distinct(toks[1:8])) AS term
+       |      FROM tok WHERE id < 8),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw,
+       |         count(*) AS matched
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       WHERE lex.df <= CAST(floor(st.n_docs * 78 / 100.0) AS BIGINT)
+       |       GROUP BY 1, 2),
+       |$bm25Top5""".stripMargin
 
   /** Incremental index maintenance ([[graft.ext.TextSearch.appendDocs]]):
     * a delivery (every 9th doc, text perturbed, ids offset) is admitted
@@ -2312,40 +2215,24 @@ object ExtQueries {
   }
 
   private val bm25AppendSql =
-    """WITH corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 300000, text || ' extra retrieval tail'
-      |  FROM documents WHERE doc_id % 9 = 0),
-      |tok AS (SELECT doc_id AS id,
-      |          regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |        FROM corpus),
-      |qtok AS (SELECT doc_id AS id,
-      |           regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |         FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q AS (SELECT id AS query_id,
-      |        unnest(list_distinct(toks[1:8])) AS term
-      |      FROM qtok WHERE id < 8),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw,
-      |         count(*) AS matched
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id, matched, round(score_raw, 6) AS score,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc)
-      |SELECT query_id, rn, id, matched, score
-      |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
+    s"""WITH corpus AS (
+       |  SELECT doc_id, text FROM documents
+       |  UNION ALL
+       |  SELECT doc_id + 300000, text || ' extra retrieval tail'
+       |  FROM documents WHERE doc_id % 9 = 0),
+       |${docTokens("tok", "corpus")},
+       |${docTokens("qtok", "documents")},
+       |$bm25Stats,
+       |q AS (SELECT id AS query_id,
+       |        unnest(list_distinct(toks[1:8])) AS term
+       |      FROM qtok WHERE id < 8),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw,
+       |         count(*) AS matched
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Top5""".stripMargin
 
   /** Exact phrase search ([[graft.ext.TextSearch.phraseSearch]]): each
     * doc_id < 8 document's first 3 tokens become a phrase query; the
@@ -2365,27 +2252,24 @@ object ExtQueries {
   }
 
   private val phraseSearchSql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |               regexp_split_to_array(lower(trim(text)), '\s+')
-      |                 AS toks
-      |             FROM documents),
-      |g0 AS (SELECT id, unnest(list_transform(range(len(toks)),
-      |         p -> struct_pack(pos := p, term := toks[p+1]))) AS u
-      |       FROM tok),
-      |g AS (SELECT id, u.pos AS pos, u.term AS term FROM g0),
-      |ph AS (SELECT id AS phrase_id, toks[1:3] AS pterms
-      |       FROM tok WHERE id < 8),
-      |pt0 AS (SELECT phrase_id, unnest(list_transform(range(3),
-      |          i -> struct_pack(i := i, term := pterms[i+1]))) AS u
-      |        FROM ph),
-      |pt AS (SELECT phrase_id, u.i AS i, u.term AS term FROM pt0),
-      |votes AS (SELECT pt.phrase_id, g.id, g.pos - pt.i AS start
-      |          FROM g JOIN pt ON g.term = pt.term
-      |          GROUP BY 1, 2, 3, pt.i),
-      |occ AS (SELECT phrase_id, id, start FROM votes
-      |        GROUP BY 1, 2, 3 HAVING count(*) = 3)
-      |SELECT phrase_id, id, count(*) AS n_occ
-      |FROM occ GROUP BY 1, 2 ORDER BY phrase_id, id""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |g0 AS (SELECT id, unnest(list_transform(range(len(toks)),
+       |         p -> struct_pack(pos := p, term := toks[p+1]))) AS u
+       |       FROM tok),
+       |g AS (SELECT id, u.pos AS pos, u.term AS term FROM g0),
+       |ph AS (SELECT id AS phrase_id, toks[1:3] AS pterms
+       |       FROM tok WHERE id < 8),
+       |pt0 AS (SELECT phrase_id, unnest(list_transform(range(3),
+       |          i -> struct_pack(i := i, term := pterms[i+1]))) AS u
+       |        FROM ph),
+       |pt AS (SELECT phrase_id, u.i AS i, u.term AS term FROM pt0),
+       |votes AS (SELECT pt.phrase_id, g.id, g.pos - pt.i AS start
+       |          FROM g JOIN pt ON g.term = pt.term
+       |          GROUP BY 1, 2, 3, pt.i),
+       |occ AS (SELECT phrase_id, id, start FROM votes
+       |        GROUP BY 1, 2, 3 HAVING count(*) = 3)
+       |SELECT phrase_id, id, count(*) AS n_occ
+       |FROM occ GROUP BY 1, 2 ORDER BY phrase_id, id""".stripMargin
 
   /** Phrase search over the SAVED index
     * ([[graft.ext.TextSearch.phraseSearchSaved]]): the same phrase batch
@@ -2428,33 +2312,33 @@ object ExtQueries {
   }
 
   private val proximitySql =
-    """WITH d AS (SELECT doc_id,
-      |             regexp_split_to_array(lower(trim(text)), '\s+') AS tk
-      |           FROM documents),
-      |pos AS (SELECT doc_id AS id, i AS pos, tk[i] AS term
-      |        FROM (SELECT doc_id, tk,
-      |                unnest(range(1, len(tk) + 1)) AS i
-      |              FROM d)),
-      |ph AS (SELECT doc_id AS qid, tk[1] AS t1, tk[2] AS t2, tk[3] AS t3
-      |       FROM d
-      |       WHERE doc_id < 8 AND len(tk) >= 3
-      |         AND tk[1] <> tk[2] AND tk[2] <> tk[3] AND tk[1] <> tk[3]),
-      |m1 AS (SELECT ph.qid, p.id, p.pos FROM ph
-      |       JOIN pos p ON p.term = ph.t1),
-      |m2 AS (SELECT ph.qid, p.id, p.pos FROM ph
-      |       JOIN pos p ON p.term = ph.t2),
-      |m3 AS (SELECT ph.qid, p.id, p.pos FROM ph
-      |       JOIN pos p ON p.term = ph.t3),
-      |win AS (SELECT m1.qid, m1.id,
-      |          min(greatest(m1.pos, m2.pos, m3.pos)
-      |              - least(m1.pos, m2.pos, m3.pos) + 1) AS min_window
-      |        FROM m1
-      |        JOIN m2 ON m2.qid = m1.qid AND m2.id = m1.id
-      |        JOIN m3 ON m3.qid = m1.qid AND m3.id = m1.id
-      |        GROUP BY 1, 2)
-      |SELECT qid AS phrase_id, id, CAST(min_window AS INTEGER)
-      |         AS min_window
-      |FROM win WHERE min_window <= 12 ORDER BY phrase_id, id""".stripMargin
+    s"""WITH d AS (SELECT doc_id,
+       |             ${tokenize("text")} AS tk
+       |           FROM documents),
+       |pos AS (SELECT doc_id AS id, i AS pos, tk[i] AS term
+       |        FROM (SELECT doc_id, tk,
+       |                unnest(range(1, len(tk) + 1)) AS i
+       |              FROM d)),
+       |ph AS (SELECT doc_id AS qid, tk[1] AS t1, tk[2] AS t2, tk[3] AS t3
+       |       FROM d
+       |       WHERE doc_id < 8 AND len(tk) >= 3
+       |         AND tk[1] <> tk[2] AND tk[2] <> tk[3] AND tk[1] <> tk[3]),
+       |m1 AS (SELECT ph.qid, p.id, p.pos FROM ph
+       |       JOIN pos p ON p.term = ph.t1),
+       |m2 AS (SELECT ph.qid, p.id, p.pos FROM ph
+       |       JOIN pos p ON p.term = ph.t2),
+       |m3 AS (SELECT ph.qid, p.id, p.pos FROM ph
+       |       JOIN pos p ON p.term = ph.t3),
+       |win AS (SELECT m1.qid, m1.id,
+       |          min(greatest(m1.pos, m2.pos, m3.pos)
+       |              - least(m1.pos, m2.pos, m3.pos) + 1) AS min_window
+       |        FROM m1
+       |        JOIN m2 ON m2.qid = m1.qid AND m2.id = m1.id
+       |        JOIN m3 ON m3.qid = m1.qid AND m3.id = m1.id
+       |        GROUP BY 1, 2)
+       |SELECT qid AS phrase_id, id, CAST(min_window AS INTEGER)
+       |         AS min_window
+       |FROM win WHERE min_window <= 12 ORDER BY phrase_id, id""".stripMargin
 
   /** Exact literal substring search ([[graft.ext.TextSearch
     * .literalSearch]]): three 20-char raw slices of real documents plus
@@ -2602,34 +2486,19 @@ object ExtQueries {
   }
 
   private val bm25BoostSql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |               regexp_split_to_array(lower(trim(text)), '\s+')
-      |                 AS toks
-      |             FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q AS (SELECT id AS query_id,
-      |        unnest(list_distinct(toks[1:8])) AS term
-      |      FROM tok WHERE id < 8),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)
-      |             * length(q.term)) AS score_raw,
-      |         count(*) AS matched
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id, matched, round(score_raw, 6) AS score,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc)
-      |SELECT query_id, rn, id, matched, score
-      |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |$bm25Stats,
+       |q AS (SELECT id AS query_id,
+       |        unnest(list_distinct(toks[1:8])) AS term
+       |      FROM tok WHERE id < 8),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight
+       |             * length(q.term)) AS score_raw,
+       |         count(*) AS matched
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Top5""".stripMargin
 
   /** Pseudo-relevance-feedback retrieval
     * ([[graft.ext.TextSearch.expandQueries]], RM3-lite): first-pass
@@ -2651,63 +2520,44 @@ object ExtQueries {
   }
 
   private val bm25Rm3Sql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |               regexp_split_to_array(lower(trim(text)), '\s+')
-      |                 AS toks
-      |             FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q0 AS (SELECT id AS query_id,
-      |         unnest(list_distinct(toks[1:8])) AS term
-      |       FROM tok WHERE id < 8),
-      |sc1 AS (SELECT q0.query_id, tf.id,
-      |          sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |              * tf.tf * 2.2
-      |              / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw
-      |        FROM q0 JOIN tf USING (term) JOIN lex USING (term)
-      |        JOIN dl ON dl.id = tf.id, st
-      |        GROUP BY 1, 2),
-      |fb AS (SELECT query_id, id FROM (
-      |         SELECT query_id, id,
-      |           row_number() OVER (PARTITION BY query_id
-      |             ORDER BY round(score_raw, 6) DESC, id) AS rn
-      |         FROM sc1)
-      |       WHERE rn <= 5),
-      |cw AS (SELECT fb.query_id, tf.term,
-      |         round(sum(CAST(tf.tf AS DOUBLE) / dl.dl), 6) AS w
-      |       FROM fb JOIN tf ON tf.id = fb.id JOIN dl ON dl.id = fb.id
-      |       GROUP BY 1, 2),
-      |cand AS (SELECT cw.query_id, cw.term, cw.w
-      |         FROM cw LEFT JOIN q0
-      |           ON q0.query_id = cw.query_id AND q0.term = cw.term
-      |         WHERE q0.term IS NULL),
-      |exp AS (SELECT query_id, term FROM (
-      |          SELECT query_id, term,
-      |            row_number() OVER (PARTITION BY query_id
-      |              ORDER BY w DESC, term) AS rn
-      |          FROM cand)
-      |        WHERE rn <= 10),
-      |q AS (SELECT query_id, term FROM q0
-      |      UNION
-      |      SELECT query_id, term FROM exp),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw,
-      |         count(*) AS matched
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id, matched, round(score_raw, 6) AS score,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc)
-      |SELECT query_id, rn, id, matched, score
-      |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |$bm25Stats,
+       |q0 AS (SELECT id AS query_id,
+       |         unnest(list_distinct(toks[1:8])) AS term
+       |       FROM tok WHERE id < 8),
+       |sc1 AS (SELECT q0.query_id, tf.id,
+       |          sum($bm25Weight) AS score_raw
+       |        FROM q0 JOIN tf USING (term) JOIN lex USING (term)
+       |        JOIN dl ON dl.id = tf.id, st
+       |        GROUP BY 1, 2),
+       |fb AS (SELECT query_id, id FROM (
+       |         SELECT query_id, id,
+       |           ${rankBy("round(score_raw, 6) DESC, id")} AS rn
+       |         FROM sc1)
+       |       WHERE rn <= 5),
+       |cw AS (SELECT fb.query_id, tf.term,
+       |         round(sum(CAST(tf.tf AS DOUBLE) / dl.dl), 6) AS w
+       |       FROM fb JOIN tf ON tf.id = fb.id JOIN dl ON dl.id = fb.id
+       |       GROUP BY 1, 2),
+       |cand AS (SELECT cw.query_id, cw.term, cw.w
+       |         FROM cw LEFT JOIN q0
+       |           ON q0.query_id = cw.query_id AND q0.term = cw.term
+       |         WHERE q0.term IS NULL),
+       |exp AS (SELECT query_id, term FROM (
+       |          SELECT query_id, term,
+       |            ${rankBy("w DESC, term")} AS rn
+       |          FROM cand)
+       |        WHERE rn <= 10),
+       |q AS (SELECT query_id, term FROM q0
+       |      UNION
+       |      SELECT query_id, term FROM exp),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw,
+       |         count(*) AS matched
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Top5""".stripMargin
 
   /** FULL interpolated RM3
     * ([[graft.ext.TextSearch.expandQueriesRm3]] →
@@ -2728,70 +2578,51 @@ object ExtQueries {
   }
 
   private val bm25Rm3WSql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |               regexp_split_to_array(lower(trim(text)), '\s+')
-      |                 AS toks
-      |             FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q0 AS (SELECT id AS query_id,
-      |         unnest(list_distinct(toks[1:8])) AS term
-      |       FROM tok WHERE id < 8),
-      |sc1 AS (SELECT q0.query_id, tf.id,
-      |          sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |              * tf.tf * 2.2
-      |              / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw
-      |        FROM q0 JOIN tf USING (term) JOIN lex USING (term)
-      |        JOIN dl ON dl.id = tf.id, st
-      |        GROUP BY 1, 2),
-      |fb AS (SELECT query_id, id FROM (
-      |         SELECT query_id, id,
-      |           row_number() OVER (PARTITION BY query_id
-      |             ORDER BY round(score_raw, 6) DESC, id) AS rn
-      |         FROM sc1)
-      |       WHERE rn <= 5),
-      |cw AS (SELECT fb.query_id, tf.term,
-      |         round(sum(CAST(tf.tf AS DOUBLE) / dl.dl), 6) AS w
-      |       FROM fb JOIN tf ON tf.id = fb.id JOIN dl ON dl.id = fb.id
-      |       GROUP BY 1, 2),
-      |cand AS (SELECT cw.query_id, cw.term, cw.w
-      |         FROM cw LEFT JOIN q0
-      |           ON q0.query_id = cw.query_id AND q0.term = cw.term
-      |         WHERE q0.term IS NULL),
-      |top AS (SELECT query_id, term, w FROM (
-      |          SELECT query_id, term, w,
-      |            row_number() OVER (PARTITION BY query_id
-      |              ORDER BY w DESC, term) AS rn
-      |          FROM cand)
-      |        WHERE rn <= 10),
-      |qlen AS (SELECT query_id, count(*) AS nq FROM q0 GROUP BY 1),
-      |wsum AS (SELECT query_id, sum(w) AS ws FROM top GROUP BY 1),
-      |qw AS (SELECT query_id, term, sum(weight) AS weight FROM (
-      |         SELECT q0.query_id, q0.term, 0.6 / qlen.nq AS weight
-      |         FROM q0 JOIN qlen USING (query_id)
-      |         UNION ALL
-      |         SELECT t.query_id, t.term, 0.4 * t.w / wsum.ws AS weight
-      |         FROM top t JOIN wsum USING (query_id))
-      |       GROUP BY 1, 2),
-      |sc AS (SELECT qw.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)
-      |             * qw.weight) AS score_raw,
-      |         count(*) AS matched
-      |       FROM qw JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id, matched, round(score_raw, 6) AS score,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc)
-      |SELECT query_id, rn, id, matched, score
-      |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |$bm25Stats,
+       |q0 AS (SELECT id AS query_id,
+       |         unnest(list_distinct(toks[1:8])) AS term
+       |       FROM tok WHERE id < 8),
+       |sc1 AS (SELECT q0.query_id, tf.id,
+       |          sum($bm25Weight) AS score_raw
+       |        FROM q0 JOIN tf USING (term) JOIN lex USING (term)
+       |        JOIN dl ON dl.id = tf.id, st
+       |        GROUP BY 1, 2),
+       |fb AS (SELECT query_id, id FROM (
+       |         SELECT query_id, id,
+       |           ${rankBy("round(score_raw, 6) DESC, id")} AS rn
+       |         FROM sc1)
+       |       WHERE rn <= 5),
+       |cw AS (SELECT fb.query_id, tf.term,
+       |         round(sum(CAST(tf.tf AS DOUBLE) / dl.dl), 6) AS w
+       |       FROM fb JOIN tf ON tf.id = fb.id JOIN dl ON dl.id = fb.id
+       |       GROUP BY 1, 2),
+       |cand AS (SELECT cw.query_id, cw.term, cw.w
+       |         FROM cw LEFT JOIN q0
+       |           ON q0.query_id = cw.query_id AND q0.term = cw.term
+       |         WHERE q0.term IS NULL),
+       |top AS (SELECT query_id, term, w FROM (
+       |          SELECT query_id, term, w,
+       |            ${rankBy("w DESC, term")} AS rn
+       |          FROM cand)
+       |        WHERE rn <= 10),
+       |qlen AS (SELECT query_id, count(*) AS nq FROM q0 GROUP BY 1),
+       |wsum AS (SELECT query_id, sum(w) AS ws FROM top GROUP BY 1),
+       |qw AS (SELECT query_id, term, sum(weight) AS weight FROM (
+       |         SELECT q0.query_id, q0.term, 0.6 / qlen.nq AS weight
+       |         FROM q0 JOIN qlen USING (query_id)
+       |         UNION ALL
+       |         SELECT t.query_id, t.term, 0.4 * t.w / wsum.ws AS weight
+       |         FROM top t JOIN wsum USING (query_id))
+       |       GROUP BY 1, 2),
+       |sc AS (SELECT qw.query_id, tf.id,
+       |         sum($bm25Weight
+       |             * qw.weight) AS score_raw,
+       |         count(*) AS matched
+       |       FROM qw JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Top5""".stripMargin
 
   /** Index TIME TRAVEL ([[graft.ext.TextSearch.searchSavedAt]] /
     * [[graft.ext.IndexStore.snapshotAt]]): a delivery is appended, then
@@ -2836,17 +2667,9 @@ object ExtQueries {
       .write.mode("overwrite").parquet(s"$in/d1")
     doomed.filter(col("doc_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$in/d2")
-    val stream = s.readStream.schema("doc_id LONG")
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ext.TextSearch.delete(s, dir, batch, col("doc_id"))
-      }
-      .start()
-    q.awaitTermination()
+    drain(s, "doc_id LONG", in, ckpt) { (batch, _) =>
+      graft.ext.TextSearch.delete(s, dir, batch, col("doc_id"))
+    }
     graft.ext.TextSearch.compact(s, dir)
     graft.ext.TextSearch.searchSaved(s, dir, bm25Queries(s, d),
         col("qid"), col("qterms"), k = 5)
@@ -2879,18 +2702,9 @@ object ExtQueries {
       .write.mode("overwrite").parquet(s"$in/d1")
     doomed.filter(col("doc_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$in/d2")
-    val stream = s.readStream.schema("doc_id LONG")
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Takedown.retract(s, root, batch, col("doc_id"))
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(s, "doc_id LONG", in, ckpt) { (batch, _) =>
+      Takedown.retract(s, root, batch, col("doc_id"))
+    }
     require(Takedown.resume(s, root).isEmpty,
       "drained takedown stream left pending intents")
     val bm = graft.ext.TextSearch.searchSaved(s, bm25Dir,
@@ -2908,44 +2722,30 @@ object ExtQueries {
   }
 
   private val streamTakedownSql =
-    """WITH corpus AS (
-      |  SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3),
-      |tok AS (SELECT doc_id AS id,
-      |          regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |        FROM corpus),
-      |qtok AS (SELECT doc_id AS id,
-      |           regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |         FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q AS (SELECT id AS query_id,
-      |        unnest(list_distinct(toks[1:8])) AS term
-      |      FROM qtok WHERE id < 8),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc),
-      |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
-      |       FROM r WHERE rn <= 5),
-      |nd AS (SELECT doc_id AS qid, substring(text, 8, 20) AS needle
-      |       FROM documents WHERE doc_id < 4),
-      |lt AS (SELECT 'literal' AS surface, n.qid, d.doc_id AS id
-      |       FROM corpus d CROSS JOIN nd n
-      |       WHERE length(n.needle) >= 4 AND contains(d.text, n.needle))
-      |SELECT surface, qid, id FROM bm
-      |UNION ALL SELECT surface, qid, id FROM lt
-      |ORDER BY surface, qid, id""".stripMargin
+    s"""WITH corpus AS (
+       |  SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3),
+       |${docTokens("tok", "corpus")},
+       |${docTokens("qtok", "documents")},
+       |$bm25Stats,
+       |q AS (SELECT id AS query_id,
+       |        unnest(list_distinct(toks[1:8])) AS term
+       |      FROM qtok WHERE id < 8),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Ranked,
+       |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
+       |       FROM r WHERE rn <= 5),
+       |nd AS (SELECT doc_id AS qid, substring(text, 8, 20) AS needle
+       |       FROM documents WHERE doc_id < 4),
+       |lt AS (SELECT 'literal' AS surface, n.qid, d.doc_id AS id
+       |       FROM corpus d CROSS JOIN nd n
+       |       WHERE length(n.needle) >= 4 AND contains(d.text, n.needle))
+       |SELECT surface, qid, id FROM bm
+       |UNION ALL SELECT surface, qid, id FROM lt
+       |ORDER BY surface, qid, id""".stripMargin
 
   /** The corpus STORE OF RECORD, built once per JVM (mutating gates
     * copy it — same contract as [[sharedBm25Index]]).
@@ -3010,64 +2810,48 @@ object ExtQueries {
   }
 
   private val takedownStoreSql =
-    """WITH corpus AS (
-      |  SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3),
-      |tok AS (SELECT doc_id AS id,
-      |          regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |        FROM corpus),
-      |qtok AS (SELECT doc_id AS id,
-      |           regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |         FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q AS (SELECT id AS query_id,
-      |        unnest(list_distinct(toks[1:8])) AS term
-      |      FROM qtok WHERE id < 8),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc),
-      |sr AS (SELECT 'store' AS surface, CAST(0 AS BIGINT) AS qid,
-      |              doc_id AS id
-      |       FROM corpus),
-      |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
-      |       FROM r WHERE rn <= 5),
-      |nd AS (SELECT doc_id AS qid, substring(text, 8, 20) AS needle
-      |       FROM documents WHERE doc_id < 4),
-      |lt AS (SELECT 'literal' AS surface, n.qid, d.doc_id AS id
-      |       FROM corpus d CROSS JOIN nd n
-      |       WHERE length(n.needle) >= 4 AND contains(d.text, n.needle)),
-      |qs AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-      |       FROM embeddings WHERE vec_id < 10 AND vec_id % 7 <> 3),
-      |ev AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
-      |       WHERE vec_id % 7 <> 3),
-      |p AS (SELECT qid, vec_id,
-      |             list_dot_product(qv, ev)
-      |               / sqrt(list_dot_product(qv, qv)
-      |                      * list_dot_product(ev, ev)) AS cos
-      |      FROM qs, ev WHERE vec_id <> qid),
-      |iv AS (SELECT 'ivf' AS surface, qid, vec_id AS id
-      |       FROM (SELECT qid, vec_id,
-      |               row_number() OVER (PARTITION BY qid
-      |                 ORDER BY cos DESC, vec_id) AS rank
-      |             FROM p)
-      |       WHERE rank <= 5)
-      |SELECT surface, qid, id FROM sr
-      |UNION ALL SELECT surface, qid, id FROM bm
-      |UNION ALL SELECT surface, qid, id FROM lt
-      |UNION ALL SELECT surface, qid, id FROM iv
-      |ORDER BY surface, qid, id""".stripMargin
+    s"""WITH corpus AS (
+       |  SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3),
+       |${docTokens("tok", "corpus")},
+       |${docTokens("qtok", "documents")},
+       |$bm25Stats,
+       |q AS (SELECT id AS query_id,
+       |        unnest(list_distinct(toks[1:8])) AS term
+       |      FROM qtok WHERE id < 8),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Ranked,
+       |sr AS (SELECT 'store' AS surface, CAST(0 AS BIGINT) AS qid,
+       |              doc_id AS id
+       |       FROM corpus),
+       |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
+       |       FROM r WHERE rn <= 5),
+       |nd AS (SELECT doc_id AS qid, substring(text, 8, 20) AS needle
+       |       FROM documents WHERE doc_id < 4),
+       |lt AS (SELECT 'literal' AS surface, n.qid, d.doc_id AS id
+       |       FROM corpus d CROSS JOIN nd n
+       |       WHERE length(n.needle) >= 4 AND contains(d.text, n.needle)),
+       |qs AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
+       |       FROM embeddings WHERE vec_id < 10 AND vec_id % 7 <> 3),
+       |ev AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
+       |       WHERE vec_id % 7 <> 3),
+       |p AS (SELECT qid, vec_id,
+       |             ${cosine("qv", "ev")} AS cos
+       |      FROM qs, ev WHERE vec_id <> qid),
+       |iv AS (SELECT 'ivf' AS surface, qid, vec_id AS id
+       |       FROM (SELECT qid, vec_id,
+       |               row_number() OVER (PARTITION BY qid
+       |                 ORDER BY cos DESC, vec_id) AS rank
+       |             FROM p)
+       |       WHERE rank <= 5)
+       |SELECT surface, qid, id FROM sr
+       |UNION ALL SELECT surface, qid, id FROM bm
+       |UNION ALL SELECT surface, qid, id FROM lt
+       |UNION ALL SELECT surface, qid, id FROM iv
+       |ORDER BY surface, qid, id""".stripMargin
 
   /** Cross-surface consistent read snapshot ([[graft.ext.Takedown
     * .withPinned]]): BM25 and literal surfaces register under one
@@ -3126,39 +2910,27 @@ object ExtQueries {
   }
 
   private val pinnedReadSql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |          regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |        FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q AS (SELECT id AS query_id,
-      |        unnest(list_distinct(toks[1:8])) AS term
-      |      FROM tok WHERE id < 8),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc),
-      |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
-      |       FROM r WHERE rn <= 5),
-      |nd AS (SELECT doc_id AS qid, substring(text, 8, 20) AS needle
-      |       FROM documents WHERE doc_id < 4),
-      |lt AS (SELECT 'literal' AS surface, n.qid, d.doc_id AS id
-      |       FROM documents d CROSS JOIN nd n
-      |       WHERE length(n.needle) >= 4 AND contains(d.text, n.needle))
-      |SELECT surface, qid, id FROM bm
-      |UNION ALL SELECT surface, qid, id FROM lt
-      |ORDER BY surface, qid, id""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |$bm25Stats,
+       |q AS (SELECT id AS query_id,
+       |        unnest(list_distinct(toks[1:8])) AS term
+       |      FROM tok WHERE id < 8),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Ranked,
+       |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
+       |       FROM r WHERE rn <= 5),
+       |nd AS (SELECT doc_id AS qid, substring(text, 8, 20) AS needle
+       |       FROM documents WHERE doc_id < 4),
+       |lt AS (SELECT 'literal' AS surface, n.qid, d.doc_id AS id
+       |       FROM documents d CROSS JOIN nd n
+       |       WHERE length(n.needle) >= 4 AND contains(d.text, n.needle))
+       |SELECT surface, qid, id FROM bm
+       |UNION ALL SELECT surface, qid, id FROM lt
+       |ORDER BY surface, qid, id""".stripMargin
 
   /** Cross-surface corpus CLONE ([[graft.ext.Takedown.cloneCorpus]]):
     * store-of-record + BM25 surfaces register under one corpus root,
@@ -3203,37 +2975,25 @@ object ExtQueries {
   }
 
   private val storeCloneSql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |          regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |        FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q AS (SELECT id AS query_id,
-      |        unnest(list_distinct(toks[1:8])) AS term
-      |      FROM tok WHERE id < 8),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc),
-      |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
-      |       FROM r WHERE rn <= 5),
-      |sr AS (SELECT 'store' AS surface, CAST(-1 AS BIGINT) AS qid,
-      |              doc_id AS id
-      |       FROM documents WHERE doc_id >= 490)
-      |SELECT surface, qid, id FROM bm
-      |UNION ALL SELECT surface, qid, id FROM sr
-      |ORDER BY surface, qid, id""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |$bm25Stats,
+       |q AS (SELECT id AS query_id,
+       |        unnest(list_distinct(toks[1:8])) AS term
+       |      FROM tok WHERE id < 8),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Ranked,
+       |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
+       |       FROM r WHERE rn <= 5),
+       |sr AS (SELECT 'store' AS surface, CAST(-1 AS BIGINT) AS qid,
+       |              doc_id AS id
+       |       FROM documents WHERE doc_id >= 490)
+       |SELECT surface, qid, id FROM bm
+       |UNION ALL SELECT surface, qid, id FROM sr
+       |ORDER BY surface, qid, id""".stripMargin
 
   /** Zone-map data skipping on the corpus store ([[graft.ext
     * .CorpusStore.readRange]]): three deliveries land as three
@@ -3498,68 +3258,54 @@ object ExtQueries {
   }
 
   private val ingestAllSql =
-    """WITH delivery AS (
-      |  SELECT doc_id + 500000 AS doc_id, text || ' ingest-delivery' AS text
-      |  FROM documents WHERE doc_id < 10),
-      |corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL SELECT doc_id, text FROM delivery),
-      |tok AS (SELECT doc_id AS id,
-      |          regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |        FROM corpus),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q AS (SELECT doc_id AS query_id,
-      |        unnest(list_distinct(
-      |          regexp_split_to_array(lower(trim(text)), '\s+')[1:8])) AS term
-      |      FROM documents WHERE doc_id < 8),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc),
-      |sr AS (SELECT 'store' AS surface, CAST(0 AS BIGINT) AS qid,
-      |              doc_id AS id
-      |       FROM corpus),
-      |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
-      |       FROM r WHERE rn <= 5),
-      |nd AS (SELECT doc_id AS qid, substring(text, 8, 20) AS needle
-      |       FROM documents WHERE doc_id < 4),
-      |lt AS (SELECT 'literal' AS surface, n.qid, d.doc_id AS id
-      |       FROM corpus d CROSS JOIN nd n
-      |       WHERE length(n.needle) >= 4 AND contains(d.text, n.needle)),
-      |ev AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
-      |       UNION ALL
-      |       SELECT vec_id + 500000, list_reverse(embedding::DOUBLE[])
-      |       FROM embeddings WHERE vec_id < 10),
-      |qs AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-      |       FROM embeddings WHERE vec_id < 10),
-      |p AS (SELECT qid, vec_id,
-      |             list_dot_product(qv, ev)
-      |               / sqrt(list_dot_product(qv, qv)
-      |                      * list_dot_product(ev, ev)) AS cos
-      |      FROM qs, ev WHERE vec_id <> qid),
-      |iv AS (SELECT 'ivf' AS surface, qid, vec_id AS id
-      |       FROM (SELECT qid, vec_id,
-      |               row_number() OVER (PARTITION BY qid
-      |                 ORDER BY cos DESC, vec_id) AS rank
-      |             FROM p)
-      |       WHERE rank <= 5)
-      |SELECT surface, qid, id FROM sr
-      |UNION ALL SELECT surface, qid, id FROM bm
-      |UNION ALL SELECT surface, qid, id FROM lt
-      |UNION ALL SELECT surface, qid, id FROM iv
-      |ORDER BY surface, qid, id""".stripMargin
+    s"""WITH delivery AS (
+       |  SELECT doc_id + 500000 AS doc_id, text || ' ingest-delivery' AS text
+       |  FROM documents WHERE doc_id < 10),
+       |corpus AS (
+       |  SELECT doc_id, text FROM documents
+       |  UNION ALL SELECT doc_id, text FROM delivery),
+       |${docTokens("tok", "corpus")},
+       |$bm25Stats,
+       |q AS (SELECT doc_id AS query_id,
+       |        unnest(list_distinct(
+       |          ${tokenize("text")}[1:8])) AS term
+       |      FROM documents WHERE doc_id < 8),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Ranked,
+       |sr AS (SELECT 'store' AS surface, CAST(0 AS BIGINT) AS qid,
+       |              doc_id AS id
+       |       FROM corpus),
+       |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
+       |       FROM r WHERE rn <= 5),
+       |nd AS (SELECT doc_id AS qid, substring(text, 8, 20) AS needle
+       |       FROM documents WHERE doc_id < 4),
+       |lt AS (SELECT 'literal' AS surface, n.qid, d.doc_id AS id
+       |       FROM corpus d CROSS JOIN nd n
+       |       WHERE length(n.needle) >= 4 AND contains(d.text, n.needle)),
+       |ev AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
+       |       UNION ALL
+       |       SELECT vec_id + 500000, list_reverse(embedding::DOUBLE[])
+       |       FROM embeddings WHERE vec_id < 10),
+       |qs AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
+       |       FROM embeddings WHERE vec_id < 10),
+       |p AS (SELECT qid, vec_id,
+       |             ${cosine("qv", "ev")} AS cos
+       |      FROM qs, ev WHERE vec_id <> qid),
+       |iv AS (SELECT 'ivf' AS surface, qid, vec_id AS id
+       |       FROM (SELECT qid, vec_id,
+       |               row_number() OVER (PARTITION BY qid
+       |                 ORDER BY cos DESC, vec_id) AS rank
+       |             FROM p)
+       |       WHERE rank <= 5)
+       |SELECT surface, qid, id FROM sr
+       |UNION ALL SELECT surface, qid, id FROM bm
+       |UNION ALL SELECT surface, qid, id FROM lt
+       |UNION ALL SELECT surface, qid, id FROM iv
+       |ORDER BY surface, qid, id""".stripMargin
 
   /** Streaming corpus ingest, end to end ([[graft.sources.Jsonl
     * .readStream]] × [[graft.ext.Ingest.admit]]): a JSONL landing
@@ -3638,51 +3384,39 @@ object ExtQueries {
   }
 
   private val streamIngestAllSql =
-    """WITH delivery AS (
-      |  SELECT doc_id + 500000 AS doc_id,
-      |         text || ' stream-ingest-delivery' AS text
-      |  FROM documents WHERE doc_id < 20),
-      |corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL SELECT doc_id, text FROM delivery),
-      |tok AS (SELECT doc_id AS id,
-      |          regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |        FROM corpus),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q AS (SELECT doc_id AS query_id,
-      |        unnest(list_distinct(
-      |          regexp_split_to_array(lower(trim(text)), '\s+')[1:8])) AS term
-      |      FROM documents WHERE doc_id < 8),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc),
-      |sr AS (SELECT 'store' AS surface, CAST(0 AS BIGINT) AS qid,
-      |              doc_id AS id
-      |       FROM corpus),
-      |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
-      |       FROM r WHERE rn <= 5),
-      |nd AS (SELECT doc_id AS qid, substring(text, 8, 20) AS needle
-      |       FROM documents WHERE doc_id < 4),
-      |lt AS (SELECT 'literal' AS surface, n.qid, d.doc_id AS id
-      |       FROM corpus d CROSS JOIN nd n
-      |       WHERE length(n.needle) >= 4 AND contains(d.text, n.needle))
-      |SELECT surface, qid, id FROM sr
-      |UNION ALL SELECT surface, qid, id FROM bm
-      |UNION ALL SELECT surface, qid, id FROM lt
-      |ORDER BY surface, qid, id""".stripMargin
+    s"""WITH delivery AS (
+       |  SELECT doc_id + 500000 AS doc_id,
+       |         text || ' stream-ingest-delivery' AS text
+       |  FROM documents WHERE doc_id < 20),
+       |corpus AS (
+       |  SELECT doc_id, text FROM documents
+       |  UNION ALL SELECT doc_id, text FROM delivery),
+       |${docTokens("tok", "corpus")},
+       |$bm25Stats,
+       |q AS (SELECT doc_id AS query_id,
+       |        unnest(list_distinct(
+       |          ${tokenize("text")}[1:8])) AS term
+       |      FROM documents WHERE doc_id < 8),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Ranked,
+       |sr AS (SELECT 'store' AS surface, CAST(0 AS BIGINT) AS qid,
+       |              doc_id AS id
+       |       FROM corpus),
+       |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
+       |       FROM r WHERE rn <= 5),
+       |nd AS (SELECT doc_id AS qid, substring(text, 8, 20) AS needle
+       |       FROM documents WHERE doc_id < 4),
+       |lt AS (SELECT 'literal' AS surface, n.qid, d.doc_id AS id
+       |       FROM corpus d CROSS JOIN nd n
+       |       WHERE length(n.needle) >= 4 AND contains(d.text, n.needle))
+       |SELECT surface, qid, id FROM sr
+       |UNION ALL SELECT surface, qid, id FROM bm
+       |UNION ALL SELECT surface, qid, id FROM lt
+       |ORDER BY surface, qid, id""".stripMargin
 
   /** Durable selection lineage ([[graft.ext.SelectionLog]]): a
     * data-selection run pins the corpus's surfaces at one commit
@@ -3733,37 +3467,25 @@ object ExtQueries {
   }
 
   private val selectionReplaySql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |          regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |        FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q AS (SELECT id AS query_id,
-      |        unnest(list_distinct(toks[1:8])) AS term
-      |      FROM tok WHERE id < 8),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc),
-      |sr AS (SELECT 'store' AS surface, CAST(0 AS BIGINT) AS qid,
-      |              doc_id AS id
-      |       FROM documents),
-      |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
-      |       FROM r WHERE rn <= 5)
-      |SELECT surface, qid, id FROM sr
-      |UNION ALL SELECT surface, qid, id FROM bm
-      |ORDER BY surface, qid, id""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |$bm25Stats,
+       |q AS (SELECT id AS query_id,
+       |        unnest(list_distinct(toks[1:8])) AS term
+       |      FROM tok WHERE id < 8),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Ranked,
+       |sr AS (SELECT 'store' AS surface, CAST(0 AS BIGINT) AS qid,
+       |              doc_id AS id
+       |       FROM documents),
+       |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
+       |       FROM r WHERE rn <= 5)
+       |SELECT surface, qid, id FROM sr
+       |UNION ALL SELECT surface, qid, id FROM bm
+       |ORDER BY surface, qid, id""".stripMargin
 
   /** Delete-then-readd ([[graft.ext.IndexStore]] scoped tombstones):
     * every doc_id % 7 == 3 document is retracted, then a CORRECTED
@@ -3794,73 +3516,41 @@ object ExtQueries {
   }
 
   private val bm25ReaddSql =
-    """WITH corpus AS (
-      |  SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3
-      |  UNION ALL
-      |  SELECT doc_id, text || ' corrected redelivery'
-      |  FROM documents WHERE doc_id % 7 = 3),
-      |tok AS (SELECT doc_id AS id,
-      |          regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |        FROM corpus),
-      |qtok AS (SELECT doc_id AS id,
-      |           regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |         FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q AS (SELECT id AS query_id,
-      |        unnest(list_distinct(toks[1:8])) AS term
-      |      FROM qtok WHERE id < 8),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw,
-      |         count(*) AS matched
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id, matched, round(score_raw, 6) AS score,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc)
-      |SELECT query_id, rn, id, matched, score
-      |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
+    s"""WITH corpus AS (
+       |  SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3
+       |  UNION ALL
+       |  SELECT doc_id, text || ' corrected redelivery'
+       |  FROM documents WHERE doc_id % 7 = 3),
+       |${docTokens("tok", "corpus")},
+       |${docTokens("qtok", "documents")},
+       |$bm25Stats,
+       |q AS (SELECT id AS query_id,
+       |        unnest(list_distinct(toks[1:8])) AS term
+       |      FROM qtok WHERE id < 8),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw,
+       |         count(*) AS matched
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Top5""".stripMargin
 
   private val bm25DeleteSql =
-    """WITH corpus AS (
-      |  SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3),
-      |tok AS (SELECT doc_id AS id,
-      |          regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |        FROM corpus),
-      |qtok AS (SELECT doc_id AS id,
-      |           regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |         FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q AS (SELECT id AS query_id,
-      |        unnest(list_distinct(toks[1:8])) AS term
-      |      FROM qtok WHERE id < 8),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw,
-      |         count(*) AS matched
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id, matched, round(score_raw, 6) AS score,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc)
-      |SELECT query_id, rn, id, matched, score
-      |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
+    s"""WITH corpus AS (
+       |  SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3),
+       |${docTokens("tok", "corpus")},
+       |${docTokens("qtok", "documents")},
+       |$bm25Stats,
+       |q AS (SELECT id AS query_id,
+       |        unnest(list_distinct(toks[1:8])) AS term
+       |      FROM qtok WHERE id < 8),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw,
+       |         count(*) AS matched
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Top5""".stripMargin
 
   /** Cross-surface takedown orchestration ([[graft.ext.Takedown]]):
     * one corpus derives a BM25 index, a literal gram index, and an IVF
@@ -3922,80 +3612,64 @@ object ExtQueries {
   }
 
   private val takedownSql =
-    """WITH corpus AS (
-      |  SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3),
-      |tok AS (SELECT doc_id AS id,
-      |          regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |        FROM corpus),
-      |qtok AS (SELECT doc_id AS id,
-      |           regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |         FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q AS (SELECT id AS query_id,
-      |        unnest(list_distinct(toks[1:8])) AS term
-      |      FROM qtok WHERE id < 8),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc),
-      |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
-      |       FROM r WHERE rn <= 5),
-      |nd AS (SELECT doc_id AS qid, substring(text, 8, 20) AS needle
-      |       FROM documents WHERE doc_id < 4),
-      |lt AS (SELECT 'literal' AS surface, n.qid, d.doc_id AS id
-      |       FROM corpus d CROSS JOIN nd n
-      |       WHERE length(n.needle) >= 4 AND contains(d.text, n.needle)),
-      |qs AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-      |       FROM embeddings WHERE vec_id < 10 AND vec_id % 7 <> 3),
-      |ev AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
-      |       WHERE vec_id % 7 <> 3),
-      |p AS (SELECT qid, vec_id,
-      |             list_dot_product(qv, ev)
-      |               / sqrt(list_dot_product(qv, qv)
-      |                      * list_dot_product(ev, ev)) AS cos
-      |      FROM qs, ev WHERE vec_id <> qid),
-      |iv AS (SELECT 'ivf' AS surface, qid, vec_id AS id
-      |       FROM (SELECT qid, vec_id,
-      |               row_number() OVER (PARTITION BY qid
-      |                 ORDER BY cos DESC, vec_id) AS rank
-      |             FROM p)
-      |       WHERE rank <= 5),
-      |bh AS (SELECT qs.qid, ev.vec_id,
-      |         list_sum(list_transform(range(1, len(ev.ev) + 1),
-      |           i -> CASE WHEN (qs.qv[i] > 0) <> (ev.ev[i] > 0)
-      |                THEN 1 ELSE 0 END)) AS ham
-      |       FROM qs, ev WHERE ev.vec_id <> qs.qid),
-      |bcand AS (SELECT qid, vec_id FROM (
-      |            SELECT qid, vec_id,
-      |              row_number() OVER (PARTITION BY qid
-      |                ORDER BY ham, vec_id) AS rn
-      |            FROM bh)
-      |          WHERE rn <= greatest(200,
-      |            (SELECT count(*) FROM ev) // 5)),
-      |bn AS (SELECT 'binary' AS surface, qid, vec_id AS id FROM (
-      |         SELECT p.qid, p.vec_id,
-      |           row_number() OVER (PARTITION BY p.qid
-      |             ORDER BY p.cos DESC, p.vec_id) AS rank
-      |         FROM p JOIN bcand c
-      |           ON c.qid = p.qid AND c.vec_id = p.vec_id)
-      |       WHERE rank <= 5)
-      |SELECT surface, qid, id FROM bm
-      |UNION ALL SELECT surface, qid, id FROM lt
-      |UNION ALL SELECT surface, qid, id FROM iv
-      |UNION ALL SELECT surface, qid, id FROM bn
-      |ORDER BY surface, qid, id""".stripMargin
+    s"""WITH corpus AS (
+       |  SELECT doc_id, text FROM documents WHERE doc_id % 7 <> 3),
+       |${docTokens("tok", "corpus")},
+       |${docTokens("qtok", "documents")},
+       |$bm25Stats,
+       |q AS (SELECT id AS query_id,
+       |        unnest(list_distinct(toks[1:8])) AS term
+       |      FROM qtok WHERE id < 8),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Ranked,
+       |bm AS (SELECT 'bm25' AS surface, query_id AS qid, id
+       |       FROM r WHERE rn <= 5),
+       |nd AS (SELECT doc_id AS qid, substring(text, 8, 20) AS needle
+       |       FROM documents WHERE doc_id < 4),
+       |lt AS (SELECT 'literal' AS surface, n.qid, d.doc_id AS id
+       |       FROM corpus d CROSS JOIN nd n
+       |       WHERE length(n.needle) >= 4 AND contains(d.text, n.needle)),
+       |qs AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
+       |       FROM embeddings WHERE vec_id < 10 AND vec_id % 7 <> 3),
+       |ev AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
+       |       WHERE vec_id % 7 <> 3),
+       |p AS (SELECT qid, vec_id,
+       |             ${cosine("qv", "ev")} AS cos
+       |      FROM qs, ev WHERE vec_id <> qid),
+       |iv AS (SELECT 'ivf' AS surface, qid, vec_id AS id
+       |       FROM (SELECT qid, vec_id,
+       |               row_number() OVER (PARTITION BY qid
+       |                 ORDER BY cos DESC, vec_id) AS rank
+       |             FROM p)
+       |       WHERE rank <= 5),
+       |bh AS (SELECT qs.qid, ev.vec_id,
+       |         list_sum(list_transform(range(1, len(ev.ev) + 1),
+       |           i -> CASE WHEN (qs.qv[i] > 0) <> (ev.ev[i] > 0)
+       |                THEN 1 ELSE 0 END)) AS ham
+       |       FROM qs, ev WHERE ev.vec_id <> qs.qid),
+       |bcand AS (SELECT qid, vec_id FROM (
+       |            SELECT qid, vec_id,
+       |              row_number() OVER (PARTITION BY qid
+       |                ORDER BY ham, vec_id) AS rn
+       |            FROM bh)
+       |          WHERE rn <= greatest(200,
+       |            (SELECT count(*) FROM ev) // 5)),
+       |bn AS (SELECT 'binary' AS surface, qid, vec_id AS id FROM (
+       |         SELECT p.qid, p.vec_id,
+       |           row_number() OVER (PARTITION BY p.qid
+       |             ORDER BY p.cos DESC, p.vec_id) AS rank
+       |         FROM p JOIN bcand c
+       |           ON c.qid = p.qid AND c.vec_id = p.vec_id)
+       |       WHERE rank <= 5)
+       |SELECT surface, qid, id FROM bm
+       |UNION ALL SELECT surface, qid, id FROM lt
+       |UNION ALL SELECT surface, qid, id FROM iv
+       |UNION ALL SELECT surface, qid, id FROM bn
+       |ORDER BY surface, qid, id""".stripMargin
 
   /** Hybrid retrieval ([[graft.ext.HybridSearch.rrf]]): BM25 top-20 and
     * dense cosine top-20 (vec_id ≡ doc_id — the embeddings table is the
@@ -4019,70 +3693,55 @@ object ExtQueries {
   }
 
   private val hybridWeightedSql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |               regexp_split_to_array(lower(trim(text)), '\s+')
-      |                 AS toks
-      |             FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |qs AS (SELECT id AS query_id,
-      |         unnest(list_distinct(toks[1:8])) AS term
-      |       FROM tok WHERE id < 8),
-      |sc AS (SELECT qs.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw
-      |       FROM qs JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |sp AS (SELECT query_id, id, round(score_raw, 6) AS score,
-      |         row_number() OVER (PARTITION BY query_id
-      |           ORDER BY round(score_raw, 6) DESC, id) AS rank
-      |       FROM sc),
-      |sp20 AS (SELECT query_id, id, score,
-      |           min(score) OVER (PARTITION BY query_id) AS mn,
-      |           max(score) OVER (PARTITION BY query_id) AS mx
-      |         FROM sp WHERE rank <= 20),
-      |spn AS (SELECT query_id, id,
-      |          CASE WHEN mx = mn THEN 1.0
-      |               ELSE (score - mn) / (mx - mn) END AS ns
-      |        FROM sp20),
-      |qd AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      |       FROM embeddings WHERE vec_id < 8),
-      |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
-      |p AS (SELECT query_id, vec_id,
-      |        list_dot_product(qv, ev)
-      |          / sqrt(list_dot_product(qv, qv)
-      |                 * list_dot_product(ev, ev)) AS cos
-      |      FROM qd, e WHERE vec_id <> query_id),
-      |dr AS (SELECT query_id, vec_id AS id, round(cos, 6) AS score,
-      |         row_number() OVER (PARTITION BY query_id
-      |           ORDER BY cos DESC, vec_id) AS rank
-      |       FROM p),
-      |dn20 AS (SELECT query_id, id, score,
-      |           min(score) OVER (PARTITION BY query_id) AS mn,
-      |           max(score) OVER (PARTITION BY query_id) AS mx
-      |         FROM dr WHERE rank <= 20),
-      |dnn AS (SELECT query_id, id,
-      |          CASE WHEN mx = mn THEN 1.0
-      |               ELSE (score - mn) / (mx - mn) END AS ns
-      |        FROM dn20),
-      |fused AS (SELECT query_id, id, round(sum(c), 6) AS fused,
-      |            count(*) AS n_lists
-      |          FROM (SELECT query_id, id, 0.7 * ns AS c FROM spn
-      |                UNION ALL
-      |                SELECT query_id, id, 0.3 * ns FROM dnn)
-      |          GROUP BY 1, 2),
-      |r AS (SELECT query_id, id, n_lists, fused,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY fused DESC, id) AS INTEGER) AS rn
-      |      FROM fused)
-      |SELECT query_id, rn, id, n_lists, fused
-      |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |$bm25Stats,
+       |qs AS (SELECT id AS query_id,
+       |         unnest(list_distinct(toks[1:8])) AS term
+       |       FROM tok WHERE id < 8),
+       |sc AS (SELECT qs.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw
+       |       FROM qs JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |sp AS (SELECT query_id, id, round(score_raw, 6) AS score,
+       |         ${rankBy("round(score_raw, 6) DESC, id")} AS rank
+       |       FROM sc),
+       |sp20 AS (SELECT query_id, id, score,
+       |           min(score) OVER (PARTITION BY query_id) AS mn,
+       |           max(score) OVER (PARTITION BY query_id) AS mx
+       |         FROM sp WHERE rank <= 20),
+       |spn AS (SELECT query_id, id,
+       |          CASE WHEN mx = mn THEN 1.0
+       |               ELSE (score - mn) / (mx - mn) END AS ns
+       |        FROM sp20),
+       |qd AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+       |       FROM embeddings WHERE vec_id < 8),
+       |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
+       |p AS (SELECT query_id, vec_id,
+       |        ${cosine("qv", "ev")} AS cos
+       |      FROM qd, e WHERE vec_id <> query_id),
+       |dr AS (SELECT query_id, vec_id AS id, round(cos, 6) AS score,
+       |         ${rankBy("cos DESC, vec_id")} AS rank
+       |       FROM p),
+       |dn20 AS (SELECT query_id, id, score,
+       |           min(score) OVER (PARTITION BY query_id) AS mn,
+       |           max(score) OVER (PARTITION BY query_id) AS mx
+       |         FROM dr WHERE rank <= 20),
+       |dnn AS (SELECT query_id, id,
+       |          CASE WHEN mx = mn THEN 1.0
+       |               ELSE (score - mn) / (mx - mn) END AS ns
+       |        FROM dn20),
+       |fused AS (SELECT query_id, id, round(sum(c), 6) AS fused,
+       |            count(*) AS n_lists
+       |          FROM (SELECT query_id, id, 0.7 * ns AS c FROM spn
+       |                UNION ALL
+       |                SELECT query_id, id, 0.3 * ns FROM dnn)
+       |          GROUP BY 1, 2),
+       |r AS (SELECT query_id, id, n_lists, fused,
+       |        CAST(${rankBy("fused DESC, id")} AS INTEGER) AS rn
+       |      FROM fused)
+       |SELECT query_id, rn, id, n_lists, fused
+       |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
 
   /** Score-calibrated hybrid fusion ([[graft.ext.HybridSearch.weighted]]):
     * the same sparse top-20 (BM25) and dense top-20 (exact cosine) lists
@@ -4150,9 +3809,7 @@ object ExtQueries {
   private val mmrRerankSql = {
     def step(prev: Int, cur: Int): String =
       s"""ms$cur AS (SELECT r.query_id, r.id, max(r.rel) AS rel,
-         |  max(list_dot_product(r.v, sv.v)
-         |    / sqrt(list_dot_product(r.v, r.v)
-         |           * list_dot_product(sv.v, sv.v))) AS msim
+         |  max(${cosine("r.v", "sv.v")}) AS msim
          |  FROM cv r JOIN (SELECT c.query_id, c.id, v.v
          |                  FROM c$prev c JOIN e v ON v.vec_id = c.id) sv
          |    ON sv.query_id = r.query_id
@@ -4161,8 +3818,7 @@ object ExtQueries {
          |  GROUP BY 1, 2),
          |sel$cur AS (SELECT query_id, id, score, $cur AS step FROM (
          |  SELECT query_id, id, 0.7::DOUBLE * rel - (1 - 0.7::DOUBLE) * msim AS score,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY 0.7::DOUBLE * rel - (1 - 0.7::DOUBLE) * msim DESC, id) AS rn
+         |    ${rankBy("0.7::DOUBLE * rel - (1 - 0.7::DOUBLE) * msim DESC, id")} AS rn
          |  FROM ms$cur) WHERE rn = 1),
          |c$cur AS (SELECT * FROM c$prev UNION ALL
          |          SELECT * FROM sel$cur)""".stripMargin
@@ -4171,20 +3827,16 @@ object ExtQueries {
        |qd AS (SELECT vec_id AS query_id, v AS qv FROM e
        |       WHERE vec_id < 8),
        |p AS (SELECT query_id, vec_id,
-       |        list_dot_product(qv, v)
-       |          / sqrt(list_dot_product(qv, qv)
-       |                 * list_dot_product(v, v)) AS cos
+       |        ${cosine("qv", "v")} AS cos
        |      FROM qd JOIN e ON vec_id <> query_id),
        |cand AS (SELECT query_id, vec_id AS id, cos AS rel
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cos DESC, vec_id) AS rank FROM p)
+       |  FROM (SELECT *, ${rankBy("cos DESC, vec_id")} AS rank FROM p)
        |  WHERE rank <= 20),
        |cv AS MATERIALIZED (SELECT c.query_id, c.id, c.rel, e.v
        |  FROM cand c JOIN e ON e.vec_id = c.id),
        |sel1 AS (SELECT query_id, id, score, 1 AS step FROM (
        |  SELECT query_id, id, 0.7::DOUBLE * rel AS score,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY 0.7::DOUBLE * rel DESC, id) AS rn
+       |    ${rankBy("0.7::DOUBLE * rel DESC, id")} AS rn
        |  FROM cv) WHERE rn = 1),
        |c1 AS (SELECT * FROM sel1),
        |${step(1, 2)},
@@ -4236,9 +3888,7 @@ object ExtQueries {
   private val mmrCappedSql = {
     def step(prev: Int, cur: Int): String =
       s"""ms$cur AS (SELECT r.query_id, r.id, r.grp, max(r.rel) AS rel,
-         |  max(list_dot_product(r.v, sv.v)
-         |    / sqrt(list_dot_product(r.v, r.v)
-         |           * list_dot_product(sv.v, sv.v))) AS msim
+         |  max(${cosine("r.v", "sv.v")}) AS msim
          |  FROM cvg r JOIN (SELECT c.query_id, c.id, v.v
          |                  FROM c$prev c JOIN e v ON v.vec_id = c.id) sv
          |    ON sv.query_id = r.query_id
@@ -4250,8 +3900,7 @@ object ExtQueries {
          |sel$cur AS (SELECT query_id, id, grp, score, $cur AS step FROM (
          |  SELECT query_id, id, grp,
          |    0.7::DOUBLE * rel - (1 - 0.7::DOUBLE) * msim AS score,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY 0.7::DOUBLE * rel - (1 - 0.7::DOUBLE) * msim DESC, id) AS rn
+         |    ${rankBy("0.7::DOUBLE * rel - (1 - 0.7::DOUBLE) * msim DESC, id")} AS rn
          |  FROM ms$cur) WHERE rn = 1),
          |c$cur AS (SELECT * FROM c$prev UNION ALL
          |          SELECT * FROM sel$cur)""".stripMargin
@@ -4260,13 +3909,10 @@ object ExtQueries {
        |qd AS (SELECT vec_id AS query_id, v AS qv FROM e
        |       WHERE vec_id < 8),
        |p AS (SELECT query_id, vec_id,
-       |        list_dot_product(qv, v)
-       |          / sqrt(list_dot_product(qv, qv)
-       |                 * list_dot_product(v, v)) AS cos
+       |        ${cosine("qv", "v")} AS cos
        |      FROM qd JOIN e ON vec_id <> query_id),
        |cand AS (SELECT query_id, vec_id AS id, cos AS rel
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cos DESC, vec_id) AS rank FROM p)
+       |  FROM (SELECT *, ${rankBy("cos DESC, vec_id")} AS rank FROM p)
        |  WHERE rank <= 20),
        |cvg AS MATERIALIZED (SELECT c.query_id, c.id, c.rel, e.v, g.grp
        |  FROM cand c JOIN e ON e.vec_id = c.id
@@ -4274,8 +3920,7 @@ object ExtQueries {
        |    ON g.gid = c.id),
        |sel1 AS (SELECT query_id, id, grp, score, 1 AS step FROM (
        |  SELECT query_id, id, grp, 0.7::DOUBLE * rel AS score,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY 0.7::DOUBLE * rel DESC, id) AS rn
+       |    ${rankBy("0.7::DOUBLE * rel DESC, id")} AS rn
        |  FROM cvg) WHERE rn = 1),
        |c1 AS (SELECT * FROM sel1),
        |${step(1, 2)},
@@ -4288,55 +3933,40 @@ object ExtQueries {
   }
 
   private val hybridRrfSql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |               regexp_split_to_array(lower(trim(text)), '\s+')
-      |                 AS toks
-      |             FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |qs AS (SELECT id AS query_id,
-      |         unnest(list_distinct(toks[1:8])) AS term
-      |       FROM tok WHERE id < 8),
-      |sc AS (SELECT qs.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw
-      |       FROM qs JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |sp AS (SELECT query_id, id,
-      |         row_number() OVER (PARTITION BY query_id
-      |           ORDER BY round(score_raw, 6) DESC, id) AS rank
-      |       FROM sc),
-      |qd AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      |       FROM embeddings WHERE vec_id < 8),
-      |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
-      |p AS (SELECT query_id, vec_id,
-      |        list_dot_product(qv, ev)
-      |          / sqrt(list_dot_product(qv, qv)
-      |                 * list_dot_product(ev, ev)) AS cos
-      |      FROM qd, e WHERE vec_id <> query_id),
-      |dn AS (SELECT query_id, vec_id AS id,
-      |         row_number() OVER (PARTITION BY query_id
-      |           ORDER BY cos DESC, vec_id) AS rank
-      |       FROM p),
-      |fused AS (SELECT query_id, id,
-      |            round(sum(1.0 / (60 + rank)), 6) AS rrf,
-      |            count(*) AS n_lists
-      |          FROM (SELECT query_id, id, rank FROM sp WHERE rank <= 20
-      |                UNION ALL
-      |                SELECT query_id, id, rank FROM dn WHERE rank <= 20)
-      |          GROUP BY 1, 2),
-      |r AS (SELECT query_id, id, n_lists, rrf,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY rrf DESC, id) AS INTEGER) AS rn
-      |      FROM fused)
-      |SELECT query_id, rn, id, n_lists, rrf
-      |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |$bm25Stats,
+       |qs AS (SELECT id AS query_id,
+       |         unnest(list_distinct(toks[1:8])) AS term
+       |       FROM tok WHERE id < 8),
+       |sc AS (SELECT qs.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw
+       |       FROM qs JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |sp AS (SELECT query_id, id,
+       |         ${rankBy("round(score_raw, 6) DESC, id")} AS rank
+       |       FROM sc),
+       |qd AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+       |       FROM embeddings WHERE vec_id < 8),
+       |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
+       |p AS (SELECT query_id, vec_id,
+       |        ${cosine("qv", "ev")} AS cos
+       |      FROM qd, e WHERE vec_id <> query_id),
+       |dn AS (SELECT query_id, vec_id AS id,
+       |         ${rankBy("cos DESC, vec_id")} AS rank
+       |       FROM p),
+       |fused AS (SELECT query_id, id,
+       |            round(sum(1.0 / (60 + rank)), 6) AS rrf,
+       |            count(*) AS n_lists
+       |          FROM (SELECT query_id, id, rank FROM sp WHERE rank <= 20
+       |                UNION ALL
+       |                SELECT query_id, id, rank FROM dn WHERE rank <= 20)
+       |          GROUP BY 1, 2),
+       |r AS (SELECT query_id, id, n_lists, rrf,
+       |        CAST(${rankBy("rrf DESC, id")} AS INTEGER) AS rn
+       |      FROM fused)
+       |SELECT query_id, rn, id, n_lists, rrf
+       |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
 
   /** Streaming index maintenance: the delivery STREAMS in and each
     * micro-batch is admitted with [[graft.ext.TextSearch.appendDocs]]
@@ -4360,50 +3990,27 @@ object ExtQueries {
       .write.mode("overwrite").parquet(s"$in/d1")
     delta.filter(col("id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$in/d2")
-    val stream = s.readStream.schema("id LONG, t STRING")
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ext.TextSearch.appendDocs(s, dir, batch, col("id"), col("t"))
-      }
-      .start()
-    q.awaitTermination()
+    drain(s, "id LONG, t STRING", in, ckpt) { (batch, _) =>
+      graft.ext.TextSearch.appendDocs(s, dir, batch, col("id"), col("t"))
+    }
     graft.ext.TextSearch.searchSaved(s, dir, bm25Queries(s, d),
         col("qid"), col("qterms"), k = 5)
       .orderBy("query_id", "rn")
   }
 
   private val bm25Sql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |               regexp_split_to_array(lower(trim(text)), '\s+')
-      |                 AS toks
-      |             FROM documents),
-      |tf AS (SELECT id, term, count(*) AS tf
-      |       FROM (SELECT id, unnest(toks) AS term FROM tok)
-      |       GROUP BY 1, 2),
-      |dl AS (SELECT id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |lex AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |st AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
-      |q AS (SELECT id AS query_id,
-      |        unnest(list_distinct(toks[1:8])) AS term
-      |      FROM tok WHERE id < 8),
-      |sc AS (SELECT q.query_id, tf.id,
-      |         sum(ln(1 + (st.n_docs - lex.df + 0.5) / (lex.df + 0.5))
-      |             * tf.tf * 2.2
-      |             / (tf.tf + 0.3 + 0.9 * dl.dl / st.avgdl)) AS score_raw,
-      |         count(*) AS matched
-      |       FROM q JOIN tf USING (term) JOIN lex USING (term)
-      |       JOIN dl ON dl.id = tf.id, st
-      |       GROUP BY 1, 2),
-      |r AS (SELECT query_id, id, matched, round(score_raw, 6) AS score,
-      |        CAST(row_number() OVER (PARTITION BY query_id
-      |          ORDER BY round(score_raw, 6) DESC, id) AS INTEGER) AS rn
-      |      FROM sc)
-      |SELECT query_id, rn, id, matched, score
-      |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |$bm25Stats,
+       |q AS (SELECT id AS query_id,
+       |        unnest(list_distinct(toks[1:8])) AS term
+       |      FROM tok WHERE id < 8),
+       |sc AS (SELECT q.query_id, tf.id,
+       |         sum($bm25Weight) AS score_raw,
+       |         count(*) AS matched
+       |       FROM q JOIN tf USING (term) JOIN lex USING (term)
+       |       JOIN dl ON dl.id = tf.id, st
+       |       GROUP BY 1, 2),
+       |$bm25Top5""".stripMargin
 
   // ---- unigram LM scoring --------------------------------------------------
   /** Per-doc mean log-probability under the corpus unigram model; rounded
@@ -4416,19 +4023,19 @@ object ExtQueries {
       .orderBy("doc_id")
 
   private val docLogProbSql =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |         unnest(regexp_split_to_array(lower(trim(text)), '\s+'))
-      |           AS term
-      |  FROM documents),
-      |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-      |tc AS (SELECT term, CAST(sum(tf) AS BIGINT) AS cnt FROM tf GROUP BY 1),
-      |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM tc)
-      |SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-      |       round(sum(tf * ln(CAST(cnt AS DOUBLE) / total)) / sum(tf), 6)
-      |         AS mean_logprob
-      |FROM tf JOIN tc USING (term), tot
-      |GROUP BY doc_id ORDER BY doc_id""".stripMargin
+    s"""WITH toks AS (
+       |  SELECT doc_id,
+       |         unnest(${tokenize("text")})
+       |           AS term
+       |  FROM documents),
+       |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+       |tc AS (SELECT term, CAST(sum(tf) AS BIGINT) AS cnt FROM tf GROUP BY 1),
+       |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM tc)
+       |SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
+       |       round(sum(tf * ln(CAST(cnt AS DOUBLE) / total)) / sum(tf), 6)
+       |         AS mean_logprob
+       |FROM tf JOIN tc USING (term), tot
+       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   /** Interpolated trigram LM ([[TextAnalysis.trigramLogProbs]],
     * Jelinek–Mercer λ = 0.6/0.3/0.1): per-doc mean token log-prob under
@@ -4443,37 +4050,37 @@ object ExtQueries {
       .orderBy("doc_id")
 
   private val trigramLogProbSql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |    regexp_split_to_array(lower(trim(text)), '\s+') AS ts
-      |  FROM documents),
-      |tg AS (SELECT id, unnest(list_transform(range(len(ts) - 2),
-      |         i -> struct_pack(u := ts[i+1], v := ts[i+2],
-      |                          w := ts[i+3]))) AS g
-      |       FROM tok WHERE len(ts) >= 3),
-      |nf AS (SELECT id, g.u AS u, g.v AS v, g.w AS w, count(*) AS n
-      |       FROM tg GROUP BY 1, 2, 3, 4),
-      |tc AS (SELECT u, v, w, CAST(sum(n) AS BIGINT) AS t3
-      |       FROM nf GROUP BY 1, 2, 3),
-      |bg AS (SELECT unnest(list_transform(range(len(ts) - 1),
-      |         i -> struct_pack(p := ts[i+1], c := ts[i+2]))) AS b
-      |       FROM tok WHERE len(ts) >= 2),
-      |bc AS (SELECT b.p AS p, b.c AS c, count(*) AS b2 FROM bg
-      |       GROUP BY 1, 2),
-      |u1 AS (SELECT term, count(*) AS c1
-      |       FROM (SELECT unnest(ts) AS term FROM tok) GROUP BY 1),
-      |tt AS (SELECT CAST(sum(c1) AS BIGINT) AS total FROM u1)
-      |SELECT nf.id AS doc_id, CAST(sum(nf.n) AS BIGINT) AS n_trigrams,
-      |       round(sum(nf.n * ln(
-      |           0.6 * CAST(tc.t3 AS DOUBLE) / cx.b2
-      |         + 0.3 * CAST(bw.b2 AS DOUBLE) / uv.c1
-      |         + 0.1 * CAST(uw.c1 AS DOUBLE) / tt.total)) / sum(nf.n), 6)
-      |         AS mean_logprob
-      |FROM nf JOIN tc USING (u, v, w)
-      |JOIN bc cx ON cx.p = nf.u AND cx.c = nf.v
-      |JOIN bc bw ON bw.p = nf.v AND bw.c = nf.w
-      |JOIN u1 uv ON uv.term = nf.v
-      |JOIN u1 uw ON uw.term = nf.w, tt
-      |GROUP BY 1 ORDER BY 1""".stripMargin
+    s"""WITH tok AS (SELECT doc_id AS id,
+       |    ${tokenize("text")} AS ts
+       |  FROM documents),
+       |tg AS (SELECT id, unnest(list_transform(range(len(ts) - 2),
+       |         i -> struct_pack(u := ts[i+1], v := ts[i+2],
+       |                          w := ts[i+3]))) AS g
+       |       FROM tok WHERE len(ts) >= 3),
+       |nf AS (SELECT id, g.u AS u, g.v AS v, g.w AS w, count(*) AS n
+       |       FROM tg GROUP BY 1, 2, 3, 4),
+       |tc AS (SELECT u, v, w, CAST(sum(n) AS BIGINT) AS t3
+       |       FROM nf GROUP BY 1, 2, 3),
+       |bg AS (SELECT unnest(list_transform(range(len(ts) - 1),
+       |         i -> struct_pack(p := ts[i+1], c := ts[i+2]))) AS b
+       |       FROM tok WHERE len(ts) >= 2),
+       |bc AS (SELECT b.p AS p, b.c AS c, count(*) AS b2 FROM bg
+       |       GROUP BY 1, 2),
+       |u1 AS (SELECT term, count(*) AS c1
+       |       FROM (SELECT unnest(ts) AS term FROM tok) GROUP BY 1),
+       |tt AS (SELECT CAST(sum(c1) AS BIGINT) AS total FROM u1)
+       |SELECT nf.id AS doc_id, CAST(sum(nf.n) AS BIGINT) AS n_trigrams,
+       |       round(sum(nf.n * ln(
+       |           0.6 * CAST(tc.t3 AS DOUBLE) / cx.b2
+       |         + 0.3 * CAST(bw.b2 AS DOUBLE) / uv.c1
+       |         + 0.1 * CAST(uw.c1 AS DOUBLE) / tt.total)) / sum(nf.n), 6)
+       |         AS mean_logprob
+       |FROM nf JOIN tc USING (u, v, w)
+       |JOIN bc cx ON cx.p = nf.u AND cx.c = nf.v
+       |JOIN bc bw ON bw.p = nf.v AND bw.c = nf.w
+       |JOIN u1 uv ON uv.term = nf.v
+       |JOIN u1 uw ON uw.term = nf.w, tt
+       |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** Character-entropy quality signal ([[graft.ext.TextAnalysis
     * .charEntropy]]): bits/char per document — the filter that catches
@@ -4618,27 +4225,27 @@ object ExtQueries {
       .orderBy("doc_id")
 
   private val bigramLogProbSql =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |         regexp_split_to_array(lower(trim(text)), '\s+') AS tk
-      |  FROM documents),
-      |bg AS (SELECT doc_id, tk[i] AS prev, tk[i + 1] AS cur
-      |       FROM (SELECT doc_id, tk,
-      |               unnest(range(1, len(tk))) AS i
-      |             FROM toks)),
-      |bf AS (SELECT doc_id, prev, cur, count(*) AS n
-      |       FROM bg GROUP BY 1, 2, 3),
-      |bc AS (SELECT prev, cur, CAST(sum(n) AS BIGINT) AS bcnt
-      |       FROM bf GROUP BY 1, 2),
-      |cc AS (SELECT prev, CAST(sum(bcnt) AS BIGINT) AS ccnt
-      |       FROM bc GROUP BY 1),
-      |v AS (SELECT count(DISTINCT term) AS vocab
-      |      FROM (SELECT unnest(tk) AS term FROM toks))
-      |SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_bigrams,
-      |       round(sum(n * ln((bcnt + 0.5) / (ccnt + 0.5 * vocab)))
-      |             / sum(n), 6) AS mean_logprob
-      |FROM bf JOIN bc USING (prev, cur) JOIN cc USING (prev), v
-      |GROUP BY doc_id ORDER BY doc_id""".stripMargin
+    s"""WITH toks AS (
+       |  SELECT doc_id,
+       |         ${tokenize("text")} AS tk
+       |  FROM documents),
+       |bg AS (SELECT doc_id, tk[i] AS prev, tk[i + 1] AS cur
+       |       FROM (SELECT doc_id, tk,
+       |               unnest(range(1, len(tk))) AS i
+       |             FROM toks)),
+       |bf AS (SELECT doc_id, prev, cur, count(*) AS n
+       |       FROM bg GROUP BY 1, 2, 3),
+       |bc AS (SELECT prev, cur, CAST(sum(n) AS BIGINT) AS bcnt
+       |       FROM bf GROUP BY 1, 2),
+       |cc AS (SELECT prev, CAST(sum(bcnt) AS BIGINT) AS ccnt
+       |       FROM bc GROUP BY 1),
+       |v AS (SELECT count(DISTINCT term) AS vocab
+       |      FROM (SELECT unnest(tk) AS term FROM toks))
+       |SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_bigrams,
+       |       round(sum(n * ln((bcnt + 0.5) / (ccnt + 0.5 * vocab)))
+       |             / sum(n), 6) AS mean_logprob
+       |FROM bf JOIN bc USING (prev, cur) JOIN cc USING (prev), v
+       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   // ---- token-bounded chunking ---------------------------------------------
   /** [[TextAnalysis.chunk]]: 64-token windows with 16-token overlap

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Gate, Tables}
+import OracleSql._
+import GateOps._
 import graft.ext.{EmbeddingSearch, GraphOps, TextAnalysis}
 
 /** Round-9 graph + corpus-hygiene + tokenizer gates: embedding-graph
@@ -51,19 +53,12 @@ object GraphTextQueries {
       .orderBy("query_id", "rank")
 
   private val knnGraphSql =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-      |             list_dot_product(a.v, b.v)
-      |               / sqrt(list_dot_product(a.v, a.v)
-      |                      * list_dot_product(b.v, b.v)) AS cos
-      |      FROM e a, e b WHERE a.vec_id <> b.vec_id),
-      |r AS (SELECT query_id, vec_id, cos,
-      |             row_number() OVER (PARTITION BY query_id
-      |                                ORDER BY cos DESC, vec_id) AS rank
-      |      FROM p)
-      |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank
-      |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |$allPairsCos,
+       |$cosRanked
+       |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
+       |       CAST(rank AS INTEGER) AS rank
+       |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
 
   // ---- IVF-blocked kNN graph (the 100 TB shape) ----
 
@@ -95,21 +90,8 @@ object GraphTextQueries {
     val ann = graft.ext.IvfIndex.search(model, lit(true), k = 3,
       nProbe = 4)
     val exact = s.read.parquet(s"${sharedKnnGraph(s, d)}/knn")
-    val hits = ann.select("query_id", "neighbor_id")
-      .join(exact.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-    embs.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .agg(count(lit(1)).as("n_nodes"),
-        sum(when(coalesce(col("n_hit"), lit(0L)) >= 1, 1L)
-          .otherwise(0L)).as("n_ok"))
-      .select(col("n_nodes"),
-        (col("n_ok") >= col("n_nodes") * 0.8).as("graph_ok"))
+    recallFloor(embs, ann, exact, "n_nodes", "graph_ok")
   }
-
-  private val knnGraphBlockedSql =
-    """SELECT count(*) AS n_nodes, true AS graph_ok FROM embeddings"""
 
   // ---- NN-Descent: quantizer-free approximate kNN graph ----
 
@@ -147,21 +129,8 @@ object GraphTextQueries {
     val ann = s.read.parquet(s"${sharedDescentGraph(s, d)}/graph")
       .filter(col("rank") <= 3)
     val exact = s.read.parquet(s"${sharedKnnGraph(s, d)}/knn")
-    val hits = ann.select("query_id", "neighbor_id")
-      .join(exact.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-    embs.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .agg(count(lit(1)).as("n_nodes"),
-        sum(when(coalesce(col("n_hit"), lit(0L)) >= 1, 1L)
-          .otherwise(0L)).as("n_ok"))
-      .select(col("n_nodes"),
-        (col("n_ok") >= col("n_nodes") * 0.8).as("graph_ok"))
+    recallFloor(embs, ann, exact, "n_nodes", "graph_ok")
   }
-
-  private val nnDescentSql =
-    """SELECT count(*) AS n_nodes, true AS graph_ok FROM embeddings"""
 
   // ---- NN-Descent VALUE-CHECKED: the descent algebra replayed ----
 
@@ -195,12 +164,9 @@ object GraphTextQueries {
     s"""$out AS MATERIALIZED (
        |  SELECT query_id, neighbor_id, cos, rank FROM (
        |    SELECT query_id, neighbor_id, cos,
-       |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY cos DESC, neighbor_id) AS rank
+       |      ${rankBy("cos DESC, neighbor_id")} AS rank
        |    FROM (SELECT c.query_id, c.neighbor_id,
-       |            list_dot_product(a.v, b.v)
-       |              / sqrt(list_dot_product(a.v, a.v)
-       |                     * list_dot_product(b.v, b.v)) AS cos
+       |            ${cosine("a.v", "b.v")} AS cos
        |          FROM $cand c
        |          JOIN e a ON a.vec_id = c.query_id
        |          JOIN e b ON b.vec_id = c.neighbor_id))
@@ -269,14 +235,11 @@ object GraphTextQueries {
        |  FROM embeddings),
        |es AS (SELECT vec_id, v FROM e WHERE vec_id >= 20),
        |sp AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |         list_dot_product(a.v, b.v)
-       |           / sqrt(list_dot_product(a.v, a.v)
-       |                  * list_dot_product(b.v, b.v)) AS cos
+       |         ${cosine("a.v", "b.v")} AS cos
        |       FROM es a, es b WHERE a.vec_id <> b.vec_id),
        |seed AS MATERIALIZED (SELECT query_id, neighbor_id
        |  FROM (SELECT query_id, neighbor_id,
-       |          row_number() OVER (PARTITION BY query_id
-       |            ORDER BY cos DESC, neighbor_id) AS rank
+       |          ${rankBy("cos DESC, neighbor_id")} AS rank
        |        FROM sp)
        |  WHERE rank <= 4),
        |${descentRingCtes(4)},
@@ -318,22 +281,8 @@ object GraphTextQueries {
       .filter(col("neighbor_id") =!= col("query_id"))
     val exact = s.read.parquet(s"${sharedKnnGraph(s, d)}/knn")
       .filter(col("query_id") < 20)
-    val hits = got.select("query_id", "neighbor_id")
-      .join(exact.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-    queries.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .agg(count(lit(1)).as("n_queries"),
-        sum(when(coalesce(col("n_hit"), lit(0L)) >= 1, 1L)
-          .otherwise(0L)).as("n_ok"))
-      .select(col("n_queries"),
-        (col("n_ok") >= col("n_queries") * 0.8).as("search_ok"))
+    recallFloor(queries, got, exact)
   }
-
-  private val searchGraphSql =
-    """SELECT count(*) AS n_queries, true AS search_ok
-      |FROM embeddings WHERE vec_id < 20""".stripMargin
 
   // ---- the beam walk VALUE-CHECKED: relational replay in DuckDB ----
 
@@ -373,8 +322,7 @@ object GraphTextQueries {
       sfx: String = ""): String =
     s"""f$sfx$cur AS MATERIALIZED (SELECT query_id, node_id FROM (
        |  SELECT query_id, node_id,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos DESC, node_id) AS rn
+       |    ${rankBy("cos DESC, node_id")} AS rn
        |  FROM s$sfx$prev WHERE NOT expanded) WHERE rn <= $beam),
        |n$sfx$cur AS MATERIALIZED (
        |  SELECT DISTINCT f.query_id, u.dst AS node_id
@@ -389,9 +337,7 @@ object GraphTextQueries {
        |  FROM s$sfx$prev s
        |  UNION ALL
        |  SELECT n.query_id, n.node_id,
-       |    list_dot_product(q.qv, e.v)
-       |      / sqrt(list_dot_product(q.qv, q.qv)
-       |             * list_dot_product(e.v, e.v)) AS cos,
+       |    ${cosine("q.qv", "e.v")} AS cos,
        |    false AS expanded
        |  FROM n$sfx$cur n JOIN q ON q.query_id = n.query_id
        |  JOIN e$sfx e ON e.vec_id = n.node_id)""".stripMargin
@@ -400,28 +346,14 @@ object GraphTextQueries {
     def hop(prev: Int, cur: Int): String = walkHop(prev, cur, 4)
     s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v
        |  FROM embeddings),
-       |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-       |             list_dot_product(a.v, b.v)
-       |               / sqrt(list_dot_product(a.v, a.v)
-       |                      * list_dot_product(b.v, b.v)) AS cos
-       |      FROM e a, e b WHERE a.vec_id <> b.vec_id),
-       |r AS (SELECT query_id, vec_id, cos,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY cos DESC, vec_id) AS rank
-       |      FROM p),
-       |knn AS MATERIALIZED (SELECT query_id AS src, vec_id AS dst
-       |                     FROM r WHERE rank <= 3),
-       |und AS MATERIALIZED (SELECT src, dst FROM knn
-       |                     UNION SELECT dst, src FROM knn),
+       |$exactKnn3,
        |q AS MATERIALIZED (SELECT vec_id AS query_id, v AS qv FROM e
        |                   WHERE vec_id < 20),
        |entries AS (SELECT node_id FROM (
        |              SELECT DISTINCT src AS node_id FROM und)
        |            ORDER BY node_id LIMIT 4),
        |s0 AS MATERIALIZED (SELECT q.query_id, en.node_id,
-       |  list_dot_product(q.qv, e.v)
-       |    / sqrt(list_dot_product(q.qv, q.qv)
-       |           * list_dot_product(e.v, e.v)) AS cos,
+       |  ${cosine("q.qv", "e.v")} AS cos,
        |  false AS expanded
        |  FROM q CROSS JOIN entries en JOIN e ON e.vec_id = en.node_id),
        |${hop(0, 1)},
@@ -430,8 +362,7 @@ object GraphTextQueries {
        |SELECT query_id, node_id AS neighbor_id, round(cos, 6) AS cos,
        |       CAST(rank AS INTEGER) AS rank
        |FROM (SELECT query_id, node_id, cos,
-       |        row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cos DESC, node_id) AS rank
+       |        ${rankBy("cos DESC, node_id")} AS rank
        |      FROM s3)
        |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
   }
@@ -461,19 +392,7 @@ object GraphTextQueries {
     def hop(prev: Int, cur: Int): String = walkHop(prev, cur, 4)
     s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v
        |  FROM embeddings),
-       |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-       |             list_dot_product(a.v, b.v)
-       |               / sqrt(list_dot_product(a.v, a.v)
-       |                      * list_dot_product(b.v, b.v)) AS cos
-       |      FROM e a, e b WHERE a.vec_id <> b.vec_id),
-       |r AS (SELECT query_id, vec_id, cos,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY cos DESC, vec_id) AS rank
-       |      FROM p),
-       |knn AS MATERIALIZED (SELECT query_id AS src, vec_id AS dst
-       |                     FROM r WHERE rank <= 3),
-       |und AS MATERIALIZED (SELECT src, dst FROM knn
-       |                     UNION SELECT dst, src FROM knn),
+       |$exactKnn3,
        |q AS MATERIALIZED (SELECT vec_id AS query_id, v AS qv FROM e
        |                   WHERE vec_id < 20),
        |entries AS (SELECT node_id FROM (
@@ -481,9 +400,7 @@ object GraphTextQueries {
        |              FROM und GROUP BY src)
        |            ORDER BY deg DESC, node_id LIMIT 4),
        |s0 AS MATERIALIZED (SELECT q.query_id, en.node_id,
-       |  list_dot_product(q.qv, e.v)
-       |    / sqrt(list_dot_product(q.qv, q.qv)
-       |           * list_dot_product(e.v, e.v)) AS cos,
+       |  ${cosine("q.qv", "e.v")} AS cos,
        |  false AS expanded
        |  FROM q CROSS JOIN entries en JOIN e ON e.vec_id = en.node_id),
        |${hop(0, 1)},
@@ -492,8 +409,7 @@ object GraphTextQueries {
        |SELECT query_id, node_id AS neighbor_id, round(cos, 6) AS cos,
        |       CAST(rank AS INTEGER) AS rank
        |FROM (SELECT query_id, node_id, cos,
-       |        row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cos DESC, node_id) AS rank
+       |        ${rankBy("cos DESC, node_id")} AS rank
        |      FROM s3)
        |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
   }
@@ -535,15 +451,8 @@ object GraphTextQueries {
   private val knnClassifySql =
     s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v
        |  FROM embeddings),
-       |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-       |             list_dot_product(a.v, b.v)
-       |               / sqrt(list_dot_product(a.v, a.v)
-       |                      * list_dot_product(b.v, b.v)) AS cos
-       |      FROM e a, e b WHERE a.vec_id <> b.vec_id),
-       |r AS (SELECT query_id, vec_id, cos,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY cos DESC, vec_id) AS rank
-       |      FROM p),
+       |$allPairsCos,
+       |$cosRanked,
        |$knnVoteCtes
        |SELECT id, label, predicted FROM scored ORDER BY id""".stripMargin
 
@@ -566,15 +475,8 @@ object GraphTextQueries {
   private val classEvalSql =
     s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v
        |  FROM embeddings),
-       |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-       |             list_dot_product(a.v, b.v)
-       |               / sqrt(list_dot_product(a.v, a.v)
-       |                      * list_dot_product(b.v, b.v)) AS cos
-       |      FROM e a, e b WHERE a.vec_id <> b.vec_id),
-       |r AS (SELECT query_id, vec_id, cos,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY cos DESC, vec_id) AS rank
-       |      FROM p),
+       |$allPairsCos,
+       |$cosRanked,
        |$knnVoteCtes,
        |tpc AS (SELECT label AS clazz, count(*) AS tp FROM scored
        |        WHERE label = predicted GROUP BY 1),
@@ -632,15 +534,8 @@ object GraphTextQueries {
     s"""WITH RECURSIVE e AS MATERIALIZED (SELECT vec_id,
        |    embedding::DOUBLE[] AS v
        |  FROM embeddings),
-       |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-       |             list_dot_product(a.v, b.v)
-       |               / sqrt(list_dot_product(a.v, a.v)
-       |                      * list_dot_product(b.v, b.v)) AS cos
-       |      FROM e a, e b WHERE a.vec_id <> b.vec_id),
-       |r AS (SELECT query_id, vec_id, cos,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY cos DESC, vec_id) AS rank
-       |      FROM p),
+       |$allPairsCos,
+       |$cosRanked,
        |top1 AS (SELECT query_id, vec_id FROM r WHERE rank = 1),
        |mut AS (SELECT a.query_id AS id_a, a.vec_id AS id_b
        |        FROM top1 a JOIN top1 b
@@ -711,28 +606,14 @@ object GraphTextQueries {
     def hop(prev: Int, cur: Int): String = walkHop(prev, cur, 4)
     s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v
        |  FROM embeddings),
-       |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-       |             list_dot_product(a.v, b.v)
-       |               / sqrt(list_dot_product(a.v, a.v)
-       |                      * list_dot_product(b.v, b.v)) AS cos
-       |      FROM e a, e b WHERE a.vec_id <> b.vec_id),
-       |r AS (SELECT query_id, vec_id, cos,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY cos DESC, vec_id) AS rank
-       |      FROM p),
-       |knn AS MATERIALIZED (SELECT query_id AS src, vec_id AS dst
-       |                     FROM r WHERE rank <= 3),
-       |und AS MATERIALIZED (SELECT src, dst FROM knn
-       |                     UNION SELECT dst, src FROM knn),
+       |$exactKnn3,
        |q AS MATERIALIZED (SELECT vec_id AS query_id, v AS qv FROM e
        |                   WHERE vec_id < 20),
        |entries AS (SELECT node_id FROM (
        |              SELECT DISTINCT src AS node_id FROM und)
        |            ORDER BY node_id LIMIT 4),
        |s0 AS MATERIALIZED (SELECT q.query_id, en.node_id,
-       |  list_dot_product(q.qv, e.v)
-       |    / sqrt(list_dot_product(q.qv, q.qv)
-       |           * list_dot_product(e.v, e.v)) AS cos,
+       |  ${cosine("q.qv", "e.v")} AS cos,
        |  false AS expanded
        |  FROM q CROSS JOIN entries en JOIN e ON e.vec_id = en.node_id),
        |${hop(0, 1)},
@@ -740,8 +621,7 @@ object GraphTextQueries {
        |${hop(2, 3)},
        |res AS (SELECT query_id, node_id AS id, rank
        |  FROM (SELECT query_id, node_id,
-       |          row_number() OVER (PARTITION BY query_id
-       |            ORDER BY cos DESC, node_id) AS rank
+       |          ${rankBy("cos DESC, node_id")} AS rank
        |        FROM s3)
        |  WHERE rank <= 5),
        |qr AS (SELECT query_id, query_id AS id, 4 AS rel FROM q
@@ -759,8 +639,7 @@ object GraphTextQueries {
        |    sum((power(2.0, rel) - 1)
        |      / (ln(CAST(j + 1 AS DOUBLE)) / ln(2.0))) AS idcg
        |  FROM (SELECT query_id, id, rel,
-       |          row_number() OVER (PARTITION BY query_id
-       |            ORDER BY rel DESC, id) AS j
+       |          ${rankBy("rel DESC, id")} AS j
        |        FROM qr)
        |  GROUP BY 1)
        |SELECT i.query_id, i.n_rel,
@@ -803,19 +682,7 @@ object GraphTextQueries {
     val hops = (1 to 3).map(h => walkHop(h - 1, h, 4)).mkString(",\n")
     s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v
        |  FROM embeddings WHERE vec_id >= 20),
-       |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-       |             list_dot_product(a.v, b.v)
-       |               / sqrt(list_dot_product(a.v, a.v)
-       |                      * list_dot_product(b.v, b.v)) AS cos
-       |      FROM e a, e b WHERE a.vec_id <> b.vec_id),
-       |r AS (SELECT query_id, vec_id, cos,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY cos DESC, vec_id) AS rank
-       |      FROM p),
-       |knn AS MATERIALIZED (SELECT query_id AS src, vec_id AS dst
-       |                     FROM r WHERE rank <= 3),
-       |und AS MATERIALIZED (SELECT src, dst FROM knn
-       |                     UNION SELECT dst, src FROM knn),
+       |$exactKnn3,
        |q AS MATERIALIZED (SELECT vec_id AS query_id,
        |                     embedding::DOUBLE[] AS qv
        |                   FROM embeddings WHERE vec_id < 20),
@@ -823,9 +690,7 @@ object GraphTextQueries {
        |              SELECT DISTINCT src AS node_id FROM und)
        |            ORDER BY node_id LIMIT 4),
        |s0 AS MATERIALIZED (SELECT q.query_id, en.node_id,
-       |  list_dot_product(q.qv, e.v)
-       |    / sqrt(list_dot_product(q.qv, q.qv)
-       |           * list_dot_product(e.v, e.v)) AS cos,
+       |  ${cosine("q.qv", "e.v")} AS cos,
        |  false AS expanded
        |  FROM q CROSS JOIN entries en JOIN e ON e.vec_id = en.node_id),
        |$hops,
@@ -833,13 +698,10 @@ object GraphTextQueries {
        |             round(cos, 6) AS cos FROM s3),
        |intra AS (SELECT a.query_id,
        |            b.query_id AS neighbor_id,
-       |            round(list_dot_product(a.qv, b.qv)
-       |              / sqrt(list_dot_product(a.qv, a.qv)
-       |                     * list_dot_product(b.qv, b.qv)), 6) AS cos
+       |            round(${cosine("a.qv", "b.qv")}, 6) AS cos
        |          FROM q a, q b WHERE a.query_id <> b.query_id),
        |newe AS MATERIALIZED (SELECT query_id, neighbor_id, cos, rank
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cos DESC, neighbor_id) AS rank
+       |  FROM (SELECT *, ${rankBy("cos DESC, neighbor_id")} AS rank
        |        FROM (SELECT * FROM walked UNION ALL SELECT * FROM intra))
        |  WHERE rank <= 3),
        |rev AS (SELECT neighbor_id AS query_id, query_id AS neighbor_id,
@@ -849,8 +711,7 @@ object GraphTextQueries {
        |           round(cos, 6) AS cos
        |         FROM r WHERE rank <= 3),
        |merged AS (SELECT query_id, neighbor_id, cos, rank
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cos DESC, neighbor_id) AS rank
+       |  FROM (SELECT *, ${rankBy("cos DESC, neighbor_id")} AS rank
        |        FROM (SELECT k.* FROM knge k
        |              WHERE k.query_id IN (SELECT query_id FROM rev)
        |              UNION ALL SELECT * FROM rev))
@@ -919,9 +780,7 @@ object GraphTextQueries {
        |              SELECT DISTINCT src AS node_id FROM und)
        |            ORDER BY node_id LIMIT 4),
        |s0 AS MATERIALIZED (SELECT q.query_id, en.node_id,
-       |  list_dot_product(q.qv, e.v)
-       |    / sqrt(list_dot_product(q.qv, q.qv)
-       |           * list_dot_product(e.v, e.v)) AS cos,
+       |  ${cosine("q.qv", "e.v")} AS cos,
        |  false AS expanded
        |  FROM q CROSS JOIN entries en JOIN e ON e.vec_id = en.node_id),
        |$hops,
@@ -929,13 +788,10 @@ object GraphTextQueries {
        |             round(cos, 6) AS cos FROM s3),
        |intra AS (SELECT a.query_id,
        |            b.query_id AS neighbor_id,
-       |            round(list_dot_product(a.qv, b.qv)
-       |              / sqrt(list_dot_product(a.qv, a.qv)
-       |                     * list_dot_product(b.qv, b.qv)), 6) AS cos
+       |            round(${cosine("a.qv", "b.qv")}, 6) AS cos
        |          FROM q a, q b WHERE a.query_id <> b.query_id),
        |newe AS MATERIALIZED (SELECT query_id, neighbor_id, cos, rank
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cos DESC, neighbor_id) AS rank
+       |  FROM (SELECT *, ${rankBy("cos DESC, neighbor_id")} AS rank
        |        FROM (SELECT * FROM walked UNION ALL SELECT * FROM intra))
        |  WHERE rank <= 4),
        |rev AS (SELECT neighbor_id AS query_id, query_id AS neighbor_id,
@@ -945,8 +801,7 @@ object GraphTextQueries {
        |           rank
        |         FROM g2),
        |merged AS (SELECT query_id, neighbor_id, cos, rank
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cos DESC, neighbor_id) AS rank
+       |  FROM (SELECT *, ${rankBy("cos DESC, neighbor_id")} AS rank
        |        FROM (SELECT o.query_id, o.neighbor_id, o.cos FROM oldg o
        |              WHERE o.query_id IN (SELECT query_id FROM rev)
        |              UNION ALL SELECT * FROM rev))
@@ -1118,22 +973,8 @@ object GraphTextQueries {
       .bruteForceTopKFor(embs.filter(pred), queries, 4)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-    val hits = got.select("query_id", "neighbor_id")
-      .join(truth.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-    queries.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .agg(count(lit(1)).as("n_queries"),
-        sum(when(coalesce(col("n_hit"), lit(0L)) >= 1, 1L)
-          .otherwise(0L)).as("n_ok"))
-      .select(col("n_queries"),
-        (col("n_ok") >= col("n_queries") * 0.8).as("search_ok"))
+    recallFloor(queries, got, truth)
   }
-
-  private val searchGraphFilteredSql =
-    """SELECT count(*) AS n_queries, true AS search_ok
-      |FROM embeddings WHERE vec_id < 20""".stripMargin
 
   // ---- the FILTERED walk VALUE-CHECKED: over-fetch + post-filter ----
 
@@ -1166,28 +1007,14 @@ object GraphTextQueries {
     def hop(prev: Int, cur: Int): String = walkHop(prev, cur, 4)
     s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v
        |  FROM embeddings),
-       |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-       |             list_dot_product(a.v, b.v)
-       |               / sqrt(list_dot_product(a.v, a.v)
-       |                      * list_dot_product(b.v, b.v)) AS cos
-       |      FROM e a, e b WHERE a.vec_id <> b.vec_id),
-       |r AS (SELECT query_id, vec_id, cos,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY cos DESC, vec_id) AS rank
-       |      FROM p),
-       |knn AS MATERIALIZED (SELECT query_id AS src, vec_id AS dst
-       |                     FROM r WHERE rank <= 3),
-       |und AS MATERIALIZED (SELECT src, dst FROM knn
-       |                     UNION SELECT dst, src FROM knn),
+       |$exactKnn3,
        |q AS MATERIALIZED (SELECT vec_id AS query_id, v AS qv FROM e
        |                   WHERE vec_id < 20),
        |entries AS (SELECT node_id FROM (
        |              SELECT DISTINCT src AS node_id FROM und)
        |            ORDER BY node_id LIMIT 4),
        |s0 AS MATERIALIZED (SELECT q.query_id, en.node_id,
-       |  list_dot_product(q.qv, e.v)
-       |    / sqrt(list_dot_product(q.qv, q.qv)
-       |           * list_dot_product(e.v, e.v)) AS cos,
+       |  ${cosine("q.qv", "e.v")} AS cos,
        |  false AS expanded
        |  FROM q CROSS JOIN entries en JOIN e ON e.vec_id = en.node_id),
        |${hop(0, 1)},
@@ -1195,15 +1022,13 @@ object GraphTextQueries {
        |${hop(2, 3)},
        |wide AS (SELECT query_id, node_id, round(cos, 6) AS cos
        |  FROM (SELECT query_id, node_id, cos,
-       |          row_number() OVER (PARTITION BY query_id
-       |            ORDER BY cos DESC, node_id) AS rn
+       |          ${rankBy("cos DESC, node_id")} AS rn
        |        FROM s3)
        |  WHERE rn <= 12)
        |SELECT query_id, node_id AS neighbor_id, cos,
        |       CAST(rank AS INTEGER) AS rank
        |FROM (SELECT query_id, node_id, cos,
-       |        row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cos DESC, node_id) AS rank
+       |        ${rankBy("cos DESC, node_id")} AS rank
        |      FROM wide WHERE node_id % 3 = 0)
        |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
   }
@@ -1242,19 +1067,7 @@ object GraphTextQueries {
     def hop(prev: Int, cur: Int): String = walkHop(prev, cur, 4)
     s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v
        |  FROM embeddings),
-       |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-       |             list_dot_product(a.v, b.v)
-       |               / sqrt(list_dot_product(a.v, a.v)
-       |                      * list_dot_product(b.v, b.v)) AS cos
-       |      FROM e a, e b WHERE a.vec_id <> b.vec_id),
-       |r AS (SELECT query_id, vec_id, cos,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY cos DESC, vec_id) AS rank
-       |      FROM p),
-       |knn AS MATERIALIZED (SELECT query_id AS src, vec_id AS dst
-       |                     FROM r WHERE rank <= 3),
-       |und AS MATERIALIZED (SELECT src, dst FROM knn
-       |                     UNION SELECT dst, src FROM knn),
+       |$exactKnn3,
        |q AS MATERIALIZED (SELECT vec_id AS query_id, v AS qv FROM e
        |                   WHERE vec_id < 20),
        |deg AS (SELECT node_id, count(*) AS deg FROM (
@@ -1263,9 +1076,7 @@ object GraphTextQueries {
        |entries AS (SELECT node_id FROM deg
        |            ORDER BY deg DESC, node_id LIMIT 4),
        |s0 AS MATERIALIZED (SELECT q.query_id, en.node_id,
-       |  list_dot_product(q.qv, e.v)
-       |    / sqrt(list_dot_product(q.qv, q.qv)
-       |           * list_dot_product(e.v, e.v)) AS cos,
+       |  ${cosine("q.qv", "e.v")} AS cos,
        |  false AS expanded
        |  FROM q CROSS JOIN entries en JOIN e ON e.vec_id = en.node_id),
        |${hop(0, 1)},
@@ -1274,8 +1085,7 @@ object GraphTextQueries {
        |SELECT query_id, node_id AS neighbor_id, round(cos, 6) AS cos,
        |       CAST(rank AS INTEGER) AS rank
        |FROM (SELECT query_id, node_id, cos,
-       |        row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cos DESC, node_id) AS rank
+       |        ${rankBy("cos DESC, node_id")} AS rank
        |      FROM s3)
        |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
   }
@@ -1334,22 +1144,8 @@ object GraphTextQueries {
       .filter(col("neighbor_id") =!= col("query_id"))
     val exact = s.read.parquet(s"${sharedKnnGraph(s, d)}/knn")
       .filter(col("query_id") < 20)
-    val hits = got.select("query_id", "neighbor_id")
-      .join(exact.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-    queries.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .agg(count(lit(1)).as("n_queries"),
-        sum(when(coalesce(col("n_hit"), lit(0L)) >= 1, 1L)
-          .otherwise(0L)).as("n_ok"))
-      .select(col("n_queries"),
-        (col("n_ok") >= col("n_queries") * 0.8).as("search_ok"))
+    recallFloor(queries, got, exact)
   }
-
-  private val graphHubPersistSql =
-    """SELECT count(*) AS n_queries, true AS search_ok
-      |FROM embeddings WHERE vec_id < 20""".stripMargin
 
   // ---- index health stats, value-checked number by number ----
 
@@ -1380,46 +1176,41 @@ object GraphTextQueries {
   }
 
   private val graphStatsSql =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-      |             list_dot_product(a.v, b.v)
-      |               / sqrt(list_dot_product(a.v, a.v)
-      |                      * list_dot_product(b.v, b.v)) AS cos
-      |      FROM e a, e b WHERE a.vec_id <> b.vec_id),
-      |knn AS MATERIALIZED (SELECT query_id AS src, vec_id AS dst
-      |  FROM (SELECT query_id, vec_id,
-      |          row_number() OVER (PARTITION BY query_id
-      |            ORDER BY cos DESC, vec_id) AS rank
-      |        FROM p)
-      |  WHERE rank <= 3),
-      |dead AS (SELECT vec_id FROM embeddings WHERE vec_id % 7 = 3),
-      |lv AS (SELECT src, dst FROM knn
-      |       WHERE src NOT IN (SELECT vec_id FROM dead)),
-      |deg AS (SELECT node_id, count(*) AS dg FROM (
-      |          SELECT src AS node_id FROM knn
-      |          UNION ALL SELECT dst FROM knn) GROUP BY 1),
-      |livedeg AS (SELECT * FROM deg
-      |            WHERE node_id NOT IN (SELECT vec_id FROM dead)),
-      |hubs AS (SELECT node_id FROM deg
-      |         ORDER BY dg DESC, node_id LIMIT 64)
-      |SELECT * FROM (
-      |  SELECT 'dangling_edges' AS metric, count(*)::BIGINT AS value
-      |  FROM lv WHERE dst IN (SELECT vec_id FROM dead)
-      |  UNION ALL SELECT 'debt_deliveries', 0::BIGINT
-      |  UNION ALL SELECT 'debt_tombstones', 1::BIGINT
-      |  UNION ALL SELECT 'deg_max', max(dg)::BIGINT FROM livedeg
-      |  UNION ALL SELECT 'deg_min', min(dg)::BIGINT FROM livedeg
-      |  UNION ALL SELECT 'deg_sum', sum(dg)::BIGINT FROM livedeg
-      |  UNION ALL SELECT 'hub_count', count(*)::BIGINT FROM hubs
-      |    WHERE node_id NOT IN (SELECT vec_id FROM dead)
-      |  UNION ALL SELECT 'hub_election_age', 1::BIGINT
-      |  UNION ALL SELECT 'live_edges', count(*)::BIGINT FROM lv
-      |  UNION ALL SELECT 'live_nodes', count(*)::BIGINT FROM embeddings
-      |    WHERE vec_id % 7 <> 3
-      |  UNION ALL SELECT 'segments', 2::BIGINT
-      |  UNION ALL SELECT 'tombstone_segments', 1::BIGINT
-      |  UNION ALL SELECT 'version', 2::BIGINT)
-      |ORDER BY metric""".stripMargin
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |$allPairsCos,
+       |knn AS MATERIALIZED (SELECT query_id AS src, vec_id AS dst
+       |  FROM (SELECT query_id, vec_id,
+       |          ${rankBy("cos DESC, vec_id")} AS rank
+       |        FROM p)
+       |  WHERE rank <= 3),
+       |dead AS (SELECT vec_id FROM embeddings WHERE vec_id % 7 = 3),
+       |lv AS (SELECT src, dst FROM knn
+       |       WHERE src NOT IN (SELECT vec_id FROM dead)),
+       |deg AS (SELECT node_id, count(*) AS dg FROM (
+       |          SELECT src AS node_id FROM knn
+       |          UNION ALL SELECT dst FROM knn) GROUP BY 1),
+       |livedeg AS (SELECT * FROM deg
+       |            WHERE node_id NOT IN (SELECT vec_id FROM dead)),
+       |hubs AS (SELECT node_id FROM deg
+       |         ORDER BY dg DESC, node_id LIMIT 64)
+       |SELECT * FROM (
+       |  SELECT 'dangling_edges' AS metric, count(*)::BIGINT AS value
+       |  FROM lv WHERE dst IN (SELECT vec_id FROM dead)
+       |  UNION ALL SELECT 'debt_deliveries', 0::BIGINT
+       |  UNION ALL SELECT 'debt_tombstones', 1::BIGINT
+       |  UNION ALL SELECT 'deg_max', max(dg)::BIGINT FROM livedeg
+       |  UNION ALL SELECT 'deg_min', min(dg)::BIGINT FROM livedeg
+       |  UNION ALL SELECT 'deg_sum', sum(dg)::BIGINT FROM livedeg
+       |  UNION ALL SELECT 'hub_count', count(*)::BIGINT FROM hubs
+       |    WHERE node_id NOT IN (SELECT vec_id FROM dead)
+       |  UNION ALL SELECT 'hub_election_age', 1::BIGINT
+       |  UNION ALL SELECT 'live_edges', count(*)::BIGINT FROM lv
+       |  UNION ALL SELECT 'live_nodes', count(*)::BIGINT FROM embeddings
+       |    WHERE vec_id % 7 <> 3
+       |  UNION ALL SELECT 'segments', 2::BIGINT
+       |  UNION ALL SELECT 'tombstone_segments', 1::BIGINT
+       |  UNION ALL SELECT 'version', 2::BIGINT)
+       |ORDER BY metric""".stripMargin
 
   // ---- measured serving quality: the sampled-recall probe ----
 
@@ -1525,14 +1316,11 @@ object GraphTextQueries {
       */
     def root(sfx: String): String =
       s"""p$sfx AS (SELECT a.vec_id AS query_id, b.vec_id,
-         |             list_dot_product(a.v, b.v)
-         |               / sqrt(list_dot_product(a.v, a.v)
-         |                      * list_dot_product(b.v, b.v)) AS cos
+         |             ${cosine("a.v", "b.v")} AS cos
          |      FROM ef$sfx a, ef$sfx b WHERE a.vec_id <> b.vec_id),
          |knn$sfx AS MATERIALIZED (SELECT query_id AS src, vec_id AS dst
          |  FROM (SELECT query_id, vec_id,
-         |          row_number() OVER (PARTITION BY query_id
-         |            ORDER BY cos DESC, vec_id) AS rank
+         |          ${rankBy("cos DESC, vec_id")} AS rank
          |        FROM p$sfx)
          |  WHERE rank <= 3),
          |lv$sfx AS (SELECT src, dst FROM knn$sfx
@@ -1544,9 +1332,7 @@ object GraphTextQueries {
          |    WHERE src IN (SELECT vec_id FROM e$sfx))
          |  ORDER BY node_id LIMIT 4),
          |s${sfx}0 AS MATERIALIZED (SELECT q.query_id, en.node_id,
-         |  list_dot_product(q.qv, e.v)
-         |    / sqrt(list_dot_product(q.qv, q.qv)
-         |           * list_dot_product(e.v, e.v)) AS cos,
+         |  ${cosine("q.qv", "e.v")} AS cos,
          |  false AS expanded
          |  FROM q CROSS JOIN entries$sfx en
          |  JOIN e$sfx e ON e.vec_id = en.node_id),
@@ -1555,8 +1341,7 @@ object GraphTextQueries {
          |${walkHop(2, 3, 4, sfx)},
          |h$sfx AS (SELECT query_id, node_id, round(cos, 6) AS cos FROM (
          |    SELECT query_id, node_id, cos,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY cos DESC, node_id) AS rn
+         |      ${rankBy("cos DESC, node_id")} AS rn
          |    FROM s${sfx}3)
          |  WHERE rn <= 20)""".stripMargin
     s"""WITH efa AS MATERIALIZED (SELECT vec_id,
@@ -1580,8 +1365,7 @@ object GraphTextQueries {
        |SELECT query_id, node_id AS neighbor_id, cos,
        |       CAST(rank AS INTEGER) AS rank
        |FROM (SELECT query_id, node_id, cos,
-       |        row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cos DESC, node_id) AS rank
+       |        ${rankBy("cos DESC, node_id")} AS rank
        |      FROM fed)
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
   }
@@ -1612,26 +1396,18 @@ object GraphTextQueries {
       .write.mode("overwrite").parquet(s"$in/d1")
     embs.filter(col("vec_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$in/d2")
-    val stream = s.readStream.schema(embs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
     var delivered = 0
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (delivered == 0) {
-          val b = batch.select(col("vec_id"), col("embedding"))
-            .localCheckpoint(true)
-          graft.ext.KnnGraphIndex.buildFrom(b,
-            EmbeddingSearch.knnGraph(b, 3), idx, k = 3)
-          ()
-        } else graft.ext.KnnGraphIndex.insert(s, idx, batch,
-          beamWidth = 4, hops = 3, entryPoints = 4)
-        delivered += 1
+    drain(s, embs.schema, in, ckpt) { (batch, _) =>
+      if (delivered == 0) {
+        val b = batch.select(col("vec_id"), col("embedding"))
+          .localCheckpoint(true)
+        graft.ext.KnnGraphIndex.buildFrom(b,
+          EmbeddingSearch.knnGraph(b, 3), idx, k = 3)
         ()
-      }.start()
-    q.awaitTermination()
+      } else graft.ext.KnnGraphIndex.insert(s, idx, batch,
+        beamWidth = 4, hops = 3, entryPoints = 4)
+      delivered += 1
+    }
     graft.ext.KnnGraphIndex
       .liveEdges(graft.ext.IndexStore.snapshot(s, idx))
       .orderBy("vec_id", "rank")
@@ -1641,19 +1417,7 @@ object GraphTextQueries {
     val hops = (1 to 3).map(h => walkHop(h - 1, h, 4)).mkString(",\n")
     s"""WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v
        |  FROM embeddings WHERE vec_id % 2 = 0),
-       |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-       |             list_dot_product(a.v, b.v)
-       |               / sqrt(list_dot_product(a.v, a.v)
-       |                      * list_dot_product(b.v, b.v)) AS cos
-       |      FROM e a, e b WHERE a.vec_id <> b.vec_id),
-       |r AS (SELECT query_id, vec_id, cos,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY cos DESC, vec_id) AS rank
-       |      FROM p),
-       |knn AS MATERIALIZED (SELECT query_id AS src, vec_id AS dst
-       |                     FROM r WHERE rank <= 3),
-       |und AS MATERIALIZED (SELECT src, dst FROM knn
-       |                     UNION SELECT dst, src FROM knn),
+       |$exactKnn3,
        |q AS MATERIALIZED (SELECT vec_id AS query_id,
        |                     embedding::DOUBLE[] AS qv
        |                   FROM embeddings WHERE vec_id % 2 = 1),
@@ -1661,9 +1425,7 @@ object GraphTextQueries {
        |              SELECT DISTINCT src AS node_id FROM und)
        |            ORDER BY node_id LIMIT 4),
        |s0 AS MATERIALIZED (SELECT q.query_id, en.node_id,
-       |  list_dot_product(q.qv, e.v)
-       |    / sqrt(list_dot_product(q.qv, q.qv)
-       |           * list_dot_product(e.v, e.v)) AS cos,
+       |  ${cosine("q.qv", "e.v")} AS cos,
        |  false AS expanded
        |  FROM q CROSS JOIN entries en JOIN e ON e.vec_id = en.node_id),
        |$hops,
@@ -1671,13 +1433,10 @@ object GraphTextQueries {
        |             round(cos, 6) AS cos FROM s3),
        |intra AS (SELECT a.query_id,
        |            b.query_id AS neighbor_id,
-       |            round(list_dot_product(a.qv, b.qv)
-       |              / sqrt(list_dot_product(a.qv, a.qv)
-       |                     * list_dot_product(b.qv, b.qv)), 6) AS cos
+       |            round(${cosine("a.qv", "b.qv")}, 6) AS cos
        |          FROM q a, q b WHERE a.query_id <> b.query_id),
        |newe AS MATERIALIZED (SELECT query_id, neighbor_id, cos, rank
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cos DESC, neighbor_id) AS rank
+       |  FROM (SELECT *, ${rankBy("cos DESC, neighbor_id")} AS rank
        |        FROM (SELECT * FROM walked UNION ALL SELECT * FROM intra))
        |  WHERE rank <= 3),
        |rev AS (SELECT neighbor_id AS query_id, query_id AS neighbor_id,
@@ -1687,8 +1446,7 @@ object GraphTextQueries {
        |           round(cos, 6) AS cos, rank
        |         FROM r WHERE rank <= 3),
        |merged AS (SELECT query_id, neighbor_id, cos, rank
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-       |          ORDER BY cos DESC, neighbor_id) AS rank
+       |  FROM (SELECT *, ${rankBy("cos DESC, neighbor_id")} AS rank
        |        FROM (SELECT k.query_id, k.neighbor_id, k.cos FROM knge k
        |              WHERE k.query_id IN (SELECT query_id FROM rev)
        |              UNION ALL SELECT * FROM rev))
@@ -1733,34 +1491,26 @@ object GraphTextQueries {
       .write.mode("overwrite").parquet(s"$in/d1")
     embs.filter(col("vec_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$in/d2")
-    val stream = s.readStream.schema(embs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
     var delivered = 0
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (delivered == 0) {
-          batch.write.mode("append").parquet(s"$state/corpus")
-          EmbeddingSearch.knnGraph(s.read.parquet(s"$state/corpus"), 3)
-            .write.mode("overwrite").parquet(s"$state/graph_next")
-        } else {
-          // inserted graph materializes BEFORE the corpus append — the
-          // q_stream_knn staging discipline, here hash-checked: an
-          // early append would leak the delivery into its own walk
-          EmbeddingSearch.graphInsert(s.read.parquet(s"$state/corpus"),
-              s.read.parquet(s"$state/graph"), batch, k = 3,
-              beamWidth = 4, hops = 3, entryPoints = 4)
-            .write.mode("overwrite").parquet(s"$state/graph_next")
-          batch.write.mode("append").parquet(s"$state/corpus")
-        }
-        s.read.parquet(s"$state/graph_next")
-          .write.mode("overwrite").parquet(s"$state/graph")
-        delivered += 1
-        ()
-      }.start()
-    q.awaitTermination()
+    drain(s, embs.schema, in, ckpt) { (batch, _) =>
+      if (delivered == 0) {
+        batch.write.mode("append").parquet(s"$state/corpus")
+        EmbeddingSearch.knnGraph(s.read.parquet(s"$state/corpus"), 3)
+          .write.mode("overwrite").parquet(s"$state/graph_next")
+      } else {
+        // inserted graph materializes BEFORE the corpus append — the
+        // q_stream_knn staging discipline, here hash-checked: an
+        // early append would leak the delivery into its own walk
+        EmbeddingSearch.graphInsert(s.read.parquet(s"$state/corpus"),
+            s.read.parquet(s"$state/graph"), batch, k = 3,
+            beamWidth = 4, hops = 3, entryPoints = 4)
+          .write.mode("overwrite").parquet(s"$state/graph_next")
+        batch.write.mode("append").parquet(s"$state/corpus")
+      }
+      s.read.parquet(s"$state/graph_next")
+        .write.mode("overwrite").parquet(s"$state/graph")
+      delivered += 1
+    }
     s.read.parquet(s"$state/graph")
       .select(col("query_id").as("vec_id"), col("neighbor_id"),
         col("cos"), col("rank"))
@@ -1851,21 +1601,14 @@ object GraphTextQueries {
       .write.mode("overwrite").parquet(s"$in/b1")
     queries.filter(col("vec_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$in/b2")
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val results = graft.ext.EmbeddingSearch.graphSearch(embs, exact,
-            batch, k = 5, beamWidth = 4, hops = 3, entryPoints = 4)
-          .select(col("query_id"), col("neighbor_id").as("id"),
-            col("rank"))
-        graft.ext.Eval.rankHits(results, qrels)
-          .write.mode("append").parquet(out)
-      }.start()
-    q.awaitTermination()
+    drain(s, queries.schema, in, ckpt) { (batch, _) =>
+      val results = graft.ext.EmbeddingSearch.graphSearch(embs, exact,
+          batch, k = 5, beamWidth = 4, hops = 3, entryPoints = 4)
+        .select(col("query_id"), col("neighbor_id").as("id"),
+          col("rank"))
+      graft.ext.Eval.rankHits(results, qrels)
+        .write.mode("append").parquet(out)
+    }
     val partials = s.read.schema(
         "query_id LONG, n_hit LONG, first_hit INT, dcg DOUBLE")
       .parquet(out)
@@ -1912,14 +1655,9 @@ object GraphTextQueries {
          |  WHERE id NOT IN (SELECT id FROM l_0))""".stripMargin
     s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-       |             list_dot_product(a.v, b.v)
-       |               / sqrt(list_dot_product(a.v, a.v)
-       |                      * list_dot_product(b.v, b.v)) AS cos
+       |             ${cosine("a.v", "b.v")} AS cos
        |      FROM e0 a, e0 b WHERE a.vec_id <> b.vec_id),
-       |r AS (SELECT query_id, vec_id, cos,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY cos DESC, vec_id) AS rank
-       |      FROM p),
+       |$cosRanked,
        |knn AS (SELECT query_id AS src, vec_id AS dst FROM r WHERE rank <= 3),
        |edges AS (SELECT src, dst FROM knn
        |          UNION SELECT dst, src FROM knn),
@@ -1966,33 +1704,26 @@ object GraphTextQueries {
   }
 
   private val labelPropIncSql =
-    """WITH RECURSIVE
-      |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-      |             list_dot_product(a.v, b.v)
-      |               / sqrt(list_dot_product(a.v, a.v)
-      |                      * list_dot_product(b.v, b.v)) AS cos
-      |      FROM e a, e b WHERE a.vec_id <> b.vec_id),
-      |r AS (SELECT query_id, vec_id, cos,
-      |             row_number() OVER (PARTITION BY query_id
-      |                                ORDER BY cos DESC, vec_id) AS rank
-      |      FROM p),
-      |knn AS (SELECT query_id AS src, vec_id AS dst FROM r
-      |        WHERE rank <= 3),
-      |edges AS (SELECT src, dst FROM knn UNION SELECT dst, src FROM knn),
-      |reach AS (
-      |  SELECT vec_id AS id, vec_id AS r FROM embeddings
-      |  UNION
-      |  SELECT ed.dst AS id, reach.r FROM edges ed
-      |  JOIN reach ON reach.id = ed.src),
-      |seeds AS (SELECT vec_id AS id, label FROM embeddings
-      |          WHERE vec_id % 5 = 0),
-      |lab AS (SELECT reach.id, min(s.label) AS label
-      |        FROM reach JOIN seeds s ON s.id = reach.r
-      |        GROUP BY reach.id)
-      |SELECT emb.vec_id AS id, l.label
-      |FROM embeddings emb LEFT JOIN lab l ON l.id = emb.vec_id
-      |ORDER BY id""".stripMargin
+    s"""WITH RECURSIVE
+       |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |$allPairsCos,
+       |$cosRanked,
+       |knn AS (SELECT query_id AS src, vec_id AS dst FROM r
+       |        WHERE rank <= 3),
+       |edges AS (SELECT src, dst FROM knn UNION SELECT dst, src FROM knn),
+       |reach AS (
+       |  SELECT vec_id AS id, vec_id AS r FROM embeddings
+       |  UNION
+       |  SELECT ed.dst AS id, reach.r FROM edges ed
+       |  JOIN reach ON reach.id = ed.src),
+       |seeds AS (SELECT vec_id AS id, label FROM embeddings
+       |          WHERE vec_id % 5 = 0),
+       |lab AS (SELECT reach.id, min(s.label) AS label
+       |        FROM reach JOIN seeds s ON s.id = reach.r
+       |        GROUP BY reach.id)
+       |SELECT emb.vec_id AS id, l.label
+       |FROM embeddings emb LEFT JOIN lab l ON l.id = emb.vec_id
+       |ORDER BY id""".stripMargin
 
   // ---- paragraph-level exact dedup (the C4 boilerplate scrub) ----
 
@@ -2022,28 +1753,26 @@ object GraphTextQueries {
       .orderBy("id")
 
   private val paragraphDedupSql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |               regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |             FROM documents),
-      |p0 AS (SELECT id, list_append(
-      |         list_transform(range(CAST(ceil(len(toks) / 25.0) AS INT)),
-      |           i -> array_to_string(toks[i*25+1 : i*25+25], ' ')),
-      |         'subscribe to our newsletter edition ' || (id % 3)) AS paras
-      |       FROM tok),
-      |paras AS (SELECT id, r['i'] AS idx, r['p'] AS para
-      |          FROM p0, unnest(list_transform(range(len(paras)),
-      |            i -> {'i': i, 'p': paras[i+1]})) AS t(r)),
-      |marked AS (SELECT id, idx, para,
-      |             row_number() OVER (PARTITION BY para
-      |                                ORDER BY id, idx) AS rn
-      |           FROM paras)
-      |SELECT id,
-      |       count(*) AS n_paras,
-      |       CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT)
-      |         AS kept_paras,
-      |       coalesce(string_agg(CASE WHEN rn = 1 THEN para END,
-      |                           chr(10) ORDER BY idx), '') AS clean_text
-      |FROM marked GROUP BY id ORDER BY id""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |p0 AS (SELECT id, list_append(
+       |         list_transform(range(CAST(ceil(len(toks) / 25.0) AS INT)),
+       |           i -> array_to_string(toks[i*25+1 : i*25+25], ' ')),
+       |         'subscribe to our newsletter edition ' || (id % 3)) AS paras
+       |       FROM tok),
+       |paras AS (SELECT id, r['i'] AS idx, r['p'] AS para
+       |          FROM p0, unnest(list_transform(range(len(paras)),
+       |            i -> {'i': i, 'p': paras[i+1]})) AS t(r)),
+       |marked AS (SELECT id, idx, para,
+       |             row_number() OVER (PARTITION BY para
+       |                                ORDER BY id, idx) AS rn
+       |           FROM paras)
+       |SELECT id,
+       |       count(*) AS n_paras,
+       |       CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT)
+       |         AS kept_paras,
+       |       coalesce(string_agg(CASE WHEN rn = 1 THEN para END,
+       |                           chr(10) ORDER BY idx), '') AS clean_text
+       |FROM marked GROUP BY id ORDER BY id""".stripMargin
 
   // ---- incremental paragraph-dedup registry ----
 
@@ -2068,28 +1797,26 @@ object GraphTextQueries {
   }
 
   private val paragraphDedupIncSql =
-    """WITH tok AS (SELECT doc_id AS id,
-      |               regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |             FROM documents),
-      |p0 AS (SELECT id, list_append(
-      |         list_transform(range(CAST(ceil(len(toks) / 25.0) AS INT)),
-      |           i -> array_to_string(toks[i*25+1 : i*25+25], ' ')),
-      |         'subscribe to our newsletter edition ' || (id % 3)) AS paras
-      |       FROM tok),
-      |paras AS (SELECT id, r['i'] AS idx, r['p'] AS para
-      |          FROM p0, unnest(list_transform(range(len(paras)),
-      |            i -> {'i': i, 'p': paras[i+1]})) AS t(r)),
-      |marked AS (SELECT id, idx, para,
-      |             row_number() OVER (PARTITION BY para
-      |                                ORDER BY id, idx) AS rn
-      |           FROM paras)
-      |SELECT id,
-      |       count(*) AS n_paras,
-      |       CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT)
-      |         AS kept_paras,
-      |       coalesce(string_agg(CASE WHEN rn = 1 THEN para END,
-      |                           chr(10) ORDER BY idx), '') AS clean_text
-      |FROM marked WHERE id >= 400 GROUP BY id ORDER BY id""".stripMargin
+    s"""WITH ${docTokens("tok", "documents")},
+       |p0 AS (SELECT id, list_append(
+       |         list_transform(range(CAST(ceil(len(toks) / 25.0) AS INT)),
+       |           i -> array_to_string(toks[i*25+1 : i*25+25], ' ')),
+       |         'subscribe to our newsletter edition ' || (id % 3)) AS paras
+       |       FROM tok),
+       |paras AS (SELECT id, r['i'] AS idx, r['p'] AS para
+       |          FROM p0, unnest(list_transform(range(len(paras)),
+       |            i -> {'i': i, 'p': paras[i+1]})) AS t(r)),
+       |marked AS (SELECT id, idx, para,
+       |             row_number() OVER (PARTITION BY para
+       |                                ORDER BY id, idx) AS rn
+       |           FROM paras)
+       |SELECT id,
+       |       count(*) AS n_paras,
+       |       CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT)
+       |         AS kept_paras,
+       |       coalesce(string_agg(CASE WHEN rn = 1 THEN para END,
+       |                           chr(10) ORDER BY idx), '') AS clean_text
+       |FROM marked WHERE id >= 400 GROUP BY id ORDER BY id""".stripMargin
 
   /** The streaming twin of [[paragraphDedupInc]] — the crawl-ingest
     * loop as it actually runs: deliveries tail in as a file stream and
@@ -2113,21 +1840,11 @@ object GraphTextQueries {
       .write.mode("overwrite").parquet(s"$in/d1")
     all.filter(col("id") >= 450).coalesce(1)
       .write.mode("overwrite").parquet(s"$in/d2")
-    val stream = s.readStream
-      .schema("id LONG, idx INT, para STRING")
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        ParagraphIndex.ingestBatch(s, root, batch,
-            col("id"), col("idx"), col("para"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$out/b-$bid")
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(s, "id LONG, idx INT, para STRING", in, ckpt) { (batch, bid) =>
+      ParagraphIndex.ingestBatch(s, root, batch,
+          col("id"), col("idx"), col("para"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$out/b-$bid")
+    }
     s.read.option("recursiveFileLookup", "true").parquet(out)
       .orderBy("id")
   }
@@ -2167,45 +1884,45 @@ object GraphTextQueries {
   }
 
   private val wordpieceApplySql =
-    """WITH RECURSIVE tok AS (SELECT
-      |    regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |  FROM documents),
-      |words AS (SELECT w, count(*) AS cnt
-      |          FROM (SELECT unnest(toks) AS w FROM tok)
-      |          WHERE w <> '' GROUP BY w),
-      |top20 AS (SELECT w, row_number() OVER (ORDER BY cnt DESC, w) AS rk
-      |          FROM words QUALIFY rk <= 20),
-      |chars AS (SELECT DISTINCT substr(w, ci + 1, 1) AS c
-      |          FROM (SELECT w, unnest(range(length(w))) AS ci FROM words)),
-      |vocab AS (
-      |  SELECT c AS piece, false AS cont, c AS raw FROM chars
-      |  UNION SELECT '##' || c, true, c FROM chars
-      |  UNION SELECT w, false, w FROM top20 WHERE rk <= 10
-      |  UNION SELECT left(w, 4), false, left(w, 4) FROM top20
-      |    WHERE rk > 10
-      |  UNION SELECT '##' || right(w, 4), true, right(w, 4) FROM top20
-      |    WHERE rk > 10),
-      |positions AS (SELECT w, p0 + 1 AS pos
-      |  FROM (SELECT w, unnest(range(length(w))) AS p0 FROM words)),
-      |matches AS (SELECT p.w, p.pos, v.piece, length(v.raw) AS len
-      |  FROM positions p JOIN vocab v
-      |    ON v.cont = (p.pos > 1)
-      |   AND substr(p.w, p.pos, length(v.raw)) = v.raw),
-      |best AS (SELECT w, pos, piece, len FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY w, pos
-      |      ORDER BY len DESC, piece) AS rn FROM matches)
-      |  WHERE rn = 1),
-      |seg AS (
-      |  SELECT w, 1 AS pos, CAST('' AS VARCHAR) AS pieces FROM words
-      |  UNION ALL
-      |  SELECT s.w, s.pos + b.len, s.pieces || ' ' || b.piece
-      |  FROM seg s JOIN best b ON b.w = s.w AND b.pos = s.pos
-      |  WHERE s.pos <= length(s.w)),
-      |done AS (SELECT w, trim(pieces) AS pieces_str FROM seg
-      |         WHERE pos = length(w) + 1)
-      |SELECT wo.w, wo.cnt, coalesce(d.pieces_str, '[UNK]') AS pieces_str
-      |FROM words wo LEFT JOIN done d ON d.w = wo.w
-      |ORDER BY wo.w""".stripMargin
+    s"""WITH RECURSIVE tok AS (SELECT
+       |    ${tokenize("text")} AS toks
+       |  FROM documents),
+       |words AS (SELECT w, count(*) AS cnt
+       |          FROM (SELECT unnest(toks) AS w FROM tok)
+       |          WHERE w <> '' GROUP BY w),
+       |top20 AS (SELECT w, row_number() OVER (ORDER BY cnt DESC, w) AS rk
+       |          FROM words QUALIFY rk <= 20),
+       |chars AS (SELECT DISTINCT substr(w, ci + 1, 1) AS c
+       |          FROM (SELECT w, unnest(range(length(w))) AS ci FROM words)),
+       |vocab AS (
+       |  SELECT c AS piece, false AS cont, c AS raw FROM chars
+       |  UNION SELECT '##' || c, true, c FROM chars
+       |  UNION SELECT w, false, w FROM top20 WHERE rk <= 10
+       |  UNION SELECT left(w, 4), false, left(w, 4) FROM top20
+       |    WHERE rk > 10
+       |  UNION SELECT '##' || right(w, 4), true, right(w, 4) FROM top20
+       |    WHERE rk > 10),
+       |positions AS (SELECT w, p0 + 1 AS pos
+       |  FROM (SELECT w, unnest(range(length(w))) AS p0 FROM words)),
+       |matches AS (SELECT p.w, p.pos, v.piece, length(v.raw) AS len
+       |  FROM positions p JOIN vocab v
+       |    ON v.cont = (p.pos > 1)
+       |   AND substr(p.w, p.pos, length(v.raw)) = v.raw),
+       |best AS (SELECT w, pos, piece, len FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY w, pos
+       |      ORDER BY len DESC, piece) AS rn FROM matches)
+       |  WHERE rn = 1),
+       |seg AS (
+       |  SELECT w, 1 AS pos, CAST('' AS VARCHAR) AS pieces FROM words
+       |  UNION ALL
+       |  SELECT s.w, s.pos + b.len, s.pieces || ' ' || b.piece
+       |  FROM seg s JOIN best b ON b.w = s.w AND b.pos = s.pos
+       |  WHERE s.pos <= length(s.w)),
+       |done AS (SELECT w, trim(pieces) AS pieces_str FROM seg
+       |         WHERE pos = length(w) + 1)
+       |SELECT wo.w, wo.cnt, coalesce(d.pieces_str, '[UNK]') AS pieces_str
+       |FROM words wo LEFT JOIN done d ON d.w = wo.w
+       |ORDER BY wo.w""".stripMargin
 
   // ---- unigram-LM-shape minimum-cost segmentation ----
 
@@ -2279,7 +1996,7 @@ object GraphTextQueries {
 
   private val minCostSegmentSql = {
     s"""WITH tok AS (SELECT
-       |    regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+       |    ${tokenize("text")} AS toks
        |  FROM documents),
        |words AS MATERIALIZED (SELECT w, count(*) AS cnt
        |          FROM (SELECT unnest(toks) AS w FROM tok)
@@ -2373,7 +2090,7 @@ object GraphTextQueries {
 
   private val unigramPruneSql =
     s"""WITH tok AS (SELECT
-       |    regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+       |    ${tokenize("text")} AS toks
        |  FROM documents),
        |words AS MATERIALIZED (SELECT w, count(*) AS cnt
        |          FROM (SELECT unnest(toks) AS w FROM tok)
@@ -2460,7 +2177,7 @@ object GraphTextQueries {
          |  FROM $fromVocab v LEFT JOIN usage$n u ON u.piece = v.piece, tot
          |  WHERE v.len = 1 OR coalesce(u.uses, 0) >= tot.t // 30)""".stripMargin
     s"""WITH tok AS (SELECT
-       |    regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+       |    ${tokenize("text")} AS toks
        |  FROM documents),
        |words AS MATERIALIZED (SELECT w, count(*) AS cnt
        |          FROM (SELECT unnest(toks) AS w FROM tok)
@@ -2542,7 +2259,7 @@ object GraphTextQueries {
          |       totu$n tu, tot
          |  WHERE v.len = 1 OR coalesce(u.uses, 0) >= tot.t // 50)""".stripMargin
     s"""WITH tok AS (SELECT
-       |    regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+       |    ${tokenize("text")} AS toks
        |  FROM documents),
        |words AS MATERIALIZED (SELECT w, count(*) AS cnt
        |          FROM (SELECT unnest(toks) AS w FROM tok)
@@ -2595,45 +2312,43 @@ object GraphTextQueries {
       .orderBy("id")
 
   private val qualityRulesSql =
-    """WITH t AS (SELECT doc_id AS id,
-      |             regexp_split_to_array(lower(trim(text)), '\s+') AS toks
-      |           FROM documents),
-      |m AS (SELECT id,
-      |        len(toks) AS n_words,
-      |        list_sum(list_transform(toks, x -> length(x)))::DOUBLE
-      |          / len(toks) AS mean_len,
-      |        len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))::DOUBLE
-      |          / len(toks) AS alpha_ratio,
-      |        len(list_filter(toks,
-      |          x -> x IN ('the', 'a', 'of', 'to', 'and'))) AS n_stop,
-      |        1.0 - len(list_distinct(toks))::DOUBLE / len(toks) AS dup_frac
-      |      FROM t),
-      |f AS (SELECT id, CAST(n_words AS INTEGER) AS n_words,
-      |        list_sort(list_filter([
-      |          CASE WHEN n_words < 50 THEN 'too_short' END,
-      |          CASE WHEN n_words > 100000 THEN 'too_long' END,
-      |          CASE WHEN mean_len < 3 OR mean_len > 10
-      |            THEN 'word_length' END,
-      |          CASE WHEN alpha_ratio < 0.8 THEN 'alpha_ratio' END,
-      |          CASE WHEN n_stop < 2 THEN 'stopwords' END,
-      |          CASE WHEN dup_frac > 0.8 THEN 'dup_fraction' END],
-      |          x -> x IS NOT NULL)) AS failed
-      |      FROM m)
-      |SELECT id, n_words,
-      |       coalesce(array_to_string(failed, ','), '') AS failed_rules,
-      |       len(failed) = 0 AS pass
-      |FROM f ORDER BY id""".stripMargin
+    s"""WITH ${docTokens("t", "documents")},
+       |m AS (SELECT id,
+       |        len(toks) AS n_words,
+       |        list_sum(list_transform(toks, x -> length(x)))::DOUBLE
+       |          / len(toks) AS mean_len,
+       |        len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))::DOUBLE
+       |          / len(toks) AS alpha_ratio,
+       |        len(list_filter(toks,
+       |          x -> x IN ('the', 'a', 'of', 'to', 'and'))) AS n_stop,
+       |        1.0 - len(list_distinct(toks))::DOUBLE / len(toks) AS dup_frac
+       |      FROM t),
+       |f AS (SELECT id, CAST(n_words AS INTEGER) AS n_words,
+       |        list_sort(list_filter([
+       |          CASE WHEN n_words < 50 THEN 'too_short' END,
+       |          CASE WHEN n_words > 100000 THEN 'too_long' END,
+       |          CASE WHEN mean_len < 3 OR mean_len > 10
+       |            THEN 'word_length' END,
+       |          CASE WHEN alpha_ratio < 0.8 THEN 'alpha_ratio' END,
+       |          CASE WHEN n_stop < 2 THEN 'stopwords' END,
+       |          CASE WHEN dup_frac > 0.8 THEN 'dup_fraction' END],
+       |          x -> x IS NOT NULL)) AS failed
+       |      FROM m)
+       |SELECT id, n_words,
+       |       coalesce(array_to_string(failed, ','), '') AS failed_rules,
+       |       len(failed) = 0 AS pass
+       |FROM f ORDER BY id""".stripMargin
 
   val gates: Seq[Gate] = Seq(
     Gate("q_knn_graph", knnGraph, Some(knnGraphSql)),
-    Gate("q_knn_graph_blocked", knnGraphBlocked, Some(knnGraphBlockedSql)),
-    Gate("q_nn_descent", nnDescentGate, Some(nnDescentSql)),
+    Gate("q_knn_graph_blocked", knnGraphBlocked, Some(graphFloorOk)),
+    Gate("q_nn_descent", nnDescentGate, Some(graphFloorOk)),
     Gate("q_nn_descent_exact", nnDescentExact, Some(nnDescentExactSql)),
     Gate("q_nn_descent_warm_exact", nnDescentWarmExact,
       Some(nnDescentWarmExactSql)),
     Gate("q_search_graph_hub_exact", searchGraphHubExact,
       Some(searchGraphHubExactSql)),
-    Gate("q_search_graph", searchGraph, Some(searchGraphSql)),
+    Gate("q_search_graph", searchGraph, Some(searchFloorOk)),
     Gate("q_search_graph_exact", searchGraphExact,
       Some(searchGraphExactSql)),
     Gate("q_graph_insert_exact", graphInsertExact,
@@ -2645,7 +2360,7 @@ object GraphTextQueries {
       Some(graphInsertTickSql)),
     Gate("q_graph_fed_serve", graphFedServe, Some(graphFedServeSql)),
     Gate("q_search_graph_filtered", searchGraphFiltered,
-      Some(searchGraphFilteredSql)),
+      Some(searchFloorOk)),
     Gate("q_search_graph_filtered_exact", searchGraphFilteredExact,
       Some(searchGraphFilteredExactSql)),
     Gate("q_graph_hub_persist_exact", graphHubPersistExact,
@@ -2653,7 +2368,7 @@ object GraphTextQueries {
     Gate("q_graph_filtered_persist", graphFilteredPersist,
       Some(searchGraphFilteredExactSql)),
     Gate("q_graph_hub_persist", graphHubPersist,
-      Some(graphHubPersistSql)),
+      Some(searchFloorOk)),
     Gate("q_graph_stats", graphStats, Some(graphStatsSql)),
     Gate("q_recall_probe", recallProbeGate, Some(recallProbeSql)),
     Gate("q_graph_federate", graphFederate, Some(graphFederateSql)),

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.{Gate, Tables}
+import OracleSql._
+import GateOps._
 import graft.ext.{CorpusStore, DedupIndex, EmbeddingSearch, IvfIndex,
   KnnGraphIndex, Takedown}
 
@@ -76,22 +78,14 @@ object MaintainQueries {
   }
 
   private val cdcMaintainIvfSql =
-    """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      |           FROM embeddings WHERE vec_id < 10 AND vec_id % 7 <> 3),
-      |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
-      |      WHERE vec_id % 7 <> 3),
-      |p AS (SELECT query_id, vec_id,
-      |             list_dot_product(qv, ev)
-      |               / sqrt(list_dot_product(qv, qv)
-      |                      * list_dot_product(ev, ev)) AS cos
-      |      FROM q, e WHERE vec_id <> query_id),
-      |r AS (SELECT query_id, vec_id, cos,
-      |             row_number() OVER (PARTITION BY query_id
-      |                                ORDER BY cos DESC, vec_id) AS rank
-      |      FROM p)
-      |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank
-      |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+    s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+       |           FROM embeddings WHERE vec_id < 10 AND vec_id % 7 <> 3),
+       |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
+       |      WHERE vec_id % 7 <> 3),
+       |p AS (SELECT query_id, vec_id,
+       |             ${cosine("qv", "ev")} AS cos
+       |      FROM q, e WHERE vec_id <> query_id),
+       |$cosTop5""".stripMargin
 
   // ---- CDC feed → dedup index maintenance ----
 
@@ -215,22 +209,8 @@ object MaintainQueries {
     val truth = EmbeddingSearch.bruteForceTopKFor(survivors, queries, 4)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-    val hits = got.select("query_id", "neighbor_id")
-      .join(truth.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-    queries.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .agg(count(lit(1)).as("n_queries"),
-        sum(when(coalesce(col("n_hit"), lit(0L)) >= 1, 1L)
-          .otherwise(0L)).as("n_ok"))
-      .select(col("n_queries"),
-        (col("n_ok") >= col("n_queries") * 0.8).as("search_ok"))
+    recallFloor(queries, got, truth)
   }
-
-  private val cdcMaintainGraphSql =
-    """SELECT count(*) AS n_queries, true AS search_ok
-      |FROM embeddings WHERE vec_id < 20""".stripMargin
 
   // ---- insert-by-search: the delta-bounded graph maintenance tick ----
 
@@ -258,22 +238,8 @@ object MaintainQueries {
     val truth = EmbeddingSearch.bruteForceTopKFor(embs, queries, 4)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-    val hits = got.select("query_id", "neighbor_id")
-      .join(truth.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-    queries.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .agg(count(lit(1)).as("n_queries"),
-        sum(when(coalesce(col("n_hit"), lit(0L)) >= 1, 1L)
-          .otherwise(0L)).as("n_ok"))
-      .select(col("n_queries"),
-        (col("n_ok") >= col("n_queries") * 0.8).as("search_ok"))
+    recallFloor(queries, got, truth)
   }
-
-  private val graphInsertSql =
-    """SELECT count(*) AS n_queries, true AS search_ok
-      |FROM embeddings WHERE vec_id < 20""".stripMargin
 
   // ---- graph rewire: the degree-restoring maintenance pass ----
 
@@ -300,17 +266,7 @@ object MaintainQueries {
     val got = KnnGraphIndex.search(s, idx, queries, k = 6)
       .filter(col("neighbor_id") =!= col("query_id"))
     val truth = s.read.parquet(s"$pre/truth")
-    val hits = got.select("query_id", "neighbor_id")
-      .join(truth.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-    queries.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .agg(count(lit(1)).as("n_queries"),
-        sum(when(coalesce(col("n_hit"), lit(0L)) >= 1, 1L)
-          .otherwise(0L)).as("n_ok"))
-      .select(col("n_queries"),
-        (col("n_ok") >= col("n_queries") * 0.8).as("search_ok"))
+    recallFloor(queries, got, truth)
   }
 
   /** The post-takedown, compacted index q_graph_rewire re-wires, plus
@@ -347,10 +303,6 @@ object MaintainQueries {
         .write.mode("overwrite").parquet(s"$dir/truth")
     }
   }
-
-  private val graphRewireSql =
-    """SELECT count(*) AS n_queries, true AS search_ok
-      |FROM embeddings WHERE vec_id < 20""".stripMargin
 
   // ---- registry health + the quality sweep END TO END ----
 
@@ -450,18 +402,9 @@ object MaintainQueries {
     val got = KnnGraphIndex.search(s, idx, queries, k = 6)
       .filter(col("neighbor_id") =!= col("query_id"))
     val truth = s.read.parquet(s"$pre/truth")
-    val hits = got.select("query_id", "neighbor_id")
-      .join(truth.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-    queries.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .agg(count(lit(1)).as("n_queries"),
-        sum(when(coalesce(col("n_hit"), lit(0L)) >= 1, 1L)
-          .otherwise(0L)).as("n_ok"))
+    recallFloor(queries, got, truth)
       .select(col("n_queries"),
-        (col("n_ok") >= col("n_queries") * 0.8 && lit(fired))
-          .as("search_ok"))
+        (col("search_ok") && lit(fired)).as("search_ok"))
   }
 
   // ---- the registry maintenance sweep itself, timed + value-checked ----
@@ -602,21 +545,16 @@ object MaintainQueries {
   }
 
   private val ivfRebalanceAutoSql =
-    """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      |           FROM embeddings WHERE vec_id < 10),
-      |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
-      |p AS (SELECT query_id, vec_id,
-      |             list_dot_product(qv, ev)
-      |               / sqrt(list_dot_product(qv, qv)
-      |                      * list_dot_product(ev, ev)) AS cos
-      |      FROM q, e WHERE vec_id <> query_id),
-      |r AS (SELECT query_id, vec_id, cos,
-      |             row_number() OVER (PARTITION BY query_id
-      |                                ORDER BY cos DESC, vec_id) AS rank
-      |      FROM p)
-      |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank, true AS swept_ok
-      |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+    s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+       |           FROM embeddings WHERE vec_id < 10),
+       |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
+       |p AS (SELECT query_id, vec_id,
+       |             ${cosine("qv", "ev")} AS cos
+       |      FROM q, e WHERE vec_id <> query_id),
+       |$cosRanked
+       |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
+       |       CAST(rank AS INTEGER) AS rank, true AS swept_ok
+       |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
   // ---- per-family index health stats, value-checked ----
 
@@ -798,78 +736,78 @@ object MaintainQueries {
   }
 
   private val indexStatsSql =
-    """WITH survivors AS (SELECT count(*) AS n FROM embeddings
-      |                   WHERE vec_id % 7 <> 2),
-      |toks AS (SELECT doc_id, unnest(list_distinct(
-      |           regexp_split_to_array(lower(trim(text)), '\s+'))) AS term
-      |         FROM documents
-      |         WHERE doc_id < 350 AND doc_id % 10 <> 1),
-      |df AS (SELECT term, count(*) AS df FROM toks GROUP BY term),
-      |lex AS (SELECT count(*) AS n_terms, max(df) AS df_max FROM df),
-      |nd AS (SELECT count(*) AS n_docs FROM documents
-      |       WHERE doc_id < 350 AND doc_id % 10 <> 1),
-      |litg AS (SELECT doc_id, unnest(list_distinct(
-      |           list_transform(range(1, length(text) - 2),
-      |             i -> substring(text, i, 4)))) AS g
-      |         FROM documents
-      |         WHERE doc_id < 350 AND length(text) >= 4),
-      |litdf AS (SELECT g, count(*) AS df FROM litg GROUP BY g),
-      |litlex AS (SELECT count(*) AS n_grams, max(df) AS df_max
-      |           FROM litdf)
-      |SELECT * FROM (
-      |  SELECT 'ivf' AS family, 'cell_envelope_ok' AS metric,
-      |         1::BIGINT AS value
-      |  UNION ALL SELECT 'ivf', 'live_rows', n FROM survivors
-      |  UNION ALL SELECT 'ivf', 'segments', 3
-      |  UNION ALL SELECT 'ivf', 'tombstone_segments', 1
-      |  UNION ALL SELECT 'ivf', 'version', 3
-      |  UNION ALL SELECT 'pq', 'codebook_age', 2
-      |  UNION ALL SELECT 'pq', 'live_codes', n FROM survivors
-      |  UNION ALL SELECT 'pq', 'segments', 3
-      |  UNION ALL SELECT 'pq', 'subspaces', 4
-      |  UNION ALL SELECT 'pq', 'tombstone_segments', 1
-      |  UNION ALL SELECT 'pq', 'version', 3
-      |  UNION ALL SELECT 'sq', 'codec_age', 2
-      |  UNION ALL SELECT 'sq', 'live_codes', n FROM survivors
-      |  UNION ALL SELECT 'sq', 'segments', 3
-      |  UNION ALL SELECT 'sq', 'tombstone_segments', 1
-      |  UNION ALL SELECT 'sq', 'version', 3
-      |  UNION ALL SELECT 'bm25', 'df_max', df_max FROM lex
-      |  UNION ALL SELECT 'bm25', 'df_partial_segments', 3
-      |  UNION ALL SELECT 'bm25', 'n_docs', n_docs FROM nd
-      |  UNION ALL SELECT 'bm25', 'n_terms', n_terms FROM lex
-      |  UNION ALL SELECT 'bm25', 'segments', 3
-      |  UNION ALL SELECT 'bm25', 'tombstone_segments', 1
-      |  UNION ALL SELECT 'bm25', 'version', 3
-      |  UNION ALL SELECT 'ivfpq', 'cell_envelope_ok', 1
-      |  UNION ALL SELECT 'ivfpq', 'codebook_age', 2
-      |  UNION ALL SELECT 'ivfpq', 'live_codes', n FROM survivors
-      |  UNION ALL SELECT 'ivfpq', 'segments', 3
-      |  UNION ALL SELECT 'ivfpq', 'subspaces', 4
-      |  UNION ALL SELECT 'ivfpq', 'tombstone_segments', 1
-      |  UNION ALL SELECT 'ivfpq', 'version', 3
-      |  UNION ALL SELECT 'binary', 'dim', 64
-      |  UNION ALL SELECT 'binary', 'live_codes', n FROM survivors
-      |  UNION ALL SELECT 'binary', 'segments', 3
-      |  UNION ALL SELECT 'binary', 'tombstone_segments', 1
-      |  UNION ALL SELECT 'binary', 'version', 3
-      |  UNION ALL SELECT 'store', 'live_rows', n FROM survivors
-      |  UNION ALL SELECT 'store', 'segments', 3
-      |  UNION ALL SELECT 'store', 'tombstone_segments', 1
-      |  UNION ALL SELECT 'store', 'version', 3
-      |  UNION ALL SELECT 'dedup', 'df_partial_segments', 3
-      |  UNION ALL SELECT 'dedup', 'live_docs', n_docs FROM nd
-      |  UNION ALL SELECT 'dedup', 'segments', 3
-      |  UNION ALL SELECT 'dedup', 'tombstone_segments', 1
-      |  UNION ALL SELECT 'dedup', 'version', 3
-      |  UNION ALL SELECT 'literal', 'df_max', df_max FROM litlex
-      |  UNION ALL SELECT 'literal', 'gram_width', 4
-      |  UNION ALL SELECT 'literal', 'lexicon_partial_segments', 2
-      |  UNION ALL SELECT 'literal', 'n_grams', n_grams FROM litlex
-      |  UNION ALL SELECT 'literal', 'segments', 3
-      |  UNION ALL SELECT 'literal', 'tombstone_segments', 1
-      |  UNION ALL SELECT 'literal', 'version', 3)
-      |ORDER BY family, metric""".stripMargin
+    s"""WITH survivors AS (SELECT count(*) AS n FROM embeddings
+       |                   WHERE vec_id % 7 <> 2),
+       |toks AS (SELECT doc_id, unnest(list_distinct(
+       |           ${tokenize("text")})) AS term
+       |         FROM documents
+       |         WHERE doc_id < 350 AND doc_id % 10 <> 1),
+       |df AS (SELECT term, count(*) AS df FROM toks GROUP BY term),
+       |lex AS (SELECT count(*) AS n_terms, max(df) AS df_max FROM df),
+       |nd AS (SELECT count(*) AS n_docs FROM documents
+       |       WHERE doc_id < 350 AND doc_id % 10 <> 1),
+       |litg AS (SELECT doc_id, unnest(list_distinct(
+       |           list_transform(range(1, length(text) - 2),
+       |             i -> substring(text, i, 4)))) AS g
+       |         FROM documents
+       |         WHERE doc_id < 350 AND length(text) >= 4),
+       |litdf AS (SELECT g, count(*) AS df FROM litg GROUP BY g),
+       |litlex AS (SELECT count(*) AS n_grams, max(df) AS df_max
+       |           FROM litdf)
+       |SELECT * FROM (
+       |  SELECT 'ivf' AS family, 'cell_envelope_ok' AS metric,
+       |         1::BIGINT AS value
+       |  UNION ALL SELECT 'ivf', 'live_rows', n FROM survivors
+       |  UNION ALL SELECT 'ivf', 'segments', 3
+       |  UNION ALL SELECT 'ivf', 'tombstone_segments', 1
+       |  UNION ALL SELECT 'ivf', 'version', 3
+       |  UNION ALL SELECT 'pq', 'codebook_age', 2
+       |  UNION ALL SELECT 'pq', 'live_codes', n FROM survivors
+       |  UNION ALL SELECT 'pq', 'segments', 3
+       |  UNION ALL SELECT 'pq', 'subspaces', 4
+       |  UNION ALL SELECT 'pq', 'tombstone_segments', 1
+       |  UNION ALL SELECT 'pq', 'version', 3
+       |  UNION ALL SELECT 'sq', 'codec_age', 2
+       |  UNION ALL SELECT 'sq', 'live_codes', n FROM survivors
+       |  UNION ALL SELECT 'sq', 'segments', 3
+       |  UNION ALL SELECT 'sq', 'tombstone_segments', 1
+       |  UNION ALL SELECT 'sq', 'version', 3
+       |  UNION ALL SELECT 'bm25', 'df_max', df_max FROM lex
+       |  UNION ALL SELECT 'bm25', 'df_partial_segments', 3
+       |  UNION ALL SELECT 'bm25', 'n_docs', n_docs FROM nd
+       |  UNION ALL SELECT 'bm25', 'n_terms', n_terms FROM lex
+       |  UNION ALL SELECT 'bm25', 'segments', 3
+       |  UNION ALL SELECT 'bm25', 'tombstone_segments', 1
+       |  UNION ALL SELECT 'bm25', 'version', 3
+       |  UNION ALL SELECT 'ivfpq', 'cell_envelope_ok', 1
+       |  UNION ALL SELECT 'ivfpq', 'codebook_age', 2
+       |  UNION ALL SELECT 'ivfpq', 'live_codes', n FROM survivors
+       |  UNION ALL SELECT 'ivfpq', 'segments', 3
+       |  UNION ALL SELECT 'ivfpq', 'subspaces', 4
+       |  UNION ALL SELECT 'ivfpq', 'tombstone_segments', 1
+       |  UNION ALL SELECT 'ivfpq', 'version', 3
+       |  UNION ALL SELECT 'binary', 'dim', 64
+       |  UNION ALL SELECT 'binary', 'live_codes', n FROM survivors
+       |  UNION ALL SELECT 'binary', 'segments', 3
+       |  UNION ALL SELECT 'binary', 'tombstone_segments', 1
+       |  UNION ALL SELECT 'binary', 'version', 3
+       |  UNION ALL SELECT 'store', 'live_rows', n FROM survivors
+       |  UNION ALL SELECT 'store', 'segments', 3
+       |  UNION ALL SELECT 'store', 'tombstone_segments', 1
+       |  UNION ALL SELECT 'store', 'version', 3
+       |  UNION ALL SELECT 'dedup', 'df_partial_segments', 3
+       |  UNION ALL SELECT 'dedup', 'live_docs', n_docs FROM nd
+       |  UNION ALL SELECT 'dedup', 'segments', 3
+       |  UNION ALL SELECT 'dedup', 'tombstone_segments', 1
+       |  UNION ALL SELECT 'dedup', 'version', 3
+       |  UNION ALL SELECT 'literal', 'df_max', df_max FROM litlex
+       |  UNION ALL SELECT 'literal', 'gram_width', 4
+       |  UNION ALL SELECT 'literal', 'lexicon_partial_segments', 2
+       |  UNION ALL SELECT 'literal', 'n_grams', n_grams FROM litlex
+       |  UNION ALL SELECT 'literal', 'segments', 3
+       |  UNION ALL SELECT 'literal', 'tombstone_segments', 1
+       |  UNION ALL SELECT 'literal', 'version', 3)
+       |ORDER BY family, metric""".stripMargin
 
   // ---- FEDERATED selection lineage, recorded + replayed ----
 
@@ -1003,53 +941,32 @@ object MaintainQueries {
       .write.mode("overwrite").parquet(s"$in/d1")
     embs.filter(col("vec_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$in/d2")
-    val stream = s.readStream.schema(embs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
     var delivered = 0
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (delivered == 0) {
-          batch.write.mode("append").parquet(s"$state/corpus")
-          EmbeddingSearch.nnDescent(s.read.parquet(s"$state/corpus"),
-              k = 32, iters = 5)
-            .write.mode("overwrite").parquet(s"$state/graph_next")
-        } else {
-          // materialize the inserted graph BEFORE appending the batch
-          // to the corpus dir: the standing-corpus read is lazy, and an
-          // early append would leak the delivery into its own walk
-          EmbeddingSearch.graphInsert(s.read.parquet(s"$state/corpus"),
-              s.read.parquet(s"$state/graph"), batch, k = 32)
-            .write.mode("overwrite").parquet(s"$state/graph_next")
-          batch.write.mode("append").parquet(s"$state/corpus")
-        }
-        // publish for the next batch (read-then-overwrite of the same
-        // path inside one job is unsafe; stage-and-swap instead)
-        s.read.parquet(s"$state/graph_next")
-          .write.mode("overwrite").parquet(s"$state/graph")
-        delivered += 1
-        ()
-      }.start()
-    q.awaitTermination()
+    drain(s, embs.schema, in, ckpt) { (batch, _) =>
+      if (delivered == 0) {
+        batch.write.mode("append").parquet(s"$state/corpus")
+        EmbeddingSearch.nnDescent(s.read.parquet(s"$state/corpus"),
+            k = 32, iters = 5)
+          .write.mode("overwrite").parquet(s"$state/graph_next")
+      } else {
+        // materialize the inserted graph BEFORE appending the batch
+        // to the corpus dir: the standing-corpus read is lazy, and an
+        // early append would leak the delivery into its own walk
+        EmbeddingSearch.graphInsert(s.read.parquet(s"$state/corpus"),
+            s.read.parquet(s"$state/graph"), batch, k = 32)
+          .write.mode("overwrite").parquet(s"$state/graph_next")
+        batch.write.mode("append").parquet(s"$state/corpus")
+      }
+      // publish for the next batch (read-then-overwrite of the same
+      // path inside one job is unsafe; stage-and-swap instead)
+      s.read.parquet(s"$state/graph_next")
+        .write.mode("overwrite").parquet(s"$state/graph")
+      delivered += 1
+    }
     val ann = s.read.parquet(s"$state/graph").filter(col("rank") <= 3)
     val exact = s.read.parquet(s"${GraphTextQueries.sharedKnnGraphDir(s, d)}/knn")
-    val hits = ann.select("query_id", "neighbor_id")
-      .join(exact.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-    embs.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .agg(count(lit(1)).as("n_nodes"),
-        sum(when(coalesce(col("n_hit"), lit(0L)) >= 1, 1L)
-          .otherwise(0L)).as("n_ok"))
-      .select(col("n_nodes"),
-        (col("n_ok") >= col("n_nodes") * 0.8).as("graph_ok"))
+    recallFloor(embs, ann, exact, "n_nodes", "graph_ok")
   }
-
-  private val streamKnnSql =
-    """SELECT count(*) AS n_nodes, true AS graph_ok FROM embeddings"""
 
   // ---- streamed maintenance of the PERSISTED graph index ----
 
@@ -1076,21 +993,13 @@ object MaintainQueries {
       .write.mode("overwrite").parquet(s"$in/d1")
     embs.filter(col("vec_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$in/d2")
-    val stream = s.readStream.schema(embs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
     var delivered = 0
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (delivered == 0)
-          KnnGraphIndex.build(batch, idx, k = 32, iters = 5)
-        else KnnGraphIndex.insert(s, idx, batch)
-        delivered += 1
-        ()
-      }.start()
-    q.awaitTermination()
+    drain(s, embs.schema, in, ckpt) { (batch, _) =>
+      if (delivered == 0)
+        KnnGraphIndex.build(batch, idx, k = 32, iters = 5)
+      else KnnGraphIndex.insert(s, idx, batch)
+      delivered += 1
+    }
     val queries = embs.filter(col("vec_id") < 20)
     val got = KnnGraphIndex.search(s, idx, queries, k = 6)
       .filter(col("neighbor_id") =!= col("query_id"))
@@ -1098,38 +1007,24 @@ object MaintainQueries {
     val truth = EmbeddingSearch.bruteForceTopKFor(embs, queries, 4)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-    val hits = got.select("query_id", "neighbor_id")
-      .join(truth.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-    queries.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .agg(count(lit(1)).as("n_queries"),
-        sum(when(coalesce(col("n_hit"), lit(0L)) >= 1, 1L)
-          .otherwise(0L)).as("n_ok"))
-      .select(col("n_queries"),
-        (col("n_ok") >= col("n_queries") * 0.8).as("search_ok"))
+    recallFloor(queries, got, truth)
   }
-
-  private val streamGraphIndexSql =
-    """SELECT count(*) AS n_queries, true AS search_ok
-      |FROM embeddings WHERE vec_id < 20""".stripMargin
 
   val gates: Seq[Gate] = Seq(
     Gate("q_cdc_maintain_ivf", cdcMaintainIvf, Some(cdcMaintainIvfSql)),
     Gate("q_cdc_maintain_dedup", cdcMaintainDedup,
       Some(ExtQueries.dedupDeleteOracle)),
     Gate("q_cdc_maintain_graph", cdcMaintainGraph,
-      Some(cdcMaintainGraphSql)),
-    Gate("q_stream_knn", streamKnn, Some(streamKnnSql)),
+      Some(searchFloorOk)),
+    Gate("q_stream_knn", streamKnn, Some(graphFloorOk)),
     Gate("q_store_federate", storeFederate, Some(storeFederateSql)),
-    Gate("q_graph_rewire", graphRewire, Some(graphRewireSql)),
+    Gate("q_graph_rewire", graphRewire, Some(searchFloorOk)),
     Gate("q_corpus_health", corpusHealth, Some(corpusHealthSql)),
     Gate("q_graph_maintain_auto", graphMaintainAuto,
-      Some(cdcMaintainGraphSql)),
-    Gate("q_graph_insert", graphInsert, Some(graphInsertSql)),
+      Some(searchFloorOk)),
+    Gate("q_graph_insert", graphInsert, Some(searchFloorOk)),
     Gate("q_stream_graph_index", streamGraphIndex,
-      Some(streamGraphIndexSql)),
+      Some(searchFloorOk)),
     Gate("q_maintain_sweep", maintainSweep, Some(maintainSweepSql)),
     Gate("q_ivf_rebalance_auto", ivfRebalanceAuto,
       Some(ivfRebalanceAutoSql)),

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Gate, Tables}
+import OracleSql._
+import GateOps._
 import graft.billing.Aggregates
 import graft.ext.IvfIndex
 import graft.operators.{RangeJoin, SkewJoin}
@@ -532,21 +534,13 @@ object ScaleQueries {
     * pruning quality).
     */
   private val bruteTopK5Sql =
-    """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      |           FROM embeddings WHERE vec_id < 10),
-      |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
-      |p AS (SELECT query_id, vec_id,
-      |             list_dot_product(qv, ev)
-      |               / sqrt(list_dot_product(qv, qv)
-      |                      * list_dot_product(ev, ev)) AS cos
-      |      FROM q, e WHERE vec_id <> query_id),
-      |r AS (SELECT query_id, vec_id, cos,
-      |             row_number() OVER (PARTITION BY query_id
-      |                                ORDER BY cos DESC, vec_id) AS rank
-      |      FROM p)
-      |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank
-      |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+    s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+       |           FROM embeddings WHERE vec_id < 10),
+       |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
+       |p AS (SELECT query_id, vec_id,
+       |             ${cosine("qv", "ev")} AS cos
+       |      FROM q, e WHERE vec_id <> query_id),
+       |$cosTop5""".stripMargin
 
   /** [[graft.ext.IvfIndex.search]] with EXHAUSTIVE probes — cells
     * partition the corpus, so probing all of them scores every row
@@ -761,23 +755,18 @@ object ScaleQueries {
   }
 
   private val retrainSql =
-    """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      |           FROM embeddings WHERE vec_id < 10 AND vec_id % 7 <> 2),
-      |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
-      |      WHERE vec_id % 7 <> 2),
-      |p AS (SELECT query_id, vec_id,
-      |             list_dot_product(qv, ev)
-      |               / sqrt(list_dot_product(qv, qv)
-      |                      * list_dot_product(ev, ev)) AS cos
-      |      FROM q, e WHERE vec_id <> query_id),
-      |r AS (SELECT query_id, vec_id, cos,
-      |             row_number() OVER (PARTITION BY query_id
-      |                                ORDER BY cos DESC, vec_id) AS rank
-      |      FROM p)
-      |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank, true AS retrain_ok,
-      |       true AS rollback_ok
-      |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+    s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+       |           FROM embeddings WHERE vec_id < 10 AND vec_id % 7 <> 2),
+       |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
+       |      WHERE vec_id % 7 <> 2),
+       |p AS (SELECT query_id, vec_id,
+       |             ${cosine("qv", "ev")} AS cos
+       |      FROM q, e WHERE vec_id <> query_id),
+       |$cosRanked
+       |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
+       |       CAST(rank AS INTEGER) AS rank, true AS retrain_ok,
+       |       true AS rollback_ok
+       |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
   /** The IVF-blocked kNN GRAPH with exhaustive probes: every row
     * queries every cell, so the blocked build ≡ the exact graph
@@ -793,19 +782,12 @@ object ScaleQueries {
   }
 
   private val knnGraphBlockedExactSql =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |p AS (SELECT a.vec_id AS query_id, b.vec_id,
-      |             list_dot_product(a.v, b.v)
-      |               / sqrt(list_dot_product(a.v, a.v)
-      |                      * list_dot_product(b.v, b.v)) AS cos
-      |      FROM e a, e b WHERE a.vec_id <> b.vec_id),
-      |r AS (SELECT query_id, vec_id, cos,
-      |             row_number() OVER (PARTITION BY query_id
-      |                                ORDER BY cos DESC, vec_id) AS rank
-      |      FROM p)
-      |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank
-      |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |$allPairsCos,
+       |$cosRanked
+       |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
+       |       CAST(rank AS INTEGER) AS rank
+       |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
 
   /** IVF cell rebalance ([[graft.ext.IvfIndex.rebalance]]): split every
     * cell above n/24 vectors, then search with EXHAUSTIVE probing —
@@ -965,22 +947,14 @@ object ScaleQueries {
   }
 
   private val ivfDeleteSql =
-    """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      |           FROM embeddings WHERE vec_id < 10 AND vec_id % 7 <> 3),
-      |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
-      |      WHERE vec_id % 7 <> 3),
-      |p AS (SELECT query_id, vec_id,
-      |             list_dot_product(qv, ev)
-      |               / sqrt(list_dot_product(qv, qv)
-      |                      * list_dot_product(ev, ev)) AS cos
-      |      FROM q, e WHERE vec_id <> query_id),
-      |r AS (SELECT query_id, vec_id, cos,
-      |             row_number() OVER (PARTITION BY query_id
-      |                                ORDER BY cos DESC, vec_id) AS rank
-      |      FROM p)
-      |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank
-      |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+    s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+       |           FROM embeddings WHERE vec_id < 10 AND vec_id % 7 <> 3),
+       |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
+       |      WHERE vec_id % 7 <> 3),
+       |p AS (SELECT query_id, vec_id,
+       |             ${cosine("qv", "ev")} AS cos
+       |      FROM q, e WHERE vec_id <> query_id),
+       |$cosTop5""".stripMargin
 
   /** Vector delete-then-readd ([[graft.ext.IndexStore]] scoped
     * tombstones on the ANN family): every vec_id % 7 == 3 vector is
@@ -1007,21 +981,13 @@ object ScaleQueries {
   }
 
   private val ivfReaddSql =
-    """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      |           FROM embeddings WHERE vec_id < 10),
-      |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
-      |p AS (SELECT query_id, vec_id,
-      |             list_dot_product(qv, ev)
-      |               / sqrt(list_dot_product(qv, qv)
-      |                      * list_dot_product(ev, ev)) AS cos
-      |      FROM q, e WHERE vec_id <> query_id),
-      |r AS (SELECT query_id, vec_id, cos,
-      |             row_number() OVER (PARTITION BY query_id
-      |                                ORDER BY cos DESC, vec_id) AS rank
-      |      FROM p)
-      |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank
-      |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+    s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+       |           FROM embeddings WHERE vec_id < 10),
+       |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
+       |p AS (SELECT query_id, vec_id,
+       |             ${cosine("qv", "ev")} AS cos
+       |      FROM q, e WHERE vec_id <> query_id),
+       |$cosTop5""".stripMargin
 
   /** STREAMING vector takedown — q_stream_delete's ANN twin: deletion
     * requests drain from a file stream in two micro-batches, each
@@ -1044,17 +1010,9 @@ object ScaleQueries {
         .write.mode("overwrite").parquet(s"$in/d1")
       doomed.filter(col("vec_id") % 2 === 1).coalesce(1)
         .write.mode("overwrite").parquet(s"$in/d2")
-      val stream = s.readStream.schema("vec_id LONG")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true").parquet(in)
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          IvfIndex.delete(s, dir, batch, col("vec_id"))
-        }
-        .start()
-      q.awaitTermination()
+      drain(s, "vec_id LONG", in, ckpt) { (batch, _) =>
+        IvfIndex.delete(s, dir, batch, col("vec_id"))
+      }
       IvfIndex.compact(s, dir)
       val loaded = IvfIndex.load(s, dir, embs)
       IvfIndex.search(loaded, col("vec_id") < 10, k = 5,
@@ -1081,22 +1039,14 @@ object ScaleQueries {
   }
 
   private val annFilteredSql =
-    """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      |           FROM embeddings WHERE vec_id < 10),
-      |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
-      |      WHERE vec_id % 3 = 0),
-      |p AS (SELECT query_id, vec_id,
-      |             list_dot_product(qv, ev)
-      |               / sqrt(list_dot_product(qv, qv)
-      |                      * list_dot_product(ev, ev)) AS cos
-      |      FROM q, e WHERE vec_id <> query_id),
-      |r AS (SELECT query_id, vec_id, cos,
-      |             row_number() OVER (PARTITION BY query_id
-      |                                ORDER BY cos DESC, vec_id) AS rank
-      |      FROM p)
-      |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank
-      |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+    s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+       |           FROM embeddings WHERE vec_id < 10),
+       |e AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings
+       |      WHERE vec_id % 3 = 0),
+       |p AS (SELECT query_id, vec_id,
+       |             ${cosine("qv", "ev")} AS cos
+       |      FROM q, e WHERE vec_id <> query_id),
+       |$cosTop5""".stripMargin
 
   /** Incremental embedding dedup ([[graft.ext.IvfIndex.dedupBatch]]):
     * the delta (every 10th vector) dedups against the IVF-indexed base
@@ -1117,15 +1067,13 @@ object ScaleQueries {
   }
 
   private val embedDedupIncSql =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-      |        list_dot_product(a.v, b.v)
-      |          / sqrt(list_dot_product(a.v, a.v)
-      |                 * list_dot_product(b.v, b.v)) AS cos
-      |      FROM e a JOIN e b ON a.vec_id < b.vec_id
-      |      WHERE a.vec_id % 10 = 0 OR b.vec_id % 10 = 0)
-      |SELECT id_a, id_b, round(cos, 6) AS cos FROM p
-      |WHERE cos >= 0.45 ORDER BY id_a, id_b""".stripMargin
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+       |        ${cosine("a.v", "b.v")} AS cos
+       |      FROM e a JOIN e b ON a.vec_id < b.vec_id
+       |      WHERE a.vec_id % 10 = 0 OR b.vec_id % 10 = 0)
+       |SELECT id_a, id_b, round(cos, 6) AS cos FROM p
+       |WHERE cos >= 0.45 ORDER BY id_a, id_b""".stripMargin
 
   /** STREAMING embedding dedup — the vector-side maintenance loop
     * (mirrors q_stream_dedup_index): vector deliveries drain in two
@@ -1151,27 +1099,17 @@ object ScaleQueries {
       .write.mode("overwrite").parquet(s"$in/d1")
     delta.filter(col("vec_id") % 20 =!= 0).coalesce(1)
       .write.mode("overwrite").parquet(s"$in/d2")
-    val stream = s.readStream
-      .schema(embs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // dedup against the index as of THIS batch, then admit; the
-        // localCheckpoint pins the batch's pairs before the index
-        // reference evolves underneath the lazy plan. Output lands in
-        // a per-batchId dir with overwrite — a replayed batch
-        // re-produces its own slice instead of appending duplicates
-        val pairs = IvfIndex.dedupBatch(model, batch, threshold = 0.45,
-          nProbe = Int.MaxValue).localCheckpoint(true)
-        pairs.write.mode("overwrite").parquet(s"$out/b$batchId")
-        model = IvfIndex.append(model, batch)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(s, embs.schema, in, ckpt) { (batch, batchId) =>
+      // dedup against the index as of THIS batch, then admit; the
+      // localCheckpoint pins the batch's pairs before the index
+      // reference evolves underneath the lazy plan. Output lands in
+      // a per-batchId dir with overwrite — a replayed batch
+      // re-produces its own slice instead of appending duplicates
+      val pairs = IvfIndex.dedupBatch(model, batch, threshold = 0.45,
+        nProbe = Int.MaxValue).localCheckpoint(true)
+      pairs.write.mode("overwrite").parquet(s"$out/b$batchId")
+      model = IvfIndex.append(model, batch)
+    }
     s.read.schema("id_a LONG, id_b LONG, cos DOUBLE")
       .option("recursiveFileLookup", "true").parquet(out)
       .orderBy("id_a", "id_b")
@@ -1271,16 +1209,24 @@ object ScaleQueries {
     s.read.parquet(s"$dir/out").orderBy("query_id", "rank")
   }
 
-  private val sqPersistSql =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |u AS (SELECT vec_id, v, unnest(generate_series(1, len(v))) AS i
+  /** The SQ8 codec in DuckDB, shared by the SQ oracles over
+    * `e(vec_id, v)`. [[sqUnit]] gives `ux(vec_id, i, x)`, the
+    * unit-normalized components; [[sqDecoded]] dequantizes them against
+    * the oracle's own per-dimension ranges `rng(i, lo, hi)` (the oracles
+    * differ in which rows train them) into `vh(vec_id, vhat)` and gives
+    * the 10 unit-normalized queries `q(query_id, qu)`; [[sqRerankTop5]]
+    * takes the 40-row shortlist of `adc(query_id, vec_id, score)` and
+    * re-ranks it by exact cosine into the top-5 answer.
+    */
+  private val sqUnit =
+    """u AS (SELECT vec_id, v, unnest(generate_series(1, len(v))) AS i
       |      FROM e),
       |ux AS (SELECT vec_id, i,
       |              v[i] / sqrt(list_dot_product(v, v)) AS x
-      |       FROM u),
-      |rng AS (SELECT i, min(x) AS lo, max(x) AS hi FROM ux
-      |        WHERE vec_id % 10 <> 0 GROUP BY i),
-      |dq AS (SELECT vec_id, i,
+      |       FROM u)""".stripMargin
+
+  private val sqDecoded =
+    """dq AS (SELECT vec_id, i,
       |              lo + floor(255.0 * (x - lo)
       |                         / greatest(hi - lo, 1e-12) + 0.5)
       |                   * (hi - lo) / 255.0 AS xh
@@ -1290,30 +1236,35 @@ object ScaleQueries {
       |q AS (SELECT vec_id AS query_id,
       |             list_transform(v,
       |               x -> x / sqrt(list_dot_product(v, v))) AS qu
-      |      FROM e WHERE vec_id < 10),
-      |adc AS (SELECT q.query_id, vh.vec_id,
-      |               list_dot_product(q.qu, vh.vhat) AS score
-      |        FROM q, vh WHERE vh.vec_id <> q.query_id),
-      |cand AS (SELECT query_id, vec_id FROM (
-      |           SELECT query_id, vec_id,
-      |                  row_number() OVER (PARTITION BY query_id
-      |                    ORDER BY score DESC, vec_id) AS rn
-      |           FROM adc) WHERE rn <= 40),
-      |rr AS (SELECT c.query_id, c.vec_id AS neighbor_id,
-      |              list_dot_product(a.v, b.v)
-      |                / sqrt(list_dot_product(a.v, a.v)
-      |                       * list_dot_product(b.v, b.v)) AS cosx,
-      |              row_number() OVER (PARTITION BY c.query_id
-      |                ORDER BY list_dot_product(a.v, b.v)
-      |                  / sqrt(list_dot_product(a.v, a.v)
-      |                         * list_dot_product(b.v, b.v)) DESC,
-      |                  c.vec_id) AS rank
-      |       FROM cand c
-      |       JOIN e a ON a.vec_id = c.query_id
-      |       JOIN e b ON b.vec_id = c.vec_id)
-      |SELECT query_id, neighbor_id, round(cosx, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank
-      |FROM rr WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+      |      FROM e WHERE vec_id < 10)""".stripMargin
+
+  private val sqRerankTop5 =
+    s"""cand AS (SELECT query_id, vec_id FROM (
+       |           SELECT query_id, vec_id,
+       |                  ${rankBy("score DESC, vec_id")} AS rn
+       |           FROM adc) WHERE rn <= 40),
+       |rr AS (SELECT c.query_id, c.vec_id AS neighbor_id,
+       |              ${cosine("a.v", "b.v")} AS cosx,
+       |              row_number() OVER (PARTITION BY c.query_id
+       |                ORDER BY ${cosine("a.v", "b.v")} DESC,
+       |                  c.vec_id) AS rank
+       |       FROM cand c
+       |       JOIN e a ON a.vec_id = c.query_id
+       |       JOIN e b ON b.vec_id = c.vec_id)
+       |SELECT query_id, neighbor_id, round(cosx, 6) AS cos,
+       |       CAST(rank AS INTEGER) AS rank
+       |FROM rr WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+
+  private val sqPersistSql =
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |$sqUnit,
+       |rng AS (SELECT i, min(x) AS lo, max(x) AS hi FROM ux
+       |        WHERE vec_id % 10 <> 0 GROUP BY i),
+       |$sqDecoded,
+       |adc AS (SELECT q.query_id, vh.vec_id,
+       |               list_dot_product(q.qu, vh.vhat) AS score
+       |        FROM q, vh WHERE vh.vec_id <> q.query_id),
+       |$sqRerankTop5""".stripMargin
 
   /** Persisted binary-code index lifecycle
     * ([[graft.ext.BinaryIndex]]): build on 90% of the corpus, save,
@@ -1351,35 +1302,30 @@ object ScaleQueries {
   }
 
   private val binaryPersistSql =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-      |           FROM embeddings WHERE vec_id % 9 <> 4),
-      |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-      |bh AS (SELECT q.query_id, e.vec_id,
-      |         list_sum(list_transform(range(1, len(e.v) + 1),
-      |           i -> CASE WHEN (q.qv[i] > 0) <> (e.v[i] > 0)
-      |                THEN 1 ELSE 0 END)) AS ham
-      |       FROM q, e WHERE e.vec_id <> q.query_id),
-      |cand AS (SELECT query_id, vec_id FROM (
-      |           SELECT query_id, vec_id,
-      |             row_number() OVER (PARTITION BY query_id
-      |               ORDER BY ham, vec_id) AS rn
-      |           FROM bh)
-      |         WHERE rn <= greatest(200, (SELECT count(*) FROM e) // 5)),
-      |rr AS (SELECT c.query_id, c.vec_id AS neighbor_id,
-      |              list_dot_product(a.v, b.v)
-      |                / sqrt(list_dot_product(a.v, a.v)
-      |                       * list_dot_product(b.v, b.v)) AS cosx,
-      |              row_number() OVER (PARTITION BY c.query_id
-      |                ORDER BY list_dot_product(a.v, b.v)
-      |                  / sqrt(list_dot_product(a.v, a.v)
-      |                         * list_dot_product(b.v, b.v)) DESC,
-      |                  c.vec_id) AS rank
-      |       FROM cand c
-      |       JOIN e a ON a.vec_id = c.query_id
-      |       JOIN e b ON b.vec_id = c.vec_id)
-      |SELECT query_id, neighbor_id, round(cosx, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank
-      |FROM rr WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
+       |           FROM embeddings WHERE vec_id % 9 <> 4),
+       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
+       |bh AS (SELECT q.query_id, e.vec_id,
+       |         list_sum(list_transform(range(1, len(e.v) + 1),
+       |           i -> CASE WHEN (q.qv[i] > 0) <> (e.v[i] > 0)
+       |                THEN 1 ELSE 0 END)) AS ham
+       |       FROM q, e WHERE e.vec_id <> q.query_id),
+       |cand AS (SELECT query_id, vec_id FROM (
+       |           SELECT query_id, vec_id,
+       |             ${rankBy("ham, vec_id")} AS rn
+       |           FROM bh)
+       |         WHERE rn <= greatest(200, (SELECT count(*) FROM e) // 5)),
+       |rr AS (SELECT c.query_id, c.vec_id AS neighbor_id,
+       |              ${cosine("a.v", "b.v")} AS cosx,
+       |              row_number() OVER (PARTITION BY c.query_id
+       |                ORDER BY ${cosine("a.v", "b.v")} DESC,
+       |                  c.vec_id) AS rank
+       |       FROM cand c
+       |       JOIN e a ON a.vec_id = c.query_id
+       |       JOIN e b ON b.vec_id = c.vec_id)
+       |SELECT query_id, neighbor_id, round(cosx, 6) AS cos,
+       |       CAST(rank AS INTEGER) AS rank
+       |FROM rr WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
   /** FEDERATED ANN ([[graft.ext.BinaryIndex.searchFederatedVectors]]):
     * an overlay of AMENDED embeddings (every fifth vector re-delivered
@@ -1427,19 +1373,15 @@ object ScaleQueries {
          |  FROM q, $corpus e),
          |cand_$src AS (SELECT query_id, vec_id FROM (
          |    SELECT query_id, vec_id,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY ham, vec_id) AS rn
+         |      ${rankBy("ham, vec_id")} AS rn
          |    FROM ham_$src), cnd
          |  WHERE rn <= cnd.c),
          |rr_$src AS (SELECT c.query_id, c.vec_id,
-         |    list_dot_product(q.qv, e.v)
-         |      / sqrt(list_dot_product(q.qv, q.qv)
-         |             * list_dot_product(e.v, e.v)) AS cos
+         |    ${cosine("q.qv", "e.v")} AS cos
          |  FROM cand_$src c JOIN q USING (query_id)
          |  JOIN $corpus e ON e.vec_id = c.vec_id),
          |h_$src AS (SELECT query_id, vec_id, cos FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos DESC, vec_id) AS rn FROM rr_$src)
+         |    SELECT *, ${rankBy("cos DESC, vec_id")} AS rn FROM rr_$src)
          |  WHERE rn <= 20)""".stripMargin
     s"""WITH ea AS (SELECT vec_id,
        |    list_transform(embedding::DOUBLE[], x -> -x) AS v
@@ -1458,8 +1400,7 @@ object ScaleQueries {
        |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
        |       CAST(rank AS INTEGER) AS rank
        |FROM (SELECT query_id, vec_id, cos,
-       |        row_number() OVER (PARTITION BY query_id
-       |          ORDER BY round(cos, 6) DESC, vec_id) AS rank
+       |        ${rankBy("round(cos, 6) DESC, vec_id")} AS rank
        |      FROM fed)
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
   }
@@ -1558,13 +1499,9 @@ object ScaleQueries {
     def stage(src: String, corpus: String): String =
       s"""h_$src AS (SELECT query_id, vec_id, cos FROM (
          |    SELECT q.query_id, e.vec_id,
-         |      list_dot_product(q.qv, e.v)
-         |        / sqrt(list_dot_product(q.qv, q.qv)
-         |               * list_dot_product(e.v, e.v)) AS cos,
+         |      ${cosine("q.qv", "e.v")} AS cos,
          |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY list_dot_product(q.qv, e.v)
-         |          / sqrt(list_dot_product(q.qv, q.qv)
-         |                 * list_dot_product(e.v, e.v)) DESC,
+         |        ORDER BY ${cosine("q.qv", "e.v")} DESC,
          |          e.vec_id) AS rn
          |    FROM q, $corpus e)
          |  WHERE rn <= 20)""".stripMargin
@@ -1584,8 +1521,7 @@ object ScaleQueries {
        |SELECT query_id, vec_id AS neighbor_id, round(cos, 6) AS cos,
        |       CAST(rank AS INTEGER) AS rank
        |FROM (SELECT query_id, vec_id, cos,
-       |        row_number() OVER (PARTITION BY query_id
-       |          ORDER BY round(cos, 6) DESC, vec_id) AS rank
+       |        ${rankBy("round(cos, 6) DESC, vec_id")} AS rank
        |      FROM fed)
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
   }
@@ -1616,19 +1552,10 @@ object ScaleQueries {
       .write.mode("overwrite").parquet(s"$in/b1")
     queries.filter(col("vec_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(s"$in/b2")
-    val stream = s.readStream
-      .schema(queries.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("recursiveFileLookup", "true").parquet(in)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ext.SqIndex.searchVectors(model, batch, k = 5, shortlist = 8)
-          .write.mode("append").parquet(out)
-      }
-      .start()
-    q.awaitTermination()
+    drain(s, queries.schema, in, ckpt) { (batch, _) =>
+      graft.ext.SqIndex.searchVectors(model, batch, k = 5, shortlist = 8)
+        .write.mode("append").parquet(out)
+    }
     s.read.schema(
         "query_id LONG, neighbor_id LONG, cos DOUBLE, rank INT")
       .parquet(out)
@@ -1640,47 +1567,14 @@ object ScaleQueries {
     * cos = 1.
     */
   private val streamAnnSql =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |u AS (SELECT vec_id, v, unnest(generate_series(1, len(v))) AS i
-      |      FROM e),
-      |ux AS (SELECT vec_id, i,
-      |              v[i] / sqrt(list_dot_product(v, v)) AS x
-      |       FROM u),
-      |rng AS (SELECT i, min(x) AS lo, max(x) AS hi FROM ux GROUP BY i),
-      |dq AS (SELECT vec_id, i,
-      |              lo + floor(255.0 * (x - lo)
-      |                         / greatest(hi - lo, 1e-12) + 0.5)
-      |                   * (hi - lo) / 255.0 AS xh
-      |       FROM ux JOIN rng USING (i)),
-      |vh AS (SELECT vec_id, list(xh ORDER BY i) AS vhat
-      |       FROM dq GROUP BY vec_id),
-      |q AS (SELECT vec_id AS query_id,
-      |             list_transform(v,
-      |               x -> x / sqrt(list_dot_product(v, v))) AS qu
-      |      FROM e WHERE vec_id < 10),
-      |adc AS (SELECT q.query_id, vh.vec_id,
-      |               list_dot_product(q.qu, vh.vhat) AS score
-      |        FROM q, vh),
-      |cand AS (SELECT query_id, vec_id FROM (
-      |           SELECT query_id, vec_id,
-      |                  row_number() OVER (PARTITION BY query_id
-      |                    ORDER BY score DESC, vec_id) AS rn
-      |           FROM adc) WHERE rn <= 40),
-      |rr AS (SELECT c.query_id, c.vec_id AS neighbor_id,
-      |              list_dot_product(a.v, b.v)
-      |                / sqrt(list_dot_product(a.v, a.v)
-      |                       * list_dot_product(b.v, b.v)) AS cosx,
-      |              row_number() OVER (PARTITION BY c.query_id
-      |                ORDER BY list_dot_product(a.v, b.v)
-      |                  / sqrt(list_dot_product(a.v, a.v)
-      |                         * list_dot_product(b.v, b.v)) DESC,
-      |                  c.vec_id) AS rank
-      |       FROM cand c
-      |       JOIN e a ON a.vec_id = c.query_id
-      |       JOIN e b ON b.vec_id = c.vec_id)
-      |SELECT query_id, neighbor_id, round(cosx, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank
-      |FROM rr WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |$sqUnit,
+       |rng AS (SELECT i, min(x) AS lo, max(x) AS hi FROM ux GROUP BY i),
+       |$sqDecoded,
+       |adc AS (SELECT q.query_id, vh.vec_id,
+       |               list_dot_product(q.qu, vh.vhat) AS score
+       |        FROM q, vh),
+       |$sqRerankTop5""".stripMargin
 
   /** Scalar-quantized (SQ8) ANN gate ([[graft.ext.SqIndex]]) — the
     * no-training member of the compression family (IVF prunes rows, PQ
@@ -1700,47 +1594,14 @@ object ScaleQueries {
   }
 
   private val sqTopKSql =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      |u AS (SELECT vec_id, v, unnest(generate_series(1, len(v))) AS i
-      |      FROM e),
-      |ux AS (SELECT vec_id, i,
-      |              v[i] / sqrt(list_dot_product(v, v)) AS x
-      |       FROM u),
-      |rng AS (SELECT i, min(x) AS lo, max(x) AS hi FROM ux GROUP BY i),
-      |dq AS (SELECT vec_id, i,
-      |              lo + floor(255.0 * (x - lo)
-      |                         / greatest(hi - lo, 1e-12) + 0.5)
-      |                   * (hi - lo) / 255.0 AS xh
-      |       FROM ux JOIN rng USING (i)),
-      |vh AS (SELECT vec_id, list(xh ORDER BY i) AS vhat
-      |       FROM dq GROUP BY vec_id),
-      |q AS (SELECT vec_id AS query_id,
-      |             list_transform(v,
-      |               x -> x / sqrt(list_dot_product(v, v))) AS qu
-      |      FROM e WHERE vec_id < 10),
-      |adc AS (SELECT q.query_id, vh.vec_id,
-      |               list_dot_product(q.qu, vh.vhat) AS score
-      |        FROM q, vh WHERE vh.vec_id <> q.query_id),
-      |cand AS (SELECT query_id, vec_id FROM (
-      |           SELECT query_id, vec_id,
-      |                  row_number() OVER (PARTITION BY query_id
-      |                    ORDER BY score DESC, vec_id) AS rn
-      |           FROM adc) WHERE rn <= 40),
-      |rr AS (SELECT c.query_id, c.vec_id AS neighbor_id,
-      |              list_dot_product(a.v, b.v)
-      |                / sqrt(list_dot_product(a.v, a.v)
-      |                       * list_dot_product(b.v, b.v)) AS cosx,
-      |              row_number() OVER (PARTITION BY c.query_id
-      |                ORDER BY list_dot_product(a.v, b.v)
-      |                  / sqrt(list_dot_product(a.v, a.v)
-      |                         * list_dot_product(b.v, b.v)) DESC,
-      |                  c.vec_id) AS rank
-      |       FROM cand c
-      |       JOIN e a ON a.vec_id = c.query_id
-      |       JOIN e b ON b.vec_id = c.vec_id)
-      |SELECT query_id, neighbor_id, round(cosx, 6) AS cos,
-      |       CAST(rank AS INTEGER) AS rank
-      |FROM rr WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |$sqUnit,
+       |rng AS (SELECT i, min(x) AS lo, max(x) AS hi FROM ux GROUP BY i),
+       |$sqDecoded,
+       |adc AS (SELECT q.query_id, vh.vec_id,
+       |               list_dot_product(q.qu, vh.vhat) AS score
+       |        FROM q, vh WHERE vh.vec_id <> q.query_id),
+       |$sqRerankTop5""".stripMargin
 
   // §2.9 — streaming: event-time windowed aggregation with a watermark,
   // driven through a real file-source stream + memory sink. The oracle

@@ -30,6 +30,38 @@ class GateRegistrySpec extends AnyFunSuite {
     assert(bad.isEmpty, s"oracles referencing Spark temp views: $bad")
   }
 
+  test("every oracle is fully composed: no unspliced ${, no margin " +
+    "line, parentheses balanced outside quoted literals") {
+    // a fragment spliced into a plain """…""" (not s"""…""") stays a
+    // literal ${…}; one whose literal lost .stripMargin keeps its
+    // margins; a dropped or doubled paren at a fragment seam would
+    // otherwise show up only when DuckDB parses the oracle
+    def parensBalanced(sql: String): Boolean = {
+      var depth = 0
+      var quoted = false
+      var closedUnopened = false
+      sql.foreach {
+        case '\'' => quoted = !quoted
+        case '(' if !quoted => depth += 1
+        case ')' if !quoted =>
+          depth -= 1
+          if (depth < 0) closedUnopened = true
+        case _ =>
+      }
+      !closedUnopened && depth == 0 && !quoted
+    }
+    val bad = Gate.all.flatMap(g => g.oracle.toSeq.flatMap { o =>
+      Seq(
+        Option.when(o.contains("${"))("literal ${"),
+        // SQL's `||` may open a line; a lone `|` is a margin left over
+        Option.when(o.linesIterator.map(_.trim).exists(l =>
+          l.startsWith("|") && !l.startsWith("||")))("margin |"),
+        Option.when(!parensBalanced(o))("unbalanced parentheses"),
+      ).flatten.map(why => s"${g.name}: $why")
+    })
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("every bench headline name is a live gate") {
     val names = Gate.all.map(_.name).toSet
     val dead = Bench.headline.filterNot(names)

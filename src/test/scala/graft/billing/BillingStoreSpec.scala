@@ -237,6 +237,23 @@ class BillingStoreSpec extends SparkSpec {
     }
   }
 
+  test("appends alone keep only retainVersions manifests and sidecars") {
+    val store = BillingStore(tmpDir("append_window"))
+    (1 to 20).foreach { i =>
+      store.appendDedup(spark,
+        df(rec(f"2025-04-23 10:$i%02d:00", s"r$i", "u1", i.toDouble)))
+    }
+    val listed = store.rawVersions(spark)
+    assert(listed.size == store.retainVersions, s"listed $listed")
+    val mdir = new java.io.File(s"${store.root}/raw_billing/_raw_manifest")
+    val sidecars = mdir.list().count(_.endsWith(".stats"))
+    assert(sidecars == store.retainVersions, s"sidecars ${mdir.list().toSeq}")
+    // every listed version reads, holding one row per append up to it
+    listed.zipWithIndex.foreach { case (v, i) =>
+      assert(store.rawAt(spark, v).count() == 20L - listed.size + 1 + i)
+    }
+  }
+
   test("an emptied store reads empty rollups, live and pinned") {
     val store = BillingStore(tmpDir("emptied"))
     store.appendDedup(spark, df(
