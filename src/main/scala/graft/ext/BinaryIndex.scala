@@ -93,7 +93,7 @@ object BinaryIndex extends VectorFamily {
     val spark = model.codes.sparkSession
     import spark.implicits._
     commitReplace(spark, path, model.codes, Seq(Seq(model.dim).toDF("dim")),
-      retainVersions, "replace")
+      retainVersions, "build")
   }
 
   def buildAndSave(embs: DataFrame, path: String): Model = {
@@ -116,11 +116,9 @@ object BinaryIndex extends VectorFamily {
       val fresh = EmbeddingSearch.dedupDelivery(newEmbs).join(
         IndexStore.liveRows(snap, "codes").select("vec_id"),
         Seq("vec_id"), "left_anti")
-      if (!fresh.isEmpty) {
-        val seg = IndexStore.newSegmentName()
-        encode(model.dim, fresh).write.parquet(s"$path/$seg/codes")
-        IndexStore.publishAppend(spark, path, seg, Seq("codes"))
-      }
+      if (!fresh.isEmpty)
+        IndexStore.commit(spark, path, "append", IndexStore.Append)(
+          IndexStore.Rel("codes")(encode(model.dim, fresh).write.parquet(_)))
       ()
     }
   }

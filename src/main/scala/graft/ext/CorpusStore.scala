@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import IndexStore.{Append, Rel, Replace}
 
 /** The corpus STORE OF RECORD as a first-class takedown surface: a
   * manifest-versioned keyed parquet table built on the same
@@ -58,7 +59,8 @@ object CorpusStore extends IndexFamily {
     rows.select(idCol.as("id") +: rest.toIndexedSeq: _*)
   }
 
-  /** One-row zone-map sidecar for a just-written segment. Derived from
+  /** The `rows` relation `writeRows` fills, then its one-row zone-map
+    * sidecar `stats` (the segment's id bounds and row count). Derived from
     * the written files' parquet FOOTER statistics (guide §6) — a
     * driver-side metadata read per file, not a second delivery-sized
     * scan of rows that were just written — while still being computed
@@ -70,21 +72,24 @@ object CorpusStore extends IndexFamily {
     * id column is NOT int64, or a footer missing statistics, falls
     * back to the scan spelling.
     */
-  private def writeStats(spark: SparkSession, root: String,
-      seg: String): Unit = {
-    import spark.implicits._
-    footerIdStats(spark, s"$root/$seg/rows") match {
-      case Some((lo, hi, n)) =>
-        Seq((lo, hi, n, seg)).toDF("lo", "hi", "n", "seg")
-          .coalesce(1).write.parquet(s"$root/$seg/stats")
-      case None =>
-        spark.read.parquet(s"$root/$seg/rows")
-          .agg(min("id").as("lo"), max("id").as("hi"),
-            count(lit(1)).as("n"))
-          .withColumn("seg", lit(seg))
-          .coalesce(1).write.parquet(s"$root/$seg/stats")
-    }
-  }
+  private def rowsAndStats(spark: SparkSession,
+      writeRows: String => Unit): Seq[Rel] = Seq(Rel("rows")(writeRows),
+    Rel("stats", after = Some("rows")) { dir =>
+      import spark.implicits._
+      val rows = IndexStore.sibling(dir, "rows")
+      val seg = IndexStore.segmentOf(dir)
+      footerIdStats(spark, rows) match {
+        case Some((lo, hi, n)) =>
+          Seq((lo, hi, n, seg)).toDF("lo", "hi", "n", "seg")
+            .coalesce(1).write.parquet(dir)
+        case None =>
+          spark.read.parquet(rows)
+            .agg(min("id").as("lo"), max("id").as("hi"),
+              count(lit(1)).as("n"))
+            .withColumn("seg", lit(seg))
+            .coalesce(1).write.parquet(dir)
+      }
+    })
 
   /** (min id, max id, row count) of a parquet directory read from file
     * footers only. None when the id column is not INT64 or any block
@@ -147,13 +152,8 @@ object CorpusStore extends IndexFamily {
   def build(rows: DataFrame, idCol: Column, root: String,
       retainVersions: Int = 2): Long = {
     val spark = rows.sparkSession
-    IndexStore.withLock(spark, root) {
-      val seg = IndexStore.newSegmentName()
-      keyed(rows, idCol).write.parquet(s"$root/$seg/rows")
-      writeStats(spark, root, seg)
-      IndexStore.publishReplace(spark, root, seg, Seq("rows", "stats"),
-        retainVersions, op = "build")
-    }
+    IndexStore.commit(spark, root, "build", Replace(retainVersions))(
+      rowsAndStats(spark, keyed(rows, idCol).write.parquet(_)): _*)
   }
 
   /** Admit a delivery on top of the current content (append semantics;
@@ -167,12 +167,8 @@ object CorpusStore extends IndexFamily {
     IndexStore.withLock(spark, root) {
       val delivery = keyed(rows, idCol)
       if (delivery.isEmpty) IndexStore.snapshot(spark, root).version
-      else {
-        val seg = IndexStore.newSegmentName()
-        delivery.write.parquet(s"$root/$seg/rows")
-        writeStats(spark, root, seg)
-        IndexStore.publishAppend(spark, root, seg, Seq("rows", "stats"))
-      }
+      else IndexStore.commit(spark, root, "append", Append)(
+        rowsAndStats(spark, delivery.write.parquet(_)): _*)
     }
 
   /** The live corpus — rows minus scoped tombstones, the one
@@ -372,16 +368,10 @@ object CorpusStore extends IndexFamily {
       retainVersions: Int = 2, clusterPartitions: Int = 8): Unit =
     IndexStore.withLock(spark, root) {
       val live = read(spark, root).persist()
-      try {
-        val seg = IndexStore.newSegmentName()
-        live.repartitionByRange(clusterPartitions, col("id"))
-          .sortWithinPartitions("id")
-          .write.parquet(s"$root/$seg/rows")
-        writeStats(spark, root, seg)
-        IndexStore.publishReplace(spark, root, seg, Seq("rows", "stats"),
-          retainVersions, op = "compact")
-        ()
-      } finally { live.unpersist(); () }
+      try IndexStore.commit(spark, root, "compact", Replace(retainVersions))(
+        rowsAndStats(spark, live.repartitionByRange(clusterPartitions,
+          col("id")).sortWithinPartitions("id").write.parquet(_)): _*)
+      finally live.unpersist()
     }
 
   def compact(spark: SparkSession, root: String, retainVersions: Int): Unit =

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import IndexStore.{Append, Rel, Replace}
 
 /** Persisted MinHash-LSH dedup index: the build-once / dedup-every-batch
   * shape for a corpus that grows by deliveries. `minhashDedup` re-shingles
@@ -71,33 +72,26 @@ object DedupIndex extends IndexFamily {
     val m = Meta(n, bands, rowsPerBand)
     val (sh, sizes, dfDelta, buckets) = encode(docs, id, text, m)
     val shP = sh.persist()
-    try IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      writeMeta(spark, m, path, seg)
-      writeDerivatives(shP, sizes, dfDelta, buckets, path, seg)
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("meta", "shingles", "sizes", "df", "buckets"))
-      ()
-    } finally shP.unpersist()
+    try IndexStore.commit(spark, path, "build", Replace())(
+      derivatives(shP, sizes, dfDelta, buckets) :+ metaRel(spark, m): _*)
+    finally shP.unpersist()
   }
 
-  private def writeMeta(spark: SparkSession, m: Meta, path: String,
-      seg: String): Unit = {
+  private def metaRel(spark: SparkSession, m: Meta): Rel = {
     import spark.implicits._
-    Seq((m.n, m.bands, m.rowsPerBand)).toDF("n", "bands", "rows_per_band")
-      .coalesce(1).write.parquet(s"$path/$seg/meta")
+    Rel("meta")(Seq((m.n, m.bands, m.rowsPerBand))
+      .toDF("n", "bands", "rows_per_band").coalesce(1).write.parquet(_))
   }
 
-  private def writeDerivatives(sh: DataFrame, sizes: DataFrame,
-      dfDelta: DataFrame, buckets: DataFrame, path: String,
-      seg: String): Unit =
-    // independent derivative writes over one persisted shingle table —
-    // overlapped (IndexStore.writeAll, guide §2.6)
-    IndexStore.writeAll(
-      () => sh.write.parquet(s"$path/$seg/shingles"),
-      () => sizes.write.parquet(s"$path/$seg/sizes"),
-      () => dfDelta.write.parquet(s"$path/$seg/df"),
-      () => buckets.write.parquet(s"$path/$seg/buckets"))
+  /** The four derivative relations — independent writes over one
+    * persisted shingle table, overlapped by the commit.
+    */
+  private def derivatives(sh: DataFrame, sizes: DataFrame,
+      dfDelta: DataFrame, buckets: DataFrame): Seq[Rel] = Seq(
+    Rel("shingles")(sh.write.parquet(_)),
+    Rel("sizes")(sizes.write.parquet(_)),
+    Rel("df")(dfDelta.write.parquet(_)),
+    Rel("buckets")(buckets.write.parquet(_)))
 
   /** Append one delivery: encode the delta against the saved geometry and
     * publish its derivatives as a new segment — the old corpus is not
@@ -110,13 +104,9 @@ object DedupIndex extends IndexFamily {
     val shP = sh.persist()
     // an empty delivery must not publish a zero-row segment — empty
     // parquet dirs break later schema inference
-    try if (!shP.isEmpty) IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      writeDerivatives(shP, sizes, dfDelta, buckets, path, seg)
-      IndexStore.publishAppend(spark, path, seg,
-        Seq("shingles", "sizes", "df", "buckets"))
-      ()
-    } finally shP.unpersist()
+    try if (!shP.isEmpty) IndexStore.commit(spark, path, "append", Append)(
+      derivatives(shP, sizes, dfDelta, buckets): _*)
+    finally shP.unpersist()
   }
 
   private[ext] def admit(spark: SparkSession, path: String,
@@ -276,13 +266,8 @@ object DedupIndex extends IndexFamily {
     try {
       val scored = dedupEncoded(snap, newSh, newSizes, newDfDelta,
         newBuckets, threshold, maxDF)
-      if (!newSh.isEmpty) IndexStore.withLock(spark, path) {
-        val seg = IndexStore.newSegmentName()
-        writeDerivatives(newSh, newSizes, newDfDelta, newBuckets, path, seg)
-        IndexStore.publishAppend(spark, path, seg,
-          Seq("shingles", "sizes", "df", "buckets"))
-        ()
-      }
+      if (!newSh.isEmpty) IndexStore.commit(spark, path, "append", Append)(
+        derivatives(newSh, newSizes, newDfDelta, newBuckets): _*)
       scored
     } finally Seq(newSh, newBuckets).foreach(_.unpersist())
   }
@@ -309,18 +294,14 @@ object DedupIndex extends IndexFamily {
     val dead = IndexStore.liveRowsAmong(snap, "shingles", "id", requested)
       .join(broadcast(requested), "id").persist()
     try if (!dead.isEmpty) {
-      val negDf = dead.groupBy("sh").agg((-count(lit(1))).as("cnt"))
-      val tomb = dead.select("id").distinct()
-      val seg = IndexStore.newSegmentName()
-      negDf.write.parquet(s"$path/$seg/df")
-      tomb.coalesce(1).write.parquet(s"$path/$seg/tombstones")
       // scope over every masked derivative's segments: the tombstone
       // binds deliveries present NOW; later re-adds stay live
-      IndexStore.writeScope(spark, path, seg,
-        (snap.segments("shingles") ++ snap.segments("sizes") ++
-          snap.segments("buckets")).distinct)
-      IndexStore.publishAppend(spark, path, seg,
-        Seq("df", "tombstones", "tombstone_scope"), op = "delete")
+      IndexStore.commit(spark, path, "delete", Append)(
+        Rel("df")(dead.groupBy("sh").agg((-count(lit(1))).as("cnt"))
+          .write.parquet(_)) +:
+        IndexStore.tombstones(dead.select("id").distinct(),
+          (snap.segments("shingles") ++ snap.segments("sizes") ++
+            snap.segments("buckets")).distinct): _*)
       ()
     } finally dead.unpersist()
   }
@@ -344,24 +325,18 @@ object DedupIndex extends IndexFamily {
     IndexStore.withLock(spark, path) {
       val snap = IndexStore.snapshot(spark, path)
       val m = readMeta(spark, path)
-      def live(rel: String): DataFrame =
-        IndexStore.liveRows(snap, rel, key = "id")
-      val seg = IndexStore.newSegmentName()
-      IndexStore.writeAll(
-        () => writeMeta(spark, m, path, seg),
-        () => snap.read("df").get
+      def live(rel: String): String => Unit =
+        IndexStore.liveRows(snap, rel, key = "id").repartition(col("id"))
+          .write.parquet(_)
+      IndexStore.commit(spark, path, "compact", Replace(retainVersions))(
+        metaRel(spark, m),
+        Rel("df")(snap.read("df").get
           .groupBy("sh").agg(sum("cnt").as("cnt"))
           .filter(col("cnt") > 0)
-          .write.parquet(s"$path/$seg/df"),
-        () => live("shingles").repartition(col("id"))
-          .write.parquet(s"$path/$seg/shingles"),
-        () => live("sizes").repartition(col("id"))
-          .write.parquet(s"$path/$seg/sizes"),
-        () => live("buckets").repartition(col("id"))
-          .write.parquet(s"$path/$seg/buckets"))
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("meta", "shingles", "sizes", "df", "buckets"), retainVersions,
-        op = "compact")
+          .write.parquet(_)),
+        Rel("shingles")(live("shingles")),
+        Rel("sizes")(live("sizes")),
+        Rel("buckets")(live("buckets")))
       ()
     }
 

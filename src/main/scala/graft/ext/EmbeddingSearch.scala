@@ -55,14 +55,15 @@ object EmbeddingSearch {
       .withColumn("nrm", dot(col("v"), col("v")))
 
   /** [[prepared]] rows as the query side of a search:
-    * `(query_id, qv, qnrm)`.
+    * `(query_id, qv, qnrm)` plus any `extra` columns.
     */
-  private[ext] def asQueries(rows: DataFrame): DataFrame =
-    rows.select(col("vec_id").as("query_id"), col("v").as("qv"),
-      col("nrm").as("qnrm"))
+  private[ext] def asQueries(rows: DataFrame, extra: Column*): DataFrame =
+    rows.select(Seq(col("vec_id").as("query_id"), col("v").as("qv"),
+      col("nrm").as("qnrm")) ++ extra: _*)
 
-  /** The exact re-rank that ends the compressed-index searches
-    * ([[BinaryIndex]], [[PqIndex]], [[SqIndex]], [[IvfPqIndex]]): the
+  /** The exact re-rank that ends every exact and candidate search here
+    * and in the index families ([[IvfIndex]], [[BinaryIndex]],
+    * [[PqIndex]], [[SqIndex]], [[IvfPqIndex]]): the
     * cosine of each candidate row (query `qv`/`qnrm`, corpus `v`/`nrm`),
     * and each query's top `k` by cosine (ties → smaller vec_id) as
     * `(query_id, neighbor_id, cos rounded to 6 digits, rank)`.
@@ -86,17 +87,8 @@ object EmbeddingSearch {
     */
   def bruteForceTopK(embs: DataFrame, queryPred: Column, k: Int): DataFrame = {
     val e = prepared(embs)
-    val q = e.filter(queryPred).select(
-      col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos",
-        dot(col("qv"), col("v")) / sqrt(col("qnrm") * col("nrm")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("cos"), 6).as("cos"), col("rank"))
+    rerankTopK(e.join(broadcast(asQueries(e.filter(queryPred))),
+      col("vec_id") =!= col("query_id")), k)
   }
 
   /** Exact k-nearest-neighbor GRAPH: every corpus row is a query, top-k
@@ -1052,17 +1044,8 @@ object EmbeddingSearch {
   def projectedTopK(embs: DataFrame, queryPred: Column, k: Int,
       dProj: Int = 16, dim: Int = 64, seed: Long = 42L): DataFrame = {
     val e = randomProject(embs, dProj, dim, seed)
-    val q = e.filter(queryPred).select(col("vec_id").as("query_id"),
-      col("v").as("qv"), col("nrm").as("qnrm"))
-    val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos",
-        dot(col("qv"), col("v")) / sqrt(col("qnrm") * col("nrm")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("cos"), 6).as("cos"), col("rank"))
+    rerankTopK(e.join(broadcast(asQueries(e.filter(queryPred))),
+      col("vec_id") =!= col("query_id")), k)
   }
 
   /** Sign-pattern bucket id: bit i = (v · plane_i) > 0. */
@@ -1085,20 +1068,9 @@ object EmbeddingSearch {
     * per-query window top-k.
     */
   def bruteForceTopKFor(embs: DataFrame, queries: DataFrame,
-      k: Int): DataFrame = {
-    val e = prepared(embs)
-    val q = prepared(queries).select(col("vec_id").as("query_id"),
-      col("v").as("qv"), col("nrm").as("qnrm"))
-    val scored = e.join(broadcast(q))
-      .withColumn("cos",
-        dot(col("qv"), col("v")) / sqrt(col("qnrm") * col("nrm")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("cos"), 6).as("cos"), col("rank"))
-  }
+      k: Int): DataFrame =
+    rerankTopK(prepared(embs).join(broadcast(asQueries(prepared(queries)))),
+      k)
 
   /** Hard-negative mining for contrastive training (the DPR recipe):
     * per query, the top-`k` HIGHEST-similarity corpus documents that are
@@ -1133,18 +1105,9 @@ object EmbeddingSearch {
       nPlanes: Int = 6, dim: Int = 64): DataFrame = {
     val planes = hyperplanes(nPlanes, dim)
     val e = prepared(embs).withColumn("bucket", bucketOf(col("v"), planes))
-    val q = e.filter(queryPred).select(col("vec_id").as("query_id"),
-      col("v").as("qv"), col("nrm").as("qnrm"), col("bucket"))
-    val scored = e.join(broadcast(q), Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos",
-        dot(col("qv"), col("v")) / sqrt(col("qnrm") * col("nrm")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("cos"), 6).as("cos"), col("rank"))
+    rerankTopK(e.join(broadcast(asQueries(e.filter(queryPred),
+        col("bucket"))), Seq("bucket"))
+      .filter(col("vec_id") =!= col("query_id")), k)
   }
 
   /** Multi-probe LSH top-k: each query probes its own sign bucket PLUS
@@ -1166,19 +1129,9 @@ object EmbeddingSearch {
       case 0 => col("bucket")
       case i => col("bucket").bitwiseXOR(shiftleft(lit(1L), i - 1))
     }: _*)
-    val q = e.filter(queryPred).select(col("vec_id").as("query_id"),
-        col("v").as("qv"), col("nrm").as("qnrm"),
-        explode(probes).as("bucket"))
-    val scored = e.join(broadcast(q), Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos",
-        dot(col("qv"), col("v")) / sqrt(col("qnrm") * col("nrm")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("cos"), 6).as("cos"), col("rank"))
+    rerankTopK(e.join(broadcast(asQueries(e.filter(queryPred),
+        explode(probes).as("bucket"))), Seq("bucket"))
+      .filter(col("vec_id") =!= col("query_id")), k)
   }
 
   /** Embedding-cosine near-duplicate pairs via LSH buckets: vectors in the

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * every segment (nothing read but blooms); a takedown batch touches
   * the one or two segments that hold its ids.
   *
-  * Sidecar layout: `$root/$seg/_bloom_$relation` — one parquet row
+  * Sidecar layout: `$root/$seg/idbloom-$relation` — one parquet row
   * `(nbits, k, n, bits)`. The name can never collide with a manifest
   * line (manifests list `$seg/$relation`; readers resolve only listed
   * relations), and GC deletes segment dirs wholesale, so sidecars need

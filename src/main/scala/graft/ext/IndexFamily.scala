@@ -268,33 +268,23 @@ trait VectorFamily extends IndexFamily {
     */
   protected def appendLive(spark: SparkSession, path: String,
       delta: DataFrame): Unit =
-    if (!delta.isEmpty) IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      writeLive(delta, s"$path/$seg/${live._1}")
-      IndexStore.publishAppend(spark, path, seg, Seq(live._1))
-      ()
-    }
+    if (!delta.isEmpty)
+      IndexStore.commit(spark, path, "append", IndexStore.Append)(
+        IndexStore.Rel(live._1)(writeLive(delta, _)))
 
   /** Publish `liveRows` (written in the family layout) and one row set
     * per [[sidecars]] entry as the index's ENTIRE content, in one
     * segment tagged `op` — the commit that save, retrain, rebalance and
-    * compaction share. The relation writes overlap
-    * ([[IndexStore.writeAll]]).
+    * compaction share.
     */
   protected def commitReplace(spark: SparkSession, path: String,
       liveRows: DataFrame, sidecarRows: Seq[DataFrame],
       retainVersions: Int, op: String): Unit =
-    IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      IndexStore.writeAll(
-        (() => writeLive(liveRows, s"$path/$seg/${live._1}")) +:
-          sidecars.zip(sidecarRows).map { case (r, rows) =>
-            () => rows.coalesce(1).write.parquet(s"$path/$seg/$r")
-          }: _*)
-      IndexStore.publishReplace(spark, path, seg, live._1 +: sidecars,
-        retainVersions, op)
-      ()
-    }
+    IndexStore.commit(spark, path, op, IndexStore.Replace(retainVersions))(
+      IndexStore.Rel(live._1)(writeLive(liveRows, _)) +:
+        sidecars.zip(sidecarRows).map { case (r, rows) =>
+          IndexStore.Rel(r)(rows.coalesce(1).write.parquet(_))
+        }: _*)
 
   /** The live relation rewrites in the family layout, the sidecars
     * copy verbatim.

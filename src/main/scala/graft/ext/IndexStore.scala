@@ -2,9 +2,10 @@ package graft.ext
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** Segment + manifest storage shared by the persisted index family
-  * ([[TextSearch]], [[DedupIndex]]): every mutation writes NEW files
+/** Segment + manifest storage shared by the persisted index families
+  * ([[IndexFamily.all]]): every mutation writes NEW files
   * into a fresh immutable `seg-*` directory and atomically publishes a
   * manifest version listing the index's current relation directories
   * ([[graft.store.VersionedManifest]] carries the protocol doc). What
@@ -21,12 +22,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     unreferenced by the newest `retainVersions` manifests, so a
   *     pinned reader's files outlive the commit that dropped them.
   *
-  * Manifest lines are `segName/relation` paths relative to the index
-  * root; a snapshot resolves a relation to the union of its segment
-  * directories. Mutators serialize on the index root's writer lock
-  * ([[graft.billing.TableLock]] — same discipline as the billing
-  * store), so manifest versions never race and append×compact cannot
-  * lose a delivery.
+  * The layout this module owns (no other module names a segment path):
+  *
+  *   - `_manifest/` — the versioned line sets, each commit tagged with
+  *     its op; a line is `seg-<16 hex>/<relation>`, relative to the root;
+  *   - `seg-<16 hex>/<relation>/` — one parquet directory per relation a
+  *     commit wrote; a snapshot resolves a relation to the union of its
+  *     segment directories;
+  *   - `seg-<16 hex>/idbloom-<relation>/` — the lazily built id-Bloom
+  *     sidecars ([[IdBloom]]), never manifest lines;
+  *   - `_incarnation/`, `_leases/` — root identity and reader leases.
+  *
+  * THE COMMIT CONTRACT: every mutation of an index family is one
+  * [[commit]]. It holds the root's writer lock
+  * ([[graft.billing.TableLock]] — same discipline as the billing store,
+  * reentrant, so manifest versions never race and append×compact cannot
+  * lose a delivery), names a fresh segment, writes each [[Rel]] the
+  * caller names into it (independent writes overlap; a tombstone set
+  * and its scope sidecar are one [[tombstones]] step), and publishes
+  * exactly the relations it wrote — on top of the current manifest
+  * ([[Append]]) or as the root's entire content followed by [[gc]]
+  * ([[Replace]]) — under a required op tag. Published = written: a
+  * relation the writer did not produce fails the commit unpublished.
   */
 object IndexStore {
 
@@ -249,9 +266,6 @@ object IndexStore {
           s"(have: ${versions(spark, root).mkString(",")})")
     }
 
-  def newSegmentName(): String =
-    "seg-" + java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-
   /** Clone ONE PINNED VERSION of an index to a fresh root — the
     * backup/restore and environment-promotion primitive (Delta CLONE's
     * deep form): the destination is a fully independent index whose
@@ -305,7 +319,7 @@ object IndexStore {
   def withLock[A](spark: SparkSession, root: String)(body: => A): A =
     graft.billing.TableLock.withLock(spark, root)(body)
 
-  /** Bounded daemon pool for [[writeAll]] — sized small: commit writes
+  /** Bounded daemon pool for [[runAll]] — sized small: commit writes
     * are few and each is itself a parallel Spark job.
     */
   private lazy val writePool = {
@@ -320,56 +334,32 @@ object IndexStore {
     java.util.concurrent.Executors.newFixedThreadPool(4, tf)
   }
 
-  /** Run a commit's independent relation writes CONCURRENTLY (guide
-    * §2.6 — overlap independent jobs: Spark happily runs several jobs
-    * in one application, and a segment's relation writes touch disjoint
-    * directories over already-materialized frames, so their only
-    * ordering was the driver calling them sequentially; overlapping
-    * them lets one write's task tail back-fill the next's). Blocks
-    * until every write finishes; the first failure rethrows — same
-    * failure semantics as the sequential spelling (a partially-written
-    * segment is never published because the manifest commit follows
-    * this call).
+  /** `task` as pool work that runs under the SUBMITTING thread's Spark
+    * local properties (job group, description, scheduler pool). A pool
+    * thread copies them once, when it is created, so without this every
+    * pooled job would carry the properties of whichever caller first
+    * grew the pool.
     */
-  private[ext] def writeAll(writes: (() => Unit)*): Unit = {
-    import scala.jdk.CollectionConverters._
-    // REENTRANCY GUARD: a task already running ON the commit-write pool
-    // (e.g. a registry sweep overlapping whole-surface maintenance ops
-    // that themselves commit via writeAll) must not invokeAll back into
-    // the same bounded pool — the inner batch would queue behind the
-    // saturated outer one while the outer task blocks waiting for it, a
-    // silent driver deadlock. Nested calls run inline instead; the
-    // OUTER level still overlaps.
-    if (Thread.currentThread().getName.startsWith("index-commit-write-")) {
-      writes.foreach(w => w())
-    } else {
-      val tasks: java.util.List[java.util.concurrent.Callable[Unit]] =
-        writes.map { w =>
-          new java.util.concurrent.Callable[Unit] { def call(): Unit = w() }
-        }.asJava
-      // invokeAll waits for all; get() rethrows the task's exception —
-      // unwrap the ExecutionException so commit errors surface with the
-      // same exception type/message as the sequential spelling did
-      writePool.invokeAll(tasks).asScala.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
-      }
-    }
+  private def pooled[A](task: () => A): java.util.concurrent.Callable[A] = {
+    val props = Bridge.localProperties()
+    () => Bridge.withLocalProperties(props)(task())
   }
 
-  /** Run independent per-surface tasks on the commit-write pool and
-    * return each task's outcome IN ORDER — the [[writeAll]] overlap
-    * applied to whole-surface operations (registry sweeps, multi-root
-    * retractions) that need per-task fault isolation instead of
-    * first-failure rethrow. Tasks touching DIFFERENT index roots are
-    * independent (each mutator takes its own root's writer lock); a
-    * task that itself commits via [[writeAll]] runs those writes inline
-    * (the reentrancy guard above), so nesting cannot starve the pool.
-    * Called from a pool thread, the tasks run inline sequentially for
-    * the same reason.
+  /** Run independent tasks CONCURRENTLY on the commit-write pool and
+    * return each task's outcome IN ORDER (guide §2.6 — overlap
+    * independent jobs: a segment's relation writes touch disjoint
+    * directories, and whole-surface operations — registry sweeps,
+    * multi-root retractions — touch different roots, each under its own
+    * writer lock; overlapping them lets one job's task tail back-fill
+    * the next's). [[commit]] rethrows the first failed write; surface
+    * sweeps keep per-task fault isolation.
+    *
+    * REENTRANCY GUARD: a task already running ON the pool (a sweep's
+    * surface task whose mutator commits) must not invokeAll back into
+    * the same bounded pool — the inner batch would queue behind the
+    * saturated outer one while the outer task blocks waiting for it, a
+    * silent driver deadlock. Nested calls run inline instead; the OUTER
+    * level still overlaps. A single task runs inline too.
     */
   private[graft] def runAll[A](tasks: Seq[() => A]): Seq[scala.util.Try[A]] =
     if (tasks.size <= 1 ||
@@ -377,45 +367,98 @@ object IndexStore {
       tasks.map(t => scala.util.Try(t()))
     else {
       import scala.jdk.CollectionConverters._
-      val cs: java.util.List[java.util.concurrent.Callable[scala.util.Try[A]]] =
-        tasks.map { t =>
-          new java.util.concurrent.Callable[scala.util.Try[A]] {
-            def call(): scala.util.Try[A] = scala.util.Try(t())
-          }
-        }.asJava
-      writePool.invokeAll(cs).asScala.toSeq.map(_.get())
+      writePool.invokeAll(tasks.map(t => pooled(() => scala.util.Try(t())))
+        .asJava).asScala.toSeq.map(_.get())
     }
 
-  /** Publish `seg`'s relations ON TOP of the current manifest (append
-    * semantics: deliveries, tombstones). Caller must hold the lock and
-    * have finished writing the segment's files.
+  /** One relation a [[commit]] writes: `write` fills the relation's
+    * directory in the commit's fresh segment. A relation that reads
+    * another of the same commit names it in `after` and is written once
+    * that one has landed (the store's zone map reads its `rows`
+    * footers).
     */
-  def publishAppend(spark: SparkSession, root: String, seg: String,
-      relations: Seq[String], op: String = "append"): Long = {
+  final case class Rel(name: String, after: Option[String] = None)(
+      val write: String => Unit)
+
+  /** How a [[commit]] publishes its segment. */
+  sealed trait Publish
+
+  /** On top of the current manifest: deliveries, tombstones. */
+  case object Append extends Publish
+
+  /** As the root's ENTIRE content (build, compaction, retrain), then
+    * [[gc]] keeping `retainVersions`.
+    */
+  final case class Replace(retainVersions: Int = 2) extends Publish
+
+  /** THE segment commit every index-family mutation goes through. Under
+    * the root's (reentrant) writer lock it names a fresh `seg-*`
+    * directory, writes each of `rels` into `seg/<name>` — independent
+    * writes overlap on the commit pool ([[runAll]]), an `after`
+    * relation follows its dependency — then publishes exactly the
+    * relations it wrote, tagged `op`, and returns the new version. A
+    * relation the writer failed to produce fails the commit before
+    * publish, so published = written; a write that throws leaves an
+    * unreferenced segment [[gc]] reclaims.
+    */
+  private[ext] def commit(spark: SparkSession, root: String, op: String,
+      publish: Publish)(rels: Rel*): Long = withLock(spark, root) {
+    val names = rels.map(_.name)
+    require(names.nonEmpty && names.distinct.size == names.size,
+      s"commit to $root needs distinct relations, got ${names.mkString(",")}")
+    val (first, late) = rels.partition(_.after.isEmpty)
+    late.foreach(r => require(first.exists(f => r.after.contains(f.name)),
+      s"relation ${r.name} of a commit to $root reads ${r.after.get}, " +
+        "which the commit does not write first"))
+    val seg = "seg-" +
+      java.util.UUID.randomUUID().toString.replace("-", "").take(16)
+    Seq(first, late).foreach(wave => runAll(wave.map(r =>
+      () => r.write(s"$root/$seg/${r.name}"))).foreach(_.get))
     val fs = fsOf(spark, root)
+    names.foreach(r => require(fs.exists(new Path(s"$root/$seg/$r")),
+      s"commit to $root wrote no $r"))
     val inc = ensureIncarnation(fs, root)
-    val prev = manifest.latest(fs, root).map(_._2).getOrElse(Seq.empty)
-    val lines = (prev ++ relations.map(r => s"$seg/$r")).sorted
+    val written = names.map(r => s"$seg/$r")
+    val lines = (publish match {
+      case Append =>
+        manifest.latest(fs, root).map(_._2).getOrElse(Seq.empty) ++ written
+      case Replace(_) => written
+    }).sorted
     val v = manifest.commit(fs, root, lines, op)
     cachePut(root, inc, v, lines)
+    publish match {
+      case Replace(retain) => gc(spark, root, retain)
+      case Append =>
+    }
     v
   }
 
-  /** Publish `seg`'s relations as the index's ENTIRE content (replace
-    * semantics: initial build, compaction), then GC segments no retained
-    * manifest references. Caller must hold the lock.
+  /** The segment name and sibling relation directories of a relation
+    * directory a [[Rel]] writer was handed.
     */
-  def publishReplace(spark: SparkSession, root: String, seg: String,
-      relations: Seq[String], retainVersions: Int = 2,
-      op: String = "replace"): Long = {
-    val fs = fsOf(spark, root)
-    val inc = ensureIncarnation(fs, root)
-    val lines = relations.map(r => s"$seg/$r").sorted
-    val v = manifest.commit(fs, root, lines, op)
-    cachePut(root, inc, v, lines)
-    gc(spark, root, retainVersions)
-    v
-  }
+  private[ext] def segmentOf(dir: String): String =
+    dir.split("/").init.last
+
+  private[ext] def sibling(dir: String, relation: String): String =
+    dir.substring(0, dir.lastIndexOf('/') + 1) + relation
+
+  /** A tombstone set and its scope sidecar — the two relations of one
+    * delete step. The sidecar holds rows (tomb_seg, seg) declaring that
+    * the tombstones mask exactly `dataSegs`, the data segments present
+    * at delete time. Segments appended LATER are not masked, which is
+    * what lets a deleted id be re-ingested (delete-then-readd) and
+    * become visible again without waiting for a compact — the same
+    * sequence-number scoping Delta/Iceberg deletion vectors use.
+    */
+  private[ext] def tombstones(ids: DataFrame, dataSegs: Seq[String]): Seq[Rel] =
+    Seq(Rel("tombstones")(ids.coalesce(1).write.parquet(_)),
+      Rel("tombstone_scope") { dir =>
+        import ids.sparkSession.implicits._
+        dataSegs.toDF("seg")
+          .withColumn("tomb_seg", org.apache.spark.sql.functions.lit(
+            segmentOf(dir)))
+          .coalesce(1).write.parquet(dir)
+      })
 
   /** The op tag `version` committed with ("" pre-tag) — see
     * [[graft.store.VersionedManifest.opAt]].
@@ -426,7 +469,7 @@ object IndexStore {
   /** The shared tombstone-append ([[IndexFamily.delete]]): the requested
     * ids that have LIVE rows in `relation` append as one tombstone
     * segment, SCOPED to the data segments present at delete time
-    * ([[writeScope]]). Readers
+    * ([[tombstones]]). Readers
     * anti-join via [[liveRows]]; compaction applies them physically.
     * Judging presence against live rows (not raw rows) makes deletes
     * idempotent (a fully-masked id is a no-op) while still letting a
@@ -446,31 +489,11 @@ object IndexStore {
         liveRowsAmong(snap, relation, key, requested).select(key),
         Seq(key), "left_semi")
       if (!eff.isEmpty) {
-        val seg = newSegmentName()
-        eff.coalesce(1).write.parquet(s"$root/$seg/tombstones")
-        writeScope(spark, root, seg, snap.segments(relation))
-        publishAppend(spark, root, seg,
-          Seq("tombstones", "tombstone_scope"), op = "delete")
+        commit(spark, root, "delete", Append)(
+          tombstones(eff, snap.segments(relation)): _*)
         ()
       }
     }
-
-  /** The scope sidecar of one tombstone segment: rows (tomb_seg, seg)
-    * declaring that `seg`'s tombstones mask exactly `dataSegs` — the
-    * data segments that existed when the delete committed. Segments
-    * appended LATER are not masked, which is what lets a deleted id be
-    * re-ingested (delete-then-readd) and become visible again without
-    * waiting for a compact — the same sequence-number scoping
-    * Delta/Iceberg deletion vectors use. Caller holds the lock and
-    * publishes `tombstone_scope` alongside `tombstones`.
-    */
-  private[ext] def writeScope(spark: SparkSession, root: String,
-      seg: String, dataSegs: Seq[String]): Unit = {
-    import spark.implicits._
-    dataSegs.toDF("seg")
-      .withColumn("tomb_seg", org.apache.spark.sql.functions.lit(seg))
-      .coalesce(1).write.parquet(s"$root/$seg/tombstone_scope")
-  }
 
   /** `relation` under `snap` with tombstoned keys excluded — the one
     * definition of "live" every reader and compactor of a keyed index

@@ -67,7 +67,7 @@ object IvfIndex extends VectorFamily {
     */
   def save(model: Model, path: String, retainVersions: Int = 2): Unit =
     commitReplace(model.centroids.sparkSession, path, model.assigned,
-      Seq(model.centroids), retainVersions, "replace")
+      Seq(model.centroids), retainVersions, "build")
 
   /** The (vec_id, cell) assignment, PARTITIONED BY cell. */
   override protected def writeLive(assigned: DataFrame, dir: String): Unit =
@@ -191,7 +191,7 @@ object IvfIndex extends VectorFamily {
       val reb = rebalance(model, maxCellSize, sampleCap, maxIter, seed,
         maxCellsPerPass)
       commitReplace(spark, path, reb.assigned, Seq(reb.centroids),
-        retainVersions, "replace")
+        retainVersions, "rebalance")
     }
 
   /** The biggest LIVE cell of a saved index — the per-probe-latency
@@ -322,10 +322,8 @@ object IvfIndex extends VectorFamily {
 
   /** Top-k per query, probing the `nProbe` nearest cells. */
   def search(model: Model, queryPred: Column, k: Int, nProbe: Int): DataFrame =
-    searchImpl(model,
-      model.assigned.filter(queryPred).select(col("vec_id").as("query_id"),
-        col("v").as("qv"), col("nrm").as("qnrm")),
-      k, nProbe, excludeSelf = true)
+    searchImpl(model, EmbeddingSearch.asQueries(
+      model.assigned.filter(queryPred)), k, nProbe, excludeSelf = true)
 
   /** METADATA-FILTERED top-k: neighbors are restricted to corpus rows
     * matching `where` ("nearest English documents", "nearest vectors in
@@ -343,9 +341,7 @@ object IvfIndex extends VectorFamily {
   def searchWhere(model: Model, queryPred: Column, where: Column, k: Int,
       nProbe: Int): DataFrame =
     searchImpl(model.copy(assigned = model.assigned.filter(where)),
-      model.assigned.filter(queryPred).select(
-        col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qnrm")),
+      EmbeddingSearch.asQueries(model.assigned.filter(queryPred)),
       k, nProbe, excludeSelf = true)
 
   /** Top-k for EXTERNAL query vectors — `queries` is its own
@@ -357,8 +353,7 @@ object IvfIndex extends VectorFamily {
   def searchVectors(model: Model, queries: DataFrame, k: Int,
       nProbe: Int): DataFrame =
     searchImpl(model,
-      EmbeddingSearch.prepared(queries).select(col("vec_id").as("query_id"),
-        col("v").as("qv"), col("nrm").as("qnrm")),
+      EmbeddingSearch.asQueries(EmbeddingSearch.prepared(queries)),
       k, nProbe, excludeSelf = false)
 
   /** PRECEDENCE-AWARE FEDERATED ANN across saved IVF indexes
@@ -391,16 +386,8 @@ object IvfIndex extends VectorFamily {
       .withColumn("cell_rank", row_number().over(cellRank))
       .filter(col("cell_rank") <= nProbe)
       .select("query_id", "qv", "qnrm", "cell")
-    val scored = model.assigned.join(probes, Seq("cell"))
-      .filter(if (excludeSelf) col("vec_id") =!= col("query_id") else lit(true))
-      .withColumn("cos",
-        EmbeddingSearch.dot(col("qv"), col("v")) /
-          sqrt(col("qnrm") * col("nrm")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("cos"), 6).as("cos"), col("rank"))
+    EmbeddingSearch.rerankTopK(model.assigned.join(probes, Seq("cell"))
+      .filter(if (excludeSelf) col("vec_id") =!= col("query_id") else lit(true)),
+      k)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import IndexStore.{Append, Rel, Replace}
 
 /** The kNN GRAPH as a persisted, maintainable, searchable index — the
   * DiskANN-shape vector-search surface completing the graph family:
@@ -85,18 +86,17 @@ object KnnGraphIndex extends IndexFamily {
     graph.select(col("query_id").as("vec_id"), col("neighbor_id"),
       col("cos"), col("rank"), lit(gen).as("gen"))
 
-  /** Commit `seg` and ENFORCE the invariant the max-gen edge read
+  /** Commit `rels` and ENFORCE the invariant the max-gen edge read
     * depends on: rows were stamped `gen = snap.version + 1`, so the
     * publish must actually land as that version — commits are strictly
     * sequential under the writer lock, but if the manifest's versioning
     * discipline ever changed, two commits stamping one gen would make
-    * the (vec_id, gen) read return duplicate merged edge sets. Assumed
-    * silently before; asserted now.
+    * the (vec_id, gen) read return duplicate merged edge sets.
     */
-  private def publishStamped(spark: SparkSession, path: String,
-      seg: String, relations: Seq[String],
-      snap: IndexStore.Snapshot): Long = {
-    val v = IndexStore.publishAppend(spark, path, seg, relations)
+  private def commitStamped(spark: SparkSession, path: String,
+      snap: IndexStore.Snapshot, op: String, publish: IndexStore.Publish)(
+      rels: Rel*): Long = {
+    val v = IndexStore.commit(spark, path, op, publish)(rels: _*)
     require(v == snap.version + 1,
       s"graph commit landed as version $v but its edge rows are " +
         s"stamped gen ${snap.version + 1} — manifest versioning broke " +
@@ -255,22 +255,18 @@ object KnnGraphIndex extends IndexFamily {
     val spark = embs.sparkSession
     import spark.implicits._
     IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
       val stored = asStored(graph, gen = 1L).localCheckpoint(true)
       val deg = degreeDelta(stored, 1).localCheckpoint(true)
       // the five relation writes are independent actions over
-      // materialized frames — run them concurrently (IndexStore.writeAll)
-      IndexStore.writeAll(
-        () => Seq((k, hubCount)).toDF("k", "hubs").coalesce(1)
-          .write.parquet(s"$path/$seg/meta"),
-        () => embs.select(col("vec_id"), col("embedding"))
-          .write.parquet(s"$path/$seg/vectors"),
-        () => stored.write.parquet(s"$path/$seg/edges"),
-        () => deg.write.parquet(s"$path/$seg/degrees"),
-        () => electHubs(deg, hubCount, gen = 1L)
-          .write.parquet(s"$path/$seg/hubs"))
-      val v = IndexStore.publishReplace(spark, path, seg,
-        Seq("meta", "vectors", "edges", "degrees", "hubs"), op = "build")
+      // materialized frames — the commit overlaps them
+      val v = IndexStore.commit(spark, path, "build", Replace())(
+        Rel("meta")(Seq((k, hubCount)).toDF("k", "hubs").coalesce(1)
+          .write.parquet(_)),
+        Rel("vectors")(embs.select(col("vec_id"), col("embedding"))
+          .write.parquet(_)),
+        Rel("edges")(stored.write.parquet(_)),
+        Rel("degrees")(deg.write.parquet(_)),
+        Rel("hubs")(electHubs(deg, hubCount, gen = 1L).write.parquet(_)))
       clearDebt(spark, path, keepTombstones = false)
       v
     }
@@ -326,15 +322,12 @@ object KnnGraphIndex extends IndexFamily {
             .localCheckpoint(true)
           val electFrom = if (snap.segments("degrees").isEmpty) deg
             else liveDegrees(snap).unionByName(deg)
-          val seg = IndexStore.newSegmentName()
-          IndexStore.writeAll(
-            () => delivery.write.parquet(s"$path/$seg/vectors"),
-            () => newRows.write.parquet(s"$path/$seg/edges"),
-            () => deg.write.parquet(s"$path/$seg/degrees"),
-            () => electHubs(electFrom, hubCount, gen = snap.version + 1)
-              .write.parquet(s"$path/$seg/hubs"))
-          val v = publishStamped(spark, path, seg,
-            Seq("vectors", "edges", "degrees", "hubs"), snap)
+          val v = commitStamped(spark, path, snap, "append", Append)(
+            Rel("vectors")(delivery.write.parquet(_)),
+            Rel("edges")(newRows.write.parquet(_)),
+            Rel("degrees")(deg.write.parquet(_)),
+            Rel("hubs")(electHubs(electFrom, hubCount,
+              gen = snap.version + 1).write.parquet(_)))
           // warm descent re-converged every neighborhood AND elected
           // hubs fully — an append IS a quality pass; debt resets
           clearDebt(spark, path, keepTombstones = false)
@@ -429,16 +422,11 @@ object KnnGraphIndex extends IndexFamily {
                 .select(col("vec_id"), col("d"))
                 .unionByName(deg)
             }
-          val seg = IndexStore.newSegmentName()
-          IndexStore.writeAll(
-            () => delivery.write.parquet(s"$path/$seg/vectors"),
-            () => newRows.unionByName(changedRows)
-              .write.parquet(s"$path/$seg/edges"),
-            () => deg.write.parquet(s"$path/$seg/degrees"),
-            () => electHubs(electFrom, hubCount, gen)
-              .write.parquet(s"$path/$seg/hubs"))
-          val v = publishStamped(spark, path, seg,
-            Seq("vectors", "edges", "degrees", "hubs"), snap)
+          val v = commitStamped(spark, path, snap, "append", Append)(
+            Rel("vectors")(delivery.write.parquet(_)),
+            Rel("edges")(newRows.unionByName(changedRows).write.parquet(_)),
+            Rel("degrees")(deg.write.parquet(_)),
+            Rel("hubs")(electHubs(electFrom, hubCount, gen).write.parquet(_)))
           bumpDebt(spark, path, dDeliveries = 1, dTombstones = 0)
           v
         }
@@ -524,11 +512,8 @@ object KnnGraphIndex extends IndexFamily {
         val drift = fullSeq.exceptAll(curSeq)
           .unionByName(curSeq.exceptAll(fullSeq))
         if (drift.isEmpty) snap.version
-        else {
-          val seg = IndexStore.newSegmentName()
-          full.write.parquet(s"$path/$seg/hubs")
-          publishStamped(spark, path, seg, Seq("hubs"), snap)
-        }
+        else commitStamped(spark, path, snap, "append", Append)(
+          Rel("hubs")(full.write.parquet(_)))
       } else {
         val newRows = stored.join(changed, Seq("vec_id"), "left_semi")
           .localCheckpoint(true)
@@ -542,14 +527,11 @@ object KnnGraphIndex extends IndexFamily {
         val electFrom = if (snap.segments("degrees").isEmpty) deg
           else liveEndpointDeltas(snap, liveDegrees(snap), noIds)
             .unionByName(deg)
-        val seg = IndexStore.newSegmentName()
-        IndexStore.writeAll(
-          () => newRows.write.parquet(s"$path/$seg/edges"),
-          () => deg.write.parquet(s"$path/$seg/degrees"),
-          () => electHubs(electFrom, hubCount, gen = snap.version + 1)
-            .write.parquet(s"$path/$seg/hubs"))
-        publishStamped(spark, path, seg,
-          Seq("edges", "degrees", "hubs"), snap)
+        commitStamped(spark, path, snap, "append", Append)(
+          Rel("edges")(newRows.write.parquet(_)),
+          Rel("degrees")(deg.write.parquet(_)),
+          Rel("hubs")(electHubs(electFrom, hubCount,
+            gen = snap.version + 1).write.parquet(_)))
       }
       // either branch leaves the hub set ≡ a full election over the
       // post-commit live degrees and every live neighborhood descent-
@@ -576,13 +558,10 @@ object KnnGraphIndex extends IndexFamily {
       .join(broadcast(requested), Seq("vec_id"), "left_semi")
       .distinct()
     if (!eff.isEmpty) {
-      val seg = IndexStore.newSegmentName()
-      eff.coalesce(1).write.parquet(s"$path/$seg/tombstones")
-      IndexStore.writeScope(spark, path, seg,
-        (snap.segments("vectors") ++ snap.segments("edges") ++
-          snap.segments("degrees") ++ snap.segments("hubs")).distinct)
-      IndexStore.publishAppend(spark, path, seg,
-        Seq("tombstones", "tombstone_scope"), op = "delete")
+      IndexStore.commit(spark, path, "delete", Append)(
+        IndexStore.tombstones(eff, (snap.segments("vectors") ++
+          snap.segments("edges") ++ snap.segments("degrees") ++
+          snap.segments("hubs")).distinct): _*)
       bumpDebt(spark, path, dDeliveries = 0, dTombstones = 1)
     }
   }
@@ -613,22 +592,15 @@ object KnnGraphIndex extends IndexFamily {
           .select(col("vec_id"), col("neighbor_id"), col("cos"),
             col("rank"), lit(snap.version + 1).as("gen"))
           .localCheckpoint(true)
-        val seg = IndexStore.newSegmentName()
         val deg = degreeDelta(edges, 1).localCheckpoint(true)
-        IndexStore.writeAll(
-          () => snap.read("meta").get.coalesce(1)
-            .write.parquet(s"$path/$seg/meta"),
-          () => vecs.write.parquet(s"$path/$seg/vectors"),
-          () => edges.write.parquet(s"$path/$seg/edges"),
-          () => deg.write.parquet(s"$path/$seg/degrees"),
-          () => electHubs(deg, hubCount, gen = snap.version + 1)
-            .write.parquet(s"$path/$seg/hubs"))
-        val v = IndexStore.publishReplace(spark, path, seg,
-          Seq("meta", "vectors", "edges", "degrees", "hubs"),
-          retainVersions, op = "compact")
-        require(v == snap.version + 1,
-          s"graph compact landed as version $v, rows stamped gen " +
-            s"${snap.version + 1} under $path")
+        commitStamped(spark, path, snap, "compact",
+            Replace(retainVersions))(
+          Rel("meta")(snap.read("meta").get.coalesce(1).write.parquet(_)),
+          Rel("vectors")(vecs.write.parquet(_)),
+          Rel("edges")(edges.write.parquet(_)),
+          Rel("degrees")(deg.write.parquet(_)),
+          Rel("hubs")(electHubs(deg, hubCount, gen = snap.version + 1)
+            .write.parquet(_)))
         // compact folds degrees from the scrubbed edges and elects
         // hubs fully — the ELECTION debt is paid; the TOMBSTONE debt
         // is not (scrubbed nodes keep sub-k degrees until a re-wire,

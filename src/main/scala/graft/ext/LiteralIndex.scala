@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import IndexStore.{Append, Rel, Replace}
 
 /** Persisted exact-substring search — the saved-index path of
   * [[TextSearch.literalSearch]], for repeated decontamination sweeps
@@ -44,9 +45,8 @@ object LiteralIndex extends IndexFamily {
         explode(array_distinct(charGrams(text, n))).as("g"))
       .withColumn("bucket", bucketOf(col("g"), buckets))
 
-  private def writeGrams(g: DataFrame, path: String, seg: String): Unit =
-    g.repartition(col("bucket"))
-      .write.partitionBy("bucket").parquet(s"$path/$seg/grams")
+  private def gramsRel(g: DataFrame): Rel = Rel("grams")(
+    g.repartition(col("bucket")).write.partitionBy("bucket").parquet(_))
 
   /** Per-gram df partials of one delivery — the planning statistics
     * behind [[TextSearch.rarestGrams]], stored bucket-partitioned like
@@ -58,16 +58,15 @@ object LiteralIndex extends IndexFamily {
     * keeps exactness), so planning-grade staleness is acceptable and
     * documented.
     */
-  private def writeLexicon(g: DataFrame, path: String, seg: String): Unit =
+  private def lexiconRel(g: DataFrame): Rel = Rel("lexicon")(
     g.groupBy("g", "bucket").agg(count(lit(1)).as("df"))
       .repartition(col("bucket"))
-      .write.partitionBy("bucket").parquet(s"$path/$seg/lexicon")
+      .write.partitionBy("bucket").parquet(_))
 
-  private def writeMeta(spark: SparkSession, path: String, seg: String,
-      n: Int, buckets: Int): Unit = {
+  private def metaRel(spark: SparkSession, n: Int, buckets: Int): Rel = {
     import spark.implicits._
-    Seq((n, buckets)).toDF("n", "buckets").coalesce(1)
-      .write.parquet(s"$path/$seg/meta")
+    Rel("meta")(Seq((n, buckets)).toDF("n", "buckets").coalesce(1)
+      .write.parquet(_))
   }
 
   private def metaOf(snap: IndexStore.Snapshot): (Int, Int) =
@@ -84,18 +83,10 @@ object LiteralIndex extends IndexFamily {
       path: String, n: Int = 4, buckets: Int = 64,
       retainVersions: Int = 2): Unit = {
     val spark = docs.sparkSession
-    IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      val g = gramsOf(docs, id, text, n, buckets).persist()
-      try IndexStore.writeAll(
-        () => writeGrams(g, path, seg),
-        () => writeLexicon(g, path, seg),
-        () => writeMeta(spark, path, seg, n, buckets))
-      finally g.unpersist()
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("grams", "lexicon", "meta"), retainVersions)
-      ()
-    }
+    val g = gramsOf(docs, id, text, n, buckets).persist()
+    try IndexStore.commit(spark, path, "build", Replace(retainVersions))(
+      gramsRel(g), lexiconRel(g), metaRel(spark, n, buckets))
+    finally g.unpersist()
   }
 
   /** Admit a delivery: only the delta's grams are computed and appended
@@ -113,15 +104,10 @@ object LiteralIndex extends IndexFamily {
     IndexStore.withLock(spark, path) {
       val (n, buckets) = metaOf(IndexStore.snapshot(spark, path))
       val g = gramsOf(newDocs, id, text, n, buckets).persist()
-      try if (!g.isEmpty) {
-        val seg = IndexStore.newSegmentName()
-        IndexStore.writeAll(
-          () => writeGrams(g, path, seg),
-          () => writeLexicon(g, path, seg))
-        IndexStore.publishAppend(spark, path, seg,
-          Seq("grams", "lexicon"))
-        ()
-      } finally g.unpersist()
+      try if (!g.isEmpty)
+        IndexStore.commit(spark, path, "append", Append)(
+          gramsRel(g), lexiconRel(g))
+      finally g.unpersist()
     }
 
   private[ext] def admit(spark: SparkSession, path: String,
@@ -138,16 +124,10 @@ object LiteralIndex extends IndexFamily {
     IndexStore.withLock(spark, path) {
       val snap = IndexStore.snapshot(spark, path)
       val (n, buckets) = metaOf(snap)
-      val seg = IndexStore.newSegmentName()
       val live = IndexStore.liveRows(snap, "grams", key = "id").persist()
-      try IndexStore.writeAll(
-        () => writeGrams(live, path, seg),
-        () => writeLexicon(live, path, seg),
-        () => writeMeta(spark, path, seg, n, buckets))
+      try IndexStore.commit(spark, path, "compact", Replace(retainVersions))(
+        gramsRel(live), lexiconRel(live), metaRel(spark, n, buckets))
       finally live.unpersist()
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("grams", "lexicon", "meta"), retainVersions, op = "compact")
-      ()
     }
 
   /** [[stats]] gauges for the gram index: `gram_width` (the frozen

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import IndexStore.{Append, Rel, Replace}
 
 /** Persisted EXACT-paragraph dedup registry — the incremental twin of
   * [[TextAnalysis.paragraphDedup]], the same build-once /
@@ -37,16 +38,9 @@ object ParagraphIndex {
 
   /** Build the registry from the base corpus's paragraphs. */
   def build(paras: DataFrame, id: Column, idx: Column, para: Column,
-      path: String): Long = {
-    val spark = paras.sparkSession
-    IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      keepers(hashed(paras, id, idx, para))
-        .write.parquet(s"$path/$seg/keepers")
-      IndexStore.publishReplace(spark, path, seg, Seq("keepers"),
-        op = "build")
-    }
-  }
+      path: String): Long =
+    IndexStore.commit(paras.sparkSession, path, "build", Replace())(
+      Rel("keepers")(keepers(hashed(paras, id, idx, para)).write.parquet(_)))
 
   /** Per-hash first occurrence within one paragraph frame. */
   private def keepers(p: DataFrame): DataFrame =
@@ -100,11 +94,8 @@ object ParagraphIndex {
       val snap = IndexStore.snapshot(spark, path)
       val fresh = keepers(p).join(savedHashes(snap), Seq("h"), "left_anti")
       if (fresh.isEmpty) snap.version
-      else {
-        val seg = IndexStore.newSegmentName()
-        fresh.write.parquet(s"$path/$seg/keepers")
-        IndexStore.publishAppend(spark, path, seg, Seq("keepers"))
-      }
+      else IndexStore.commit(spark, path, "append", Append)(
+        Rel("keepers")(fresh.write.parquet(_)))
     }
   }
 
@@ -127,12 +118,10 @@ object ParagraphIndex {
       retainVersions: Int = 2): Long =
     IndexStore.withLock(spark, path) {
       val snap = IndexStore.snapshot(spark, path)
-      val all = snap.read("keepers").getOrElse(
-        sys.error(s"no keepers relation under ${snap.root}"))
-      val seg = IndexStore.newSegmentName()
-      all.write.parquet(s"$path/$seg/keepers")
-      IndexStore.publishReplace(spark, path, seg, Seq("keepers"),
-        retainVersions, op = "compact")
+      IndexStore.commit(spark, path, "compact", Replace(retainVersions))(
+        Rel("keepers")(snap.read("keepers").getOrElse(
+          sys.error(s"no keepers relation under ${snap.root}"))
+          .write.parquet(_)))
     }
 
   def maybeCompact(spark: SparkSession, path: String,

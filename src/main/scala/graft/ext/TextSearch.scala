@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import IndexStore.{Append, Rel, Replace}
 
 /** BM25 full-text retrieval over a document corpus: build / persist an
   * inverted index, then score short queries with Okapi BM25 and return
@@ -102,36 +103,24 @@ object TextSearch extends IndexFamily {
         .select(max("buckets")).head().getInt(0)
     }
 
-  /** Write one immutable segment carrying the index relations (plus the
-    * one-row meta) and return the relation names for the manifest.
-    */
-  private def writeSegment(ix: Index, root: String, seg: String,
-      buckets: Int, withMeta: Boolean): Seq[String] = {
-    // independent relation writes over one persisted tf aggregate —
-    // overlapped (IndexStore.writeAll, guide §2.6) instead of run
-    // back-to-back on the driver
-    IndexStore.writeAll(
-      Seq(
-        () => ix.postings.withColumn("bucket", bucketOf(col("term"), buckets))
-          .repartition(col("bucket"))
-          .write.partitionBy("bucket").parquet(s"$root/$seg/postings"),
-        () => ix.lexicon.withColumn("bucket", bucketOf(col("term"), buckets))
-          .repartition(col("bucket"))
-          .write.partitionBy("bucket").parquet(s"$root/$seg/lexicon"),
-        () => ix.stats.select("n_docs", "dl_sum").coalesce(1)
-          .write.parquet(s"$root/$seg/stats")) ++
-      (if (withMeta)
-        Seq(() => writeMeta(ix.postings.sparkSession, root, seg, buckets))
-      else Seq.empty): _*)
-    Seq("postings", "lexicon", "stats") ++
-      (if (withMeta) Seq("meta") else Seq.empty)
-  }
+  /** Write `rows` partitioned by their `bucket` column. */
+  private def bucketed(rows: DataFrame): String => Unit =
+    rows.repartition(col("bucket")).write.partitionBy("bucket").parquet(_)
 
-  private def writeMeta(spark: SparkSession, root: String, seg: String,
-      buckets: Int): Unit = {
+  /** One segment's index relations — independent writes over one
+    * persisted tf aggregate, overlapped by the commit.
+    */
+  private def relsOf(ix: Index, buckets: Int): Seq[Rel] = Seq(
+    Rel("postings")(bucketed(
+      ix.postings.withColumn("bucket", bucketOf(col("term"), buckets)))),
+    Rel("lexicon")(bucketed(
+      ix.lexicon.withColumn("bucket", bucketOf(col("term"), buckets)))),
+    Rel("stats")(ix.stats.select("n_docs", "dl_sum").coalesce(1)
+      .write.parquet(_)))
+
+  private def metaRel(spark: SparkSession, buckets: Int): Rel = {
     import spark.implicits._
-    Seq(buckets).toDF("buckets").coalesce(1)
-      .write.parquet(s"$root/$seg/meta")
+    Rel("meta")(Seq(buckets).toDF("buckets").coalesce(1).write.parquet(_))
   }
 
   /** Persist the index hash-bucketed by term: postings and lexicon are
@@ -153,12 +142,8 @@ object TextSearch extends IndexFamily {
     */
   def save(ix: Index, path: String, buckets: Int = 64): Unit = {
     val spark = ix.postings.sparkSession
-    IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      val rels = writeSegment(ix, path, seg, buckets, withMeta = true)
-      IndexStore.publishReplace(spark, path, seg, rels)
-      ()
-    }
+    IndexStore.commit(spark, path, "build", Replace())(
+      relsOf(ix, buckets) :+ metaRel(spark, buckets): _*)
   }
 
   /** Build from `docs` and [[save]] in one flow, managing the shared
@@ -190,10 +175,8 @@ object TextSearch extends IndexFamily {
     // segment — empty parquet dirs break later schema inference
     try if (!tf.isEmpty) IndexStore.withLock(spark, path) {
       val buckets = bucketsOf(IndexStore.snapshot(spark, path))
-      val seg = IndexStore.newSegmentName()
-      val rels = writeSegment(indexFrom(tf), path, seg, buckets,
-        withMeta = false)
-      IndexStore.publishAppend(spark, path, seg, rels)
+      IndexStore.commit(spark, path, "append", Append)(
+        relsOf(indexFrom(tf), buckets): _*)
       ()
     } finally tf.unpersist()
   }
@@ -235,20 +218,14 @@ object TextSearch extends IndexFamily {
         .withColumn("bucket", bucketOf(col("term"), buckets))
       val negStats = dead.groupBy("id").agg(first("dl").as("dl"))
         .agg((-count(lit(1))).as("n_docs"), (-sum("dl")).as("dl_sum"))
-      val tomb = dead.select("id").distinct()
-      val seg = IndexStore.newSegmentName()
-      IndexStore.writeAll(
-        () => negLex.repartition(col("bucket"))
-          .write.partitionBy("bucket").parquet(s"$path/$seg/lexicon"),
-        () => negStats.coalesce(1).write.parquet(s"$path/$seg/stats"),
-        () => tomb.coalesce(1).write.parquet(s"$path/$seg/tombstones"))
       // scoped to the postings deliveries present NOW: a later re-add
       // of a deleted doc is live immediately (its positive df/stats
       // partials pair with its unmasked postings — the sums net right)
-      IndexStore.writeScope(spark, path, seg, snap.segments("postings"))
-      IndexStore.publishAppend(spark, path, seg,
-        Seq("lexicon", "stats", "tombstones", "tombstone_scope"),
-        op = "delete")
+      IndexStore.commit(spark, path, "delete", Append)(Seq(
+        Rel("lexicon")(bucketed(negLex)),
+        Rel("stats")(negStats.coalesce(1).write.parquet(_))) ++
+        IndexStore.tombstones(dead.select("id").distinct(),
+          snap.segments("postings")): _*)
       ()
     } finally dead.unpersist()
   }
@@ -268,22 +245,16 @@ object TextSearch extends IndexFamily {
     IndexStore.withLock(spark, path) {
       val snap = IndexStore.snapshot(spark, path)
       val buckets = bucketsOf(snap)
-      val live = IndexStore.liveRows(snap, "postings", key = "id")
-      val seg = IndexStore.newSegmentName()
-      live.repartition(col("bucket"))
-        .write.partitionBy("bucket").parquet(s"$path/$seg/postings")
-      snap.read("lexicon").get
-        .groupBy("bucket", "term").agg(sum("df").as("df"))
-        .filter(col("df") > 0)
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").parquet(s"$path/$seg/lexicon")
-      snap.read("stats").get
-        .agg(sum("n_docs").as("n_docs"), sum("dl_sum").as("dl_sum"))
-        .coalesce(1).write.parquet(s"$path/$seg/stats")
-      writeMeta(spark, path, seg, buckets)
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("postings", "lexicon", "stats", "meta"), retainVersions,
-        op = "compact")
+      IndexStore.commit(spark, path, "compact", Replace(retainVersions))(
+        Rel("postings")(bucketed(
+          IndexStore.liveRows(snap, "postings", key = "id"))),
+        Rel("lexicon")(bucketed(snap.read("lexicon").get
+          .groupBy("bucket", "term").agg(sum("df").as("df"))
+          .filter(col("df") > 0))),
+        Rel("stats")(snap.read("stats").get
+          .agg(sum("n_docs").as("n_docs"), sum("dl_sum").as("dl_sum"))
+          .coalesce(1).write.parquet(_)),
+        metaRel(spark, buckets))
       ()
     }
 

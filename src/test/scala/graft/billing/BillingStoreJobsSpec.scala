@@ -1,13 +1,10 @@
 package graft.billing
 
 import java.sql.Timestamp
-import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.ListenerAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.lit
-import graft.SparkSpec
+import graft.{GroupJobs, SparkSpec}
 
 /** Spark jobs per [[BillingStore]] operation, pinned over one small
   * fixture. A listener counts only the jobs of the job group each step
@@ -25,15 +22,6 @@ class BillingStoreJobsSpec extends SparkSpec {
 
   private def df(rs: Schemas.BillingRecord*): DataFrame =
     spark.createDataFrame(rs)
-
-  private final class GroupJobs extends SparkListener {
-    val counts = new ConcurrentHashMap[String, Integer]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p =>
-        Option(p.getProperty("spark.jobGroup.id")))
-        .filter(_.startsWith("billing-jobs-"))
-        .foreach(g => counts.merge(g, 1, (a, b) => a + b))
-  }
 
   test("jobs per operation stay at their pins") {
     val store = BillingStore(tmpDir("jobs_store"))
@@ -68,19 +56,9 @@ class BillingStoreJobsSpec extends SparkSpec {
       ("applyChanges", 19, () => store.applyChanges(spark, changes)),
       ("vacuumBefore", 0, () => store.vacuumBefore(spark, 2025, 4, 24)),
       ("gcRaw", 0, () => store.gcRaw(spark)))
-    val sc = spark.sparkContext
-    val listener = new GroupJobs
-    sc.addSparkListener(listener)
-    try steps.foreach { case (name, _, call) =>
-      sc.setJobGroup(s"billing-jobs-$name", name)
-      try call() finally sc.clearJobGroup()
-    } finally {
-      ListenerAccess.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    val got = steps.map { case (name, _, _) =>
-      name -> Option(listener.counts.get(s"billing-jobs-$name"))
-        .map(_.intValue).getOrElse(0)
+    val got = GroupJobs.counting(spark.sparkContext, "billing-jobs-") { g =>
+      steps.foreach { case (name, _, call) => g.step(name)(call()) }
+      steps.map { case (name, _, _) => name -> g.jobs(name) }
     }
     println(got.map { case (n, j) => s"$n=$j" }
       .mkString("BILLING_JOBS ", " ", ""))

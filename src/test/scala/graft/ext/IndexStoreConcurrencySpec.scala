@@ -177,6 +177,25 @@ class IndexStoreConcurrencySpec extends SparkSpec {
     assert(err.isEmpty, s"compactor failed: $err")
   }
 
+  test("pooled commit writes run under their caller's job group") {
+    import org.apache.spark.sql.functions.lower
+    val docs = corpus.select(col("doc_id").as("id"),
+      lower(col("text")).as("t"))
+    // a dedup build writes five relations, four of them on the commit
+    // pool; a pool thread must not keep the group of whichever caller
+    // created it
+    val got = graft.GroupJobs.counting(spark.sparkContext, "pool-group-") {
+      g =>
+        Seq("a", "b").map { name =>
+          g.step(name)(DedupIndex.build(docs, col("id"), col("t"),
+            tmpDir(s"pool_$name"), n = 2))
+          g.jobs(name)
+        }
+    }
+    assert(got.forall(_ >= 5), got)
+    assert(got.distinct.size == 1, got)
+  }
+
   test("gc retains segments pinned by the retention window, drops older") {
     val dir = tmpDir("ixgc")
     TextSearch.buildAndSave(corpus, col("doc_id"), col("text"), dir,

@@ -263,6 +263,8 @@ class IvfIndexSpec extends SparkSpec {
     // below it: fires, splits every oversized cell in one pass…
     val threshold = maxBefore * 2 / 3
     assert(IvfIndex.maybeRebalance(spark, path, embs, threshold))
+    assert(IndexStore.opAt(spark, path,
+      IndexStore.snapshot(spark, path).version) == "rebalance")
     // …and the halved cells sit under the threshold → next sweep no-ops
     assert(IvfIndex.maxLiveCell(spark, path) <= threshold)
     assert(!IvfIndex.maybeRebalance(spark, path, embs, threshold))

@@ -439,17 +439,13 @@ class KnnGraphIndexSpec extends SparkSpec {
     val path = dir()
     // hand-publish the pre-serving-relations layout: one segment with
     // meta(k)+vectors+edges only — what round-11 code persisted
-    IndexStore.withLock(spark, path) {
-      val seg = IndexStore.newSegmentName()
-      Seq(3).toDF("k").coalesce(1).write.parquet(s"$path/$seg/meta")
-      clustered.write.parquet(s"$path/$seg/vectors")
-      EmbeddingSearch.knnGraph(clustered, 3)
+    IndexStore.commit(spark, path, "build", IndexStore.Replace())(
+      IndexStore.Rel("meta")(Seq(3).toDF("k").coalesce(1).write.parquet(_)),
+      IndexStore.Rel("vectors")(clustered.write.parquet(_)),
+      IndexStore.Rel("edges")(EmbeddingSearch.knnGraph(clustered, 3)
         .select(col("query_id").as("vec_id"), col("neighbor_id"),
           col("cos"), col("rank"), lit(1L).as("gen"))
-        .write.parquet(s"$path/$seg/edges")
-      IndexStore.publishReplace(spark, path, seg,
-        Seq("meta", "vectors", "edges"), op = "build")
-    }
+        .write.parquet(_)))
     // hub serving works via the fallback election (no opaque
     // field-not-found / missing-relation error)
     val q = clustered.filter(col("vec_id") === 0L)

@@ -5,7 +5,7 @@ import graft.SparkSpec
 
 /** Delete-then-readd across the persisted index family: tombstones are
   * SCOPED to the data segments present when the delete committed
-  * ([[IndexStore.writeScope]]), so a document/vector re-ingested after
+  * ([[IndexStore.tombstones]]), so a document/vector re-ingested after
   * a delete is live again via its new delivery — the old rows stay
   * masked, the new rows are visible, a compact keeps exactly the
   * re-added content, and a SECOND delete retracts the re-added copy
