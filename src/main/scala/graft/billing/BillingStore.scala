@@ -1,5 +1,6 @@
 package graft.billing
 
+import graft.store.ControlFile
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -66,8 +67,7 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
       stats: Boolean = false)(schemaOf: SparkSession => StructType) {
     val path = s"$root/$key"
 
-    def fs(spark: SparkSession): FileSystem =
-      new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    def fs(spark: SparkSession): FileSystem = ControlFile.fs(spark, path)
 
     def latest(spark: SparkSession): Option[(Long, Seq[String])] =
       RawManifest.latest(fs(spark), path)
@@ -273,10 +273,8 @@ final case class BillingStore(root: String, retainVersions: Int = 2) {
   private val storeVector =
     new Table("_store", partitioned = false)(_ => StructType(Nil))
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
+  private def exists(spark: SparkSession, path: String): Boolean =
+    ControlFile.fs(spark, path).exists(new Path(path))
 
   /** The fact table, pinned to the newest manifest snapshot (falls back
     * to directory listing for a store no mutator has committed yet).

@@ -1,5 +1,6 @@
 package graft.billing
 
+import graft.store.ControlFile
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -74,28 +75,23 @@ private[billing] object FileStats {
   private def statsPath(root: String, version: Long) =
     new Path(new Path(root, "_raw_manifest"), f"v$version%012d.stats")
 
-  def read(fs: FileSystem, root: String, version: Long): Stats = {
-    val p = statsPath(root, version)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      txt.split("\n").iterator.map(_.trim).filter(_.nonEmpty).flatMap {
-        line =>
-          line.split("\t", -1) match {
-            case Array(f, lo, hi) => // pre-bloom sidecar line
-              Some(f -> FileStat(parseTs(lo, hi), None))
-            case Array(f, lo, hi, b) => // pre-size sidecar line
-              Some(f -> FileStat(parseTs(lo, hi), parseBloom(b)))
-            case Array(f, lo, hi, b, sz) =>
-              Some(f -> FileStat(parseTs(lo, hi), parseBloom(b),
-                if (sz == "-") None else Some(sz.toLong)))
-            case _ => None // tolerate a torn/foreign line
-          }
-      }.toMap
-    }
-  }
+  def read(fs: FileSystem, root: String, version: Long): Stats =
+    ControlFile.read(fs, statsPath(root, version))
+      .fold(Map.empty: Stats) { txt =>
+        txt.split("\n").iterator.map(_.trim).filter(_.nonEmpty).flatMap {
+          line =>
+            line.split("\t", -1) match {
+              case Array(f, lo, hi) => // pre-bloom sidecar line
+                Some(f -> FileStat(parseTs(lo, hi), None))
+              case Array(f, lo, hi, b) => // pre-size sidecar line
+                Some(f -> FileStat(parseTs(lo, hi), parseBloom(b)))
+              case Array(f, lo, hi, b, sz) =>
+                Some(f -> FileStat(parseTs(lo, hi), parseBloom(b),
+                  if (sz == "-") None else Some(sz.toLong)))
+              case _ => None // tolerate a torn/foreign line
+            }
+        }.toMap
+      }
 
   private def parseTs(lo: String, hi: String): Option[(Long, Long)] =
     if (lo == "-" || hi == "-") None else Some((lo.toLong, hi.toLong))
@@ -108,11 +104,11 @@ private[billing] object FileStats {
       Some(Array.fill(bytes.length / 8)(buf.getLong))
     }
 
-  /** Atomic write (temp + rename), mirroring the manifest commit. */
+  /** Published like the manifest version it describes
+    * ([[ControlFile.publish]]).
+    */
   def write(fs: FileSystem, root: String, version: Long,
       stats: Stats): Unit = {
-    val p = statsPath(root, version)
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
     val body = stats.toSeq.sortBy(_._1).map { case (f, st) =>
       val (lo, hi) = st.ts.map { case (a, b) => (a.toString, b.toString) }
         .getOrElse(("-", "-"))
@@ -124,12 +120,7 @@ private[billing] object FileStats {
       val sz = st.size.map(_.toString).getOrElse("-")
       s"$f\t$lo\t$hi\t$b\t$sz"
     }.mkString("\n")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, p)) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(s"stats commit lost a race: $p")
-    }
+    ControlFile.publish(fs, statsPath(root, version), body)
   }
 
   /** Sidecar of the newest version (empty map for pre-stats commits —

@@ -37,8 +37,7 @@ private[billing] class ManifestFileIndex(
     stats: FileStats.Stats,
     override val partitionSchema: StructType) extends FileIndex {
 
-  private val fs =
-    tableRoot.getFileSystem(spark.sessionState.newHadoopConf())
+  private val fs = graft.store.ControlFile.fs(spark, tableRoot.toString)
 
   /** (partition values, files with status). Statuses come from the
     * sidecar's recorded file sizes when present — ZERO filesystem calls

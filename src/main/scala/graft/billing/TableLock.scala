@@ -1,5 +1,6 @@
 package graft.billing
 
+import graft.store.ControlFile
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -98,8 +99,7 @@ object TableLock {
   private def tryAcquire(spark: SparkSession, root: String,
       staleMs: Long, token: String): Boolean = {
     val p = lockPath(root)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = p.getFileSystem(conf)
+    val fs = ControlFile.fs(spark, root)
     fs.mkdirs(new Path(root))
     val payload = payloadFor(token)
     val isLocal = Option(p.toUri.getScheme).forall(s =>
@@ -172,10 +172,7 @@ object TableLock {
       val now = System.currentTimeMillis()
       val mtimeStale = fs.getFileStatus(p).getModificationTime <
         now - staleMs
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in).mkString
-      finally in.close()
-      txt.trim.split("\\s+") match {
+      ControlFile.read(fs, p).map(_.trim.split("\\s+")).foreach {
         case Array(pid, host, _, ts) =>
           val deadHere = host == localHost && scala.util.Try(
             ProcessHandle.of(pid.trim.toLong).map(_.isAlive).orElse(false)
@@ -199,15 +196,12 @@ object TableLock {
   private def release(spark: SparkSession, root: String,
       token: String): Unit = {
     val p = lockPath(root)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = ControlFile.fs(spark, root)
     try {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in).mkString
-      finally in.close()
-      val ours = txt.trim.split("\\s+") match {
+      val ours = ControlFile.read(fs, p).exists(_.trim.split("\\s+") match {
         case Array(_, _, t, _) => t == token
         case _                 => false
-      }
+      })
       if (ours) fs.delete(p, false)
       ()
     } catch { case _: java.io.IOException => () }

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.store.ControlFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import IndexStore.{Append, Rel, Replace}
@@ -320,33 +321,23 @@ object CorpusStore extends IndexFamily {
     * with live-presence-idempotent appliers — every index family's
     * append/delete already is — for exactly-once effects, the
     * checkpoint-and-replay contract Structured Streaming's
-    * foreachBatch makes). The cursor is a version number staged and
-    * renamed, so a torn write reads as "never advanced", never as a
-    * skipped window. Returns the (from, to] window it processed, or
-    * None when the feed had no new commits.
+    * foreachBatch makes). The cursor is a version number rewritten by
+    * [[graft.store.ControlFile.replace]], so it is never absent or torn
+    * once written: a crash reads as "never advanced", never as a
+    * skipped window or a restart from the oldest version. Returns the
+    * (from, to] window it processed, or None when the feed had no new
+    * commits.
     */
   def tailInto(spark: SparkSession, root: String, cursorPath: String)(
       f: DataFrame => Unit): Option[(Long, Long)] = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = ControlFile.fs(spark, root)
     val cur = new org.apache.hadoop.fs.Path(cursorPath)
-    val from =
-      if (fs.exists(cur)) {
-        val in = fs.open(cur)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        txt.trim.toLong
-      } else IndexStore.versions(spark, root).min
+    val from = ControlFile.read(fs, cur).map(_.trim.toLong)
+      .getOrElse(IndexStore.versions(spark, root).min)
     val to = IndexStore.versions(spark, root).max
     if (to <= from) return None
     f(changes(spark, root, from))
-    val tmp = new org.apache.hadoop.fs.Path(
-      cur.getParent, s".${cur.getName}.staging")
-    fs.mkdirs(cur.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(to.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(cur, false)
-    require(fs.rename(tmp, cur), s"could not advance cursor $cursorPath")
+    ControlFile.replace(fs, cur, to.toString)
     Some((from, to))
   }
 

@@ -118,7 +118,7 @@ object IdBloom {
     */
   def ensureSidecar(spark: SparkSession, root: String, seg: String,
       relation: String, key: String): Boolean = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = graft.store.ControlFile.fs(spark, root)
     val target = new Path(s"$root/$seg/${sidecarName(relation)}")
     if (fs.exists(target)) return true
     try {

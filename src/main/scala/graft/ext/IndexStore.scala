@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.store.ControlFile
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -31,7 +32,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   *     segment directories;
   *   - `seg-<16 hex>/idbloom-<relation>/` — the lazily built id-Bloom
   *     sidecars ([[IdBloom]]), never manifest lines;
-  *   - `_incarnation/`, `_leases/` — root identity and reader leases.
+  *   - `_incarnation/`, `_leases/` — root identity and reader leases
+  *     (lease files are published and read through
+  *     [[graft.store.ControlFile]], as are the manifest versions).
   *
   * THE COMMIT CONTRACT: every mutation of an index family is one
   * [[commit]]. It holds the root's writer lock
@@ -48,9 +51,6 @@ import org.apache.spark.sql.graftbridge.Bridge
 object IndexStore {
 
   private val manifest = new graft.store.VersionedManifest("_manifest")
-
-  private def fsOf(spark: SparkSession, root: String) =
-    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** One pinned manifest version: every relation this operation reads
     * resolves against the SAME line set, so a concurrent commit cannot
@@ -189,7 +189,7 @@ object IndexStore {
     * an audit replay can refuse a root whose content history restarted.
     */
   def incarnation(spark: SparkSession, root: String): String =
-    incarnationOf(fsOf(spark, root), root)
+    incarnationOf(ControlFile.fs(spark, root), root)
 
   private def incarnationValid(fs: org.apache.hadoop.fs.FileSystem,
       root: String, inc: String): Boolean =
@@ -226,7 +226,7 @@ object IndexStore {
   }
 
   def snapshot(spark: SparkSession, root: String): Snapshot = {
-    val fs = fsOf(spark, root)
+    val fs = ControlFile.fs(spark, root)
     val cached = Option(latestCache.get(root)).collect {
       case (inc, v, lines) if incarnationValid(fs, root, inc) &&
         !manifest.exists(fs, root, v + 1) &&
@@ -247,7 +247,7 @@ object IndexStore {
     * — the addressable time-travel window.
     */
   def versions(spark: SparkSession, root: String): Seq[Long] =
-    manifest.versions(fsOf(spark, root), root)
+    manifest.versions(ControlFile.fs(spark, root), root)
 
   /** Pin a SPECIFIC retained version — time travel within the GC
     * retention window (same version-depth contract Delta/Iceberg make):
@@ -259,7 +259,7 @@ object IndexStore {
     * appends/deletes landed.
     */
   def snapshotAt(spark: SparkSession, root: String, version: Long): Snapshot =
-    manifest.filesAt(fsOf(spark, root), root, version) match {
+    manifest.filesAt(ControlFile.fs(spark, root), root, version) match {
       case Some(lines) => Snapshot(spark, root, version, lines)
       case None => throw new java.io.FileNotFoundException(
         s"index version $version at $root is not retained " +
@@ -290,10 +290,10 @@ object IndexStore {
   def cloneAt(spark: SparkSession, srcRoot: String, dstRoot: String,
       version: Long): Long = {
     val snap = snapshotAt(spark, srcRoot, version)
-    val dfs = fsOf(spark, dstRoot)
+    val dfs = ControlFile.fs(spark, dstRoot)
     require(manifest.latest(dfs, dstRoot).isEmpty,
       s"cloneAt destination $dstRoot is already an index root")
-    val sfs = fsOf(spark, srcRoot)
+    val sfs = ControlFile.fs(spark, srcRoot)
     val conf = spark.sessionState.newHadoopConf()
     snap.allSegments.foreach { seg =>
       val ok = org.apache.hadoop.fs.FileUtil.copy(
@@ -410,11 +410,10 @@ object IndexStore {
     late.foreach(r => require(first.exists(f => r.after.contains(f.name)),
       s"relation ${r.name} of a commit to $root reads ${r.after.get}, " +
         "which the commit does not write first"))
-    val seg = "seg-" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(16)
+    val seg = ControlFile.newId("seg-")
     Seq(first, late).foreach(wave => runAll(wave.map(r =>
       () => r.write(s"$root/$seg/${r.name}"))).foreach(_.get))
-    val fs = fsOf(spark, root)
+    val fs = ControlFile.fs(spark, root)
     names.foreach(r => require(fs.exists(new Path(s"$root/$seg/$r")),
       s"commit to $root wrote no $r"))
     val inc = ensureIncarnation(fs, root)
@@ -464,7 +463,7 @@ object IndexStore {
     * [[graft.store.VersionedManifest.opAt]].
     */
   def opAt(spark: SparkSession, root: String, version: Long): String =
-    manifest.opAt(fsOf(spark, root), root, version)
+    manifest.opAt(ControlFile.fs(spark, root), root, version)
 
   /** The shared tombstone-append ([[IndexFamily.delete]]): the requested
     * ids that have LIVE rows in `relation` append as one tombstone
@@ -581,15 +580,12 @@ object IndexStore {
     */
   def withLease[A](spark: SparkSession, root: String, version: Long,
       ttlMs: Long = 6 * 3600 * 1000L)(body: Snapshot => A): A = {
-    val fs = fsOf(spark, root)
+    val fs = ControlFile.fs(spark, root)
     val lease = new Path(new Path(root, "_leases"),
       "lease-" + java.util.UUID.randomUUID().toString.replace("-", ""))
     val snap = withLock(spark, root) {
-      fs.mkdirs(lease.getParent)
-      val out = fs.create(lease, true)
-      try out.write(
-        s"$version ${System.currentTimeMillis() + ttlMs}".getBytes("UTF-8"))
-      finally out.close()
+      ControlFile.publish(fs, lease,
+        s"$version ${System.currentTimeMillis() + ttlMs}")
       try snapshotAt(spark, root, version)
       catch { case e: Throwable => fs.delete(lease, false); throw e }
     }
@@ -597,22 +593,22 @@ object IndexStore {
   }
 
   /** Versions protected by unexpired leases; expired lease files are
-    * swept here (the only place that reads them).
+    * swept here (the only place that reads them). A lease released
+    * between the listing and the read is skipped; hidden publish temps
+    * are not leases.
     */
   private def leasedVersions(fs: org.apache.hadoop.fs.FileSystem,
       root: String): Set[Long] = {
     val dir = new Path(root, "_leases")
     if (!fs.exists(dir)) return Set.empty
     val now = System.currentTimeMillis()
-    fs.listStatus(dir).toSeq.flatMap { st =>
-      val in = fs.open(st.getPath)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      txt.trim.split("\\s+") match {
-        case Array(v, exp) if exp.toLong > now => Some(v.toLong)
-        case _ => fs.delete(st.getPath, false); None
-      }
-    }.toSet
+    fs.listStatus(dir).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("lease-")).flatMap { p =>
+        ControlFile.read(fs, p).map(_.trim.split("\\s+")).flatMap {
+          case Array(v, exp) if exp.toLong > now => Some(v.toLong)
+          case _ => fs.delete(p, false); None
+        }
+      }.toSet
   }
 
   /** Delete `seg-*` directories unreferenced by any KEPT manifest and
@@ -629,7 +625,7 @@ object IndexStore {
     * root-level `meta`).
     */
   def gc(spark: SparkSession, root: String, retainVersions: Int): Unit = {
-    val fs = fsOf(spark, root)
+    val fs = ControlFile.fs(spark, root)
     val vs = manifest.versions(fs, root)
     val keepVs = vs.takeRight(math.max(retainVersions, 1)).toSet ++
       leasedVersions(fs, root).filter(vs.contains)

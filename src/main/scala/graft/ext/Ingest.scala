@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,8 +12,8 @@ import org.apache.spark.sql.functions._
   * `admit(delivery)` that drives them all off ONE durable intent and
   * is safe to re-run after a mid-flow crash.
   *
-  * Mechanism — intent log, then apply (the [[Takedown.retract]]
-  * discipline):
+  * Mechanism — intent log, then apply (the [[IntentLog]] shared with
+  * [[Takedown.retract]]):
   *
   *   1. [[admit]] first writes the delivery DURABLY to
   *      `root/_deliveries/<did>/rows` (staged and renamed, so a crash
@@ -56,12 +55,17 @@ import org.apache.spark.sql.functions._
   */
 object Ingest {
 
-  import Takedown.{Surface, surfaceId, surfaces}
+  import Takedown.{Surface, surfaces}
 
-  private def fsOf(spark: SparkSession, root: String) =
-    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def deliveriesDir(root: String) = new Path(root, "_deliveries")
+  /** Store-of-record surfaces complete FIRST and one at a time (the
+    * source of truth must never trail its own derivatives — the
+    * documented ordering contract); the DERIVED surfaces after them are
+    * independent commits on their own roots and run concurrently.
+    */
+  private val log = new IntentLog("_deliveries", "d-", "rows")({ ss =>
+    val (stores, derived) = ss.partition(_.family == CorpusStore)
+    stores.map(Seq(_)) :+ derived
+  })
 
   /** Store of record first, then document indexes, then vector indexes
     * (derived order is convention, not correctness — every apply is
@@ -84,17 +88,10 @@ object Ingest {
     ss.foreach(s => s.family.needs.foreach(c =>
       require(delivery.columns.contains(c),
         s"surface ${s.kind}@${s.path} needs a '$c' column the delivery lacks")))
-    val did = "d-" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    val fs = fsOf(spark, root)
-    val staging = new Path(deliveriesDir(root), s"$did/rows-staging")
-    val landed = new Path(deliveriesDir(root), s"$did/rows")
     val rest = delivery.columns.filterNot(_ == "id").map(delivery(_))
-    delivery.select(idCol.as("id") +: rest.toIndexedSeq: _*)
-      .dropDuplicates("id")
-      .write.parquet(staging.toString)
-    require(fs.rename(staging, landed),
-      s"could not publish delivery intent $did (rename failed)")
+    val did = log.stage(spark, root)(
+      delivery.select(idCol.as("id") +: rest.toIndexedSeq: _*)
+        .dropDuplicates("id").write.parquet(_))
     applyIntent(spark, root, did)
     did
   }
@@ -116,37 +113,15 @@ object Ingest {
       .select(col(k).as("id")).distinct()
   }
 
-  /** Apply one logged delivery's surfaces up to `upTo` (the test hook
-    * that simulates a mid-flow crash; production callers never pass
-    * it). Completed surfaces leave a marker and are skipped on replay;
-    * the final `_done` marker lands only after the last surface.
+  /** Apply one logged delivery's surfaces up to `upTo` in apply order
+    * (the test hook that simulates a mid-flow crash; production callers
+    * never pass it).
     */
   private[ext] def applyIntent(spark: SparkSession, root: String,
       did: String, upTo: Int = Int.MaxValue): Unit = {
-    val fs = fsOf(spark, root)
-    val rows = spark.read.parquet(s"$root/_deliveries/$did/rows")
-    val ss = applyOrder(surfaces(spark, root))
-    // store-of-record surfaces complete FIRST and sequentially (the
-    // source of truth must never trail its own derivatives — the
-    // documented ordering contract); the DERIVED surfaces after them
-    // are independent commits on their own roots and run concurrently
-    // on the bounded commit pool (guide §2.6 — the Takedown.applyIntent
-    // overlap). Markers and replay semantics are unchanged: every
-    // apply is live-presence-idempotent, and the first failure
-    // rethrows after the batch settles, so completed surfaces keep
-    // their markers.
-    val (stores, derived) = ss.take(upTo).partition(_.family == CorpusStore)
-    def applyOne(s: Surface): Unit = {
-      val mark = new Path(deliveriesDir(root), s"$did/done-${surfaceId(s)}")
-      if (!fs.exists(mark)) {
-        applySurface(spark, s, rows)
-        fs.create(mark, true).close()
-      }
-    }
-    stores.foreach(applyOne)
-    IndexStore.runAll(derived.map(s => () => applyOne(s))).foreach(_.get)
-    if (upTo >= ss.size)
-      fs.create(new Path(deliveriesDir(root), s"$did/_done"), true).close()
+    val rows = spark.read.parquet(log.payloadPath(root, did))
+    log.apply(spark, root, did, applyOrder(surfaces(spark, root)), upTo)(
+      applySurface(spark, _, rows))
   }
 
   private def applySurface(spark: SparkSession, s: Surface,
@@ -165,27 +140,15 @@ object Ingest {
   }
 
   /** Delivery ids whose `_done` marker has not landed — what a crash
-    * left behind. Intents whose `rows` dir never landed (a crash during
-    * the staging write, before the publish rename) are NOT pending: no
-    * surface can have been touched for them, so they read as "delivery
-    * never happened" rather than wedging [[resume]].
+    * left behind. Intents whose `rows` dir never landed are NOT pending:
+    * no surface can have been touched for them.
     */
-  def pending(spark: SparkSession, root: String): Seq[String] = {
-    val fs = fsOf(spark, root)
-    if (!fs.exists(deliveriesDir(root))) return Seq.empty
-    fs.listStatus(deliveriesDir(root)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("d-"))
-      .filterNot(st => fs.exists(new Path(st.getPath, "_done")))
-      .filter(st => fs.exists(new Path(st.getPath, "rows")))
-      .map(_.getPath.getName).sorted
-  }
+  def pending(spark: SparkSession, root: String): Seq[String] =
+    log.pending(spark, root)
 
   /** Complete every pending delivery (crash recovery — call on process
     * start, or from a maintenance cron). Returns the ids it finished.
     */
-  def resume(spark: SparkSession, root: String): Seq[String] = {
-    val ps = pending(spark, root)
-    ps.foreach(did => applyIntent(spark, root, did))
-    ps
-  }
+  def resume(spark: SparkSession, root: String): Seq[String] =
+    log.resume(spark, root)(applyIntent(spark, root, _))
 }

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.store.ControlFile
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -620,35 +621,24 @@ object KnnGraphIndex extends IndexFamily {
     * promotes a never-touched node just below the cut, and a delete's
     * victims leave their old neighbors with sub-k degrees that
     * [[compact]] by contract does not restore. Tracked in a root-level
-    * sidecar updated under the writer lock; a missing or torn file
-    * reads as zero debt (the policy is a heuristic — undercounting
-    * delays a rewire, never corrupts data). [[IndexStore.cloneAt]]
-    * copies segments only, so a clone starts debt-free by design.
+    * sidecar updated under the writer lock and rewritten by
+    * [[graft.store.ControlFile.replace]], so it is never torn; a
+    * missing or malformed file reads as zero debt (the policy is a
+    * heuristic — undercounting delays a rewire, never corrupts data).
+    * [[IndexStore.cloneAt]] copies segments only, so a clone starts
+    * debt-free by design.
     */
-  override def debt(spark: SparkSession, root: String): (Long, Long) = {
-    val fs = new Path(root).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    if (!fs.exists(debtFile(root))) (0L, 0L)
-    else {
-      val in = fs.open(debtFile(root))
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      txt.trim.split("\\s+") match {
+  override def debt(spark: SparkSession, root: String): (Long, Long) =
+    ControlFile.read(ControlFile.fs(spark, root), debtFile(root))
+      .map(_.trim.split("\\s+")).collect {
         case Array(d, t) =>
           (scala.util.Try(d.toLong).getOrElse(0L),
             scala.util.Try(t.toLong).getOrElse(0L))
-        case _ => (0L, 0L)
-      }
-    }
-  }
+      }.getOrElse((0L, 0L))
 
   private def writeDebt(spark: SparkSession, root: String, d: Long,
-      t: Long): Unit = {
-    val fs = new Path(root).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val out = fs.create(debtFile(root), true)
-    try out.write(s"$d $t".getBytes("UTF-8")) finally out.close()
-  }
+      t: Long): Unit =
+    ControlFile.replace(ControlFile.fs(spark, root), debtFile(root), s"$d $t")
 
   /** Callers hold the writer lock (every mutator goes through
     * [[IndexStore.withLock]]), so read-modify-write cannot race.

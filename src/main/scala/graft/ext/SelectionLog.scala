@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.store.ControlFile
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -29,8 +30,9 @@ import org.apache.spark.sql.SparkSession
   * Scale shape: a selection entry is a few hundred bytes regardless of
   * corpus size; replay cost is the selection itself. Entries are data
   * (lineage metadata), never code, and the log dir is append-only —
-  * entries land atomically via the stage-and-rename idiom every intent
-  * log here uses.
+  * each entry's record file is published atomically
+  * ([[graft.store.ControlFile.publish]]), so an entry without one never
+  * landed.
   */
 object SelectionLog {
 
@@ -39,10 +41,26 @@ object SelectionLog {
   /** One recorded surface pin: where, which version, which incarnation. */
   final case class Pin(surface: Surface, version: Long, incarnation: String)
 
-  private def fsOf(spark: SparkSession, root: String) =
-    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-
   private def selectionsDir(root: String) = new Path(root, "_selections")
+
+  /** Publish a fresh `prefix` entry's record file `name`; returns its id. */
+  private def publishEntry(spark: SparkSession, root: String, prefix: String,
+      name: String, lines: Seq[String]): String = {
+    val sid = ControlFile.newId(prefix)
+    ControlFile.publish(ControlFile.fs(spark, root),
+      new Path(selectionsDir(root), s"$sid/$name"), lines.mkString("\n"))
+    sid
+  }
+
+  /** The record file `name` of entry `sid`; fails with `missing` if the
+    * entry never landed.
+    */
+  private def readEntry(spark: SparkSession, root: String, sid: String,
+      name: String, missing: => String): Seq[String] =
+    ControlFile.read(ControlFile.fs(spark, root),
+        new Path(selectionsDir(root), s"$sid/$name"))
+      .map(_.trim.split("\n").toSeq)
+      .getOrElse(throw new IllegalArgumentException(missing))
 
   /** Durably record a pinned vector (call INSIDE the lease scope that
     * produced it — [[run]] does — so no version can GC between pin and
@@ -51,45 +69,28 @@ object SelectionLog {
   def record(spark: SparkSession, root: String,
       vector: Seq[(Surface, Long)]): String = {
     require(vector.nonEmpty, "cannot record an empty selection vector")
-    val sid = "s-" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    val fs = fsOf(spark, root)
-    val staging = new Path(selectionsDir(root), s"$sid-staging")
-    val landed = new Path(selectionsDir(root), sid)
-    fs.mkdirs(staging)
-    val lines = vector.map { case (s, v) =>
+    publishEntry(spark, root, "s-", "vector", vector.map { case (s, v) =>
       s"${s.kind}|${s.path}|$v|${IndexStore.incarnation(spark, s.path)}"
-    }
-    val out = fs.create(new Path(staging, "vector"), true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(staging, landed),
-      s"could not publish selection record $sid (rename failed)")
-    sid
+    })
   }
 
   /** The recorded pins of one selection. Fails if the sid never landed. */
-  def pins(spark: SparkSession, root: String, sid: String): Seq[Pin] = {
-    val fs = fsOf(spark, root)
-    val f = new Path(selectionsDir(root), s"$sid/vector")
-    require(fs.exists(f), s"no recorded selection '$sid' under $root")
-    val in = fs.open(f)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    txt.trim.split("\n").toSeq.map { line =>
+  def pins(spark: SparkSession, root: String, sid: String): Seq[Pin] =
+    readEntry(spark, root, sid, "vector",
+        s"no recorded selection '$sid' under $root").map { line =>
       line.split("\\|", 4) match {
         case Array(kind, path, v, inc) =>
           Pin(Surface(kind, path), v.toLong, inc)
         case _ => sys.error(s"malformed selection record line: $line")
       }
     }
-  }
 
-  /** Landed selection ids, oldest-id first (half-staged records from a
-    * crash mid-write are invisible — the stage-and-rename contract).
+  /** Landed selection ids, oldest-id first (a record a crash left
+    * unpublished has no `vector` file and is invisible; `-staging` dirs
+    * are the same leftover from older writers).
     */
   def list(spark: SparkSession, root: String): Seq[String] = {
-    val fs = fsOf(spark, root)
+    val fs = ControlFile.fs(spark, root)
     if (!fs.exists(selectionsDir(root))) return Seq.empty
     fs.listStatus(selectionsDir(root)).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("s-")
@@ -151,26 +152,14 @@ object SelectionLog {
     require(vectors.nonEmpty, "cannot record an empty federated selection")
     require(vectors.forall(_._2.nonEmpty),
       "every federated root needs ≥ 1 pinned surface")
-    val root = vectors.head._1
-    val sid = "f-" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    val fs = fsOf(spark, root)
-    val staging = new Path(selectionsDir(root), s"$sid-staging")
-    val landed = new Path(selectionsDir(root), sid)
-    fs.mkdirs(staging)
     val header = "roots|" + vectors.map(_._1).mkString("|")
-    val lines = header +: vectors.zipWithIndex.flatMap {
-      case ((_, vector), i) => vector.map { case (s, v) =>
-        s"$i|${s.kind}|${s.path}|$v|" +
-          IndexStore.incarnation(spark, s.path)
-      }
-    }
-    val out = fs.create(new Path(staging, "vector_fed"), true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(staging, landed),
-      s"could not publish federated selection record $sid (rename failed)")
-    sid
+    publishEntry(spark, vectors.head._1, "f-", "vector_fed",
+      header +: vectors.zipWithIndex.flatMap {
+        case ((_, vector), i) => vector.map { case (s, v) =>
+          s"$i|${s.kind}|${s.path}|$v|" +
+            IndexStore.incarnation(spark, s.path)
+        }
+      })
   }
 
   /** The recorded per-root pins of one federated selection, in the
@@ -179,14 +168,8 @@ object SelectionLog {
     */
   def pinsFederated(spark: SparkSession, root: String,
       sid: String): Seq[(String, Seq[Pin])] = {
-    val fs = fsOf(spark, root)
-    val f = new Path(selectionsDir(root), s"$sid/vector_fed")
-    require(fs.exists(f),
+    val all = readEntry(spark, root, sid, "vector_fed",
       s"no recorded FEDERATED selection '$sid' under $root")
-    val in = fs.open(f)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    val all = txt.trim.split("\n").toSeq
     val roots = all.head.split("\\|").toSeq match {
       case "roots" +: rs if rs.nonEmpty => rs
       case _ => sys.error(s"malformed federated selection header: ${all.head}")

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.store.ControlFile
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,11 +14,12 @@ import org.apache.spark.sql.functions._
   * `retract(ids)` that drives them all and is safe to re-run after a
   * mid-flow crash.
   *
-  * Mechanism — intent log, then apply:
+  * Mechanism — intent log, then apply ([[IntentLog]], shared with
+  * [[Ingest]]):
   *
   *   1. [[retract]] first writes the id set DURABLY to
   *      `root/_retractions/<rid>/ids` (the intent). Only then are the
-  *      registered surfaces applied in registry order, each leaving a
+  *      registered surfaces applied, all concurrently, each leaving a
   *      `done-<surface>` marker.
   *   2. A crash between surfaces leaves a pending intent: [[resume]]
   *      re-applies every unfinished retraction, skipping surfaces
@@ -51,11 +53,9 @@ object Takedown {
 
   val kinds: Set[String] = IndexFamily.all.map(_.kind).toSet
 
-  private def fsOf(spark: SparkSession, root: String) =
-    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-
   private def surfacesDir(root: String) = new Path(root, "_surfaces")
-  private def retractionsDir(root: String) = new Path(root, "_retractions")
+
+  private val log = new IntentLog("_retractions", "r-", "ids")(Seq(_))
 
   private[ext] def surfaceId(s: Surface): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -63,38 +63,34 @@ object Takedown {
       .take(8).map("%02x".format(_)).mkString
 
   /** Add a surface to the corpus's registry (idempotent — the entry
-    * file is named by a content hash, so re-registration overwrites
-    * with identical bytes).
+    * file is named by a content hash, so re-registration replaces it
+    * with identical bytes; a crash leaves only a hidden temp).
     */
   def register(spark: SparkSession, root: String, surface: Surface): Unit = {
     IndexFamily(surface.kind) // an unknown kind fails here, by name
-    val fs = fsOf(spark, root)
-    fs.mkdirs(surfacesDir(root))
-    val f = new Path(surfacesDir(root), s"s-${surfaceId(surface)}")
-    val out = fs.create(f, true)
-    try out.write(s"${surface.kind}\n${surface.path}".getBytes("UTF-8"))
-    finally out.close()
+    ControlFile.replace(ControlFile.fs(spark, root),
+      new Path(surfacesDir(root), s"s-${surfaceId(surface)}"),
+      s"${surface.kind}\n${surface.path}")
   }
 
   /** The registered surfaces, in stable (kind, path) order. The
     * registry is outside input (hand-edited, or written by another
     * build), so every entry resolves its family here: an unknown kind
-    * fails by name before any caller lands an intent it could never
-    * apply.
+    * or a malformed entry fails by name before any caller lands an
+    * intent it could never apply.
     */
   def surfaces(spark: SparkSession, root: String): Seq[Surface] = {
-    val fs = fsOf(spark, root)
+    val fs = ControlFile.fs(spark, root)
     if (!fs.exists(surfacesDir(root))) return Seq.empty
-    fs.listStatus(surfacesDir(root)).toSeq
-      .filter(_.getPath.getName.startsWith("s-"))
-      .map { st =>
-        val in = fs.open(st.getPath)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        val Array(kind, path) = txt.trim.split("\n", 2)
-        IndexFamily(kind) // an unknown kind fails here, by name
-        Surface(kind, path)
-      }
+    fs.listStatus(surfacesDir(root)).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("s-"))
+      .flatMap(p => ControlFile.read(fs, p).map(_.trim.split("\n", 2) match {
+        case Array(kind, path) if path.trim.nonEmpty =>
+          IndexFamily(kind) // an unknown kind fails here, by name
+          Surface(kind, path)
+        case _ => throw new IllegalArgumentException(
+          s"malformed surface registry entry $p: expected 'kind\\npath'")
+      }))
       .sortBy(s => (s.kind, s.path))
   }
 
@@ -107,83 +103,37 @@ object Takedown {
     */
   def retract(spark: SparkSession, root: String, ids: DataFrame,
       idCol: Column): String = {
-    val rid = "r-" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    val fs = fsOf(spark, root)
     surfaces(spark, root) // an unknown registry kind fails before the intent
-    // Stage the id set and RENAME it into place: the intent "lands"
-    // atomically with the rename, so a crash mid-write leaves only an
-    // `ids-staging` dir — which [[pending]] reads as "never landed"
-    // instead of a permanently wedged intent resume() can't parse.
-    val staging = new Path(retractionsDir(root), s"$rid/ids-staging")
-    val landed = new Path(retractionsDir(root), s"$rid/ids")
-    ids.select(idCol.as("id")).distinct()
-      .coalesce(1).write.parquet(staging.toString)
-    require(fs.rename(staging, landed),
-      s"could not publish retraction intent $rid (rename failed)")
+    val rid = log.stage(spark, root)(
+      ids.select(idCol.as("id")).distinct().coalesce(1).write.parquet(_))
     applyIntent(spark, root, rid)
     rid
   }
 
-  /** Apply one logged intent's surfaces, in registry order, up to
-    * `upTo` surfaces (the test hook that simulates a mid-flow crash;
-    * production callers never pass it). Completed surfaces leave a
-    * marker and are skipped on replay; the final `_done` marker lands
-    * only after the last surface.
+  /** Apply one logged intent to the registered surfaces, concurrently,
+    * up to `upTo` surfaces in registry order (the test hook that
+    * simulates a mid-flow crash; production callers never pass it).
     */
   private[ext] def applyIntent(spark: SparkSession, root: String,
       rid: String, upTo: Int = Int.MaxValue): Unit = {
-    val fs = fsOf(spark, root)
-    val ids = spark.read.parquet(s"$root/_retractions/$rid/ids")
-    val ss = surfaces(spark, root)
-    // Surfaces apply CONCURRENTLY on the bounded commit pool (guide
-    // §2.6 — each surface delete is an independent commit on its own
-    // root, serialized before only because the driver looped): one
-    // job's task tail back-fills the next's. Replay semantics are
-    // unchanged — each surface still leaves its own done-marker, every
-    // delete is live-presence-idempotent, and a crash anywhere leaves a
-    // pending intent [[resume]] completes; the first failure rethrows
-    // AFTER the batch settles, so completed surfaces keep their
-    // markers.
-    val todo = ss.take(upTo)
-      .map(s => s -> new Path(retractionsDir(root),
-        s"$rid/done-${surfaceId(s)}"))
-      .filter { case (_, mark) => !fs.exists(mark) }
-    IndexStore.runAll(todo.map { case (s, mark) =>
-      () => {
-        s.family.delete(spark, s.path, ids, col("id"))
-        fs.create(mark, true).close()
-      }
-    }).foreach(_.get)
-    if (upTo >= ss.size)
-      fs.create(new Path(retractionsDir(root), s"$rid/_done"), true).close()
+    val ids = spark.read.parquet(log.payloadPath(root, rid))
+    log.apply(spark, root, rid, surfaces(spark, root), upTo)(s =>
+      s.family.delete(spark, s.path, ids, col("id")))
   }
 
   /** Retraction ids whose `_done` marker has not landed — what a crash
-    * left behind. Intents whose `ids` dir never landed (a crash during
-    * the staging write, before the publish rename) are NOT pending:
-    * no surface can have been touched for them, so they read as
-    * "retraction never happened" rather than wedging [[resume]].
+    * left behind. Intents whose `ids` dir never landed are NOT pending:
+    * no surface can have been touched for them.
     */
-  def pending(spark: SparkSession, root: String): Seq[String] = {
-    val fs = fsOf(spark, root)
-    if (!fs.exists(retractionsDir(root))) return Seq.empty
-    fs.listStatus(retractionsDir(root)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("r-"))
-      .filterNot(st => fs.exists(new Path(st.getPath, "_done")))
-      .filter(st => fs.exists(new Path(st.getPath, "ids")))
-      .map(_.getPath.getName).sorted
-  }
+  def pending(spark: SparkSession, root: String): Seq[String] =
+    log.pending(spark, root)
 
   /** Complete every pending retraction (crash recovery — call on
     * process start, or from a maintenance cron). Returns the ids it
     * finished.
     */
-  def resume(spark: SparkSession, root: String): Seq[String] = {
-    val ps = pending(spark, root)
-    ps.foreach(rid => applyIntent(spark, root, rid))
-    ps
-  }
+  def resume(spark: SparkSession, root: String): Seq[String] =
+    log.resume(spark, root)(applyIntent(spark, root, _))
 
   /** A CONSISTENT version vector across every registered surface —
     * the cross-surface read snapshot a data-selection run needs: a
@@ -254,19 +204,14 @@ object Takedown {
       }
       // provenance record: which corpus, which per-surface versions AND
       // incarnations this clone was cut from — the "where did staging
-      // come from" audit answer. One tiny file, staged + renamed so a
-      // crash mid-write never leaves a half-readable record.
-      val fs = fsOf(spark, dstRoot)
+      // come from" audit answer. One tiny published file, so a crash
+      // mid-write never leaves a half-readable record.
       val lines = s"source\t$root" +: cloned.map { case (s, v, ns) =>
         s"${s.kind}\t${s.path}\t${IndexStore.incarnation(spark, s.path)}" +
           s"\t$v\t${ns.path}"
       }
-      val tmp = new Path(dstRoot, "_provenance.staging")
-      val out = fs.create(tmp, true)
-      try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-      require(fs.rename(tmp, new Path(dstRoot, "_provenance")),
-        s"could not publish clone provenance under $dstRoot")
+      ControlFile.publish(ControlFile.fs(spark, dstRoot),
+        new Path(dstRoot, "_provenance"), lines.mkString("\n") + "\n")
       cloned.map { case (_, v, ns) => ns -> v }
     }
 
@@ -275,16 +220,11 @@ object Takedown {
     * path), plus the source registry root under kind "source". Empty
     * for a root that is not a [[cloneCorpus]] destination.
     */
-  def provenance(spark: SparkSession,
-      dstRoot: String): Seq[Seq[String]] = {
-    val fs = fsOf(spark, dstRoot)
-    val f = new Path(dstRoot, "_provenance")
-    if (!fs.exists(f)) return Seq.empty
-    val in = fs.open(f)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    txt.trim.split("\n").toSeq.map(_.split("\t").toSeq)
-  }
+  def provenance(spark: SparkSession, dstRoot: String): Seq[Seq[String]] =
+    ControlFile.read(ControlFile.fs(spark, dstRoot),
+        new Path(dstRoot, "_provenance"))
+      .fold(Seq.empty[Seq[String]])(
+        _.trim.split("\n").toSeq.map(_.split("\t").toSeq))
 
   /** One maintenance sweep over every registered surface — the corpus
     * cron a production deployment runs: each surface whose segment

@@ -26,11 +26,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Layout: `$root/$dirName/v%012d` — one line per entry, relative to
   * the root. Committed under the writer lock ([[graft.billing.TableLock]]),
-  * so version numbers never race.
+  * so version numbers never race. Every version file is written and
+  * read through [[ControlFile]], which owns the publish contract.
   */
 class VersionedManifest(dirName: String) {
 
   private def dir(root: String) = new Path(root, dirName)
+
+  private def file(root: String, version: Long) =
+    new Path(dir(root), f"v$version%012d")
 
   private val Version = "v(\\d{12})".r
 
@@ -54,8 +58,8 @@ class VersionedManifest(dirName: String) {
     * directory listing.
     */
   def latest(fs: FileSystem, root: String): Option[(Long, Seq[String])] =
-    versionsOn(fs, root).lastOption.map { case (v, p) =>
-      v -> read(fs, p)
+    versionsOn(fs, root).lastOption.flatMap { case (v, p) =>
+      entry(fs, p).map(v -> _._1)
     }
 
   /** All committed versions still on disk, oldest first. */
@@ -69,42 +73,37 @@ class VersionedManifest(dirName: String) {
     * sequential under the writer lock).
     */
   def exists(fs: FileSystem, root: String, version: Long): Boolean =
-    fs.exists(new Path(dir(root), f"v$version%012d"))
+    fs.exists(file(root, version))
 
   /** The lines of one retained version (None once history pruning or GC
     * dropped it).
     */
   def filesAt(fs: FileSystem, root: String, version: Long): Option[Seq[String]] =
-    versionsOn(fs, root).find(_._1 == version)
-      .map { case (_, p) => read(fs, p) }
-
-  private def read(fs: FileSystem, p: Path): Seq[String] = {
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    txt.split("\n").iterator.map(_.trim)
-      .filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
-  }
+    entry(fs, file(root, version)).map(_._1)
 
   /** The `op` tag `version` was committed with ("" for pre-tag
-    * manifests or untagged commits) — carried INSIDE the manifest
-    * file, so it is atomic with the commit it describes. This is what
-    * lets a change-feed reader tell a content-preserving rewrite
-    * (compact) from a semantic replace (full refresh) without diffing
-    * data.
+    * manifests, untagged commits or a version no longer retained) —
+    * carried INSIDE the manifest file, so it is atomic with the commit
+    * it describes. This is what lets a change-feed reader tell a
+    * content-preserving rewrite (compact) from a semantic replace (full
+    * refresh) without diffing data.
     */
   def opAt(fs: FileSystem, root: String, version: Long): String =
-    versionsOn(fs, root).find(_._1 == version).map { case (_, p) =>
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      txt.split("\n").iterator.map(_.trim)
-        .collectFirst { case l if l.startsWith("#op=") => l.drop(4) }
-        .getOrElse("")
-    }.getOrElse("")
+    entry(fs, file(root, version)).fold("")(_._2)
 
-  /** Publish the next version: write to a hidden temp, atomically rename
-    * into place. Caller holds the writer lock, so the next version
+  /** One parse of a manifest file: its lines and its `#op=` tag. Comment
+    * lines are not lines.
+    */
+  private def entry(fs: FileSystem, p: Path): Option[(Seq[String], String)] =
+    ControlFile.read(fs, p).map { txt =>
+      val all = txt.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
+      (all.filterNot(_.startsWith("#")),
+        all.collectFirst { case l if l.startsWith("#op=") => l.drop(4) }
+          .getOrElse(""))
+    }
+
+  /** Publish the next version ([[ControlFile.publish]]: hidden temp,
+    * atomic rename). Caller holds the writer lock, so the next version
     * number cannot race. A nonempty `op` is recorded as a `#op=` header
     * line inside the file (comment lines are invisible to [[latest]]/
     * [[filesAt]] readers; [[opAt]] reads them back).
@@ -112,18 +111,9 @@ class VersionedManifest(dirName: String) {
   def commit(fs: FileSystem, root: String, files: Seq[String],
       op: String = ""): Long = {
     val next = versionsOn(fs, root).lastOption.map(_._1 + 1).getOrElse(1L)
-    val d = dir(root)
-    fs.mkdirs(d)
-    val tmp = new Path(d, f".tmp-v$next%012d")
     val header = if (op.isEmpty) "" else s"#op=$op\n"
-    val out = fs.create(tmp, true)
-    try out.write((header + files.sorted.mkString("\n")).getBytes("UTF-8"))
-    finally out.close()
-    val target = new Path(d, f"v$next%012d")
-    if (!fs.rename(tmp, target)) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(s"manifest commit lost a race: $target")
-    }
+    ControlFile.publish(fs, file(root, next),
+      header + files.sorted.mkString("\n"))
     next
   }
 
@@ -133,7 +123,8 @@ class VersionedManifest(dirName: String) {
     */
   def referenced(fs: FileSystem, root: String, retain: Int): Set[String] =
     versionsOn(fs, root).takeRight(math.max(retain, 1))
-      .flatMap { case (_, p) => read(fs, p) }.toSet
+      .flatMap { case (_, p) => entry(fs, p).fold(Seq.empty[String])(_._1) }
+      .toSet
 
   /** Drop manifest history beyond the newest `keep` versions (the list
     * files themselves are tiny; this only bounds the directory).

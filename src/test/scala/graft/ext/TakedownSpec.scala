@@ -84,6 +84,25 @@ class TakedownSpec extends SparkSpec {
     }
   }
 
+  test("a malformed registry entry fails by name; a register temp is " +
+      "ignored") {
+    val root = tmpDir("td_malformed")
+    val bm25 = Takedown.Surface("bm25", s"$root/bm25")
+    Takedown.register(spark, root, bm25)
+    // what a crash inside register leaves: a hidden temp, never an entry
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(root, "_surfaces", ".s-0123.tmp-0123"),
+      "bm25\n".getBytes("UTF-8"))
+    assert(Takedown.surfaces(spark, root) == Seq(bm25))
+    // an empty entry, as an in-place registry write torn by a crash leaves
+    java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(root, "_surfaces", "s-00empty0"))
+    val e = intercept[IllegalArgumentException] {
+      Takedown.surfaces(spark, root)
+    }
+    assert(e.getMessage.contains("_surfaces/s-00empty0"))
+  }
+
   test("one retract() excludes the ids from every registered surface") {
     val (root, bm25, lit) = setup()
     val rid = Takedown.retract(spark, root,
